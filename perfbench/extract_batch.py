@@ -2,7 +2,8 @@
 
 Each operation runs ``plans.pipeline.run_extraction_job`` over a seeded
 transcript corpus (default payload mix, 2% whale conversations) into a
-fresh output with 16 buckets and shuffle routing.
+fresh output with 16 buckets and shuffle routing. The operation is the
+whole job, so its median latency is also the workload's wall time.
 """
 
 from __future__ import annotations
@@ -16,22 +17,26 @@ import pandas as pd
 import pyarrow.parquet as pq
 
 from perfbench import inputs
-from perfbench.harness import Bench, Op, median
+from perfbench.harness import Bench, Op, fits, median
 
 N_CONVS = 600  # ~18k turns
 N_BUCKETS = 16
+WARM_JOBS = 2
 SAMPLE_ROWS = 96
 KERNEL_TYPES = ("html", "plain", "pdf", "markdown", "csv", "asciidoc")
+LAYER_REPEATS = 3  # noop writes per layer frame in a traced run
 KERNEL_SAMPLE = 120  # turns per content type for the in-process kernel timing
 UDF_SAMPLE = 1500  # turns for the in-process timing of the whole UDF
 
 
 def extract_layers(b: Bench, transcripts, tag: str) -> dict[str, float]:
-    """Wall time of each extraction layer, each through a noop write: the
-    scan, the routing exchange (routed projection less the scan), the Arrow
-    crossing (identity ``mapInPandas`` over the routed projection, less the
-    routed projection alone) and the whole operator, plus what routing
-    saves against ``route_partitions=0``."""
+    """Wall time of each extraction layer, each the median of
+    ``LAYER_REPEATS`` noop writes of a frame that adds one layer to the
+    previous one: the scan, the routing exchange, the Arrow crossing
+    (identity ``mapInPandas`` over the routed projection) and the
+    extraction UDF (``extract_turns`` itself). Each layer's time is its
+    frame's wall less the previous frame's, so the layers add up to
+    ``extract_s``. Also what routing saves against ``route_partitions=0``."""
     from pyspark.sql import functions as F
 
     from doc_parser_spark.operators.extract import extract_turns
@@ -39,19 +44,22 @@ def extract_layers(b: Bench, transcripts, tag: str) -> dict[str, float]:
     def identity(batches):
         yield from batches
 
+    def wall(df, name: str) -> float:
+        return median(
+            [b.noop_s(df, f"{tag}-{name}{i}") for i in range(LAYER_REPEATS)]
+        )
+
     proj = transcripts.select("conv_id", "turn_idx", "text")
     routed = proj.repartition(F.col("conv_id"), F.col("turn_idx"))
-    scan_s = b.noop_s(proj, f"{tag}-scan")
-    routed_s = b.noop_s(routed, f"{tag}-routed")
-    identity_s = b.noop_s(
-        routed.mapInPandas(identity, schema=routed.schema), f"{tag}-crossing"
+    scan_s = wall(proj, "scan")
+    routed_s = wall(routed, "routed")
+    identity_s = wall(
+        routed.mapInPandas(identity, schema=routed.schema), "crossing"
     )
-    extract_s = b.noop_s(
-        extract_turns(transcripts, keep_metrics_cols=True), f"{tag}-extract"
-    )
-    unrouted_s = b.noop_s(
+    extract_s = wall(extract_turns(transcripts, keep_metrics_cols=True), "extract")
+    unrouted_s = wall(
         extract_turns(transcripts, route_partitions=0, keep_metrics_cols=True),
-        f"{tag}-extract0",
+        "extract0",
     )
     return {
         "sources.scan_s": scan_s,
@@ -59,14 +67,15 @@ def extract_layers(b: Bench, transcripts, tag: str) -> dict[str, float]:
         "operators.extract.route_s": routed_s - scan_s,
         "operators.extract.route_gain_s": unrouted_s - extract_s,
         "operators.extract.crossing_s": identity_s - routed_s,
+        "operators.extract.kernel_s": extract_s - identity_s,
     }
 
 
-def _kernel_layers(corpus: pd.DataFrame, seed: int, cores: int) -> dict:
+def _kernel_layers(corpus: pd.DataFrame, seed: int) -> dict:
     """Single-process µs/turn of the sniffer and of each content-type
     kernel, called through the public ``functions`` entry points, and of
     the whole extraction UDF (sniff, kernels, scoring, frame build) on a
-    seeded sample, scaled to the corpus on every core."""
+    seeded sample."""
     from doc_parser_spark.functions.asciidoc_extract import extract_asciidoc
     from doc_parser_spark.functions.csv_extract import extract_csv
     from doc_parser_spark.functions.html_extract import extract_html
@@ -107,10 +116,7 @@ def _kernel_layers(corpus: pd.DataFrame, seed: int, cores: int) -> dict:
     t = time.perf_counter()
     for _ in udf(iter([sample])):
         pass
-    udf_us = (time.perf_counter() - t) * 1e6 / len(sample)
-    out["functions.udf_us"] = udf_us
-    # inside the job the UDF runs on every core at once
-    out["operators.extract.kernel_s"] = udf_us * len(corpus) / 1e6 / cores
+    out["functions.udf_us"] = (time.perf_counter() - t) * 1e6 / len(sample)
     return out
 
 
@@ -182,20 +188,22 @@ def run(b: Bench, seed: int, seconds: float) -> dict:
         input_s.append(time.perf_counter() - t)
     n_turns = len(corpus)
 
-    # warm-up: one untimed job over the same input starts the Python
-    # workers and lets the JIT compile the hot paths (a smaller warm-up job
-    # left the first timed job ~30% slower than the rest)
+    # warm-up: untimed jobs over the same input start the Python workers
+    # and let the JIT compile the hot paths (the first four or five jobs of
+    # a session run 10-30% slower than later ones; the median over the
+    # timed jobs absorbs what two warm-up jobs leave)
     t = time.perf_counter()
-    with b.phase("warmup", "run"):
-        run_extraction_job(
-            spark, spark.read.parquet(src), b.fresh_dir("extract", "warm"),
-            n_buckets=N_BUCKETS,
-        )
+    for i in range(WARM_JOBS):
+        with b.phase(f"warmup{i}", "run"):
+            run_extraction_job(
+                spark, spark.read.parquet(src),
+                b.fresh_dir("extract", f"warm{i}"), n_buckets=N_BUCKETS,
+            )
     warm_s = time.perf_counter() - t
 
     ops: list[Op] = []
     t_start = time.perf_counter()
-    while not ops or time.perf_counter() - t_start < seconds:
+    while not ops or fits(t_start, seconds, ops[-1].wall_s):
         op = Op(f"job{len(ops)}")
         out = b.fresh_dir("extract", op.op_id)
         with b.timed_op(op) as part:
@@ -208,11 +216,12 @@ def run(b: Bench, seed: int, seconds: float) -> dict:
                 )
         op.info.update(rows=res["rows"], out=out)
         ops.append(op)
+    b.settle_jvm()
 
     layers: dict[str, float] = {}
     if b.trace:
         layers.update(extract_layers(b, spark.read.parquet(src), "layer"))
-        layers.update(_kernel_layers(corpus, seed, b.cores))
+        layers.update(_kernel_layers(corpus, seed))
 
     # untimed checks: row counts of every job, full checks of the last one,
     # then the resume call on that committed output must emit nothing
@@ -239,18 +248,11 @@ def run(b: Bench, seed: int, seconds: float) -> dict:
 
     walls = [op.wall_s for op in ops]
     if b.trace:
-        job_wall = median(walls)
-        extract_s = layers["operators.extract.extract_s"]
-        layers["plans.pipeline.commit_s"] = job_wall - extract_s
-        layers["plans.pipeline.resume_s"] = resume_s
-        accounted = (
-            layers["sources.scan_s"]
-            + layers["operators.extract.route_s"]
-            + layers["operators.extract.crossing_s"]
-            + layers["operators.extract.kernel_s"]
-            + layers["plans.pipeline.commit_s"]
+        # the rest of the job: bucket write, metrics and manifest commit
+        layers["plans.pipeline.commit_s"] = (
+            median(walls) - layers["operators.extract.extract_s"]
         )
-        layers["plans.pipeline.accounted_share"] = accounted / job_wall
+        layers["plans.pipeline.resume_s"] = resume_s
     return {
         "ops": ops,
         "setup": {"input_s": median(input_s), "warm_s": warm_s},

@@ -7,6 +7,7 @@ warehouse and the event log.
 
 from __future__ import annotations
 
+import gc
 import glob
 import hashlib
 import math
@@ -22,6 +23,7 @@ from contextlib import contextmanager, suppress
 from dataclasses import dataclass, field
 
 WORK_DIR = ".bench_work"
+CLEANER_WAIT_S = 1.0  # for Spark's context cleaner between two collections
 
 
 def cores() -> int:
@@ -43,25 +45,11 @@ def median(values) -> float:
     return float(statistics.median(values))
 
 
-def hd_median(values) -> float:
-    """Harrell-Davis estimate of the median: a Beta((n+1)/2, (n+1)/2)
-    weighted mean of all order statistics. Over a few heterogeneous
-    samples (one latency per query) it does not jump when two neighbours
-    swap places, as the plain median does."""
-    x = sorted(values)
-    n = len(x)
-    a = (n + 1) / 2
-
-    def pdf(t: float) -> float:
-        return (t * (1 - t)) ** (a - 1)
-
-    steps = 64  # Simpson steps per order statistic
-    weights = []
-    for i in range(n):
-        lo, h = i / n, 1 / (n * steps)
-        inner = sum((4 if k % 2 else 2) * pdf(lo + k * h) for k in range(1, steps))
-        weights.append((pdf(lo) + inner + pdf(lo + steps * h)) * h / 3)
-    return sum(w * v for w, v in zip(weights, x)) / sum(weights)
+def fits(t_start: float, seconds: float, last_s: float) -> bool:
+    """Whether one more operation as long as the last one still ends within
+    ``seconds`` of ``t_start``, so the timed phase never overruns by most of
+    an operation."""
+    return time.perf_counter() - t_start + last_s <= seconds
 
 
 def tail_percentile(values) -> tuple[int, float] | None:
@@ -87,16 +75,12 @@ def configure_launch(work: str, trace: bool) -> None:
         os.path.join(work, "spark-local")
     )
     os.environ["SPARK_GRAFT_CPUS"] = str(cores())
-    mem = os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
     confs = {
-        # a fully committed, pre-touched heap keeps the JVM's resident
-        # size from depending on when the collector chose to grow the heap;
         # -UsePerfData stops the JVM writing /tmp/hsperfdata_*
         "spark.driver.extraJavaOptions": (
-            f"-Djava.io.tmpdir={tmp} -Xms{mem} -XX:+AlwaysPreTouch "
-            "-XX:-UsePerfData"
+            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
         ),
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.abspath(
@@ -156,20 +140,32 @@ def _pss_bytes(pid: int) -> int:
     return 0
 
 
+def _is_jvm(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip() == "java"
+    except OSError:
+        return False
+
+
 class MemorySampler:
     """Peak resident memory of this process and all its descendants (the
-    Spark JVM and its Python workers), sampled from /proc."""
+    Spark JVM and its Python workers), sampled from /proc: of the whole
+    tree, and of its Python processes alone."""
 
     def __init__(self, interval_s: float = 0.5):
         self.interval_s = interval_s
         self.peak_bytes = 0
+        self.python_peak_bytes = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _sample(self) -> None:
         me = os.getpid()
-        total = sum(_pss_bytes(p) for p in [me, *descendants(me)])
-        self.peak_bytes = max(self.peak_bytes, total)
+        pss = {p: _pss_bytes(p) for p in [me, *descendants(me)]}
+        self.peak_bytes = max(self.peak_bytes, sum(pss.values()))
+        python = sum(v for p, v in pss.items() if not _is_jvm(p))
+        self.python_peak_bytes = max(self.python_peak_bytes, python)
 
     def _loop(self) -> None:
         while not self._stop.wait(self.interval_s):
@@ -246,6 +242,26 @@ class Bench:
             int(i.memSize()) + int(i.diskSize())
             for i in self.sc._jsc.sc().getRDDStorageInfo()
         )
+
+    def settle_jvm(self) -> None:
+        """Record the memory the JVM still holds after the timed phase: its
+        heap after a full collection (live data: cached blocks, broadcasts,
+        driver state) plus its non-heap use (class metadata, compiled code).
+        Unlike the JVM's resident size, this does not depend on how far the
+        collector chose to grow the heap.
+
+        Python's collector runs first, so py4j releases the JVM objects of
+        dead Python proxies; a first JVM collection lets Spark's context
+        cleaner drop the broadcasts and shuffles of unreachable plans, and a
+        second one after that frees their memory."""
+        jvm = self.sc._jvm
+        gc.collect()
+        jvm.java.lang.System.gc()
+        time.sleep(CLEANER_WAIT_S)
+        jvm.java.lang.System.gc()
+        mx = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        self.jvm_live_heap_bytes = int(mx.getHeapMemoryUsage().getUsed())
+        self.jvm_nonheap_bytes = int(mx.getNonHeapMemoryUsage().getUsed())
 
     def jobs_in_group(self, group: str) -> int:
         return len(self.sc.statusTracker().getJobIdsForGroup(group))

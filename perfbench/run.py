@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload extract_batch --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload extract_batch --seed 1 --seconds 27 --trace 0
 
 Run from the repository root. One process starts Spark at ``local[nproc]``
 through ``doc_parser_spark.session.get_spark``, makes the workload's inputs
@@ -34,7 +34,6 @@ from perfbench.harness import (  # noqa: E402
     MemorySampler,
     configure_launch,
     cores,
-    hd_median,
     median,
     source_sha,
     tail_percentile,
@@ -128,20 +127,32 @@ def main() -> int:
     ops = res["ops"]
 
     wall_s = median(res["wall_samples"])
-    op_p50 = hd_median(res["op_samples"])
+    op_p50 = median(res["op_samples"])
     end_to_end = {
         "setup_s": bench.session_s + sum(res["setup"].values()),
         "wall_s": wall_s,
         "op_p50_s": op_p50,
         "items_per_s": res["items"] / wall_s,
-        "rss_peak_mb": rss.peak_bytes / 2**20,
+        "memory_mb": (
+            rss.python_peak_bytes + bench.jvm_live_heap_bytes
+            + bench.jvm_nonheap_bytes
+        ) / 2**20,
     }
+    per_pass = len(ops) // len(res["wall_samples"])
+    wall_n = f"n={len(res['wall_samples'])}"
+    if per_pass > 1:
+        wall_n += f" pass of {per_pass} ops"
     samples = {
-        "wall_s": len(res["wall_samples"]),
-        "op_p50_s": len(res["op_samples"]),
-        "items_per_s": len(res["wall_samples"]),
+        "wall_s": wall_n,
+        "op_p50_s": f"n={len(res['op_samples'])}",
+        "items_per_s": wall_n,
     }
-    record = os.path.join(work, "records", f"untraced-{args.workload}.json")
+    sha = source_sha()
+    # the traced run's overhead is taken against the untraced run of the
+    # same code and seed
+    record = os.path.join(
+        work, "records", f"untraced-{args.workload}-{args.seed}-{sha}.json"
+    )
     info = {
         "workload": args.workload,
         "seed": args.seed,
@@ -152,11 +163,17 @@ def main() -> int:
         "pyarrow": importlib.import_module("pyarrow").__version__,
         "python": platform.python_version(),
         "git_commit": _git_commit(),
-        "source_sha256": source_sha(),
+        "source_sha256": sha,
         "ops": {op.op_id: round(op.wall_s, 4) for op in ops},
         "run_s": time.perf_counter() - t_run,
         "setup": {"session_s": bench.session_s, **res["setup"]},
         "errors": res["errors"],
+        "memory_mb": {
+            "python_pss_peak": rss.python_peak_bytes / 2**20,
+            "jvm_live_heap": bench.jvm_live_heap_bytes / 2**20,
+            "jvm_nonheap": bench.jvm_nonheap_bytes / 2**20,
+            "rss_peak": rss.peak_bytes / 2**20,
+        },
     }
     tail = tail_percentile(res["op_samples"])
     if tail:
@@ -170,16 +187,20 @@ def main() -> int:
             )
         )
         layers["trace.op_p50_s"] = op_p50
-        base = None
+        layers["memory.rss_peak_mb"] = rss.peak_bytes / 2**20
+        layers["memory.python_pss_peak_mb"] = rss.python_peak_bytes / 2**20
+        layers["memory.jvm_live_heap_mb"] = bench.jvm_live_heap_bytes / 2**20
+        # no untraced run of this code and seed yet: the overhead is unknown
+        info["trace_overhead_share"] = None
         if os.path.exists(record):
             with open(record) as f:
                 base = json.load(f)["op_p50_s"]
-        layers["trace.overhead_share"] = op_p50 / base - 1 if base else 0.0
-        info["overhead_base_op_p50_s"] = base
+            info["trace_overhead_share"] = op_p50 / base - 1
+            info["untraced_op_p50_s"] = base
         wanted, values = spec["per_layer"], layers
     else:
         with open(record, "w") as f:
-            json.dump({"op_p50_s": op_p50, "seed": args.seed}, f)
+            json.dump({"op_p50_s": op_p50}, f)
         wanted, values = spec["end_to_end"], end_to_end
 
     metrics = {
@@ -187,7 +208,7 @@ def main() -> int:
         for m in wanted
     }
     for name, m in metrics.items():
-        n = f"n={samples.get(name, 1)}" if not trace else ""
+        n = samples.get(name, "") if not trace else ""
         print(f"{name:48s} {m['value']:>16.6g} {m['unit']:6s} {n}")
     print(json.dumps({"info": info}))
     correct = not res["errors"]
