@@ -86,25 +86,3 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("i_chunk_on_doc", T.IntegerType(), False),
-        T.StructField("n_chunk_of_doc", T.IntegerType(), False),
-        T.StructField("headings", T.ArrayType(T.StringType()), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("n_tokens", T.IntegerType(), True),
-    ]
-)
-
-PARTITION_METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs_parsed", T.LongType(), False),
-        T.StructField("bytes_processed", T.LongType(), False),
-        T.StructField("parse_failures", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("job_run_id", T.StringType(), False),
-    ]
-)

@@ -48,15 +48,6 @@ _PICTURE_RE = re.compile(r"^image::")
 _CAPTION_RE = re.compile(r"^\.(.+)")
 
 
-def sniff_asciidoc(text: str) -> bool:
-    """The reference detects asciidoc by file extension only; for transcript
-    payloads we probe: the first non-blank line is a '=' title/section."""
-    for line in text.split("\n"):
-        if line.strip():
-            return bool(_TITLE_RE.match(line) or _SECTION_RE.match(line))
-    return False
-
-
 def extract_asciidoc_items(text: str) -> list[Item]:  # noqa: C901
     items: list[Item] = []
     in_list = False

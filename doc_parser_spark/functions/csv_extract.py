@@ -19,8 +19,6 @@ import io
 from doc_parser_spark.datamodel import LABEL_TABLE
 from doc_parser_spark.functions.html_extract import render_table
 
-_DELIMS = ",;\t|"
-
 # Sniffer cost grows with sample size; the reference's content probes also
 # examine only the head of the document (document.py:479-506 reads a chunk).
 # The sample always ends on a line boundary so Sniffer sees whole rows.

@@ -14,12 +14,8 @@ the same serializer conventions proven byte-exact on the HTML path
 
 from __future__ import annotations
 
-import re
-
 from doc_parser_spark.functions.docx_extract import DocxNode
 from doc_parser_spark.functions.export_md import render_md_table
-
-_WS_RUN_RE = re.compile(r"\s+")
 
 
 def _esc(text: str) -> str:

@@ -54,7 +54,6 @@ _INLINE_RE = re.compile(
     r"|\*\*(?P<strong>[^*]+)\*\*"
     r"|\*(?P<em>[^*\s][^*]*)\*"
 )
-_INLINE_MARKERS = ("`", "*", "[")
 # C-speed fast-path probe (the tuple-any genexpr was 16% of the md kernel)
 _MARKER_SEARCH_RE = re.compile(r"[`*\[]")
 

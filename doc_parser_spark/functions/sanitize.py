@@ -50,10 +50,3 @@ def sanitize_text(lines: list[str]) -> str:
     for src, dst in _CHAR_MAP:
         sanitized = sanitized.replace(src, dst)
     return sanitized.strip()
-
-
-def normalize_chars(text: str) -> str:
-    """Just the character-normalization table (no line joining)."""
-    for src, dst in _CHAR_MAP:
-        text = text.replace(src, dst)
-    return text

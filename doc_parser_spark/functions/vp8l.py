@@ -358,10 +358,6 @@ def _decode_entropy_image(
 # ---------------------------------------------------------------------------
 
 
-def _avg2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    return (a.astype(np.int64) + b.astype(np.int64)) // 2
-
-
 def _channels(px: int) -> tuple[int, int, int, int]:
     return (px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF
 

@@ -74,7 +74,6 @@ class _Sheet:
 # builtin date/time number-format ids (openpyxl is_builtin_date_format)
 _DATE_FMT_IDS = set(range(14, 23)) | set(range(45, 48))
 _DATE_CHARS_RE = re.compile(r"[dmhysDMHYS]")
-_EXCEL_EPOCH_ORDINAL = 693594  # 1899-12-30 proleptic ordinal
 
 
 def _serial_to_datetime_str(num: float) -> str:

@@ -478,9 +478,9 @@ def connected_components(
     a 200-edge graph at 64 pinned shuffle partitions, 0.63 s at 1):
 
     - the edge table's partition count derives from its MEASURED row count
-      (the one ``count`` over the raw pair table that also gates the
-      driver solve; 2·raw bounds the distinct symmetric count from above,
-      exactly for the distinct pairs every LSH generator emits), not from
+      (the exact ``count`` of the distinct symmetric edge set, which also
+      re-gates the driver solve; only the first gate uses the cheaper
+      2·raw upper bound over the raw pair table), not from
       ``spark.sql.shuffle.partitions``: a session constant is tuned to one
       scale — on a small graph every one of ~5 per-round stages schedules
       64 near-empty tasks, and on a 10^10-edge graph 64 partitions would

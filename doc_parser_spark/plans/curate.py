@@ -28,10 +28,6 @@ from doc_parser_spark.operators.chunking import chunk_turns, compose_vectors
 from doc_parser_spark.operators.dedup import exact_dedup, lsh_candidate_pairs
 from doc_parser_spark.operators.extract import extract_turns
 
-_STAGES = ("extracted", "quality_kept", "exact_unique", "near_dup_unique",
-           "vectors")
-
-
 class CurationStats(dict):
     """Per-stage row counts, collected from the plan's CollectMetrics nodes
     by whatever action the CALLER runs on the returned vectors DataFrame
@@ -310,7 +306,6 @@ def curate_ingest(
     k: int = 8,
     bands: int = 8,
     n: int = 3,
-    in_batch_bands: int = 8,
 ) -> tuple[DataFrame, DataFrame, CurationStats]:
     """Incremental curation ingest of ONE batch against a standing corpus
     index (``build_curation_index`` output, normally read back from
@@ -353,15 +348,11 @@ def curate_ingest(
     # pass must shingle the same way as the vs-corpus classification
     # below (k stays pinned to run_curation's in-batch policy; see
     # build_curation_index's recall note). Round-7 ADVICE.
-    # in_batch_bands (round-8 verdict #1): bands < k gives multi-row
-    # banding (rows per band = k // bands) — e.g. bands=4 → r=2, which
-    # cuts the r=1 candidate volume on vocabulary-sharing turns at
-    # 1-(1-j^2)^4 recall (~0.93 at j=0.7, ~1.0 for template families —
-    # measured in docs/SCALE.md round 8). Default 8 = the r=1 policy the
-    # standing oracles pin.
+    # bands=8 (r=1) is the policy the standing oracles pin; docs/SCALE.md
+    # round 8 measures the r=2 candidate-volume/recall trade-off.
     pairs = lsh_candidate_pairs(
         deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
-        k=8, bands=in_batch_bands, n=n, max_bucket=lsh_max_bucket,
+        k=8, bands=8, n=n, max_bucket=lsh_max_bucket,
     )
     losers = pairs.select(F.col("b_id").alias("uid")).distinct()
     survivors = deduped.join(losers, "uid", "left_anti")

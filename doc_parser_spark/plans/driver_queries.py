@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from doc_parser_spark.functions.plain_extract import split_paragraphs
 from doc_parser_spark.functions.sanitize import sanitize_text
 from doc_parser_spark.operators.extract import extract_turns, with_content_type
 
@@ -74,6 +73,25 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _one_turn_extract(
+    spark: SparkSession,
+    sf_dir: str,
+    payload: str,
+    *cols: str | F.Column,
+    boilerplate_mode: str = "reference",
+) -> DataFrame:
+    """Each document as a one-turn conversation whose text is the SQL
+    ``payload``, through sniff -> route -> extract; returns ``doc_id``
+    (``conv_id`` cast back) followed by ``cols`` of the extraction output."""
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("conv_id"),
+        F.lit(0).cast("int").alias("turn_idx"),
+        F.expr(payload).alias("text"),
+    )
+    out = extract_turns(docs, boilerplate_mode=boilerplate_mode, route_partitions=8)
+    return out.select(F.col("conv_id").cast("long").alias("doc_id"), *cols)
+
+
 # ---------------------------------------------------------------------------
 # S1 — content-type sniff (document.py:306-506)
 # ---------------------------------------------------------------------------
@@ -120,25 +138,8 @@ FROM documents WHERE n_chars <= 300
 # ---------------------------------------------------------------------------
 # B1 — HTML main-content extraction (html_backend.py; boilerplate rule :131-134)
 # ---------------------------------------------------------------------------
-_B1_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("extracted_text", T.StringType()),
-    ]
-)
-
-
 def q_b1_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_HTML).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        F.col("extracted_text"),
-    )
+    return _one_turn_extract(spark, sf_dir, PAYLOAD_HTML, "extracted_text")
 
 
 ORACLE_B1 = """
@@ -151,38 +152,6 @@ FROM documents
 # ---------------------------------------------------------------------------
 # B2 — blank-line paragraph segmentation (pymupdf_backend.py:88-121)
 # ---------------------------------------------------------------------------
-_PARA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("para_idx", T.IntegerType()),
-        T.StructField("para", T.StringType()),
-    ]
-)
-
-
-def _paragraphs_py(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference implementation: the flush loop row-at-a-time in Python.
-
-    Kept ONLY as the parity baseline for tests/test_r08_jvm_parity.py —
-    the query path uses the JVM ``_paragraphs`` below (round 8, guide §4:
-    same semantics, no Python boundary)."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(PAYLOAD_PARAS).alias("payload")
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for i, para in enumerate(split_paragraphs(payload or ""), 1):
-                    rows.append((int(doc_id), i, para))
-            yield pd.DataFrame(rows, columns=["doc_id", "para_idx", "para"]).astype(
-                {"doc_id": "int64", "para_idx": "int32"}
-            )
-
-    return docs.mapInPandas(gen, schema=_PARA_SCHEMA)
-
-
 def _paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blank-line paragraph segmentation, fully in JVM expressions (round 8).
 
@@ -197,8 +166,8 @@ def _paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Equivalence to the flush loop on this payload shape (text carries no
     raw newlines; every separator is the injected "\\n \\n") is pinned by
-    tests/test_r08_jvm_parity.py against ``_paragraphs_py`` and by the
-    standing DuckDB gates (b2/o1/c2/o1_vector_meta_full oracles).
+    tests/test_r08_jvm_parity.py against a ``split_paragraphs`` reference
+    and by the standing DuckDB gates (b2/o1/c2/o1_vector_meta_full oracles).
     """
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(PAYLOAD_PARAS).alias("payload")
@@ -700,40 +669,6 @@ FROM per_session GROUP BY user_id
 """
 
 
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "s1_content_sniff": q_s1_content_sniff,
-    "s2_doc_hash_limits": q_s2_doc_hash_limits,
-    "b1_html_extract": q_b1_html_extract,
-    "b2_paragraphs": q_b2_paragraphs,
-    "p1_text_quality": q_p1_text_quality,
-    "p6_sanitize": q_p6_sanitize,
-    "o1_compose_vectors": q_o1_compose_vectors,
-    "o6_confidence_agg": q_o6_confidence_agg,
-    "c1_heading_propagation": q_c1_heading_propagation,
-    "c2_chunk_assignment": q_c2_chunk_assignment,
-    "o3_interval_merge": q_o3_interval_merge,
-    "events_sessionize": q_events_sessionize,
-}
-
-ORACLES: dict[str, str] = {
-    "s1_content_sniff": ORACLE_S1,
-    "s2_doc_hash_limits": ORACLE_S2,
-    "b1_html_extract": ORACLE_B1,
-    "b2_paragraphs": ORACLE_B2,
-    "p1_text_quality": ORACLE_P1,
-    "p6_sanitize": ORACLE_P6,
-    "o1_compose_vectors": ORACLE_O1,
-    "o6_confidence_agg": ORACLE_O6,
-    "c1_heading_propagation": ORACLE_C1,
-    "c2_chunk_assignment": ORACLE_C2,
-    "o3_interval_merge": ORACLE_O3,
-    "events_sessionize": ORACLE_SESSIONIZE,
-}
-
-
 # ===========================================================================
 # batch 2 — dedup / similarity / text-analysis / relational operators
 # ===========================================================================
@@ -1116,43 +1051,6 @@ GROUP BY 1, 2
 """
 
 
-QUERIES.update(
-    {
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "text_lang_id": q_text_lang_id,
-        "text_token_count": q_text_token_count,
-        "text_fingerprint": q_text_fingerprint,
-        "sim_cosine_scores": q_sim_cosine_scores,
-        "sim_topk": q_sim_topk,
-        "sim_ann_lsh": q_sim_ann_lsh,
-        "join_agg_revenue": q_join_agg_revenue,
-        "events_tumbling": q_events_tumbling,
-    }
-)
-
-ORACLES.update(
-    {
-        "dedup_exact": ORACLE_DEDUP_EXACT,
-        "dedup_ngram_jaccard": ORACLE_NGRAM_JACCARD,
-        "dedup_minhash": ORACLE_MINHASH,
-        "dedup_minhash_lsh": ORACLE_MINHASH_LSH,
-        "dedup_simhash": ORACLE_SIMHASH,
-        "text_lang_id": ORACLE_TEXT_LANG_ID,
-        "text_token_count": ORACLE_TEXT_TOKEN_COUNT,
-        "text_fingerprint": ORACLE_TEXT_FINGERPRINT,
-        "sim_cosine_scores": ORACLE_SIM_COSINE,
-        "sim_topk": ORACLE_SIM_TOPK,
-        # sim_ann_lsh: oracled later (batch 15, lsh_bucket_oracle_sql)
-        "join_agg_revenue": ORACLE_JOIN_AGG,
-        "events_tumbling": ORACLE_EVENTS_TUMBLING,
-    }
-)
-
-
 # ===========================================================================
 # batch 3 — density-mode boilerplate, per-group top-k, JSON roundtrip
 # ===========================================================================
@@ -1169,15 +1067,8 @@ PAYLOAD_DENSITY = (
 
 
 def q_b1_html_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_DENSITY).alias("text"),
-    )
-    out = extract_turns(docs, boilerplate_mode="density", route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        F.col("extracted_text"),
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_DENSITY, "extracted_text", boilerplate_mode="density"
     )
 
 
@@ -1225,34 +1116,12 @@ def q_doc_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the direct extraction (the oracle mirrors q_b1_html_extract)."""
     from doc_parser_spark.operators.export import from_doc_json, to_doc_json
 
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_HTML).alias("text"),
-    )
-    extracted = extract_turns(docs, route_partitions=8)
+    extracted = _one_turn_extract(spark, sf_dir, PAYLOAD_HTML, "*")
     roundtripped = from_doc_json(to_doc_json(extracted))
     return roundtripped.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("extracted_text"),
     )
-
-
-QUERIES.update(
-    {
-        "b1_html_density": q_b1_html_density,
-        "events_topk_per_user": q_events_topk_per_user,
-        "doc_json_roundtrip": q_doc_json_roundtrip,
-    }
-)
-
-ORACLES.update(
-    {
-        "b1_html_density": ORACLE_B1_DENSITY,
-        "events_topk_per_user": ORACLE_EVENTS_TOPK,
-        "doc_json_roundtrip": ORACLE_B1,
-    }
-)
 
 
 # ===========================================================================
@@ -1273,12 +1142,9 @@ PAYLOAD_STATUS = (
 
 
 def q_r4_status_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_STATUS).alias("text"),
+    out = _one_turn_extract(
+        spark, sf_dir, PAYLOAD_STATUS, "content_type", "parse_status"
     )
-    out = extract_turns(docs, route_partitions=8)
     return out.groupBy("content_type", "parse_status").agg(
         F.count("*").alias("cnt")
     )
@@ -1337,21 +1203,6 @@ SELECT conv_id, turn_idx,
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS active_title
 FROM turns
 """
-
-
-QUERIES.update(
-    {
-        "r4_status_fallback": q_r4_status_fallback,
-        "c1_cross_turn_context": q_c1_cross_turn_context,
-    }
-)
-
-ORACLES.update(
-    {
-        "r4_status_fallback": ORACLE_R4_STATUS,
-        "c1_cross_turn_context": ORACLE_C1_CONTEXT,
-    }
-)
 
 
 # ===========================================================================
@@ -1426,20 +1277,6 @@ SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY 1
 """
-
-
-QUERIES.update(
-    {
-        "pricing_summary": q_pricing_summary,
-        "monthly_revenue": q_monthly_revenue,
-    }
-)
-ORACLES.update(
-    {
-        "pricing_summary": ORACLE_PRICING,
-        "monthly_revenue": ORACLE_MONTHLY_REVENUE,
-    }
-)
 
 
 # ===========================================================================
@@ -1522,20 +1359,6 @@ LIMIT 10
 """
 
 
-QUERIES.update(
-    {
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "sim_ivf_topk": q_sim_ivf_topk,
-    }
-)
-ORACLES.update(
-    {
-        "dedup_embedding_cosine": ORACLE_DEDUP_EMBEDDING,
-        "sim_ivf_topk": ORACLE_SIM_IVF,
-    }
-)
-
-
 # ===========================================================================
 # batch 7 — span/items-level verification (O2 analog)
 # ===========================================================================
@@ -1548,14 +1371,10 @@ PAYLOAD_ITEMS = (
 def q_o2_items_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explode extraction spans to one row per item: verifies labels and
     per-item text slices, not just the concatenated output."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_ITEMS).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    exploded = out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
+    exploded = _one_turn_extract(
+        spark,
+        sf_dir,
+        PAYLOAD_ITEMS,
         F.posexplode("spans").alias("item_idx", "s"),
         "extracted_text",
     )
@@ -1589,10 +1408,6 @@ FROM items
 """
 
 
-QUERIES["o2_items_table"] = q_o2_items_table
-ORACLES["o2_items_table"] = ORACLE_O2_ITEMS
-
-
 # ===========================================================================
 # batch 8 — markdown export through the Spark surface (O7)
 # ===========================================================================
@@ -1622,9 +1437,6 @@ SELECT doc_id::BIGINT AS doc_id,
          || replace(replace(trim(text), '&', '&amp;'), '_', '\\_') AS markdown
 FROM documents
 """
-
-QUERIES["o7_markdown_export"] = q_o7_markdown_export
-ORACLES["o7_markdown_export"] = ORACLE_O7_MD
 
 
 # ===========================================================================
@@ -1675,9 +1487,6 @@ SELECT doc_id::BIGINT AS doc_id,
 FROM documents
 """
 
-QUERIES["text_quality_profile"] = q_text_quality_profile
-ORACLES["text_quality_profile"] = ORACLE_TEXT_QUALITY_PROFILE
-
 
 # ===========================================================================
 # batch 10 — asciidoc extraction + salted aggregation, both oracled
@@ -1689,16 +1498,8 @@ PAYLOAD_ADOC = (
 
 
 def q_b11_asciidoc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_ADOC).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        "content_type",
-        F.col("extracted_text"),
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_ADOC, "content_type", "extracted_text"
     )
 
 
@@ -1738,19 +1539,6 @@ SELECT user_id, count(*) AS n_events,
        min(round(value, 4)) AS min_value
 FROM events GROUP BY user_id
 """
-
-QUERIES.update(
-    {
-        "b11_asciidoc_extract": q_b11_asciidoc_extract,
-        "salted_user_stats": q_salted_user_stats,
-    }
-)
-ORACLES.update(
-    {
-        "b11_asciidoc_extract": ORACLE_B11,
-        "salted_user_stats": ORACLE_SALTED,
-    }
-)
 
 
 # ===========================================================================
@@ -1818,19 +1606,6 @@ SELECT doc_id::BIGINT AS doc_id,
          'https?://[^\s]+', '<URL>', 'g') AS scrubbed
 FROM documents
 """
-
-QUERIES.update(
-    {
-        "text_repetition": q_text_repetition,
-        "text_scrub": q_text_scrub,
-    }
-)
-ORACLES.update(
-    {
-        "text_repetition": ORACLE_TEXT_REPETITION,
-        "text_scrub": ORACLE_TEXT_SCRUB,
-    }
-)
 
 
 # ===========================================================================
@@ -1947,9 +1722,6 @@ SELECT doc_id::BIGINT AS doc_id,
 FROM paras
 """
 
-QUERIES["o1_vector_meta_full"] = q_o1_vector_meta_full
-ORACLES["o1_vector_meta_full"] = ORACLE_O1_FULL
-
 
 # ===========================================================================
 # batch 13 — true 2-D bbox fixpoint merge (genos_utils.py:114-160)
@@ -2008,9 +1780,6 @@ SELECT user_id, band, count(*) AS n_boxes,
 FROM merged GROUP BY user_id, band
 """
 
-QUERIES["o3_bbox_merge_2d"] = q_o3_bbox_merge_2d
-ORACLES["o3_bbox_merge_2d"] = ORACLE_O3_BBOX_2D
-
 
 # ===========================================================================
 # batch 14 — dedicated per-backend oracles for B3 (pdfish), B6 (markdown),
@@ -2030,16 +1799,8 @@ PAYLOAD_PDFISH = (
 def q_b3_pdfish_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B3: header/footer bands dropped, close rows join into one sanitized
     paragraph, a >1.5x-row-height gap breaks the paragraph."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_PDFISH).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        "content_type",
-        "extracted_text",
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_PDFISH, "content_type", "extracted_text"
     )
 
 
@@ -2060,16 +1821,8 @@ PAYLOAD_MD = (
 def q_b6_md_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B6: title, paragraph, bullet list, fenced code — through the full
     sniff → route → extract surface."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_MD).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        "content_type",
-        "extracted_text",
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_MD, "content_type", "extracted_text"
     )
 
 
@@ -2089,16 +1842,8 @@ PAYLOAD_CSV = (
 
 def q_b7_csv_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B7: dialect sniff + uniform-grid render (csv_backend.py:80-95)."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_CSV).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        "content_type",
-        "extracted_text",
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_CSV, "content_type", "extracted_text"
     )
 
 
@@ -2110,21 +1855,6 @@ SELECT doc_id::BIGINT AS doc_id, 'csv' AS content_type,
          AS extracted_text
 FROM documents
 """
-
-QUERIES.update(
-    {
-        "b3_pdfish_extract": q_b3_pdfish_extract,
-        "b6_md_extract": q_b6_md_extract,
-        "b7_csv_extract": q_b7_csv_extract,
-    }
-)
-ORACLES.update(
-    {
-        "b3_pdfish_extract": ORACLE_B3,
-        "b6_md_extract": ORACLE_B6,
-        "b7_csv_extract": ORACLE_B7,
-    }
-)
 
 
 # ===========================================================================
@@ -2152,8 +1882,6 @@ WHERE b.bucket = q.qbucket
 ORDER BY score DESC, b.vec_id
 LIMIT 10
 """
-
-ORACLES["sim_ann_lsh"] = ORACLE_SIM_ANN_LSH
 
 
 # ===========================================================================
@@ -2243,9 +1971,6 @@ SELECT doc_id, round(stopword_ratio, 4) AS stopword_ratio, quality_pass,
 FROM hashed
 """
 
-QUERIES["curate_pipeline"] = q_curate_pipeline
-ORACLES["curate_pipeline"] = ORACLE_CURATE
-
 
 # ===========================================================================
 # batch 17 — fragment-routing semantics (the round-1 advisory's content-loss
@@ -2265,14 +1990,10 @@ def q_s1_fragment_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     floating text (html/success); inline-tag prose never routes to the HTML
     walker (plain, content intact); a fragment whose walk yields nothing
     demotes to partial_success with the plain payload."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_FRAGMENT).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
+    return _one_turn_extract(
+        spark,
+        sf_dir,
+        PAYLOAD_FRAGMENT,
         "content_type",
         "parse_status",
         "extracted_text",
@@ -2309,19 +2030,6 @@ SELECT doc_id::BIGINT AS doc_id,
        ({simhash_oracle_sql('text', 48)})::BIGINT AS simhash
 FROM documents
 """
-
-QUERIES.update(
-    {
-        "s1_fragment_routing": q_s1_fragment_routing,
-        "dedup_simhash_wide": q_dedup_simhash_wide,
-    }
-)
-ORACLES.update(
-    {
-        "s1_fragment_routing": ORACLE_FRAGMENT,
-        "dedup_simhash_wide": ORACLE_SIMHASH_WIDE,
-    }
-)
 
 
 # ===========================================================================
@@ -2384,9 +2092,6 @@ WITH t AS (
 SELECT doc_id, unnest(fps) AS fp FROM fp
 """
 
-QUERIES["text_winnow_fingerprint"] = q_text_winnow_fingerprint
-ORACLES["text_winnow_fingerprint"] = ORACLE_WINNOW
-
 
 # ===========================================================================
 # batch 19 — IVF multi-probe (nprobe=2): the standard ANN recall lever
@@ -2436,9 +2141,6 @@ ORDER BY score DESC, a.vec_id
 LIMIT 10
 """
 
-QUERIES["sim_ivf_topk_probe2"] = q_sim_ivf_topk_probe2
-ORACLES["sim_ivf_topk_probe2"] = ORACLE_SIM_IVF_P2
-
 
 # ===========================================================================
 # batch 20 — scale-safe embedding near-dup: LSH-bucketed candidate pairs +
@@ -2463,9 +2165,6 @@ SELECT a.id AS a_id, bb.id AS b_id,
 FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.id < bb.id
 WHERE round(list_cosine_similarity(a.v::DOUBLE[], bb.v::DOUBLE[]), 4) >= 0.3
 """
-
-QUERIES["dedup_embedding_lsh"] = q_dedup_embedding_lsh
-ORACLES["dedup_embedding_lsh"] = ORACLE_DEDUP_EMB_LSH
 
 
 # ===========================================================================
@@ -2587,21 +2286,6 @@ SELECT doc_id::BIGINT AS doc_id, 'pptx' AS doc_kind,
 FROM documents
 """
 
-QUERIES.update(
-    {
-        "b9_docx_extract": q_b9_docx_extract,
-        "b8_xlsx_extract": q_b8_xlsx_extract,
-        "b10_pptx_extract": q_b10_pptx_extract,
-    }
-)
-ORACLES.update(
-    {
-        "b9_docx_extract": ORACLE_B9_DOCX,
-        "b8_xlsx_extract": ORACLE_B8_XLSX,
-        "b10_pptx_extract": ORACLE_B10_PPTX,
-    }
-)
-
 
 # ===========================================================================
 # batch 22 — JATS article extraction (B12) on the text-payload surface:
@@ -2620,17 +2304,8 @@ PAYLOAD_JATS = (
 
 
 def q_b12_jats_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_JATS).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        "content_type",
-        "parse_status",
-        "extracted_text",
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_JATS, "content_type", "parse_status", "extracted_text"
     )
 
 
@@ -2642,9 +2317,6 @@ SELECT doc_id::BIGINT AS doc_id, 'jats' AS content_type,
          || chr(10) || 'alpha ' || doc_id AS extracted_text
 FROM documents
 """
-
-QUERIES["b12_jats_extract"] = q_b12_jats_extract
-ORACLES["b12_jats_extract"] = ORACLE_B12_JATS
 
 
 # ===========================================================================
@@ -2667,17 +2339,8 @@ PAYLOAD_USPTO = (
 
 
 def q_b13_uspto_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.expr(PAYLOAD_USPTO).alias("text"),
-    )
-    out = extract_turns(docs, route_partitions=8)
-    return out.select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        "content_type",
-        "parse_status",
-        "extracted_text",
+    return _one_turn_extract(
+        spark, sf_dir, PAYLOAD_USPTO, "content_type", "parse_status", "extracted_text"
     )
 
 
@@ -2691,9 +2354,6 @@ SELECT doc_id::BIGINT AS doc_id, 'uspto' AS content_type,
          AS extracted_text
 FROM documents
 """
-
-QUERIES["b13_uspto_extract"] = q_b13_uspto_extract
-ORACLES["b13_uspto_extract"] = ORACLE_B13_USPTO
 
 
 # ===========================================================================
@@ -2753,9 +2413,6 @@ SELECT doc_id::BIGINT AS doc_id, 'pdf' AS content_type,
 FROM documents
 """
 
-QUERIES["b4_pdf_real"] = q_b4_pdf_real
-ORACLES["b4_pdf_real"] = ORACLE_B4_PDF
-
 
 # ===========================================================================
 # batch 25 — HWPX extraction (B14) on the binary office surface: real
@@ -2784,9 +2441,6 @@ SELECT doc_id::BIGINT AS doc_id, 'hwpx' AS doc_kind,
          AS extracted_text
 FROM documents
 """
-
-QUERIES["b14_hwpx_extract"] = q_b14_hwpx_extract
-ORACLES["b14_hwpx_extract"] = ORACLE_B14_HWPX
 
 
 # ===========================================================================
@@ -2914,22 +2568,6 @@ FROM c
 """
 
 
-QUERIES.update(
-    {
-        "curate_decontaminate": q_curate_decontaminate,
-        "curate_stratified_sample": q_curate_stratified_sample,
-        "curate_pack_sequences": q_curate_pack_sequences,
-    }
-)
-ORACLES.update(
-    {
-        "curate_decontaminate": ORACLE_CURATE_DECONTAM,
-        "curate_stratified_sample": ORACLE_CURATE_SAMPLE,
-        "curate_pack_sequences": ORACLE_CURATE_PACK,
-    }
-)
-
-
 # ===========================================================================
 # batch 27 — 2-D bbox fixpoint at realistic page counts (round-2 verdict
 # stretch): same two-disjoint-y-band construction as batch 13, but spread
@@ -2986,9 +2624,6 @@ SELECT user_id, page, band, count(*) AS n_boxes,
        round(sum(mr - ml), 4) AS total_w
 FROM merged GROUP BY user_id, page, band
 """
-
-QUERIES["o3_bbox_merge_pages"] = q_o3_bbox_merge_pages
-ORACLES["o3_bbox_merge_pages"] = ORACLE_O3_BBOX_PAGES
 
 
 # ===========================================================================
@@ -3093,9 +2728,6 @@ SELECT f.doc_id, f.lang, f.gate_pass, f.keep, f.contaminated, f.sampled,
        coalesce(p.off, -1)::INT AS offset_in_seq
 FROM flags f LEFT JOIN packed p ON f.doc_id = p.doc_id
 """
-
-QUERIES["curate_assemble"] = q_curate_assemble
-ORACLES["curate_assemble"] = ORACLE_CURATE_ASSEMBLE
 
 
 # ===========================================================================
@@ -3209,21 +2841,6 @@ SELECT doc_id::BIGINT AS doc_id,
        'decoded' AS decode_status
 FROM documents
 """
-
-QUERIES.update(
-    {
-        "m1_image_decode": q_m1_image_decode,
-        "m2_audio_features": q_m2_audio_features,
-        "m3_video_meta": q_m3_video_meta,
-    }
-)
-ORACLES.update(
-    {
-        "m1_image_decode": ORACLE_M1_IMAGE,
-        "m2_audio_features": ORACLE_M2_AUDIO,
-        "m3_video_meta": ORACLE_M3_VIDEO,
-    }
-)
 
 
 # ===========================================================================
@@ -3379,19 +2996,6 @@ SELECT c.doc_id::BIGINT AS doc_id,
 FROM corpus c LEFT JOIN comp k ON k.id = c.doc_id
 """
 
-QUERIES.update(
-    {
-        "dedup_cc_clusters": q_dedup_cc_clusters,
-        "dedup_cc_canonical": q_dedup_cc_canonical,
-    }
-)
-ORACLES.update(
-    {
-        "dedup_cc_clusters": ORACLE_CC_CLUSTERS,
-        "dedup_cc_canonical": ORACLE_CC_CANONICAL,
-    }
-)
-
 
 # ===========================================================================
 # batch 18 — CCNet-style LM quality score (corpus-trained unigram NLL)
@@ -3428,9 +3032,6 @@ SELECT toks.doc_id,
 FROM toks LEFT JOIN vocab v USING (tok), total t
 GROUP BY toks.doc_id
 """
-
-QUERIES.update({"quality_lm_nll": q_quality_lm_nll})
-ORACLES.update({"quality_lm_nll": ORACLE_QUALITY_LM_NLL})
 
 
 # ===========================================================================
@@ -3524,9 +3125,6 @@ seeds0 AS (SELECT * FROM s0)"""
 
 
 ORACLE_SIM_IVF_KMEANS = _km_oracle(_KM_K, _KM_ITERS, _KM_DIM)
-
-QUERIES.update({"sim_ivf_kmeans": q_sim_ivf_kmeans})
-ORACLES.update({"sim_ivf_kmeans": ORACLE_SIM_IVF_KMEANS})
 
 
 # ===========================================================================
@@ -3642,9 +3240,6 @@ SELECT f.doc_id::BIGINT AS doc_id, f.cluster_id::BIGINT AS cluster_id,
 FROM flags f LEFT JOIN packed p ON f.doc_id = p.doc_id
 """
 
-QUERIES["curate_assemble_neardup"] = q_curate_assemble_neardup
-ORACLES["curate_assemble_neardup"] = ORACLE_CURATE_NEARDUP
-
 
 # ===========================================================================
 # batch 21 — TF-IDF top-k terms per document
@@ -3687,9 +3282,6 @@ ranked AS (
 SELECT doc_id, term, rank::INT AS rank, round(s, 4) AS score
 FROM ranked WHERE rank <= 5
 """
-
-QUERIES["text_tfidf_topk"] = q_text_tfidf_topk
-ORACLES["text_tfidf_topk"] = ORACLE_TEXT_TFIDF
 
 
 # ===========================================================================
@@ -3783,9 +3375,6 @@ FROM best b JOIN documents d ON d.doc_id = b.doc_id
 
 ORACLE_LANG_ID_NB = _lang_nb_oracle(_LANGS)
 
-QUERIES["lang_id_trigram_nb"] = q_lang_id_trigram_nb
-ORACLES["lang_id_trigram_nb"] = ORACLE_LANG_ID_NB
-
 
 # ===========================================================================
 # batch 23 — embedding-space duplicate clusters: the CC operator composes
@@ -3819,9 +3408,6 @@ reach AS (
 SELECT src::BIGINT AS vec_id, least(src, min(dst))::BIGINT AS cluster_id
 FROM reach GROUP BY src
 """
-
-QUERIES["dedup_embedding_cc"] = q_dedup_embedding_cc
-ORACLES["dedup_embedding_cc"] = ORACLE_DEDUP_EMB_CC
 
 
 # ===========================================================================
@@ -3866,9 +3452,6 @@ SELECT doc_id,
 FROM seg
 """
 
-QUERIES["curate_pack_segments"] = q_curate_pack_segments
-ORACLES["curate_pack_segments"] = ORACLE_PACK_SEGMENTS
-
 
 # ===========================================================================
 # batch 25 — REAL baseline-JPEG decode (T.81 from scratch: Huffman + DCT).
@@ -3895,9 +3478,6 @@ SELECT doc_id::BIGINT AS doc_id,
 FROM documents
 """
 
-QUERIES["m4_jpeg_decode"] = q_m4_jpeg_decode
-ORACLES["m4_jpeg_decode"] = ORACLE_M4_JPEG
-
 
 # ===========================================================================
 # batch 26 — REAL GIF decode (LZW with dictionary growth; lossless, so an
@@ -3917,9 +3497,6 @@ JOIN range(0, 11) y(y) ON y.y < 6 + d.doc_id % 5
 JOIN range(0, 16) x(x) ON x.x < 8 + d.doc_id % 8
 GROUP BY d.doc_id
 """
-
-QUERIES["m5_gif_decode"] = q_m5_gif_decode
-ORACLES["m5_gif_decode"] = ORACLE_M5_GIF
 
 
 # ===========================================================================
@@ -3943,9 +3520,6 @@ JOIN range(0, 10) y(y) ON y.y < 5 + d.doc_id % 6
 JOIN range(0, 15) x(x) ON x.x < 9 + d.doc_id % 7
 GROUP BY d.doc_id
 """
-
-QUERIES["m6_tiff_decode"] = q_m6_tiff_decode
-ORACLES["m6_tiff_decode"] = ORACLE_M6_TIFF
 
 
 # ===========================================================================
@@ -3987,9 +3561,6 @@ FROM documents d
 JOIN range(0, 6) f(f) ON f.f < 3 + d.doc_id % 4 AND f.f % 2 = 0
 """
 
-QUERIES["m7_video_frames"] = q_m7_video_frames
-ORACLES["m7_video_frames"] = ORACLE_M7_AVI
-
 
 # ===========================================================================
 # batch 28b — REAL lossless-WebP decode (from-scratch VP8L: canonical
@@ -4013,9 +3584,6 @@ JOIN range(0, 21) x(x) ON x.x < 16 + d.doc_id % 5
 GROUP BY d.doc_id
 """
 
-QUERIES["m8_webp_decode"] = q_m8_webp_decode
-ORACLES["m8_webp_decode"] = ORACLE_M8_WEBP
-
 
 # ===========================================================================
 # batch 28c — MP3 frame-header walk (exact channels / rate / frame count /
@@ -4036,9 +3604,6 @@ SELECT doc_id::BIGINT AS doc_id,
        'header_only' AS decode_status
 FROM documents
 """
-
-QUERIES["m9_mp3_meta"] = q_m9_mp3_meta
-ORACLES["m9_mp3_meta"] = ORACLE_M9_MP3
 
 
 # ===========================================================================
@@ -4061,9 +3626,6 @@ SELECT doc_id::BIGINT AS doc_id,
        'decoded' AS decode_status
 FROM documents
 """
-
-QUERIES["m10_webp_lossy"] = q_m10_webp_lossy
-ORACLES["m10_webp_lossy"] = ORACLE_M10_WEBP_LOSSY
 
 
 # ===========================================================================
@@ -4148,11 +3710,6 @@ SELECT t.doc_id, t.n_tokens,
 FROM tot t LEFT JOIN agg a ON a.doc_id = t.doc_id
 """
 
-QUERIES["dedup_substring_spans"] = q_dedup_substring_spans
-ORACLES["dedup_substring_spans"] = ORACLE_SUBSTR_SPANS
-QUERIES["dedup_substring_fraction"] = q_dedup_substring_fraction
-ORACLES["dedup_substring_fraction"] = ORACLE_SUBSTR_FRACTION
-
 
 # ===========================================================================
 # batch 30 — temperature mixture sampling (domain rebalancing: rate_d =
@@ -4191,9 +3748,6 @@ SELECT doc_id, lang, rate, sampled,
        CASE WHEN sampled THEN round(1.0 / rate, 4) ELSE 0.0 END AS weight
 FROM t
 """
-
-QUERIES["curate_mixture_sample"] = q_curate_mixture_sample
-ORACLES["curate_mixture_sample"] = ORACLE_MIXTURE_SAMPLE
 
 
 # ===========================================================================
@@ -4328,13 +3882,6 @@ JOIN (SELECT * FROM events WHERE event_type = 'error') e
  AND floor(epoch(v.ts)) < floor(epoch(e.ts)) + {_RANGE_WIN}
 """
 
-QUERIES["asof_attach_signup"] = q_asof_attach_signup
-ORACLES["asof_attach_signup"] = ORACLE_ASOF_SIGNUP
-QUERIES["asof_next_purchase"] = q_asof_next_purchase
-ORACLES["asof_next_purchase"] = ORACLE_ASOF_PURCHASE
-QUERIES["range_join_error_window"] = q_range_join_error_window
-ORACLES["range_join_error_window"] = ORACLE_RANGE_JOIN
-
 
 # ===========================================================================
 # batch 32 — Z-order data layout (OPTIMIZE ZORDER BY analog): the Morton
@@ -4384,9 +3931,6 @@ SELECT event_id, x, y,
 FROM s
 """
 
-QUERIES["layout_zorder_value"] = q_layout_zorder_value
-ORACLES["layout_zorder_value"] = ORACLE_ZORDER
-
 
 # ===========================================================================
 # batch 33 — hypertable rollup (multi-resolution continuous aggregate):
@@ -4414,9 +3958,6 @@ FROM events GROUP BY 2, 3
 ORACLE_ROLLUP = " UNION ALL ".join(
     _ROLLUP_LEVEL_SQL.format(lvl=lvl) for lvl in ("minute", "hour", "day")
 )
-
-QUERIES["events_rollup_multires"] = q_events_rollup_multires
-ORACLES["events_rollup_multires"] = ORACLE_ROLLUP
 
 
 # --- adaptive variant (round 6): choose_rollup_levels prunes levels that
@@ -4463,9 +4004,6 @@ ORACLE_ROLLUP_ADAPTIVE = " UNION ALL ".join(
     for lvl in ("minute", "hour", "day")
 )
 
-QUERIES["events_rollup_adaptive"] = q_events_rollup_adaptive
-ORACLES["events_rollup_adaptive"] = ORACLE_ROLLUP_ADAPTIVE
-
 
 # ===========================================================================
 # batch 34 — unicode NFC normalization (functions/textnorm.py): the corpus
@@ -4502,9 +4040,6 @@ SELECT doc_id::BIGINT AS doc_id,
          AS chars_folded
 FROM documents
 """
-
-QUERIES["text_nfc_normalize"] = q_text_nfc_normalize
-ORACLES["text_nfc_normalize"] = ORACLE_NFC
 
 
 # ===========================================================================
@@ -4591,11 +4126,6 @@ SELECT vec_id,
 FROM q
 """
 
-QUERIES["embed_random_projection"] = q_embed_random_projection
-ORACLES["embed_random_projection"] = ORACLE_JL
-QUERIES["embed_quantize_int8"] = q_embed_quantize_int8
-ORACLES["embed_quantize_int8"] = ORACLE_QUANT
-
 
 # ===========================================================================
 # batch 36 — interpolated bigram LM (Jelinek-Mercer mixture over a closed
@@ -4672,9 +4202,6 @@ JOIN uni u ON u.m = b.cur, total tt
 GROUP BY b.doc_id
 """
 
-QUERIES["quality_lm_bigram"] = q_quality_lm_bigram
-ORACLES["quality_lm_bigram"] = ORACLE_LM_BIGRAM
-
 
 # ===========================================================================
 # batch 37 — trailing time-range features (point-in-time correctness: only
@@ -4714,9 +4241,6 @@ FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY floor(epoch(ts))::BIGINT
              RANGE BETWEEN {_ROLL_WIN - 1} PRECEDING AND CURRENT ROW)
 """
-
-QUERIES["events_rolling_features"] = q_events_rolling_features
-ORACLES["events_rolling_features"] = ORACLE_ROLLING
 
 
 # ===========================================================================
@@ -4774,9 +4298,6 @@ JOIN uni u2 ON u2.tok = p.w2, total t
 WHERE (p.pair_count - {_PHRASE_DELTA}) * t.n / (u1.c * u2.c)
         > {_PHRASE_THRESHOLD}
 """
-
-QUERIES["text_phrase_mining"] = q_text_phrase_mining
-ORACLES["text_phrase_mining"] = ORACLE_PHRASES
 
 
 # ===========================================================================
@@ -4878,11 +4399,6 @@ SELECT doc_id, round(raw, 4) AS score
 FROM scored ORDER BY raw DESC, doc_id LIMIT {_BM25_K}
 """
 
-QUERIES["search_inverted_index"] = q_search_inverted_index
-ORACLES["search_inverted_index"] = ORACLE_INVERTED
-QUERIES["search_bm25_topk"] = q_search_bm25_topk
-ORACLES["search_bm25_topk"] = ORACLE_BM25
-
 
 # ===========================================================================
 # batch 40 — incremental batch-vs-corpus dedup (the production ingest
@@ -4960,9 +4476,6 @@ LEFT JOIN oh ON oh.h = md5(n.payload)
 LEFT JOIN near nr ON nr.doc_id = n.doc_id
 """
 
-QUERIES["dedup_incremental"] = q_dedup_incremental
-ORACLES["dedup_incremental"] = ORACLE_DEDUP_INCR
-
 
 # --- materialized-index variant (round 6): identical classification, but
 # the old side is dedup_index(old) — md5/MinHash/shingles computed ONCE,
@@ -4986,10 +4499,6 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_incremental_indexed(
         new, index, "doc_id", "payload", threshold=0.2
     )
-
-
-QUERIES["dedup_incremental_indexed"] = q_dedup_incremental_indexed
-ORACLES["dedup_incremental_indexed"] = ORACLE_DEDUP_INCR
 
 
 # ===========================================================================
@@ -5040,9 +4549,6 @@ SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
 FROM old o FULL OUTER JOIN new n ON o.doc_id = n.doc_id
 """
 
-QUERIES["corpus_snapshot_diff"] = q_corpus_snapshot_diff
-ORACLES["corpus_snapshot_diff"] = ORACLE_CORPUS_DIFF
-
 
 # ===========================================================================
 # batch 42 — SimHash Hamming near-dup pairs (Manku et al. 2007 pigeonhole
@@ -5072,9 +4578,6 @@ SELECT a.doc_id AS a_id, b.doc_id AS b_id,
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.f, b.f)) <= 3
 """
-
-QUERIES["dedup_simhash_hamming"] = q_dedup_simhash_hamming
-ORACLES["dedup_simhash_hamming"] = ORACLE_SIMHASH_HAMMING
 
 
 # ===========================================================================
@@ -5115,9 +4618,6 @@ SELECT count(*)::BIGINT AS n_docs,
          AS avg_tokens
 FROM base
 """
-
-QUERIES["corpus_profile"] = q_corpus_profile
-ORACLES["corpus_profile"] = ORACLE_PROFILE
 
 
 # ===========================================================================
@@ -5175,11 +4675,6 @@ SELECT s.doc_id, s.nll,
           + (s.nll > b.q3)::INT)::INT AS shard
 FROM scored s, b
 """
-
-QUERIES["curate_split"] = q_curate_split
-ORACLES["curate_split"] = ORACLE_SPLIT
-QUERIES["curate_curriculum"] = q_curate_curriculum
-ORACLES["curate_curriculum"] = ORACLE_CURRICULUM
 
 
 # ===========================================================================
@@ -5272,9 +4767,6 @@ SELECT doc_id, lang,
 FROM seg
 """
 
-QUERIES["curate_assemble_v2"] = q_curate_assemble_v2
-ORACLES["curate_assemble_v2"] = ORACLE_ASSEMBLE_V2
-
 
 # ===========================================================================
 # batch 46 — product analytics staples: ordered funnel (single-shuffle
@@ -5352,11 +4844,6 @@ WHERE a.activity_week >= f.cohort_week
 GROUP BY 1, 2
 """
 
-QUERIES["events_funnel"] = q_events_funnel
-ORACLES["events_funnel"] = ORACLE_FUNNEL
-QUERIES["events_retention_cohorts"] = q_events_retention_cohorts
-ORACLES["events_retention_cohorts"] = ORACLE_RETENTION
-
 
 # ===========================================================================
 # batch 47 — graph kernels over the near-dup edge set (operators/graph.py):
@@ -5428,11 +4915,6 @@ r0 AS (SELECT id, 1.0 / n.n AS rank FROM nodes, n),
 SELECT id::BIGINT AS id, round(rank, 8) AS rank FROM r3
 """
 
-QUERIES["graph_triangles"] = q_graph_triangles
-ORACLES["graph_triangles"] = ORACLE_TRIANGLES
-QUERIES["graph_pagerank"] = q_graph_pagerank
-ORACLES["graph_pagerank"] = ORACLE_PAGERANK
-
 
 # ===========================================================================
 # batch 48 — weighted sampling without replacement (Efraimidis-Spirakis
@@ -5463,9 +4945,6 @@ WITH t AS (
 SELECT doc_id, tokens AS weight, round(k, 8) AS es_key
 FROM t ORDER BY k, doc_id LIMIT {_ES_K}
 """
-
-QUERIES["curate_weighted_sample"] = q_curate_weighted_sample
-ORACLES["curate_weighted_sample"] = ORACLE_WEIGHTED_SAMPLE
 
 
 # ===========================================================================
@@ -5536,9 +5015,6 @@ SELECT user_id, bucket, round(f, 4) AS value_ffill
 FROM filled WHERE side = 1
 """
 
-QUERIES["events_resample_ffill"] = q_events_resample_ffill
-ORACLES["events_resample_ffill"] = ORACLE_RESAMPLE
-
 
 # ===========================================================================
 # batch 50 — unicode script profile (multilingual routing signal; pure
@@ -5565,9 +5041,6 @@ def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SCRIPT_PROFILE = "\nWITH t AS (\n  SELECT doc_id::BIGINT AS doc_id, CASE doc_id % 4 WHEN 0 THEN text || ' привет' WHEN 1 THEN text || ' 你好世界' WHEN 2 THEN text || ' مرحبا' WHEN 3 THEN text || ' 안녕하세요' END AS t\n  FROM documents\n),\nc AS (\n  SELECT doc_id,\n       (length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g')))::INT AS latin,\n       (length(t) - length(regexp_replace(t, '[0-9]', '', 'g')))::INT AS digit,\n       (length(t) - length(regexp_replace(t, '[Ѐ-ӿ]', '', 'g')))::INT AS cyrillic,\n       (length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g')))::INT AS cjk,\n       (length(t) - length(regexp_replace(t, '[\u0600-ۿ]', '', 'g')))::INT AS arabic,\n       (length(t) - length(regexp_replace(t, '[가-\ud7af]', '', 'g')))::INT AS hangul,\n       (length(t)\n          - ((length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[0-9]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[Ѐ-ӿ]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[\u0600-ۿ]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[가-\ud7af]', '', 'g'))))\n          - (length(t) - length(regexp_replace(t, '[\\s]', '', 'g'))))::INT\n         AS other\n  FROM t\n)\nSELECT doc_id, latin, digit, cyrillic, cjk, arabic, hangul, other,\n       CASE WHEN latin >= greatest(digit, greatest(cyrillic, greatest(cjk, greatest(arabic, greatest(hangul, other))))) THEN 'latin' ELSE CASE WHEN digit >= greatest(cyrillic, greatest(cjk, greatest(arabic, greatest(hangul, other)))) THEN 'digit' ELSE CASE WHEN cyrillic >= greatest(cjk, greatest(arabic, greatest(hangul, other))) THEN 'cyrillic' ELSE CASE WHEN cjk >= greatest(arabic, greatest(hangul, other)) THEN 'cjk' ELSE CASE WHEN arabic >= greatest(hangul, other) THEN 'arabic' ELSE CASE WHEN hangul >= other THEN 'hangul' ELSE 'other' END END END END END END AS dominant\nFROM c\n"
-
-QUERIES["text_script_profile"] = q_text_script_profile
-ORACLES["text_script_profile"] = ORACLE_SCRIPT_PROFILE
 
 
 def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5618,9 +5091,6 @@ s AS (
 SELECT term, c_old, c_new, round(lo, 6) AS log_odds
 FROM s ORDER BY abs(lo) DESC, term LIMIT 20
 """
-
-QUERIES["vocab_drift"] = q_vocab_drift
-ORACLES["vocab_drift"] = ORACLE_VOCAB_DRIFT
 
 
 # ===========================================================================
@@ -5691,9 +5161,6 @@ SELECT t.doc_id, count(*)::BIGINT AS n_words,
 FROM t JOIN done d USING (word)
 GROUP BY t.doc_id
 """
-
-QUERIES["text_subword_counts"] = q_text_subword_counts
-ORACLES["text_subword_counts"] = ORACLE_SUBWORD
 
 
 # ===========================================================================
@@ -5833,10 +5300,6 @@ ORDER BY doc_id, toc_i
 """
 
 
-QUERIES["toc_match_back"] = q_toc_match_back
-ORACLES["toc_match_back"] = _toc_oracle()
-
-
 # ===========================================================================
 # batch 49 — PRODUCTION LSH path: hot-bucket cap (round-6 verdict #4).
 # The star-cap mode (max_bucket) is what run_curation recommends for 100 TB
@@ -5952,9 +5415,6 @@ WHERE len(list_intersect(sa.shingles, sb.shingles))
       / (len(sa.shingles) + len(sb.shingles)
          - len(list_intersect(sa.shingles, sb.shingles))) >= 0.2
 """
-
-QUERIES["dedup_minhash_lsh_capped"] = q_dedup_minhash_lsh_capped
-ORACLES["dedup_minhash_lsh_capped"] = ORACLE_MINHASH_LSH_CAPPED
 
 
 # ===========================================================================
@@ -6138,9 +5598,6 @@ UNION ALL
 SELECT doc_id, status, matched_old_id, 2 AS batch FROM cls2
 """
 
-QUERIES["curate_ingest_indexed"] = q_curate_ingest_indexed
-ORACLES["curate_ingest_indexed"] = ORACLE_CURATE_INGEST
-
 
 # ===========================================================================
 # batch 51 — STREAMING replay-guard semantics as a contract row (round-6
@@ -6222,5 +5679,135 @@ UNION ALL
 SELECT doc_id, status, matched_old_id, 1 AS batch FROM cls1_replay
 """
 
-QUERIES["stream_dedup_replay"] = q_stream_dedup_replay
-ORACLES["stream_dedup_replay"] = ORACLE_STREAM_REPLAY
+
+# ---------------------------------------------------------------------------
+# registry: one (builder, oracle SQL) record per query
+# ---------------------------------------------------------------------------
+_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "s1_content_sniff": (q_s1_content_sniff, ORACLE_S1),
+    "s2_doc_hash_limits": (q_s2_doc_hash_limits, ORACLE_S2),
+    "b1_html_extract": (q_b1_html_extract, ORACLE_B1),
+    "b2_paragraphs": (q_b2_paragraphs, ORACLE_B2),
+    "p1_text_quality": (q_p1_text_quality, ORACLE_P1),
+    "p6_sanitize": (q_p6_sanitize, ORACLE_P6),
+    "o1_compose_vectors": (q_o1_compose_vectors, ORACLE_O1),
+    "o6_confidence_agg": (q_o6_confidence_agg, ORACLE_O6),
+    "c1_heading_propagation": (q_c1_heading_propagation, ORACLE_C1),
+    "c2_chunk_assignment": (q_c2_chunk_assignment, ORACLE_C2),
+    "o3_interval_merge": (q_o3_interval_merge, ORACLE_O3),
+    "events_sessionize": (q_events_sessionize, ORACLE_SESSIONIZE),
+    "dedup_exact": (q_dedup_exact, ORACLE_DEDUP_EXACT),
+    "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, ORACLE_NGRAM_JACCARD),
+    "dedup_minhash": (q_dedup_minhash, ORACLE_MINHASH),
+    "dedup_minhash_lsh": (q_dedup_minhash_lsh, ORACLE_MINHASH_LSH),
+    "dedup_simhash": (q_dedup_simhash, ORACLE_SIMHASH),
+    "text_lang_id": (q_text_lang_id, ORACLE_TEXT_LANG_ID),
+    "text_token_count": (q_text_token_count, ORACLE_TEXT_TOKEN_COUNT),
+    "text_fingerprint": (q_text_fingerprint, ORACLE_TEXT_FINGERPRINT),
+    "sim_cosine_scores": (q_sim_cosine_scores, ORACLE_SIM_COSINE),
+    "sim_topk": (q_sim_topk, ORACLE_SIM_TOPK),
+    "sim_ann_lsh": (q_sim_ann_lsh, ORACLE_SIM_ANN_LSH),
+    "join_agg_revenue": (q_join_agg_revenue, ORACLE_JOIN_AGG),
+    "events_tumbling": (q_events_tumbling, ORACLE_EVENTS_TUMBLING),
+    "b1_html_density": (q_b1_html_density, ORACLE_B1_DENSITY),
+    "events_topk_per_user": (q_events_topk_per_user, ORACLE_EVENTS_TOPK),
+    "doc_json_roundtrip": (q_doc_json_roundtrip, ORACLE_B1),
+    "r4_status_fallback": (q_r4_status_fallback, ORACLE_R4_STATUS),
+    "c1_cross_turn_context": (q_c1_cross_turn_context, ORACLE_C1_CONTEXT),
+    "pricing_summary": (q_pricing_summary, ORACLE_PRICING),
+    "monthly_revenue": (q_monthly_revenue, ORACLE_MONTHLY_REVENUE),
+    "dedup_embedding_cosine": (q_dedup_embedding_cosine, ORACLE_DEDUP_EMBEDDING),
+    "sim_ivf_topk": (q_sim_ivf_topk, ORACLE_SIM_IVF),
+    "o2_items_table": (q_o2_items_table, ORACLE_O2_ITEMS),
+    "o7_markdown_export": (q_o7_markdown_export, ORACLE_O7_MD),
+    "text_quality_profile": (q_text_quality_profile, ORACLE_TEXT_QUALITY_PROFILE),
+    "b11_asciidoc_extract": (q_b11_asciidoc_extract, ORACLE_B11),
+    "salted_user_stats": (q_salted_user_stats, ORACLE_SALTED),
+    "text_repetition": (q_text_repetition, ORACLE_TEXT_REPETITION),
+    "text_scrub": (q_text_scrub, ORACLE_TEXT_SCRUB),
+    "o1_vector_meta_full": (q_o1_vector_meta_full, ORACLE_O1_FULL),
+    "o3_bbox_merge_2d": (q_o3_bbox_merge_2d, ORACLE_O3_BBOX_2D),
+    "b3_pdfish_extract": (q_b3_pdfish_extract, ORACLE_B3),
+    "b6_md_extract": (q_b6_md_extract, ORACLE_B6),
+    "b7_csv_extract": (q_b7_csv_extract, ORACLE_B7),
+    "curate_pipeline": (q_curate_pipeline, ORACLE_CURATE),
+    "s1_fragment_routing": (q_s1_fragment_routing, ORACLE_FRAGMENT),
+    "dedup_simhash_wide": (q_dedup_simhash_wide, ORACLE_SIMHASH_WIDE),
+    "text_winnow_fingerprint": (q_text_winnow_fingerprint, ORACLE_WINNOW),
+    "sim_ivf_topk_probe2": (q_sim_ivf_topk_probe2, ORACLE_SIM_IVF_P2),
+    "dedup_embedding_lsh": (q_dedup_embedding_lsh, ORACLE_DEDUP_EMB_LSH),
+    "b9_docx_extract": (q_b9_docx_extract, ORACLE_B9_DOCX),
+    "b8_xlsx_extract": (q_b8_xlsx_extract, ORACLE_B8_XLSX),
+    "b10_pptx_extract": (q_b10_pptx_extract, ORACLE_B10_PPTX),
+    "b12_jats_extract": (q_b12_jats_extract, ORACLE_B12_JATS),
+    "b13_uspto_extract": (q_b13_uspto_extract, ORACLE_B13_USPTO),
+    "b4_pdf_real": (q_b4_pdf_real, ORACLE_B4_PDF),
+    "b14_hwpx_extract": (q_b14_hwpx_extract, ORACLE_B14_HWPX),
+    "curate_decontaminate": (q_curate_decontaminate, ORACLE_CURATE_DECONTAM),
+    "curate_stratified_sample": (q_curate_stratified_sample, ORACLE_CURATE_SAMPLE),
+    "curate_pack_sequences": (q_curate_pack_sequences, ORACLE_CURATE_PACK),
+    "o3_bbox_merge_pages": (q_o3_bbox_merge_pages, ORACLE_O3_BBOX_PAGES),
+    "curate_assemble": (q_curate_assemble, ORACLE_CURATE_ASSEMBLE),
+    "m1_image_decode": (q_m1_image_decode, ORACLE_M1_IMAGE),
+    "m2_audio_features": (q_m2_audio_features, ORACLE_M2_AUDIO),
+    "m3_video_meta": (q_m3_video_meta, ORACLE_M3_VIDEO),
+    "dedup_cc_clusters": (q_dedup_cc_clusters, ORACLE_CC_CLUSTERS),
+    "dedup_cc_canonical": (q_dedup_cc_canonical, ORACLE_CC_CANONICAL),
+    "quality_lm_nll": (q_quality_lm_nll, ORACLE_QUALITY_LM_NLL),
+    "sim_ivf_kmeans": (q_sim_ivf_kmeans, ORACLE_SIM_IVF_KMEANS),
+    "curate_assemble_neardup": (q_curate_assemble_neardup, ORACLE_CURATE_NEARDUP),
+    "text_tfidf_topk": (q_text_tfidf_topk, ORACLE_TEXT_TFIDF),
+    "lang_id_trigram_nb": (q_lang_id_trigram_nb, ORACLE_LANG_ID_NB),
+    "dedup_embedding_cc": (q_dedup_embedding_cc, ORACLE_DEDUP_EMB_CC),
+    "curate_pack_segments": (q_curate_pack_segments, ORACLE_PACK_SEGMENTS),
+    "m4_jpeg_decode": (q_m4_jpeg_decode, ORACLE_M4_JPEG),
+    "m5_gif_decode": (q_m5_gif_decode, ORACLE_M5_GIF),
+    "m6_tiff_decode": (q_m6_tiff_decode, ORACLE_M6_TIFF),
+    "m7_video_frames": (q_m7_video_frames, ORACLE_M7_AVI),
+    "m8_webp_decode": (q_m8_webp_decode, ORACLE_M8_WEBP),
+    "m9_mp3_meta": (q_m9_mp3_meta, ORACLE_M9_MP3),
+    "m10_webp_lossy": (q_m10_webp_lossy, ORACLE_M10_WEBP_LOSSY),
+    "dedup_substring_spans": (q_dedup_substring_spans, ORACLE_SUBSTR_SPANS),
+    "dedup_substring_fraction": (q_dedup_substring_fraction, ORACLE_SUBSTR_FRACTION),
+    "curate_mixture_sample": (q_curate_mixture_sample, ORACLE_MIXTURE_SAMPLE),
+    "asof_attach_signup": (q_asof_attach_signup, ORACLE_ASOF_SIGNUP),
+    "asof_next_purchase": (q_asof_next_purchase, ORACLE_ASOF_PURCHASE),
+    "range_join_error_window": (q_range_join_error_window, ORACLE_RANGE_JOIN),
+    "layout_zorder_value": (q_layout_zorder_value, ORACLE_ZORDER),
+    "events_rollup_multires": (q_events_rollup_multires, ORACLE_ROLLUP),
+    "events_rollup_adaptive": (q_events_rollup_adaptive, ORACLE_ROLLUP_ADAPTIVE),
+    "text_nfc_normalize": (q_text_nfc_normalize, ORACLE_NFC),
+    "embed_random_projection": (q_embed_random_projection, ORACLE_JL),
+    "embed_quantize_int8": (q_embed_quantize_int8, ORACLE_QUANT),
+    "quality_lm_bigram": (q_quality_lm_bigram, ORACLE_LM_BIGRAM),
+    "events_rolling_features": (q_events_rolling_features, ORACLE_ROLLING),
+    "text_phrase_mining": (q_text_phrase_mining, ORACLE_PHRASES),
+    "search_inverted_index": (q_search_inverted_index, ORACLE_INVERTED),
+    "search_bm25_topk": (q_search_bm25_topk, ORACLE_BM25),
+    "dedup_incremental": (q_dedup_incremental, ORACLE_DEDUP_INCR),
+    "dedup_incremental_indexed": (q_dedup_incremental_indexed, ORACLE_DEDUP_INCR),
+    "corpus_snapshot_diff": (q_corpus_snapshot_diff, ORACLE_CORPUS_DIFF),
+    "dedup_simhash_hamming": (q_dedup_simhash_hamming, ORACLE_SIMHASH_HAMMING),
+    "corpus_profile": (q_corpus_profile, ORACLE_PROFILE),
+    "curate_split": (q_curate_split, ORACLE_SPLIT),
+    "curate_curriculum": (q_curate_curriculum, ORACLE_CURRICULUM),
+    "curate_assemble_v2": (q_curate_assemble_v2, ORACLE_ASSEMBLE_V2),
+    "events_funnel": (q_events_funnel, ORACLE_FUNNEL),
+    "events_retention_cohorts": (q_events_retention_cohorts, ORACLE_RETENTION),
+    "graph_triangles": (q_graph_triangles, ORACLE_TRIANGLES),
+    "graph_pagerank": (q_graph_pagerank, ORACLE_PAGERANK),
+    "curate_weighted_sample": (q_curate_weighted_sample, ORACLE_WEIGHTED_SAMPLE),
+    "events_resample_ffill": (q_events_resample_ffill, ORACLE_RESAMPLE),
+    "text_script_profile": (q_text_script_profile, ORACLE_SCRIPT_PROFILE),
+    "vocab_drift": (q_vocab_drift, ORACLE_VOCAB_DRIFT),
+    "text_subword_counts": (q_text_subword_counts, ORACLE_SUBWORD),
+    "toc_match_back": (q_toc_match_back, _toc_oracle()),
+    "dedup_minhash_lsh_capped": (q_dedup_minhash_lsh_capped, ORACLE_MINHASH_LSH_CAPPED),
+    "curate_ingest_indexed": (q_curate_ingest_indexed, ORACLE_CURATE_INGEST),
+    "stream_dedup_replay": (q_stream_dedup_replay, ORACLE_STREAM_REPLAY),
+}
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: builder for name, (builder, _) in _REGISTRY.items()
+}
+ORACLES: dict[str, str] = {name: sql for name, (_, sql) in _REGISTRY.items()}

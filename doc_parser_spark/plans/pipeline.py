@@ -100,8 +100,8 @@ def run_extraction_job(
                 how="left_anti",
             )
 
-    # routing="shuffle": one exchange on (content_type, conv_id, turn_idx)
-    #   before the parse — content-homogeneous batches + whale salting.
+    # routing="shuffle": one exchange on (conv_id, turn_idx) before the
+    #   parse — whale salting; batches stay content-mixed (extract_turns).
     # routing="none": extract directly on scan partitions — the bucket
     #   write below is then the job's ONLY full exchange. Right when the
     #   source already yields well-sized splits (Iceberg) and payload mix

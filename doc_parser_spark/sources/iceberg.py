@@ -1,45 +1,16 @@
-"""Iceberg transcript source — production config + parquet stand-in.
+"""Iceberg transcript source with a parquet stand-in.
 
 The production job reads an Iceberg table of transcripts partitioned by
 ``bucket(N, conv_id)`` (the same bucket function pipeline.py uses for the
-output manifest). This module centralizes:
-
-- the session config a real cluster needs (catalog + storage-partitioned
-  joins so a groupBy/join on conv_id over matching buckets needs NO shuffle);
-- the reader, which uses the Iceberg format when the runtime is on the
-  classpath and falls back to parquet directories otherwise (this sandbox
-  ships no iceberg-spark-runtime jar and has no network to fetch one —
-  TESTDATA.md parquet is the documented stand-in).
+output manifest). The reader uses the Iceberg format when the runtime is on
+the classpath and falls back to parquet directories otherwise (TESTDATA.md
+parquet is the documented stand-in when no iceberg-spark-runtime jar is
+present).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-# Config for a real cluster (spark-submit --conf / spark-defaults):
-ICEBERG_SESSION_CONF = {
-    # catalog wiring (values are site-specific; shapes are the public ones)
-    "spark.sql.extensions": (
-        "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-    ),
-    "spark.sql.catalog.lake": "org.apache.iceberg.spark.SparkCatalog",
-    "spark.sql.catalog.lake.type": "hadoop",  # or hive / rest
-    # storage-partitioned joins: a join/groupBy keyed on conv_id over tables
-    # bucketed by bucket(N, conv_id) skips the shuffle entirely
-    "spark.sql.sources.v2.bucketing.enabled": "true",
-    "spark.sql.sources.v2.bucketing.pushPartValues.enabled": "true",
-    "spark.sql.iceberg.planning.preserve-data-grouping": "true",
-    "spark.sql.requireAllClusterKeysForCoPartition": "false",
-}
-
-CREATE_TABLE_DDL = """
-CREATE TABLE lake.db.transcripts (
-    conv_id string, turn_idx int, role string,
-    text string, tool string, ts timestamp
-) USING iceberg
-PARTITIONED BY (bucket(256, conv_id))
-TBLPROPERTIES ('write.distribution-mode' = 'hash')
-"""
 
 
 def iceberg_available(spark: SparkSession) -> bool:

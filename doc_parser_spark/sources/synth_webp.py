@@ -618,16 +618,6 @@ class _VP8BoolEnc:
         return bytes(self.buf)
 
 
-def _put_flag_val(enc, value, nbits):
-    """Header 'flag + L(n) + sign' field; flag 0 when value == 0."""
-    if value == 0:
-        enc.put(128, 0)
-    else:
-        enc.put(128, 1)
-        enc.literal(abs(value), nbits)
-        enc.put(128, 1 if value < 0 else 0)
-
-
 def _put_coeff_token(enc, probs_row, value):
     """Write one coefficient token (tree path + extra bits + sign) with
     the §13.2 token tree.  probs_row: the 11 probs for this band/ctx."""

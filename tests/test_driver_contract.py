@@ -5,6 +5,8 @@ values — the same gate the real driver applies at sf0.01.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 
 import duckdb
@@ -43,6 +45,20 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns)).reset_index(drop=True)
 
 
+# sha256 over the sorted (name, oracle SQL) pairs: every oracle string is
+# pinned byte-for-byte, so a registry edit cannot silently change one
+ORACLES_SHA256 = "17e1caadf5531907b43278c51ac5e5b885cf7218fc4c962200a43121577dd176"
+
+
+def test_registry_pins_queries_and_oracles():
+    from doc_parser_spark.plans.driver_queries import ORACLES, QUERIES
+
+    assert set(QUERIES) == set(ORACLES)
+    assert len(QUERIES) == 121
+    blob = json.dumps(sorted(ORACLES.items())).encode()
+    assert hashlib.sha256(blob).hexdigest() == ORACLES_SHA256
+
+
 def _entry_names():
     import __spark_entry__ as e
 
@@ -53,11 +69,9 @@ def _entry_names():
 def test_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as e
 
-    got = _normalize(e.queries()[name](spark, SF_DIR).toPandas())
     oracle = e.oracle_sql().get(name)
-    if oracle is None:
-        assert len(got) >= 0  # rows-only check
-        return
+    assert oracle is not None, f"{name}: registered without an oracle"
+    got = _normalize(e.queries()[name](spark, SF_DIR).toPandas())
     exp = _normalize(duck.sql(oracle).df())
     # Vacuity guard: a 0-row match only proves both engines agree on an
     # empty frame (round-3 verdict: text_phrase_mining).  Every contract

@@ -7,7 +7,7 @@ tables, not just plausible:
 - ``_paragraphs`` (feeds b2_paragraphs / o1_compose_vectors /
   c2_chunk_assignment / o1_vector_meta_full): JVM
   split/transform/filter/posexplode vs the reference mapInPandas flush
-  loop (``_paragraphs_py``) — full-row equality including ordering
+  loop (``_paragraphs_py`` below) — full-row equality including ordering
   columns.
 - ``_quality_col`` (feeds p1_text_quality / o6_confidence_agg): JVM
   CASE/rlike/regexp_count vs ``rate_text_quality`` — exact double
@@ -28,12 +28,33 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+def _paragraphs_py(spark, sf_dir):
+    """Reference implementation: the ``split_paragraphs`` flush loop
+    row-at-a-time in Python, the baseline the JVM ``_paragraphs`` must
+    match."""
+    from doc_parser_spark.functions.plain_extract import split_paragraphs
+    from doc_parser_spark.plans.driver_queries import PAYLOAD_PARAS, _docs
+
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", F.expr(PAYLOAD_PARAS).alias("payload")
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                for i, para in enumerate(split_paragraphs(payload or ""), 1):
+                    rows.append((int(doc_id), i, para))
+            yield pd.DataFrame(rows, columns=["doc_id", "para_idx", "para"]).astype(
+                {"doc_id": "int64", "para_idx": "int32"}
+            )
+
+    return docs.mapInPandas(gen, schema="doc_id long, para_idx int, para string")
+
+
 class TestParagraphsJvmParity:
     def test_exact_rows_vs_python_flush(self, spark):
-        from doc_parser_spark.plans.driver_queries import (
-            _paragraphs,
-            _paragraphs_py,
-        )
+        from doc_parser_spark.plans.driver_queries import _paragraphs
 
         jvm = _rows(_paragraphs(spark, SF_DIR), ["doc_id", "para_idx", "para"])
         py = _rows(_paragraphs_py(spark, SF_DIR), ["doc_id", "para_idx", "para"])
