@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from doc_parser_spark.operators.dedup import shingle_expr_from_words
+from doc_parser_spark.session import fork
 
 DEFAULT_DECONTAM_N = 5
 DEFAULT_PACK_BUDGET = 2048
@@ -629,9 +630,8 @@ def lm_bigram_score(
     """
     # round 8: (id, pos, tok) feeds the vocab count, the unigram count and
     # the adjacency window — three full corpus tokenizes without
-    # materialization (same fork-point rule as `big` below; constant-width
-    # rows, released via the output's _toks_cache handle)
-    toks = df.select(
+    # materialization (the fork-point rule of `big` below; constant-width rows)
+    toks = fork(df.select(
         F.col(id_col),
         F.posexplode(
             F.expr(
@@ -639,7 +639,7 @@ def lm_bigram_score(
                 "w -> w != '')"
             )
         ).alias("pos", "tok"),
-    ).persist()
+    ))
     counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
     vocab = (
         counts.orderBy(F.col("c").desc(), "tok")
@@ -662,9 +662,11 @@ def lm_bigram_score(
     # scoring join; without materialization the lazy DAG re-derives it —
     # paying the per-doc window (a full-corpus shuffle) twice (the
     # rollup_timeseries lesson, verified in the physical plan)
-    big = mapped.withColumn("prev", F.lag("m").over(w)).where(
-        F.col("prev").isNotNull()
-    ).persist()
+    big = fork(
+        mapped.withColumn("prev", F.lag("m").over(w)).where(
+            F.col("prev").isNotNull()
+        )
+    )
     cb = big.groupBy("prev", "m").agg(F.count("*").alias("c2"))
     cp = cb.groupBy("prev").agg(F.sum("c2").alias("cprev"))
     scored = (
@@ -684,12 +686,10 @@ def lm_bigram_score(
             ).alias("nll_tok"),
         )
     )
-    out = scored.groupBy(id_col).agg(
+    return scored.groupBy(id_col).agg(
         F.count("*").cast("int").alias("n_bigrams"),
         F.round(F.avg("nll_tok"), 4).alias("nll"),
     )
-    out._toks_cache = toks  # type: ignore[attr-defined]
-    return out
 
 
 def mine_phrases(

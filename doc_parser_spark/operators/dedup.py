@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from doc_parser_spark.session import fork
+
 DEFAULT_SHINGLE = 3
 DEFAULT_MINHASH_K = 8
 DEFAULT_BANDS = 2
@@ -331,15 +333,9 @@ def lsh_candidate_pairs(
     # zero-pair batch pay ~4x the minhash cost (round-7 profile: 10.5 s ->
     # 4 s on a 9.2k-doc batch). Rows are constant-width (id, band, bucket),
     # so the cache is cheap at any scale and, unlike localCheckpoint,
-    # evictable + recomputable (no failure cliff); the ContextCleaner
-    # releases it when the frame is garbage-collected.
-    buckets = buckets.cache()
-    # keep a handle on the CACHED frame (the max_bucket branch rebinds
-    # ``buckets`` to a derived projection) so it can be exposed for
-    # explicit release below — a long-lived ingest driver looping
-    # curate_ingest per batch must not depend on GC/ContextCleaner timing
-    # to reclaim the cached blocks (round-7 ADVICE).
-    cached_buckets = buckets
+    # evictable + recomputable (no failure cliff). Released by the
+    # caller's ForkCache.
+    buckets = fork(buckets)
     if max_bucket is not None:
         # same shuffle key as the self-join; constant-width rows throughout
         sizes = buckets.groupBy("band", "bucket").agg(
@@ -373,7 +369,7 @@ def lsh_candidate_pairs(
     sh = with_shingles(df.select(id_col, text_col), text_col, n).select(
         F.col(id_col).alias("id"), "shingles"
     )
-    out = (
+    return (
         _jaccard_col(
             cands.join(sh.alias("sa"), F.col("a_id") == F.col("sa.id"))
             .join(sh.alias("sb"), F.col("b_id") == F.col("sb.id")),
@@ -385,11 +381,6 @@ def lsh_candidate_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", F.round("jaccard", 4).alias("jaccard"))
     )
-    # release handle for the internal fork-point cache: callers that loop
-    # (plans/curate.py registers it in CurationStats._cached) unpersist it
-    # deterministically after their terminal action
-    out._lsh_bucket_cache = cached_buckets  # type: ignore[attr-defined]
-    return out
 
 
 def simhash(
@@ -706,11 +697,11 @@ def duplicated_substring_spans(
     #   k-gram transform lambda, the raw split expression was re-evaluated
     #   once per GRAM (the winnow non-CSE shape — split cost × tokens);
     # - grams feeds both the count aggregate and the marked join, so the
-    #   whole k-gram md5 derivation ran twice — persist the constant-width
-    #   (id, pos, md5) fork once, released via _grams_cache.
+    #   whole k-gram md5 derivation ran twice — fork the constant-width
+    #   (id, pos, md5) rows once.
     wdf = df.withColumn("_w", F.split(F.col(text_col), " "))
     w = F.col("_w")
-    grams = (
+    grams = fork(
         wdf.select(
             F.col(id_col),
             F.posexplode(
@@ -723,7 +714,7 @@ def duplicated_substring_spans(
                 ).otherwise(F.array().cast("array<string>"))
             ).alias("pos", "g"),
         )
-    ).persist()
+    )
     dup = (
         grams.groupBy("g")
         .count()
@@ -742,7 +733,7 @@ def duplicated_substring_spans(
             1,
         ).otherwise(0),
     ).withColumn("gid", F.sum("brk").over(win))
-    out = (
+    return (
         islands.groupBy(id_col, "gid")
         .agg(
             F.min("pos").cast("int").alias("span_start"),
@@ -755,8 +746,6 @@ def duplicated_substring_spans(
             (F.col("span_end") - F.col("span_start")).alias("span_tokens"),
         )
     )
-    out._grams_cache = grams  # type: ignore[attr-defined]
-    return out
 
 
 def duplicated_token_fraction(
@@ -776,7 +765,7 @@ def duplicated_token_fraction(
     agg = spans.groupBy(id_col).agg(
         F.sum("span_tokens").alias("dup_tokens")
     )
-    out = totals.join(agg, id_col, "left").select(
+    return totals.join(agg, id_col, "left").select(
         id_col,
         F.col("n_tokens").cast("int").alias("n_tokens"),
         F.coalesce(F.col("dup_tokens"), F.lit(0)).cast("int").alias("dup_tokens"),
@@ -786,8 +775,6 @@ def duplicated_token_fraction(
             4,
         ).alias("dup_fraction"),
     )
-    out._grams_cache = getattr(spans, "_grams_cache", None)  # type: ignore[attr-defined]
-    return out
 
 
 def dedup_incremental(
@@ -1063,12 +1050,9 @@ def simhash_hamming_pairs(
     # round 8: the fingerprint table feeds BOTH sides of the pigeonhole
     # self-join, so without materialization the full text tokenize +
     # fingerprint fold runs twice (the lsh_candidate_pairs fork-point rule;
-    # constant-width (id, simhash) rows, no text). Exposed for release via
-    # the output's _simhash_fp_cache handle.
-    fp = (
-        simhash(df, id_col, text_col, bits)
-        .withColumnRenamed(id_col, "id")
-        .persist()
+    # constant-width (id, simhash) rows, no text)
+    fp = fork(
+        simhash(df, id_col, text_col, bits).withColumnRenamed(id_col, "id")
     )
     blocks = fp.select(
         "id",
@@ -1102,12 +1086,10 @@ def simhash_hamming_pairs(
         )
         .distinct()
     )
-    out = (
+    return (
         cands.withColumn(
             "hamming", F.bit_count(F.expr("fa ^ fb")).cast("int")
         )
         .where(F.col("hamming") <= max_hamming)
         .select("a_id", "b_id", "hamming")
     )
-    out._simhash_fp_cache = fp  # type: ignore[attr-defined]
-    return out

@@ -20,7 +20,7 @@ Scale notes (100 TB):
   dangling correction, and this operator deliberately does not accept
   directed graphs). Each round is one join (ranks ⋈ edges on src) + one
   map-side-combinable aggregate (group by dst), constant-width rows.
-  ``sym``/``deg``/``nodes`` are persisted once (round 8 — they used to
+  ``sym``/``deg``/``nodes`` are forked once (round 8 — they used to
   re-derive the union+distinct inside every round's plan), the node count
   is a driver scalar instead of a per-round 1-row broadcast, and ranks
   are lazily ``localCheckpoint``-ed per round so plan depth stays flat at
@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from doc_parser_spark.session import fork
 
 
 def _oriented_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -46,15 +48,14 @@ def _oriented_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # fork point (round-8 rule): ``e`` feeds the degree aggregate AND the
     # two orientation joins, and the caller's edge frame is typically an
     # LSH candidate-pair pipeline whose tail (the exact-Jaccard verify)
-    # re-runs per branch without this persist. Constant-width (2 longs).
-    e = (
+    # re-runs per branch without this fork. Constant-width (2 longs).
+    e = fork(
         edges.select(
             F.least("a_id", "b_id").alias("u"),
             F.greatest("a_id", "b_id").alias("v"),
         )
         .where(F.col("u") < F.col("v"))
         .distinct()
-        .persist()
     )
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("x"))
@@ -69,15 +70,13 @@ def _oriented_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # fork point (round-8 rule): ``oriented`` feeds THREE plan branches
     # (both wedge sides + the closing-edge probe), and unlike the old id
     # orientation its lineage now embeds the degree aggregate + two joins
-    # — without the persist each branch re-runs all of it. Constant-width
-    # (3 longs), evictable, recomputed from the edge frame if dropped;
-    # released via the ``_oriented_cache`` handle on the result.
-    oriented = ed.select(
+    # — without the fork each branch re-runs all of it. Constant-width
+    # (3 longs), evictable, recomputed from the edge frame if dropped.
+    oriented = fork(ed.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("x"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("y"),
         F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("dy"),
-    ).persist()
-    oriented._edges_cache = e  # type: ignore[attr-defined]
+    ))
     wedges = (
         oriented.alias("e1")
         .join(
@@ -111,10 +110,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         oriented.alias("e3"),
         (F.col("y1") == F.col("e3.x")) & (F.col("y2") == F.col("e3.y")),
     )
-    out = tri.agg(F.count("*").cast("long").alias("n_triangles"))
-    out._oriented_cache = oriented  # type: ignore[attr-defined]
-    out._edges_cache = getattr(oriented, "_edges_cache", None)  # type: ignore[attr-defined]
-    return out
+    return tri.agg(F.count("*").cast("long").alias("n_triangles"))
 
 
 def pagerank(
@@ -128,7 +124,7 @@ def pagerank(
     counts, uniform init 1/N, ``iters`` damped rounds; ranks round to 8 dp
     at output (the per-round float sums are engine-stable well past that).
     Returns (id, rank)."""
-    sym = (
+    sym = fork(
         edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .unionByName(
             edges.select(
@@ -136,55 +132,41 @@ def pagerank(
             )
         )
         .distinct()
-        .persist()
     )
-    nodes = (
-        sym.select(F.col("src").alias("id")).distinct().persist()
-    )
-    cached = [sym, nodes]
-    try:
-        # driver scalar: one count instead of a 1-row broadcast aggregate
-        # cross-joined into every round's plan (1.0 / n is the same IEEE
-        # double either way)
-        n = nodes.count()
-        if n == 0:
-            # empty graph: the pre-round-8 per-row division never
-            # evaluated on an empty frame; keep that contract instead of
-            # raising ZeroDivisionError at plan-build time
-            return nodes.select("id", F.lit(0.0).alias("rank"))
-        deg = sym.groupBy("src").agg(F.count("*").alias("deg")).persist()
-        cached.append(deg)
-        ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
-        for _ in range(iters):
-            contrib = (
-                ranks.join(sym, ranks["id"] == sym["src"])
-                .join(deg, "src")
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("deg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("in_sum"))
+    nodes = fork(sym.select(F.col("src").alias("id")).distinct())
+    # driver scalar: one count instead of a 1-row broadcast aggregate
+    # cross-joined into every round's plan (1.0 / n is the same IEEE
+    # double either way)
+    n = nodes.count()
+    if n == 0:
+        # empty graph: the pre-round-8 per-row division never evaluated on
+        # an empty frame; keep that contract instead of raising
+        # ZeroDivisionError at plan-build time
+        return nodes.select("id", F.lit(0.0).alias("rank"))
+    deg = fork(sym.groupBy("src").agg(F.count("*").alias("deg")))
+    ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
+    for _ in range(iters):
+        contrib = (
+            ranks.join(sym, ranks["id"] == sym["src"])
+            .join(deg, "src")
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("rank") / F.col("deg")).alias("c"),
             )
-            # lazy checkpoint: plan depth stays one round deep at any
-            # ``iters``; materialization cascades with the caller's action
-            ranks = (
-                nodes.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (
-                        (1.0 - damping) / n
-                        + damping * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=False)
+            .groupBy("id")
+            .agg(F.sum("c").alias("in_sum"))
+        )
+        # lazy checkpoint: plan depth stays one round deep at any
+        # ``iters``; materialization cascades with the caller's action
+        ranks = (
+            nodes.join(contrib, "id", "left")
+            .select(
+                "id",
+                (
+                    (1.0 - damping) / n
+                    + damping * F.coalesce(F.col("in_sum"), F.lit(0.0))
+                ).alias("rank"),
             )
-        # materialize the checkpoint chain NOW (one job) so the persisted
-        # inputs can be released before returning — otherwise the caller's
-        # first action would recompute sym/deg per round through the lazy
-        # chain after the unpersist below evicted them
-        ranks.count()
-        return ranks.select("id", F.round("rank", 8).alias("rank"))
-    finally:
-        for df in cached:
-            df.unpersist()
+            .localCheckpoint(eager=False)
+        )
+    return ranks.select("id", F.round("rank", 8).alias("rank"))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from doc_parser_spark.session import fork
+
 TOKENIZE = "filter(split(lower({col}), '[^a-z0-9]+'), w -> w != '')"
 
 
@@ -88,7 +90,7 @@ def bm25_topk(
     """
     # (id, term, tf, dl) feeds both the document-frequency aggregate and
     # the query-term scoring scan — materialize once (rollup lesson)
-    dt = _doc_terms(df, id_col, text_col).persist()
+    dt = fork(_doc_terms(df, id_col, text_col))
     # avgdl from an EXACT integer sum (engine-portable), not a float avg
     stats = df.select(
         F.count("*").cast("double").alias("n_docs"),

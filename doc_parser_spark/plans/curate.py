@@ -27,6 +27,8 @@ from doc_parser_spark.datamodel import STATUS_PARTIAL, STATUS_SUCCESS
 from doc_parser_spark.operators.chunking import chunk_turns, compose_vectors
 from doc_parser_spark.operators.dedup import exact_dedup, lsh_candidate_pairs
 from doc_parser_spark.operators.extract import extract_turns
+from doc_parser_spark.session import ForkCache, fork
+
 
 class CurationStats(dict):
     """Per-stage row counts, collected from the plan's CollectMetrics nodes
@@ -35,24 +37,17 @@ class CurationStats(dict):
     has run, ONE fallback count() fires and fills every stage at once —
     the worst case is one extra job, never five.
 
-    ``unpersist()`` releases every plan-level cached intermediate — the
-    dedup-survivor fork points AND lsh_candidate_pairs' internal bucket
-    cache (exposed via the pair frame's ``_lsh_bucket_cache`` handle) — so
-    a long-lived ingest driver looping batches never depends on
-    GC/ContextCleaner timing to reclaim cached blocks."""
+    ``unpersist()`` releases ``forks``, the ForkCache the plan was built
+    in — the dedup-survivor fork points AND lsh_candidate_pairs' bucket
+    fork — so a long-lived ingest driver looping batches frees each
+    batch's cached blocks once its terminal action has run."""
 
     def __init__(self, vectors: DataFrame, observations: dict[str, Observation],
-                 cached):
+                 forks: ForkCache):
         super().__init__()
         self._vectors = vectors
         self._observations = observations
-        self._cached = tuple(
-            df
-            for df in (
-                (cached,) if isinstance(cached, DataFrame) else tuple(cached)
-            )
-            if df is not None
-        )
+        self._forks = forks
         self._filled = False
 
     def _fill(self) -> None:
@@ -79,8 +74,7 @@ class CurationStats(dict):
         self._filled = True
 
     def unpersist(self) -> None:
-        for df in self._cached:
-            df.unpersist()
+        self._forks.release()
 
     def __getitem__(self, key):
         self._fill()
@@ -174,56 +168,52 @@ def run_curation(
     via one fallback count). Call ``stats.unpersist()`` after the terminal
     write to release the cached dedup intermediate."""
     observations: dict[str, Observation] = {}
+    with ForkCache() as forks:
+        # 1. extract + quality gate (parse succeeded, non-empty, not glyph
+        # garbage) — shared with the indexed ingest path below
+        kept = _extract_gate(
+            transcripts, observations, min_quality, boilerplate_mode
+        )
 
-    # 1. extract + quality gate (parse succeeded, non-empty, not glyph
-    # garbage) — shared with the indexed ingest path below
-    kept = _extract_gate(
-        transcripts, observations, min_quality, boilerplate_mode
-    )
+        # 2. exact dedup on the extracted main text
+        deduped = exact_dedup(kept, "uid", "extracted_text")
+        deduped = deduped.where("keep").drop("keep", "doc_hash")
+        deduped = _observe(deduped, observations, "exact_unique")
+        # the LSH-pair branch and the survivor anti-join below BOTH consume
+        # deduped inside the one terminal action — fork it so extraction +
+        # dedup don't run twice. The caller releases it via stats.unpersist():
+        # until then the CacheManager keeps the entry (LRU may evict its
+        # blocks, never the entry)
+        deduped = fork(deduped)
 
-    # 2. exact dedup on the extracted main text
-    deduped = exact_dedup(kept, "uid", "extracted_text").where("keep").drop(
-        "keep", "doc_hash"
-    )
-    deduped = _observe(deduped, observations, "exact_unique")
-    # the LSH-pair branch and the survivor anti-join below BOTH consume
-    # deduped inside the one terminal action — cache the fork point so
-    # extraction + dedup don't run twice (caller releases via
-    # stats.unpersist(); without an explicit release it ages out of the
-    # executor block store under normal LRU)
-    deduped = deduped.cache()
+        # 3. near-dup removal: LSH candidates → verified pairs → drop the
+        # larger uid of every pair (greedy, deterministic)
+        # 8 bands × 1 row: candidate probability 1-(1-j)^8 ≈ 1.0 for
+        # j ≥ 0.5 — high recall for a dedup pass (false candidates are
+        # killed by the exact Jaccard verification inside
+        # lsh_candidate_pairs)
+        # lsh_max_bucket: production guard against near-identical template
+        # families (survive exact dedup, land m docs in one bucket per
+        # band → m²/2 pairs); oversized buckets emit a Jaccard-verified
+        # star instead, which keeps the loser set (everything but the min
+        # uid) identical for a true family. No bucket in the contract
+        # corpora comes near the cap, so oracle parity is unaffected.
+        pairs = lsh_candidate_pairs(
+            deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
+            k=8, bands=8, max_bucket=lsh_max_bucket,
+        )
+        # no broadcast hint: the loser set can be corpus-sized on dup-heavy
+        # data — AQE picks broadcast when it actually fits
+        losers = pairs.select(F.col("b_id").alias("uid")).distinct()
+        survivors = deduped.join(losers, "uid", "left_anti")
+        survivors = _observe(survivors, observations, "near_dup_unique")
 
-    # 3. near-dup removal: LSH candidates → verified pairs → drop the larger
-    # uid of every pair (greedy, deterministic)
-    # 8 bands × 1 row: candidate probability 1-(1-j)^8 ≈ 1.0 for j ≥ 0.5 —
-    # high recall for a dedup pass (false candidates are killed by the exact
-    # Jaccard verification inside lsh_candidate_pairs)
-    # lsh_max_bucket: production guard against near-identical template
-    # families (survive exact dedup, land m docs in one bucket per band →
-    # m²/2 pairs); oversized buckets emit a Jaccard-verified star instead,
-    # which keeps the loser set (everything but the min uid) identical for
-    # a true family. No bucket in the contract corpora comes near the cap,
-    # so oracle parity is unaffected.
-    pairs = lsh_candidate_pairs(
-        deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
-        k=8, bands=8, max_bucket=lsh_max_bucket,
-    )
-    # no broadcast hint: the loser set can be corpus-sized on dup-heavy
-    # data — AQE picks broadcast when it actually fits
-    losers = pairs.select(F.col("b_id").alias("uid")).distinct()
-    survivors = deduped.join(losers, "uid", "left_anti")
-    survivors = _observe(survivors, observations, "near_dup_unique")
+        # 4. chunk + vector metadata
+        chunks = chunk_turns(survivors, max_tokens=max_tokens)
+        vectors = compose_vectors(chunks)
+        vectors = _observe(vectors, observations, "vectors")
 
-    # 4. chunk + vector metadata
-    chunks = chunk_turns(survivors, max_tokens=max_tokens)
-    vectors = compose_vectors(chunks)
-    vectors = _observe(vectors, observations, "vectors")
-
-    return vectors, CurationStats(
-        vectors,
-        observations,
-        (deduped, getattr(pairs, "_lsh_bucket_cache", None)),
-    )
+    return vectors, CurationStats(vectors, observations, forks)
 
 
 # ---------------------------------------------------------------------------
@@ -334,64 +324,57 @@ def curate_ingest(
     )
 
     observations: dict[str, Observation] = {}
-    kept = _extract_gate(
-        transcripts, observations, min_quality, boilerplate_mode
-    )
+    with ForkCache() as forks:
+        kept = _extract_gate(
+            transcripts, observations, min_quality, boilerplate_mode
+        )
 
-    # within-batch exact + near dedup (identical policy to run_curation)
-    deduped = exact_dedup(kept, "uid", "extracted_text").where("keep").drop(
-        "keep", "doc_hash"
-    )
-    deduped = _observe(deduped, observations, "exact_unique")
-    deduped = deduped.cache()  # LSH-pair branch + anti-join fork point
-    # n=n: the shingle size is part of the index identity — the in-batch
-    # pass must shingle the same way as the vs-corpus classification
-    # below (k stays pinned to run_curation's in-batch policy; see
-    # build_curation_index's recall note). Round-7 ADVICE.
-    # bands=8 (r=1) is the policy the standing oracles pin; docs/SCALE.md
-    # round 8 measures the r=2 candidate-volume/recall trade-off.
-    pairs = lsh_candidate_pairs(
-        deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
-        k=8, bands=8, n=n, max_bucket=lsh_max_bucket,
-    )
-    losers = pairs.select(F.col("b_id").alias("uid")).distinct()
-    survivors = deduped.join(losers, "uid", "left_anti")
-    survivors = _observe(survivors, observations, "near_dup_unique")
-    # fork point: consumed by the classification lineage AND the novels
-    # semi-join — without the cache the in-batch LSH pipeline re-evaluates
-    # per branch (the differing projections defeat ReuseExchange)
-    survivors = survivors.cache()
+        # within-batch exact + near dedup (identical policy to run_curation)
+        deduped = exact_dedup(kept, "uid", "extracted_text")
+        deduped = deduped.where("keep").drop("keep", "doc_hash")
+        deduped = _observe(deduped, observations, "exact_unique")
+        deduped = fork(deduped)  # LSH-pair branch + anti-join fork point
+        # n=n: the shingle size is part of the index identity — the in-batch
+        # pass must shingle the same way as the vs-corpus classification
+        # below (k stays pinned to run_curation's in-batch policy; see
+        # build_curation_index's recall note). Round-7 ADVICE.
+        # bands=8 (r=1) is the policy the standing oracles pin; docs/SCALE.md
+        # round 8 measures the r=2 candidate-volume/recall trade-off.
+        pairs = lsh_candidate_pairs(
+            deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
+            k=8, bands=8, n=n, max_bucket=lsh_max_bucket,
+        )
+        losers = pairs.select(F.col("b_id").alias("uid")).distinct()
+        survivors = deduped.join(losers, "uid", "left_anti")
+        survivors = _observe(survivors, observations, "near_dup_unique")
+        # fork point: consumed by the classification lineage AND the novels
+        # semi-join — without the fork the in-batch LSH pipeline
+        # re-evaluates per branch (the differing projections defeat
+        # ReuseExchange)
+        survivors = fork(survivors)
 
-    # vs-corpus classification: batch-sized joins against the index only.
-    # cast_matched=None — uids are strings; ANSI mode would throw on the
-    # default long cast (matched_old_id keeps the uid type).
-    cls = dedup_incremental_indexed(
-        survivors.select("uid", "extracted_text"), corpus_index,
-        "uid", "extracted_text", threshold=near_dup_jaccard,
-        k=k, bands=bands, n=n, hashed=hashed, cast_matched=None,
-    )
-    novels = survivors.join(
-        cls.where("status = 'novel'").select("uid"), "uid", "semi"
-    )
-    novels = _observe(novels, observations, "novel")
-    # consumed by BOTH chunk->vectors and the novel index rows
-    novels = novels.cache()
+        # vs-corpus classification: batch-sized joins against the index only.
+        # cast_matched=None — uids are strings; ANSI mode would throw on the
+        # default long cast (matched_old_id keeps the uid type).
+        cls = dedup_incremental_indexed(
+            survivors.select("uid", "extracted_text"), corpus_index,
+            "uid", "extracted_text", threshold=near_dup_jaccard,
+            k=k, bands=bands, n=n, hashed=hashed, cast_matched=None,
+        )
+        novels = survivors.join(
+            cls.where("status = 'novel'").select("uid"), "uid", "semi"
+        )
+        novels = _observe(novels, observations, "novel")
+        # consumed by BOTH chunk->vectors and the novel index rows
+        novels = fork(novels)
 
-    novel_index = dedup_index(
-        novels, "uid", "extracted_text", k=k, bands=bands, n=n, hashed=hashed
-    )
+        novel_index = dedup_index(
+            novels, "uid", "extracted_text", k=k, bands=bands, n=n,
+            hashed=hashed,
+        )
 
-    chunks = chunk_turns(novels, max_tokens=max_tokens)
-    vectors = compose_vectors(chunks)
-    vectors = _observe(vectors, observations, "vectors")
+        chunks = chunk_turns(novels, max_tokens=max_tokens)
+        vectors = compose_vectors(chunks)
+        vectors = _observe(vectors, observations, "vectors")
 
-    return vectors, novel_index, CurationStats(
-        vectors,
-        observations,
-        (
-            deduped,
-            survivors,
-            novels,
-            getattr(pairs, "_lsh_bucket_cache", None),
-        ),
-    )
+    return vectors, novel_index, CurationStats(vectors, observations, forks)

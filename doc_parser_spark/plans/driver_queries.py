@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from doc_parser_spark.functions.sanitize import sanitize_text
 from doc_parser_spark.operators.extract import extract_turns, with_content_type
+from doc_parser_spark.session import fork
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (valid in both Spark SQL and DuckDB)
@@ -2654,12 +2655,12 @@ def q_curate_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = decontaminate_ngrams(
         docs, docs.where("doc_id % 41 = 0"), "doc_id", "payload", n=5
     ).select("doc_id", "contaminated")
-    # fork point (round 8, _CHAIN_CACHE_NOTE rule): flags feeds the
+    # fork point (round 8, the _chain_corpus rule): flags feeds the
     # pack branch AND the final join; lineage = dedup window +
     # decontamination + sampling, re-derived per branch without this
-    flags = stratified_sample(
+    flags = fork(stratified_sample(
         deduped.join(dec, "doc_id"), "doc_id", "lang", SAMPLE_RATES
-    ).cache()
+    ))
     surv = flags.where("gate_pass AND keep AND NOT contaminated AND sampled")
     packed = pack_sequences(
         surv.select("doc_id", "payload"),
@@ -2870,14 +2871,6 @@ WHERE d.doc_id < 240
 """
 
 
-_CHAIN_CACHE_NOTE = """round 8: the chain corpus feeds 3-8 plan branches per
-consuming query (LSH shingle sides, canonical join, decontamination corpus +
-benchmark, LM tokenize, pack join) and each branch re-runs the
-documents⋈documents payload join — cache the 240-row fork point (the same
-multi-consumer rule as lsh_candidate_pairs' bucket cache; trivially small,
-evictable, recomputed from parquet whenever absent)."""
-
-
 def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).alias("d")
     b = (
@@ -2885,7 +2878,13 @@ def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("b_id"), F.col("text").alias("b_text"))
         .alias("b")
     )
-    return (
+    # round 8: the chain corpus feeds 3-8 plan branches per consuming query
+    # (LSH shingle sides, canonical join, decontamination corpus +
+    # benchmark, LM tokenize, pack join) and each branch re-runs the
+    # documents⋈documents payload join — fork the 240-row result (the
+    # multi-consumer rule of lsh_candidate_pairs' bucket fork; trivially
+    # small, evictable, recomputed from parquet whenever absent)
+    return fork(
         d.join(b, F.col("b_id") == F.col("d.doc_id") - F.col("d.doc_id") % 4)
         .where(F.col("d.doc_id") < 240)
         .select(
@@ -2906,7 +2905,6 @@ def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("payload"),
         )
-        .cache()  # see _CHAIN_CACHE_NOTE
     )
 
 
@@ -3146,16 +3144,16 @@ def q_curate_assemble_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, corpus.where("doc_id % 37 = 0"), "doc_id", "payload", n=5
     ).select("doc_id", "contaminated")
     lm = lm_quality_score(corpus, "doc_id", "payload", vocab_size=256)
-    # fork point (round 8, _CHAIN_CACHE_NOTE rule): flags feeds the
+    # fork point (round 8, the _chain_corpus rule): flags feeds the
     # pack branch AND the final join; canon/dec/lm would re-run per
     # branch without this (CC itself is already materialized — the
     # driver solve returns local data — but the canonical/decontam/LM
     # joins are not)
-    flags = (
+    flags = fork(
         canon.join(dec, "doc_id")
         .join(lm.select("doc_id", "nll"), "doc_id")
         .withColumn("lm_pass", F.col("nll") <= F.lit(_LM_NLL_MAX))
-    ).cache()
+    )
     surv = flags.where("keep AND NOT contaminated AND lm_pass")
     packed = pack_sequences(
         surv.join(corpus, "doc_id").select("doc_id", "payload"),
@@ -4701,12 +4699,12 @@ def q_curate_assemble_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed = temperature_mixture_sample(
         kept, "doc_id", "lang", tau=_MIX_TAU
     ).where(F.col("sampled"))
-    # fork point (round 8, same rule as _CHAIN_CACHE_NOTE): train feeds
+    # fork point (round 8, the _chain_corpus rule): train feeds
     # pack_segments AND the lang join-back, and its lineage is the whole
     # k-gram dup-fraction pipeline — measured ~0.7 s re-derived per branch
-    train = train_val_test_split(mixed, "doc_id").where(
-        F.col("split") == "train"
-    ).cache()
+    train = fork(
+        train_val_test_split(mixed, "doc_id").where(F.col("split") == "train")
+    )
     packed = pack_segments(
         train, "doc_id", "text", budget=PACK_BUDGET, n_shards=PACK_SHARDS
     )

@@ -1,14 +1,23 @@
-"""SparkSession factory with the configs the pipeline relies on.
+"""SparkSession factory with the configs the pipeline relies on, and the
+one ownership rule for fork caches.
 
 Arrow transfer on, AQE on (runtime re-plan + skew handling), shuffle
 partitions sized for the local harness but overridable for cluster runs.
+
+A fork point is an intermediate frame that two or more branches of one
+plan read; persisting it keeps each branch from re-deriving it. Spark's
+CacheManager holds a persisted frame until something unpersists it —
+garbage collection of the Python frame does not — so every persist that
+outlives the function making it goes through ``fork``, and the caller
+that runs the terminal action owns the release through a ``ForkCache``.
 """
 
 from __future__ import annotations
 
 import os
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 ARROW_BATCH_ROWS = 1024  # Arrow batch size for mapInPandas (R1 analog)
 
@@ -44,3 +53,34 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+_FORKS: ContextVar[ForkCache | None] = ContextVar("fork_cache", default=None)
+
+
+def fork(df: DataFrame) -> DataFrame:
+    """Persist the fork point ``df`` and register it with the innermost
+    entered ``ForkCache``; with none entered, only persist."""
+    df = df.persist()
+    forks = _FORKS.get()
+    if forks is not None:
+        forks.append(df)
+    return df
+
+
+class ForkCache(list):
+    """The forks persisted while this scope is entered. Leaving the
+    ``with`` block only stops collecting — the action that runs after it
+    still reads them; ``release()`` then unpersists them all."""
+
+    def __enter__(self) -> ForkCache:
+        self._token = _FORKS.set(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _FORKS.reset(self._token)
+
+    def release(self) -> None:
+        for df in self:
+            df.unpersist()
+        self.clear()

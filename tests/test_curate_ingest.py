@@ -93,9 +93,13 @@ class TestCurateIngest:
     def test_two_batch_append_only_maintenance(self, spark, tmp_path):
         """A batch-2 copy of a batch-1 NOVEL must be rejected once batch 1's
         novel_index rows are appended — the cross-batch property the
-        standing index exists for."""
+        standing index exists for. Each batch's stats.unpersist() releases
+        every fork the batch persisted, the in-batch LSH bucket fork
+        included, so a driver looping batches holds no cache between
+        them."""
         from doc_parser_spark.plans.curate import curate_ingest
 
+        spark.catalog.clearCache()
         idx = _index(spark, tmp_path)
         b1 = spark.createDataFrame(pd.DataFrame([_row("b2", 0, NOVEL_1)]))
         _v1, novel_index_1, s1 = curate_ingest(
@@ -116,6 +120,8 @@ class TestCurateIngest:
         assert {r["id"] for r in novel_index_2.collect()} == {"x2#0"}
         s1.unpersist()
         s2.unpersist()
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        assert cache_manager.isEmpty()
 
     def test_corpus_text_is_never_scanned(self, spark, tmp_path):
         """The whole point of the indexed ingest: the plan's only parquet

@@ -55,7 +55,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as e
-    from doc_parser_spark.session import get_spark
+    from doc_parser_spark.session import ForkCache, get_spark
 
     cores = int(args.master.split("[")[1].rstrip("]")) if "[" in args.master else 16
     spark = get_spark(
@@ -86,39 +86,36 @@ def main() -> int:
             "err": None,
         }
         t0 = time.time()
+        # each query's forks are released once its result is collected
+        forks = ForkCache()
         try:
-            got = _normalize(qs[name](spark, args.sf).toPandas())
+            with forks:
+                df = qs[name](spark, args.sf)
+            got = _normalize(df.toPandas())
             rec["spark_rows"] = len(got)
-            if name not in oracles:
-                # rows-only check (non-SQL-expressible ops)
-                rec["rows_match"] = rec["schema_match"] = True
-                rec["hash_match"] = None
-                rec["oracle_rows"] = None
-                print(f"{name}: rows-only {len(got)} rows OK", flush=True)
-            else:
-                exp = _normalize(con.sql(oracles[name]).df())
-                rec["oracle_rows"] = len(exp)
-                rec["vacuous"] = len(exp) == 0
-                rec["schema_match"] = list(got.columns) == list(exp.columns)
-                rec["rows_match"] = len(got) == len(exp)
-                rec["hash_match"] = (
-                    rec["schema_match"] and rec["rows_match"] and got.equals(exp)
-                )
-                ok = rec["hash_match"] and not rec["vacuous"]
-                tag = "MATCH" if rec["hash_match"] else "MISMATCH"
-                if rec["vacuous"]:
-                    tag += " (VACUOUS: 0 rows)"
-                print(
-                    f"{name}: {tag} ({len(got)} rows, "
-                    f"{time.time() - t0:.1f}s)",
-                    flush=True,
-                )
-                if not ok:
-                    fails.append(name)
+            exp = _normalize(con.sql(oracles[name]).df())
+            rec["oracle_rows"] = len(exp)
+            rec["vacuous"] = len(exp) == 0
+            rec["schema_match"] = list(got.columns) == list(exp.columns)
+            rec["rows_match"] = len(got) == len(exp)
+            rec["hash_match"] = (
+                rec["schema_match"] and rec["rows_match"] and got.equals(exp)
+            )
+            tag = "MATCH" if rec["hash_match"] else "MISMATCH"
+            if rec["vacuous"]:
+                tag += " (VACUOUS: 0 rows)"
+            print(
+                f"{name}: {tag} ({len(got)} rows, {time.time() - t0:.1f}s)",
+                flush=True,
+            )
+            if not rec["hash_match"] or rec["vacuous"]:
+                fails.append(name)
         except Exception as ex:  # noqa: BLE001 — gate must report, not die
             rec["err"] = f"{type(ex).__name__}: {ex}"[:500]
             print(f"{name}: ERROR {rec['err']}", flush=True)
             fails.append(name)
+        finally:
+            forks.release()
         rec["sec"] = round(time.time() - t0, 2)
         results[name] = rec
 
