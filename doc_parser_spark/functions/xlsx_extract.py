@@ -25,7 +25,6 @@ import zipfile
 
 from doc_parser_spark.functions.ziputil import open_zip
 from dataclasses import dataclass, field
-from io import BytesIO
 from typing import Optional
 from xml.etree import ElementTree as ET
 

@@ -27,15 +27,16 @@ DEFAULT_MINHASH_K = 8
 DEFAULT_BANDS = 2
 
 # connected_components: rows per edge partition (two longs ≈ 16 B/row →
-# ~64 MB partitions). Derived from the measured edge count so per-round
+# ~64 MB partitions). Derived from the measured pair count so per-round
 # stage width tracks the data at ANY scale instead of the session's
 # shuffle-partition constant (guide: make partitioning scale-adaptive).
 _CC_EDGES_PER_PARTITION = 4_000_000
 
-# connected_components: symmetric edge rows at or below this measured count
-# are collected and solved driver-side (vectorized numpy label propagation)
-# instead of running 2-5 distributed rounds of joins over a graph that fits
-# in one task. 1M rows of two longs ≈ 16 MB — the same order as a broadcast
+# connected_components: graphs whose symmetric edge set is at most this
+# many rows (bounded by 2x the measured raw pair count) are collected and
+# solved driver-side (vectorized numpy label propagation) instead of
+# running 2-5 distributed rounds of joins over a graph that fits in one
+# task. 1M rows of two longs ≈ 16 MB — the same order as a broadcast
 # join side, bounded BEFORE the collect by the count that also sizes the
 # distributed path's partitions. Big graphs take the distributed path
 # unchanged.
@@ -468,10 +469,9 @@ def connected_components(
     data volume, dominated the contract-scale wall — 1.35 s for 2 rounds on
     a 200-edge graph at 64 pinned shuffle partitions, 0.63 s at 1):
 
-    - the edge table's partition count derives from its MEASURED row count
-      (the exact ``count`` of the distinct symmetric edge set, which also
-      re-gates the driver solve; only the first gate uses the cheaper
-      2·raw upper bound over the raw pair table), not from
+    - the edge table's partition count derives from the MEASURED raw pair
+      count (2·raw, the upper bound on the symmetric edge set that also
+      gates the driver solve), not from
       ``spark.sql.shuffle.partitions``: a session constant is tuned to one
       scale — on a small graph every one of ~5 per-round stages schedules
       64 near-empty tasks, and on a 10^10-edge graph 64 partitions would
@@ -500,64 +500,48 @@ def connected_components(
 
     # Decide the path on the RAW pair count — one job, no symmetrize/
     # distinct shuffle spent on the decision. 2·raw ≥ the distinct
-    # symmetric edge count, so the gate is conservative: every graph it
-    # sends to the driver would also have passed the old distinct-count
-    # gate, and the driver collects the one-directional pairs (HALF the
-    # rows the old path collected); _cc_driver symmetrizes in numpy and
-    # tolerates duplicate pairs exactly (min-propagation is idempotent).
+    # symmetric edge count, so the gate is conservative and the same
+    # bound sizes the distributed path's partitions; the driver collects
+    # the one-directional pairs and _cc_driver symmetrizes in numpy,
+    # tolerating duplicate pairs exactly (min-propagation is idempotent).
     pairs1d = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).persist()
-    m_pairs = pairs1d.count()
-    # the ≈16 MB/1M-row rationale assumes numeric ids; string-keyed
-    # graphs (curate uids) cost ~10× per row in pandas object columns,
-    # so the driver-solve gate shrinks accordingly (round-8 review)
-    driver_max = (
-        _CC_DRIVER_MAX_EDGES
-        if isinstance(
-            pairs1d.schema["src"].dataType, (T.LongType, T.IntegerType)
-        )
-        else _CC_DRIVER_MAX_EDGES // 8
-    )
-    if 2 * m_pairs <= driver_max:
-        try:
-            return _cc_driver(pairs1d, max_iterations)
-        finally:
-            pairs1d.unpersist()
-    sym = pairs1d.union(
-        pairs1d.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # The raw count exceeded the gate, but a DUP-HEAVY caller (repeated
-    # pairs — tolerated input) may still have a tiny distinct edge set:
-    # compute the distinct (needed for the distributed rounds anyway, and
-    # its count re-exactifies the partition sizing), and give the driver
-    # solve a second chance on it. _cc_driver symmetrizes whatever it
-    # gets, so feeding it the already-symmetric distinct edges just
-    # doubles the (bounded) numpy edge arrays — min-propagation is
-    # idempotent, output identical. Distinct-pair generators (every LSH
-    # path in this repo) never reach this tier with a small graph, so the
-    # extra count job here is paid only by dup-heavy or genuinely big
-    # inputs — exactly the pre-round-8 cost.
-    edges0 = sym.distinct().persist()
-    n_edges = edges0.count()
-    pairs1d.unpersist()
-    if n_edges <= driver_max:
-        try:
-            return _cc_driver(edges0, max_iterations)
-        finally:
-            edges0.unpersist()
-    n_part = max(1, math.ceil(n_edges / _CC_EDGES_PER_PARTITION))
-    edges = edges0.repartition(n_part, "src").persist()
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("_nmin"))
-        .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src"), F.col("_nmin")).alias("label"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = None
     try:
+        m_pairs = pairs1d.count()
+        # the ≈16 MB/1M-row rationale assumes numeric ids; string-keyed
+        # graphs (curate uids) cost ~10× per row in pandas object columns,
+        # so the driver-solve gate shrinks accordingly (round-8 review)
+        driver_max = (
+            _CC_DRIVER_MAX_EDGES
+            if isinstance(
+                pairs1d.schema["src"].dataType, (T.LongType, T.IntegerType)
+            )
+            else _CC_DRIVER_MAX_EDGES // 8
+        )
+        if 2 * m_pairs <= driver_max:
+            return _cc_driver(pairs1d, max_iterations)
+        n_part = max(1, math.ceil(2 * m_pairs / _CC_EDGES_PER_PARTITION))
+        edges = (
+            pairs1d.union(
+                pairs1d.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
+            )
+            .distinct()
+            .repartition(n_part, "src")
+            .persist()
+        )
+        labels = (
+            edges.groupBy("src")
+            .agg(F.min("dst").alias("_nmin"))
+            .select(
+                F.col("src").alias("id"),
+                F.least(F.col("src"), F.col("_nmin")).alias("label"),
+            )
+            .localCheckpoint(eager=False)
+        )
         for _ in range(max_iterations):
             nbr_min = (
                 edges.join(labels, edges["src"] == labels["id"])
@@ -602,8 +586,9 @@ def connected_components(
             )
         return labels.select("id", F.col("label").alias("cluster_id"))
     finally:
-        edges.unpersist()
-        edges0.unpersist()
+        pairs1d.unpersist()
+        if edges is not None:
+            edges.unpersist()
 
 
 def cluster_canonical(

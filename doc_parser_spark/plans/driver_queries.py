@@ -15,6 +15,7 @@ Determinism rules:
 
 from __future__ import annotations
 
+import re
 from typing import Callable
 
 import pandas as pd
@@ -64,6 +65,42 @@ _FRAG_RE_SQL = r"\b[A-Za-z](?:/[a-z]{1,3}\.[a-z]{1,3}){2,}\b"
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _bind(spark: SparkSession, text: str, tables: dict) -> DataFrame:
+    """``spark.sql(text)`` with each bare table name in ``tables`` bound to
+    its frame. PySpark's formatter registers the frames as temp views for
+    the parse and drops them afterwards. Names are substituted, never
+    wrapped in a ``WITH``: a CTE node stays in the analyzed plan and slows
+    the build of every frame derived from it."""
+    names = r"\b(" + "|".join(tables) + r")\b"
+    return spark.sql(re.sub(names, r"{\1}", text), **tables)
+
+
+def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run a shared oracle SQL text on Spark, ``documents`` bound to
+    ``_docs``."""
+    return _bind(spark, text, {"documents": _docs(spark, sf_dir)})
+
+
+_CTE_HEAD = re.compile(r"[\s,]*(\w+) AS \(")
+
+
+def _sql_ctes(
+    spark: SparkSession, sf_dir: str, ctes: str, *names: str
+) -> tuple[DataFrame, ...]:
+    """The ``names`` frames of a shared CTE list ``a AS (...), b AS (...)``:
+    each body runs through ``_bind`` with ``documents`` and the CTEs before
+    it bound."""
+    tables = {"documents": _docs(spark, sf_dir)}
+    pos = 0
+    while m := _CTE_HEAD.match(ctes, pos):
+        depth, pos = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(ctes[pos], 0)
+            pos += 1
+        tables[m.group(1)] = _bind(spark, ctes[m.end() : pos - 1], tables)
+    return tuple(tables[n] for n in names)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,26 +746,6 @@ _SHINGLE_SQL = (
 )
 
 
-def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).alias("d")
-    p = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("p_id"), F.col("text").alias("p_text")
-    ).alias("p")
-    return (
-        d.join(p, F.col("d.doc_id") - 1 == F.col("p_id"), "left")
-        .where(F.col("d.doc_id") < 200)
-        .select(
-            F.col("d.doc_id").alias("doc_id"),
-            F.when(
-                F.col("d.doc_id") % 2 == 1,
-                F.concat(F.col("p_text"), F.lit(" extra tail words appended here")),
-            )
-            .otherwise(F.col("d.text"))
-            .alias("payload"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # exact dedup (hash-groupBy)
 # ---------------------------------------------------------------------------
@@ -757,7 +774,7 @@ FROM hashed
 # n-gram Jaccard near-dup pairs (brute force baseline)
 # ---------------------------------------------------------------------------
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _neardup_corpus(spark, sf_dir)
+    corpus = _sql(spark, sf_dir, NEARDUP_SQL)
     return ngram_jaccard_pairs(corpus, "doc_id", "payload", threshold=0.2)
 
 
@@ -782,7 +799,7 @@ WHERE len(list_intersect(a.shingles, b.shingles))
 # MinHash signatures (salted-md5 permutations, row-local)
 # ---------------------------------------------------------------------------
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _neardup_corpus(spark, sf_dir)
+    corpus = _sql(spark, sf_dir, NEARDUP_SQL)
     return minhash_signatures(corpus, "doc_id", "payload", k=8)
 
 
@@ -807,7 +824,7 @@ SELECT doc_id, {_minhash_cols_sql(8)} FROM sh
 # MinHash-LSH near-dup pairs (band → bucket join → verify)
 # ---------------------------------------------------------------------------
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _neardup_corpus(spark, sf_dir)
+    corpus = _sql(spark, sf_dir, NEARDUP_SQL)
     return lsh_candidate_pairs(corpus, "doc_id", "payload", threshold=0.2)
 
 
@@ -1179,9 +1196,7 @@ def q_c1_cross_turn_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir).select(
-        F.concat(F.lit("conv-"), (F.col("doc_id") % 20).cast("string")).alias(
-            "conv_id"
-        ),
+        F.expr(_C1_CONV_ID).alias("conv_id"),
         (F.col("doc_id") / 20).cast("int").alias("turn_idx"),
         F.expr(PAYLOAD_CONTEXT).alias("text"),
     )
@@ -1191,9 +1206,11 @@ def q_c1_cross_turn_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_C1_CONTEXT = """
+_C1_CONV_ID = "'conv-' || (doc_id % 20)"
+
+ORACLE_C1_CONTEXT = f"""
 WITH turns AS (
-  SELECT 'conv-' || (doc_id % 20) AS conv_id,
+  SELECT {_C1_CONV_ID} AS conv_id,
          (doc_id // 20)::INT AS turn_idx,
          CASE WHEN doc_id % 3 = 0 THEN 'Title ' || doc_id END AS title
   FROM documents
@@ -2872,40 +2889,13 @@ WHERE d.doc_id < 240
 
 
 def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).alias("d")
-    b = (
-        _docs(spark, sf_dir)
-        .select(F.col("doc_id").alias("b_id"), F.col("text").alias("b_text"))
-        .alias("b")
-    )
     # round 8: the chain corpus feeds 3-8 plan branches per consuming query
     # (LSH shingle sides, canonical join, decontamination corpus +
     # benchmark, LM tokenize, pack join) and each branch re-runs the
     # documents⋈documents payload join — fork the 240-row result (the
     # multi-consumer rule of lsh_candidate_pairs' bucket fork; trivially
     # small, evictable, recomputed from parquet whenever absent)
-    return fork(
-        d.join(b, F.col("b_id") == F.col("d.doc_id") - F.col("d.doc_id") % 4)
-        .where(F.col("d.doc_id") < 240)
-        .select(
-            F.col("d.doc_id").alias("doc_id"),
-            F.concat(
-                F.expr("substr(b_text, 1, 120)"),
-                F.expr(
-                    "CASE WHEN d.doc_id % 4 >= 1 "
-                    "THEN ' alpha beta gamma delta epsilon zeta' ELSE '' END"
-                ),
-                F.expr(
-                    "CASE WHEN d.doc_id % 4 >= 2 "
-                    "THEN ' eta theta iota kappa lambda mu' ELSE '' END"
-                ),
-                F.expr(
-                    "CASE WHEN d.doc_id % 4 >= 3 "
-                    "THEN ' nu xi omicron pi rho sigma tau' ELSE '' END"
-                ),
-            ).alias("payload"),
-        )
-    )
+    return fork(_sql(spark, sf_dir, CHAIN_SQL))
 
 
 def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4010,6 +4000,7 @@ ORACLE_ROLLUP_ADAPTIVE = " UNION ALL ".join(
 # composition, and DuckDB's native nfc_normalize is the oracle
 # ===========================================================================
 _NFC_SUFFIX = " e\u0301 A\u030a fin"  # decomposed: e+combining-acute, A+combining-ring
+_NFC_RAW = f"text || '{_NFC_SUFFIX}'"
 
 
 def q_text_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4017,7 +4008,7 @@ def q_text_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat(F.col("text"), F.lit(_NFC_SUFFIX)).alias("raw"),
+        F.expr(_NFC_RAW).alias("raw"),
     )
     out = docs.withColumn("norm", nfc_normalize_col("raw"))
     return out.select(
@@ -4030,11 +4021,11 @@ def q_text_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_NFC = f"""
 SELECT doc_id::BIGINT AS doc_id,
-       md5(nfc_normalize(text || '{_NFC_SUFFIX}')) AS norm_md5,
-       length(nfc_normalize(text || '{_NFC_SUFFIX}'))
-         < length(text || '{_NFC_SUFFIX}') AS composed,
-       (length(text || '{_NFC_SUFFIX}')
-         - length(nfc_normalize(text || '{_NFC_SUFFIX}')))::INT
+       md5(nfc_normalize({_NFC_RAW})) AS norm_md5,
+       length(nfc_normalize({_NFC_RAW}))
+         < length({_NFC_RAW}) AS composed,
+       (length({_NFC_RAW})
+         - length(nfc_normalize({_NFC_RAW})))::INT
          AS chars_folded
 FROM documents
 """
@@ -4407,24 +4398,21 @@ FROM scored ORDER BY raw DESC, doc_id LIMIT {_BM25_K}
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_parser_spark.operators.dedup import dedup_incremental
 
-    corpus = _neardup_corpus(spark, sf_dir)
-    old = corpus.where(F.col("doc_id") % 2 == 0)
-    new = corpus.where(F.col("doc_id") % 2 == 1).unionByName(
-        old.where(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + 10000).alias("doc_id"), "payload"
-        )
-    )
+    old, new = _sql_ctes(spark, sf_dir, _INCR_SPLIT_SQL, "old", "new")
     return dedup_incremental(new, old, "doc_id", "payload", threshold=0.2)
 
 
-ORACLE_DEDUP_INCR = f"""
-WITH corpus AS ({NEARDUP_SQL}),
+_INCR_SPLIT_SQL = f"""corpus AS ({NEARDUP_SQL}),
 old AS (SELECT doc_id, payload FROM corpus WHERE doc_id % 2 = 0),
 new AS (
   SELECT doc_id, payload FROM corpus WHERE doc_id % 2 = 1
   UNION ALL
   SELECT doc_id + 10000, payload FROM old WHERE doc_id % 10 = 0
-),
+)"""
+
+
+ORACLE_DEDUP_INCR = f"""
+WITH {_INCR_SPLIT_SQL},
 oh AS (
   SELECT md5(payload) AS h, min(doc_id) AS exact_old_id FROM old GROUP BY 1
 ),
@@ -4486,13 +4474,7 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_index,
     )
 
-    corpus = _neardup_corpus(spark, sf_dir)
-    old = corpus.where(F.col("doc_id") % 2 == 0)
-    new = corpus.where(F.col("doc_id") % 2 == 1).unionByName(
-        old.where(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + 10000).alias("doc_id"), "payload"
-        )
-    )
+    old, new = _sql_ctes(spark, sf_dir, _INCR_SPLIT_SQL, "old", "new")
     index = dedup_index(old, "doc_id", "payload")
     return dedup_incremental_indexed(
         new, index, "doc_id", "payload", threshold=0.2
@@ -4512,12 +4494,7 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     new = (
         docs.where(F.col("doc_id") % 11 != 0)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" v2"))
-            ).otherwise(F.col("text")).alias("text"),
-        )
+        .select("doc_id", F.expr(_DIFF_NEW_TEXT).alias("text"))
         .unionByName(
             docs.where(F.col("doc_id") % 13 == 0).select(
                 (F.col("doc_id") + 100000).alias("doc_id"), "text"
@@ -4527,13 +4504,15 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_diff(docs, new, "doc_id", "text")
 
 
-ORACLE_CORPUS_DIFF = """
+_DIFF_NEW_TEXT = "CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END"
+
+ORACLE_CORPUS_DIFF = f"""
 WITH old AS (
   SELECT doc_id::BIGINT AS doc_id, md5(text) AS h FROM documents
 ),
 new AS (
   SELECT doc_id::BIGINT AS doc_id,
-         md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END) AS h
+         md5({_DIFF_NEW_TEXT}) AS h
   FROM documents WHERE doc_id % 11 <> 0
   UNION ALL
   SELECT (doc_id + 100000)::BIGINT, md5(text)
@@ -4849,7 +4828,7 @@ GROUP BY 1, 2
 # pure joins/aggregates with exact oracles over the LSH pair graph
 # ===========================================================================
 def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _neardup_corpus(spark, sf_dir)
+    corpus = _sql(spark, sf_dir, NEARDUP_SQL)
     return lsh_candidate_pairs(corpus, "doc_id", "payload", threshold=0.2)
 
 
@@ -5019,7 +4998,11 @@ FROM filled WHERE side = 1
 # length arithmetic over regexp_replace on both engines) and vocabulary
 # drift between snapshots (Monroe-style smoothed log-odds movers)
 # ===========================================================================
-_SCRIPT_SFX = {0: ' привет', 1: ' 你好世界', 2: ' مرحبا', 3: ' 안녕하세요'}
+_SCRIPT_CASE = (
+    "CASE doc_id % 4 WHEN 0 THEN text || ' привет' "
+    "WHEN 1 THEN text || ' 你好世界' WHEN 2 THEN text || ' مرحبا' "
+    "WHEN 3 THEN text || ' 안녕하세요' END"
+)
 
 
 def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5027,18 +5010,34 @@ def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat(
-            F.col("text"),
-            F.element_at(
-                F.array(*[F.lit(_SCRIPT_SFX[i]) for i in range(4)]),
-                (F.col("doc_id") % 4 + 1).cast("int"),
-            ),
-        ).alias("text"),
+        F.expr(_SCRIPT_CASE).alias("text"),
     )
     return script_profile(docs, "doc_id", "text")
 
 
-ORACLE_SCRIPT_PROFILE = "\nWITH t AS (\n  SELECT doc_id::BIGINT AS doc_id, CASE doc_id % 4 WHEN 0 THEN text || ' привет' WHEN 1 THEN text || ' 你好世界' WHEN 2 THEN text || ' مرحبا' WHEN 3 THEN text || ' 안녕하세요' END AS t\n  FROM documents\n),\nc AS (\n  SELECT doc_id,\n       (length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g')))::INT AS latin,\n       (length(t) - length(regexp_replace(t, '[0-9]', '', 'g')))::INT AS digit,\n       (length(t) - length(regexp_replace(t, '[Ѐ-ӿ]', '', 'g')))::INT AS cyrillic,\n       (length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g')))::INT AS cjk,\n       (length(t) - length(regexp_replace(t, '[\u0600-ۿ]', '', 'g')))::INT AS arabic,\n       (length(t) - length(regexp_replace(t, '[가-\ud7af]', '', 'g')))::INT AS hangul,\n       (length(t)\n          - ((length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[0-9]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[Ѐ-ӿ]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[\u0600-ۿ]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[가-\ud7af]', '', 'g'))))\n          - (length(t) - length(regexp_replace(t, '[\\s]', '', 'g'))))::INT\n         AS other\n  FROM t\n)\nSELECT doc_id, latin, digit, cyrillic, cjk, arabic, hangul, other,\n       CASE WHEN latin >= greatest(digit, greatest(cyrillic, greatest(cjk, greatest(arabic, greatest(hangul, other))))) THEN 'latin' ELSE CASE WHEN digit >= greatest(cyrillic, greatest(cjk, greatest(arabic, greatest(hangul, other)))) THEN 'digit' ELSE CASE WHEN cyrillic >= greatest(cjk, greatest(arabic, greatest(hangul, other))) THEN 'cyrillic' ELSE CASE WHEN cjk >= greatest(arabic, greatest(hangul, other)) THEN 'cjk' ELSE CASE WHEN arabic >= greatest(hangul, other) THEN 'arabic' ELSE CASE WHEN hangul >= other THEN 'hangul' ELSE 'other' END END END END END END AS dominant\nFROM c\n"
+ORACLE_SCRIPT_PROFILE = f"""
+WITH t AS (
+  SELECT doc_id::BIGINT AS doc_id, {_SCRIPT_CASE} AS t
+  FROM documents
+),
+c AS (
+  SELECT doc_id,
+       (length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g')))::INT AS latin,
+       (length(t) - length(regexp_replace(t, '[0-9]', '', 'g')))::INT AS digit,
+       (length(t) - length(regexp_replace(t, '[Ѐ-ӿ]', '', 'g')))::INT AS cyrillic,
+       (length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g')))::INT AS cjk,
+       (length(t) - length(regexp_replace(t, '[\u0600-ۿ]', '', 'g')))::INT AS arabic,
+       (length(t) - length(regexp_replace(t, '[가-\ud7af]', '', 'g')))::INT AS hangul,
+       (length(t)
+          - ((length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[0-9]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[Ѐ-ӿ]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[\u0600-ۿ]', '', 'g'))) + (length(t) - length(regexp_replace(t, '[가-\ud7af]', '', 'g'))))
+          - (length(t) - length(regexp_replace(t, '[\\s]', '', 'g'))))::INT
+         AS other
+  FROM t
+)
+SELECT doc_id, latin, digit, cyrillic, cjk, arabic, hangul, other,
+       CASE WHEN latin >= greatest(digit, greatest(cyrillic, greatest(cjk, greatest(arabic, greatest(hangul, other))))) THEN 'latin' ELSE CASE WHEN digit >= greatest(cyrillic, greatest(cjk, greatest(arabic, greatest(hangul, other)))) THEN 'digit' ELSE CASE WHEN cyrillic >= greatest(cjk, greatest(arabic, greatest(hangul, other))) THEN 'cyrillic' ELSE CASE WHEN cjk >= greatest(arabic, greatest(hangul, other)) THEN 'cjk' ELSE CASE WHEN arabic >= greatest(hangul, other) THEN 'arabic' ELSE CASE WHEN hangul >= other THEN 'hangul' ELSE 'other' END END END END END END AS dominant
+FROM c
+"""
 
 
 def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5048,16 +5047,15 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     new = docs.where(F.col("doc_id") % 2 == 0).select(
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 5 == 0, " driftterm driftterm")
-            .otherwise(""),
-        ).alias("text")
+        F.expr(_DRIFT_NEW_TEXT).alias("text")
     )
     return vocab_drift(docs, new, "text", k=20)
 
 
-ORACLE_VOCAB_DRIFT = """
+_DRIFT_NEW_TEXT = """text || CASE WHEN doc_id % 5 = 0 THEN ' driftterm driftterm'
+                        ELSE '' END"""
+
+ORACLE_VOCAB_DRIFT = f"""
 WITH old_t AS (
   SELECT unnest(list_filter(regexp_split_to_array(lower(text),
            '[^a-z0-9]+'), w -> w <> '')) AS term
@@ -5065,8 +5063,7 @@ WITH old_t AS (
 ),
 new_t AS (
   SELECT unnest(list_filter(regexp_split_to_array(lower(
-           text || CASE WHEN doc_id % 5 = 0 THEN ' driftterm driftterm'
-                        ELSE '' END),
+           {_DRIFT_NEW_TEXT}),
            '[^a-z0-9]+'), w -> w <> '')) AS term
   FROM documents WHERE doc_id % 2 = 0
 ),
@@ -5319,8 +5316,6 @@ _CAP_FAMILY_PAYLOAD = (
     + ", md5('d|' || cast(doc_id AS STRING)))"
 )
 
-# the CASE is shared VERBATIM between the Spark side (F.expr) and the
-# DuckDB oracle — same payload bytes by construction
 _CAP_PAYLOAD_CASE = (
     f"CASE WHEN doc_id < {_CAP_FAMILY} THEN {_CAP_FAMILY_PAYLOAD} "
     "WHEN doc_id % 2 = 1 "
@@ -5337,25 +5332,8 @@ SELECT doc_id, {_CAP_PAYLOAD_CASE} AS payload FROM (
 """
 
 
-def _capped_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).alias("d")
-    p = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("p_id"), F.col("text").alias("p_text")
-    ).alias("p")
-    return (
-        d.join(p, F.col("d.doc_id") - 1 == F.col("p_id"), "left")
-        .where(F.col("d.doc_id") < 200)
-        .select(
-            F.col("d.doc_id").alias("doc_id"),
-            F.col("d.text").alias("text"),
-            F.col("p_text"),
-        )
-        .select("doc_id", F.expr(_CAP_PAYLOAD_CASE).alias("payload"))
-    )
-
-
 def q_dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _capped_corpus(spark, sf_dir)
+    corpus = _sql(spark, sf_dir, CAPPED_CORPUS_SQL)
     return lsh_candidate_pairs(
         corpus, "doc_id", "payload", threshold=0.2,
         max_bucket=_CAP_MAX_BUCKET,
@@ -5425,53 +5403,34 @@ WHERE len(list_intersect(sa.shingles, sb.shingles))
 # append between batches actually works. Oracle re-derives both rounds of
 # classification from the text in SQL.
 # ===========================================================================
-def _ingest_tables(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(corpus, batch1, batch2) for the incremental-ingest queries —
-    shared by curate_ingest_indexed and stream_dedup_replay; the SQL twin
-    is _INGEST_TABLES_SQL. batch 1: %4==0 exact dup of corpus, %4==1 near
-    dup of corpus, else novel. batch 2: %4==0 duplicates a BATCH-1 novel
-    (id-38 is %4==2 -> batch 1's novel branch), %4==1 near dup of corpus,
-    else novel."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    corpus = docs.where("doc_id < 120").select(
-        "doc_id", F.col("text").alias("payload")
-    )
-    s = docs.select(F.col("doc_id").alias("s_id"), F.col("text").alias("s_text"))
-    s2 = docs.select(
-        F.col("doc_id").alias("s2_id"), F.col("text").alias("s2_text")
-    )
-    batch1 = (
-        docs.where("doc_id >= 120 AND doc_id < 160")
-        .join(s, F.col("doc_id") - 120 == F.col("s_id"), "left")
-        .select(
-            "doc_id",
-            F.expr(
-                "CASE WHEN doc_id % 4 = 0 THEN s_text "
-                "WHEN doc_id % 4 = 1 "
-                "THEN s_text || ' extra tail words appended here' "
-                "ELSE text END"
-            ).alias("payload"),
-        )
-    )
-    batch2 = (
-        docs.where("doc_id >= 160 AND doc_id < 200")
-        .join(s, F.col("doc_id") - 160 == F.col("s_id"), "left")
-        .join(s2, F.col("doc_id") - 38 == F.col("s2_id"), "left")
-        .select(
-            "doc_id",
-            F.expr(
-                "CASE WHEN doc_id % 4 = 0 THEN s2_text "
-                "WHEN doc_id % 4 = 1 "
-                "THEN s_text || ' extra tail words appended here' "
-                "ELSE text END"
-            ).alias("payload"),
-        )
-    )
-    return corpus, batch1, batch2
+# (corpus, b1, b2) for the incremental-ingest queries, shared by both
+# ingest-protocol oracles and run as-is on Spark through _sql_ctes.
+# b1: %4==0 exact dup of corpus, %4==1 near dup of corpus, else novel.
+# b2: %4==0 duplicates a b1 novel (id-38 is %4==2 -> b1's novel branch),
+# %4==1 near dup of corpus, else novel.
+_INGEST_TABLES_SQL = """
+docs AS (SELECT doc_id::BIGINT AS doc_id, text FROM documents),
+corpus AS (SELECT doc_id, text AS payload FROM docs WHERE doc_id < 120),
+b1 AS (
+  SELECT d.doc_id,
+         CASE WHEN d.doc_id % 4 = 0 THEN s.text
+              WHEN d.doc_id % 4 = 1
+              THEN s.text || ' extra tail words appended here'
+              ELSE d.text END AS payload
+  FROM docs d LEFT JOIN docs s ON s.doc_id = d.doc_id - 120
+  WHERE d.doc_id >= 120 AND d.doc_id < 160
+),
+b2 AS (
+  SELECT d.doc_id,
+         CASE WHEN d.doc_id % 4 = 0 THEN s2.text
+              WHEN d.doc_id % 4 = 1
+              THEN s.text || ' extra tail words appended here'
+              ELSE d.text END AS payload
+  FROM docs d
+  LEFT JOIN docs s ON s.doc_id = d.doc_id - 160
+  LEFT JOIN docs s2 ON s2.doc_id = d.doc_id - 38
+  WHERE d.doc_id >= 160 AND d.doc_id < 200
+)"""
 
 
 def q_curate_ingest_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5480,7 +5439,9 @@ def q_curate_ingest_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_index,
     )
 
-    corpus, batch1, batch2 = _ingest_tables(spark, sf_dir)
+    corpus, batch1, batch2 = _sql_ctes(
+        spark, sf_dir, _INGEST_TABLES_SQL, "corpus", "b1", "b2"
+    )
     idx = dedup_index(corpus, "doc_id", "payload", hashed=True)
     r1 = dedup_incremental_indexed(
         batch1, idx, "doc_id", "payload", threshold=0.2, hashed=True
@@ -5555,32 +5516,6 @@ near_{out} AS (
 )"""
 
 
-# SQL twin of _ingest_tables (shared by both ingest-protocol oracles)
-_INGEST_TABLES_SQL = """
-docs AS (SELECT doc_id::BIGINT AS doc_id, text FROM documents),
-corpus AS (SELECT doc_id, text AS payload FROM docs WHERE doc_id < 120),
-b1 AS (
-  SELECT d.doc_id,
-         CASE WHEN d.doc_id % 4 = 0 THEN s.text
-              WHEN d.doc_id % 4 = 1
-              THEN s.text || ' extra tail words appended here'
-              ELSE d.text END AS payload
-  FROM docs d LEFT JOIN docs s ON s.doc_id = d.doc_id - 120
-  WHERE d.doc_id >= 120 AND d.doc_id < 160
-),
-b2 AS (
-  SELECT d.doc_id,
-         CASE WHEN d.doc_id % 4 = 0 THEN s2.text
-              WHEN d.doc_id % 4 = 1
-              THEN s.text || ' extra tail words appended here'
-              ELSE d.text END AS payload
-  FROM docs d
-  LEFT JOIN docs s ON s.doc_id = d.doc_id - 160
-  LEFT JOIN docs s2 ON s2.doc_id = d.doc_id - 38
-  WHERE d.doc_id >= 160 AND d.doc_id < 200
-)"""
-
-
 ORACLE_CURATE_INGEST = f"""
 WITH {_INGEST_TABLES_SQL},
 {_incr_classify_sql('b1', 'corpus', 'cls1')},
@@ -5613,7 +5548,9 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_parser_spark.operators.dedup import dedup_incremental
     from doc_parser_spark.streaming.stream import guarded_accepted
 
-    corpus, batch0, batch1 = _ingest_tables(spark, sf_dir)
+    corpus, batch0, batch1 = _sql_ctes(
+        spark, sf_dir, _INGEST_TABLES_SQL, "corpus", "b1", "b2"
+    )
 
     # batch 0 processes clean: accepted state gains its novels (batch_id 0)
     r0 = dedup_incremental(batch0, corpus, "doc_id", "payload", threshold=0.2)

@@ -270,7 +270,8 @@ class TestDistributedDriverParity:
     """The round-8 restructure (raw-pair gate, driver-side symmetrize, no
     distinct for the driver path) must keep BOTH paths bit-identical. Force
     the distributed path by shrinking the gate and compare labels on a
-    graph with a chain, a clique, duplicates and an isolated edge."""
+    graph with a chain, a clique, duplicates and an isolated edge; the
+    distributed path must release its persists."""
 
     EDGES = (
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7)]  # diameter-6 chain
@@ -285,34 +286,13 @@ class TestDistributedDriverParity:
         pairs = _pairs(spark, self.EDGES)
         got_driver = _labels(connected_components(pairs))
         monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)
+        spark.catalog.clearCache()
         got_dist = _labels(D.connected_components(pairs))
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         expect = {i: 1 for i in range(1, 8)}
         expect.update({10: 10, 11: 10, 12: 10, 20: 20, 21: 20})
         assert got_driver == expect
         assert got_dist == expect
-
-    def test_dup_heavy_second_chance(self, spark, monkeypatch):
-        """A dup-heavy input whose RAW pair count exceeds the gate but
-        whose distinct symmetric edge set fits must still driver-solve
-        (via the distinct-count second-chance tier), not pay the
-        distributed rounds."""
-        from doc_parser_spark.operators import dedup as D
-
-        # 3 distinct pairs repeated 8x = 24 raw; distinct symmetric = 6
-        pairs = _pairs(spark, [(1, 2), (2, 3), (10, 11)] * 8)
-        called = {}
-        real = D._cc_driver
-
-        def spy(frame, iters):
-            called["rows"] = frame.count()
-            return real(frame, iters)
-
-        monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 10)  # 2*24 > 10 >= 6
-        monkeypatch.setattr(D, "_cc_driver", spy)
-        got = {r["id"]: r["cluster_id"] for r in D.connected_components(pairs).collect()}
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-        # solved on the DISTINCT symmetric edges (6 rows), not raw pairs
-        assert called["rows"] == 6
 
     def test_distributed_string_ids(self, spark, monkeypatch):
         from doc_parser_spark.operators import dedup as D

@@ -59,6 +59,21 @@ def test_registry_pins_queries_and_oracles():
     assert hashlib.sha256(blob).hexdigest() == ORACLES_SHA256
 
 
+def test_sql_binds_documents_without_leaving_a_view(spark):
+    import pyarrow.parquet as pq
+
+    from doc_parser_spark.plans.driver_queries import _sql
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    n_rows = pq.ParquetFile(f"{SF_DIR}/documents.parquet").metadata.num_rows
+    got = _sql(spark, SF_DIR, "SELECT count(*) AS n FROM documents")
+    assert temp_views() == before
+    assert got.collect()[0]["n"] == n_rows
+
+
 def _entry_names():
     import __spark_entry__ as e
 
