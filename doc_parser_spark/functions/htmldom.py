@@ -195,8 +195,10 @@ def parse_html_stdlib(markup: str) -> Element:
 # well-formed-ish input (asserted against parse_html_stdlib in tests).
 # ---------------------------------------------------------------------------
 _TOKEN_RE = __import__("re").compile(
-    r"<!--.*?(?:-->|$)"                      # comment
-    r"|<!\[CDATA\[.*?(?:\]\]>|$)"            # cdata
+    # comment, closed by html.parser's commentclose; a bare '<!--' means
+    # it is never closed
+    r"<!--(?:.*?--\s*>)?"
+    r"|<!\["                                 # marked section (scanned)
     r"|<![^>]*>"                             # doctype / declaration
     r"|<\?[^>]*>"                            # processing instruction
     # tag-name charsets mirror html.parser's tagfind_tolerant/endtagfind
@@ -218,6 +220,72 @@ _ATTR_RE = __import__("re").compile(
 )
 
 _TAGNAME_RE = __import__("re").compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")
+
+# html.parser's locatestarttagend_tolerant, verbatim grammar: a quoted value
+# only counts after an attr name and '=', and an unterminated one stops the
+# scan at the '=' instead of being read as plain attr chars
+_STARTTAG_END_RE = __import__("re").compile(
+    r"""<[a-zA-Z][^\t\n\r\f />\x00]*"""
+    r"""(?:[\s/]*(?:(?<=['"\s/])[^\s/>][^\s/=>]*"""
+    r"""(?:\s*=+\s*(?:'[^']*'|"[^"]*"|(?!['"])[^>\s]*)\s*)?"""
+    r"""(?:\s|/(?!>))*)*)?\s*"""
+)
+
+
+_COMMENT_CLOSE_RE = __import__("re").compile(r"--\s*>")
+_DECLNAME_RE = __import__("re").compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_SECTION_CLOSE_RE = {
+    **dict.fromkeys(
+        ("temp", "cdata", "ignore", "include", "rcdata"),
+        __import__("re").compile(r"]\s*]\s*>"),
+    ),
+    **dict.fromkeys(("if", "else", "endif"), __import__("re").compile(r"]\s*>")),
+}
+
+
+def _unfinished_end(markup: str, i: int) -> int:
+    """End of the data html.parser emits, on close, for a construct at
+    ``i`` it could not finish: through the next '>', else up to the next
+    '<', else the '<' alone."""
+    k = markup.find(">", i + 1)
+    if k >= 0:
+        return k + 1
+    k = markup.find("<", i + 1)
+    return k if k >= 0 else i + 1
+
+
+def _marked_section_end(markup: str, i: int) -> int:
+    """Mirror _markupbase.parse_marked_section for '<![' at ``i``: the
+    index just past the section, or -1 when it is unfinished. Keywords
+    html.parser rejects (it raises) end at the first '>'."""
+    m = _DECLNAME_RE.match(markup, i + 3)
+    if m is None and i + 3 < len(markup):
+        close = None
+    elif m is None or m.end() == len(markup):
+        return -1
+    else:
+        close = _SECTION_CLOSE_RE.get(m.group().strip().lower())
+    if close is None:
+        k = markup.find(">", i)
+        return k + 1 if k >= 0 else -1
+    m = close.search(markup, i + 3)
+    return m.end() if m else -1
+
+
+def _starttag_end(markup: str, i: int) -> int:
+    """Mirror html.parser's check_for_whole_start_tag on a complete
+    document: the index just past the start tag at ``i``, or -1 when the
+    tag is unfinished (the stdlib then emits it as data up to its first
+    '>')."""
+    j = _STARTTAG_END_RE.match(markup, i).end()
+    nxt = markup[j : j + 1]
+    if nxt == ">":
+        return j + 1
+    if nxt == "/":
+        return j + 2 if markup.startswith("/>", j) else -1
+    if nxt == "" or nxt.isascii() and (nxt.isalpha() or nxt == "="):
+        return -1
+    return j
 
 _RAWTEXT_END = {
     "script": __import__("re").compile(r"</script\s*>", __import__("re").IGNORECASE),
@@ -302,6 +370,24 @@ def parse_html(markup: str) -> Element:
             )
         pos = m.end()
         end_name, start_name, attr_blob = m.group(1, 2, 3)
+        if start_name is not None and (
+            "'" in attr_blob or '"' in attr_blob or attr_blob[:1] == "\x00"
+        ):
+            # quotes, and a NUL right after the name, are where the blob
+            # regex and html.parser can disagree on where the tag ends —
+            # let the stdlib grammar decide
+            k = _starttag_end(markup, start)
+            if k < 0 or markup[k - 1] != ">":
+                # unfinished tag → data through its first '>'; junk after
+                # the attrs → the tag text up to the junk is data
+                pos = _unfinished_end(markup, start) if k < 0 else k
+                data = markup[start:pos]
+                stack[-1].append(
+                    TextNode(_unescape(data) if "&" in data else data)
+                )
+                continue
+            pos = k
+            attr_blob = markup[m.end(2) : k - 1]
         if start_name is not None:
             tag = start_name.lower()
             selfclose = False
@@ -315,7 +401,7 @@ def parse_html(markup: str) -> Element:
                 if attrs is None:
                     # junk start tag → the whole token is data
                     # (parse_starttag end-not-in-('>','/>') path)
-                    data = markup[start : m.end()]
+                    data = markup[start:pos]
                     stack[-1].append(
                         TextNode(_unescape(data) if "&" in data else data)
                     )
@@ -344,18 +430,29 @@ def parse_html(markup: str) -> Element:
             # html.parser parity for non-tag tokens:
             #   <!--..--> comment; <![..]> marked section (dropped);
             #   <!doctype..> declaration (dropped); other <!..> and
-            #   malformed </..> become "bogus comments"; <?..> dropped
-            token = markup[start : m.end()]
-            if token.startswith("<!--"):
-                body = token[4:-3] if token.endswith("-->") else token[4:]
+            #   malformed </..> become "bogus comments"; <?..> dropped;
+            #   an unfinished comment or marked section is data
+            token = markup[start:pos]
+            if token == "<!--" or token == "<![":
+                k = _marked_section_end(markup, start) if token == "<![" else -1
+                if k < 0:
+                    pos = _unfinished_end(markup, start)
+                    data = markup[start:pos]
+                    stack[-1].append(
+                        TextNode(_unescape(data) if "&" in data else data)
+                    )
+                else:
+                    pos = k
+            elif token.startswith("<!--"):
+                body = token[4 : _COMMENT_CLOSE_RE.search(token, 4).start()]
                 stack[-1].append(CommentNode(body))
             elif token.startswith("</"):
                 # parse_endtag fallback: letter-initial → tolerant end tag
                 # (name may contain junk chars); '</>' dropped; else bogus
                 # comment
                 inner = token[2:-1]
-                if inner[:1].isalpha():
-                    nm = _TAGNAME_RE.match(inner)
+                nm = _TAGNAME_RE.match(inner)
+                if nm:
                     tag = nm.group(0).lower()
                     for i in range(len(stack) - 1, 0, -1):
                         if stack[i].name == tag:
@@ -363,8 +460,6 @@ def parse_html(markup: str) -> Element:
                             break
                 elif inner:
                     stack[-1].append(CommentNode(inner))
-            elif token.startswith("<!["):
-                pass
             elif token.startswith("<!"):
                 if token[2:9].lower() != "doctype":
                     stack[-1].append(CommentNode(token[2:-1]))

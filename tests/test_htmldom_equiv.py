@@ -82,6 +82,17 @@ def test_handpicked_cases():
         "<p>a < b and c > d</p>",
         "",
         "<div><div><div>deep</div></div></div>",
+        # unfinished constructs: html.parser emits them as data
+        "<b 1='>x</b>",
+        '<p a="x>y',
+        "<!--open>tail",
+        "<!--",
+        "<![cdata[open",
+        # a quoted value only counts after '=': the tag ends at the first '>'
+        "<b ='>'>x",
+        "<!--spaced-- >after",
+        "<![cdata[a>b]]>after",
+        "</é>",
     ]
     for c in cases:
         _assert_same(c)
