@@ -388,6 +388,10 @@ def parse_html(markup: str) -> Element:
                 continue
             pos = k
             attr_blob = markup[m.end(2) : k - 1]
+            if attr_blob[:1] == "\x00" and start_name[-1] in "'\"":
+                # attrfind_tolerant's lookbehind sees the name's last char:
+                # after a quote, a NUL starts the first attr name
+                attr_blob = " " + attr_blob
         if start_name is not None:
             tag = start_name.lower()
             selfclose = False

@@ -1,5 +1,5 @@
 """End-to-end extraction job: read → sniff → route → extract → write,
-with per-bucket metrics, a commit manifest, and idempotent resume.
+with per-bucket metrics in a commit manifest, and idempotent resume.
 
 North-rule requirements covered here:
 - explicit partitioning on ``hash(conv_id)`` buckets (Iceberg bucket analog;
@@ -13,10 +13,13 @@ North-rule requirements covered here:
 Scale shape: ONE pass over the input — extraction rows stream from the
 routing shuffle through one bucket-clustering shuffle straight into the
 parquet writer (no cache of the corpus; caching the output was the first
-design and dies at 100 TB). Every row carries ``job_run_id`` / ``n_bytes_in``
-/ ``proc_us`` lineage columns, so per-bucket metrics aggregate from the
-(column-pruned) written files afterwards. At cluster scale the writes become
-Iceberg appends and the manifest an Iceberg snapshot summary.
+design and dies at 100 TB). An ``Observation`` on the written frame counts
+its rows in the write's own result stage, at no extra Spark job. Every row
+carries ``job_run_id`` / ``n_bytes_in`` / ``proc_us`` lineage columns, so
+per-bucket metrics aggregate from a column-pruned, explicit-schema scan of
+the written files, and ONE commit write appends them to ``_manifest``: the
+manifest row is the metrics row. At cluster scale the writes become Iceberg
+appends and the manifest an Iceberg snapshot summary.
 """
 
 from __future__ import annotations
@@ -25,44 +28,40 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from doc_parser_spark.operators.extract import bucket_id, extract_turns
 
 DEFAULT_BUCKETS = 64
 
+# the written columns the commit aggregates; an explicit schema spares the
+# scan its schema-inference job
+_LINEAGE_SCHEMA = (
+    "n_bytes_in BIGINT, proc_us BIGINT, parse_status STRING, "
+    "job_run_id STRING, bucket_id INT"
+)
+
 
 def _manifest_path(output_path: str) -> str:
     return os.path.join(output_path, "_manifest")
-
-
-def _metrics_path(output_path: str) -> str:
-    return os.path.join(output_path, "_metrics")
 
 
 def _extracted_path(output_path: str) -> str:
     return os.path.join(output_path, "extracted")
 
 
-def _read_manifest_meta(spark: SparkSession, output_path: str) -> int | None:
-    """n_buckets recorded by prior runs (None if no manifest yet)."""
+def _read_manifest(spark: SparkSession, output_path: str) -> DataFrame | None:
+    """The commit manifest, or None if nothing was ever committed. Only a
+    missing path means that: an unreadable manifest raises, since reading
+    it as absent would reprocess and duplicate every committed bucket."""
     try:
-        row = spark.read.parquet(_manifest_path(output_path)).select(
-            "n_buckets"
-        ).first()
-        return int(row[0]) if row else None
-    except Exception:
-        return None
-
-
-def completed_buckets(spark: SparkSession, output_path: str) -> DataFrame | None:
-    """Read the commit manifest if it exists → DataFrame[bucket_id]."""
-    path = _manifest_path(output_path)
-    try:
-        return spark.read.parquet(path).select("partition_id").distinct()
-    except Exception:
-        return None
+        return spark.read.parquet(_manifest_path(output_path))
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def run_extraction_job(
@@ -82,23 +81,22 @@ def run_extraction_job(
 
     work = transcripts.withColumn("bucket_id", bucket_id("conv_id", n_buckets))
 
-    if resume:
+    manifest = _read_manifest(spark, output_path) if resume else None
+    if manifest is not None:
         # resume across runs is only sound with a stable bucket function
-        prior = _read_manifest_meta(spark, output_path)
-        if prior is not None and prior != n_buckets:
+        prior = manifest.select("n_buckets").first()
+        if prior is not None and prior[0] != n_buckets:
             raise ValueError(
-                f"output at {output_path} was written with n_buckets={prior}; "
+                f"output at {output_path} was written with n_buckets={prior[0]}; "
                 f"resume with the same value (got {n_buckets})"
             )
-        done = completed_buckets(spark, output_path)
-        if done is not None:
-            # manifest is tiny (≤ n_buckets rows) → broadcast anti-join,
-            # no shuffle of the big side
-            work = work.join(
-                F.broadcast(done.withColumnRenamed("partition_id", "bucket_id")),
-                on="bucket_id",
-                how="left_anti",
-            )
+        # manifest is tiny (≤ n_buckets rows per run) → broadcast anti-join,
+        # no shuffle of the big side
+        work = work.join(
+            F.broadcast(manifest.select(F.col("partition_id").alias("bucket_id"))),
+            on="bucket_id",
+            how="left_anti",
+        )
 
     # routing="shuffle": one exchange on (conv_id, turn_idx) before the
     #   parse — whale salting; batches stay content-mixed (extract_turns).
@@ -122,44 +120,43 @@ def run_extraction_job(
     # single pass: cluster by storage bucket, stable order, write.
     # the sort MUST lead with bucket_id: the dynamic-partition writer
     # requires ordering by the partition columns and would otherwise insert
-    # its own (non-stable) sort, destroying (conv_id, turn_idx) order
+    # its own (non-stable) sort, destroying (conv_id, turn_idx) order.
+    # the observed node sits after the exchange, in the write's result
+    # stage, so each written row is counted exactly once
+    obs = Observation()
     (
         extracted.repartition(F.col("bucket_id"))
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
         .sortWithinPartitions("bucket_id", "conv_id", "turn_idx")
         .write.mode("append")
         .partitionBy("bucket_id")
         .parquet(_extracted_path(output_path))
     )
+    out_rows = obs.get["rows"]
 
-    # metrics from the written files, THIS run only (column-pruned scan of
-    # the lineage columns; job_run_id rows are the run's lineage)
-    written = spark.read.parquet(_extracted_path(output_path)).where(
-        F.col("job_run_id") == job_run_id
-    )
-    metrics = (
-        written.groupBy("bucket_id")
-        .agg(
-            F.count("*").alias("docs_parsed"),
-            F.sum("n_bytes_in").alias("bytes_processed"),
-            F.sum(
-                F.when(F.col("parse_status") == "failure", 1).otherwise(0)
-            ).alias("parse_failures"),
-            (F.sum("proc_us") / 1000).cast("long").alias("wall_ms"),
-        )
-        .withColumn("job_run_id", F.lit(job_run_id))
-        .withColumnRenamed("bucket_id", "partition_id")
-    ).cache()
-    out_rows = int(
-        metrics.agg(F.coalesce(F.sum("docs_parsed"), F.lit(0))).first()[0]
-    )
     if out_rows > 0:
-        metrics.write.mode("append").parquet(_metrics_path(output_path))
-        # the manifest commit is the LAST step: a bucket is resumable-skipped
-        # only after its data + metrics are durably written
-        metrics.select("partition_id", "job_run_id").withColumn(
-            "n_buckets", F.lit(n_buckets)
-        ).write.mode("append").parquet(_manifest_path(output_path))
-    metrics.unpersist()
+        # metrics from the written files, THIS run only (job_run_id rows are
+        # the run's lineage). the manifest commit is the LAST step: a bucket
+        # is resumable-skipped only after its data is durably written
+        (
+            spark.read.schema(_LINEAGE_SCHEMA)
+            .parquet(_extracted_path(output_path))
+            .where(F.col("job_run_id") == job_run_id)
+            .groupBy(F.col("bucket_id").alias("partition_id"))
+            .agg(
+                F.count("*").alias("docs_parsed"),
+                F.sum("n_bytes_in").alias("bytes_processed"),
+                F.sum(
+                    F.when(F.col("parse_status") == "failure", 1).otherwise(0)
+                ).alias("parse_failures"),
+                (F.sum("proc_us") / 1000).cast("long").alias("wall_ms"),
+            )
+            .withColumn("job_run_id", F.lit(job_run_id))
+            .withColumn("n_buckets", F.lit(n_buckets))
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(_manifest_path(output_path))
+        )
 
     wall_s = time.perf_counter() - t0
     return {
@@ -178,22 +175,22 @@ def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
     commit log; a broadcast semi-join filters to them (manifest ≤ a few rows
     per bucket — no shuffle of the big side)."""
     df = spark.read.parquet(_extracted_path(output_path))
-    try:
-        committed = (
-            spark.read.parquet(_manifest_path(output_path))
-            .select(F.col("partition_id").alias("bucket_id"), "job_run_id")
-            .distinct()
-        )
-    except Exception:
+    manifest = _read_manifest(spark, output_path)
+    if manifest is None:
         # no manifest → nothing was ever committed
         return df.where(F.lit(False))
+    committed = manifest.select(
+        F.col("partition_id").alias("bucket_id"), "job_run_id"
+    )
     return df.join(
         F.broadcast(committed), ["bucket_id", "job_run_id"], "left_semi"
     )
 
 
 def read_metrics(spark: SparkSession, output_path: str) -> DataFrame:
-    return spark.read.parquet(_metrics_path(output_path))
+    """Per-bucket metrics, one row per (partition_id, job_run_id): the
+    commit manifest itself."""
+    return spark.read.parquet(_manifest_path(output_path))
 
 
 def main(argv: list[str] | None = None) -> None:

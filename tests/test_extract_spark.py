@@ -288,3 +288,113 @@ class TestManifestGuard:
         run_extraction_job(spark, df, out, n_buckets=8, job_run_id="g1")
         with pytest.raises(ValueError, match="n_buckets=8"):
             run_extraction_job(spark, df, out, n_buckets=16, job_run_id="g2")
+
+
+class TestCommitTable:
+    """One commit write per job: the ``_manifest`` row per (bucket, run) is
+    also that bucket's metrics row."""
+
+    def test_job_counts(self, spark, transcripts_pdf, tmp_path):
+        """A fresh 16-bucket job starts at most 6 Spark jobs and a no-op
+        resume at most 8 (the manifest is read once, rows come from an
+        Observation, metrics and manifest are one write)."""
+        import uuid
+
+        from doc_parser_spark.plans.pipeline import run_extraction_job
+
+        sc = spark.sparkContext
+        df = spark.createDataFrame(transcripts_pdf)
+        out = str(tmp_path / "jobs")
+
+        def n_jobs(expected_rows):
+            group = f"commit-jobs-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                res = run_extraction_job(spark, df, out, n_buckets=16)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert res["rows"] == expected_rows
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert n_jobs(len(transcripts_pdf)) <= 6
+        assert n_jobs(0) <= 8
+
+    def test_metrics_match_committed_rows(self, spark, transcripts_pdf, tmp_path):
+        from pyspark.sql import functions as F
+
+        from doc_parser_spark.operators.extract import bucket_id
+        from doc_parser_spark.plans.pipeline import (
+            read_extracted,
+            read_metrics,
+            run_extraction_job,
+        )
+
+        # binary %PDF payloads the decoder cannot read → parse failures
+        binary = pd.DataFrame(
+            {
+                "conv_id": [f"bin{i}" for i in range(6)],
+                "turn_idx": 0,
+                "role": "user",
+                "text": "%PDF-1.4\n\x00\x01\x02 stream \x00\xff",
+                "tool": None,
+                "ts": transcripts_pdf["ts"].iloc[0],
+            }
+        )
+        df = spark.createDataFrame(
+            pd.concat([transcripts_pdf, binary], ignore_index=True)
+        )
+        out = tmp_path / "commit"
+        # two runs, each committing half the buckets
+        run_extraction_job(
+            spark, df.where(bucket_id("conv_id", 8) < 4), str(out),
+            n_buckets=8, job_run_id="m1",
+        )
+        run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="m2")
+
+        metrics = read_metrics(spark, str(out)).toPandas()
+        assert not (out / "_metrics").exists()
+        assert (metrics["n_buckets"] == 8).all()
+        assert set(metrics["job_run_id"]) == {"m1", "m2"}
+        # one row per (bucket, run), and each bucket committed by one run
+        assert metrics["partition_id"].is_unique
+
+        expected = (
+            read_extracted(spark, str(out))
+            .groupBy(F.col("bucket_id").alias("partition_id"), "job_run_id")
+            .agg(
+                F.count("*").alias("docs_parsed"),
+                F.sum("n_bytes_in").alias("bytes_processed"),
+                F.sum((F.col("parse_status") == "failure").cast("long")).alias(
+                    "parse_failures"
+                ),
+            )
+            .toPandas()
+        )
+        assert expected["parse_failures"].sum() == len(binary)
+        cols = ["partition_id", "job_run_id", "docs_parsed", "bytes_processed",
+                "parse_failures"]
+        got = metrics[cols].sort_values("partition_id").reset_index(drop=True)
+        want = expected[cols].sort_values("partition_id").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    def test_unreadable_manifest_raises(self, spark, transcripts_pdf, tmp_path):
+        """A corrupt manifest is not an absent one: reading it as "nothing
+        committed" would hide every row and make a rerun reprocess, and
+        duplicate, every bucket."""
+        from doc_parser_spark.plans.pipeline import (
+            read_extracted,
+            run_extraction_job,
+        )
+
+        df = spark.createDataFrame(transcripts_pdf)
+        out = tmp_path / "corrupt"
+        run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="k1")
+        for f in (out / "_manifest").iterdir():
+            f.write_bytes(b"not a parquet file")
+
+        with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+            read_extracted(spark, str(out)).count()
+        with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+            run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="k2")
+        raw = spark.read.parquet(str(out / "extracted"))
+        assert raw.count() == len(transcripts_pdf)

@@ -93,6 +93,9 @@ def test_handpicked_cases():
         "<!--spaced-- >after",
         "<![cdata[a>b]]>after",
         "</é>",
+        # a NUL after a name that ends in a quote starts an attr name
+        "<b'\x00>",
+        "<b' \x00>x",
     ]
     for c in cases:
         _assert_same(c)
