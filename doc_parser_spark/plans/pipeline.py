@@ -28,7 +28,6 @@ import os
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,11 +35,12 @@ from doc_parser_spark.operators.extract import bucket_id, extract_turns
 
 DEFAULT_BUCKETS = 64
 
-# the written columns the commit aggregates; an explicit schema spares the
-# scan its schema-inference job
-_LINEAGE_SCHEMA = (
-    "n_bytes_in BIGINT, proc_us BIGINT, parse_status STRING, "
-    "job_run_id STRING, bucket_id INT"
+# the commit row per (bucket, run); read with this explicit schema, a
+# manifest needs no schema-inference job, and one a killed commit left with
+# only ``_temporary/`` reads as zero rows (nothing committed)
+_MANIFEST_SCHEMA = (
+    "partition_id INT, docs_parsed BIGINT, bytes_processed BIGINT, "
+    "parse_failures BIGINT, wall_ms BIGINT, job_run_id STRING, n_buckets INT"
 )
 
 
@@ -55,13 +55,14 @@ def _extracted_path(output_path: str) -> str:
 def _read_manifest(spark: SparkSession, output_path: str) -> DataFrame | None:
     """The commit manifest, or None if nothing was ever committed. Only a
     missing path means that: an unreadable manifest raises, since reading
-    it as absent would reprocess and duplicate every committed bucket."""
-    try:
-        return spark.read.parquet(_manifest_path(output_path))
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+    it as absent would reprocess and duplicate every committed bucket. The
+    path is checked, not caught, because a failed read after any
+    ``Observation`` in the session logs an ERROR from Spark's listener."""
+    path = _manifest_path(output_path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return None
+    return spark.read.schema(_MANIFEST_SCHEMA).parquet(path)
 
 
 def run_extraction_job(
@@ -136,10 +137,12 @@ def run_extraction_job(
 
     if out_rows > 0:
         # metrics from the written files, THIS run only (job_run_id rows are
-        # the run's lineage). the manifest commit is the LAST step: a bucket
+        # the run's lineage; the scan takes the written frame's schema, so
+        # no inference job). the manifest commit is the LAST step: a bucket
         # is resumable-skipped only after its data is durably written
+        lineage = ("n_bytes_in", "proc_us", "parse_status", "job_run_id", "bucket_id")
         (
-            spark.read.schema(_LINEAGE_SCHEMA)
+            spark.read.schema(extracted.select(*lineage).schema)
             .parquet(_extracted_path(output_path))
             .where(F.col("job_run_id") == job_run_id)
             .groupBy(F.col("bucket_id").alias("partition_id"))
@@ -190,7 +193,7 @@ def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
 def read_metrics(spark: SparkSession, output_path: str) -> DataFrame:
     """Per-bucket metrics, one row per (partition_id, job_run_id): the
     commit manifest itself."""
-    return spark.read.parquet(_manifest_path(output_path))
+    return spark.read.schema(_MANIFEST_SCHEMA).parquet(_manifest_path(output_path))
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -392,9 +392,42 @@ class TestCommitTable:
         for f in (out / "_manifest").iterdir():
             f.write_bytes(b"not a parquet file")
 
-        with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        corrupt = "_manifest/part-.* is not a Parquet file"
+        with pytest.raises(Exception, match=corrupt):
             read_extracted(spark, str(out)).count()
-        with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        with pytest.raises(Exception, match=corrupt):
             run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="k2")
         raw = spark.read.parquet(str(out / "extracted"))
         assert raw.count() == len(transcripts_pdf)
+
+    def test_commit_killed_before_any_manifest_file(
+        self, spark, transcripts_pdf, tmp_path
+    ):
+        """A kill during a fresh output's commit write leaves the data and a
+        ``_manifest`` that holds only the committer's ``_temporary/0/``.
+        That is "nothing committed", not an error: ``read_extracted`` sees no
+        rows, and the rerun reprocesses every bucket and commits once."""
+        import shutil
+
+        from doc_parser_spark.plans.pipeline import (
+            read_extracted,
+            read_metrics,
+            run_extraction_job,
+        )
+
+        df = spark.createDataFrame(transcripts_pdf)
+        out = tmp_path / "killed_commit"
+        run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="t1")
+        shutil.rmtree(out / "_manifest")
+        (out / "_manifest" / "_temporary" / "0").mkdir(parents=True)
+        assert read_extracted(spark, str(out)).count() == 0
+
+        res = run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="t2")
+        assert res["rows"] == len(transcripts_pdf)
+        final = read_extracted(spark, str(out))
+        assert final.count() == len(transcripts_pdf)
+        runs = final.select("job_run_id").distinct().collect()
+        assert [r.job_run_id for r in runs] == ["t2"]
+        metrics = read_metrics(spark, str(out)).toPandas()
+        assert metrics["docs_parsed"].sum() == len(transcripts_pdf)
+        assert set(metrics["job_run_id"]) == {"t2"}
