@@ -1053,10 +1053,6 @@ def _mat_mul(a, b):
     )
 
 
-def _mat_apply(m, x, y):
-    return (m[0] * x + m[2] * y + m[4], m[1] * x + m[3] * y + m[5])
-
-
 _IDENT = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 
@@ -1092,16 +1088,10 @@ class ContentInterpreter:
     """Executes one page's content streams, emitting positioned glyphs."""
 
     MAX_GLYPHS = 500_000
-    MAX_GRAPHICS = 50_000  # images + path segments, hostile-content bound
 
     def __init__(self, doc: PdfDocument, resources: dict):
         self.doc = doc
         self.glyphs: list[_Glyph] = []
-        # layout-model inputs (P3-replacement, functions/layout_model.py):
-        # raster placements and vector path segments in device space
-        self.images: list[tuple[float, float, float, float]] = []
-        self.segments: list[tuple[float, float, float, float]] = []
-        self._cur_pt: tuple[float, float] | None = None
         self._font_cache = doc._font_cache  # shared across pages
         self._res_stack: list[dict] = [
             resources if isinstance(resources, dict) else {}
@@ -1222,56 +1212,9 @@ class ContentInterpreter:
                         elif isinstance(item, (int, float)):
                             tx = -item / 1000.0 * ts.size * ts.hscale
                             ts.tm = _mat_mul((1, 0, 0, 1, tx, 0.0), ts.tm)
-                elif op == "m" and len(stack) >= 2:
-                    self._cur_pt = (float(stack[-2]), float(stack[-1]))
-                elif op in ("l", "c", "v", "y") and len(stack) >= 2:
-                    # path segment endpoint (curves: chord approximation —
-                    # enough for the table-grid detector, which only needs
-                    # straight rulings)
-                    end = (float(stack[-2]), float(stack[-1]))
-                    if (
-                        self._cur_pt is not None
-                        and len(self.segments) < self.MAX_GRAPHICS
-                    ):
-                        x0, y0 = _mat_apply(ctm, *self._cur_pt)
-                        x1, y1 = _mat_apply(ctm, *end)
-                        self.segments.append((x0, y0, x1, y1))
-                    self._cur_pt = end
-                elif op == "re" and len(stack) >= 4:
-                    x, y, w, h = (float(v) for v in stack[-4:])
-                    if len(self.segments) + 4 <= self.MAX_GRAPHICS:
-                        pts = [
-                            _mat_apply(ctm, x, y),
-                            _mat_apply(ctm, x + w, y),
-                            _mat_apply(ctm, x + w, y + h),
-                            _mat_apply(ctm, x, y + h),
-                        ]
-                        for k in range(4):
-                            ax, ay = pts[k]
-                            bx, by = pts[(k + 1) % 4]
-                            self.segments.append((ax, ay, bx, by))
-                    self._cur_pt = (x, y)
                 elif op == "Do" and stack:
                     xo = self._xobject(str(stack[-1]))
                     if (
-                        isinstance(xo, Stream)
-                        and str(self.doc.resolve(xo.dict.get("Subtype")))
-                        == "Image"
-                        and len(self.images) < self.MAX_GRAPHICS
-                    ):
-                        # image occupies the CTM-transformed unit square
-                        corners = [
-                            _mat_apply(ctm, 0.0, 0.0),
-                            _mat_apply(ctm, 1.0, 0.0),
-                            _mat_apply(ctm, 0.0, 1.0),
-                            _mat_apply(ctm, 1.0, 1.0),
-                        ]
-                        xs = [p[0] for p in corners]
-                        ys = [p[1] for p in corners]
-                        self.images.append(
-                            (min(xs), min(ys), max(xs), max(ys))
-                        )
-                    elif (
                         isinstance(xo, Stream)
                         and str(self.doc.resolve(xo.dict.get("Subtype"))) == "Form"
                     ):
@@ -1309,9 +1252,10 @@ class ContentInterpreter:
         # the glyph loop is the kernel hot path: the full per-glyph
         # trm = S×tm, m = trm×ctm mat-muls are hoisted by observing that
         # only tm's translation (e, f) advances between glyphs — every
-        # surviving arithmetic expression below is the _mat_mul/_mat_apply
-        # term order with literal zero terms dropped, so results stay
-        # bit-identical to the naive form (parity suites pin this)
+        # surviving arithmetic expression below is the _mat_mul term order
+        # (a point maps as x*m0 + y*m2 + m4, x*m1 + y*m3 + m5) with literal
+        # zero terms dropped, so results stay bit-identical to the naive
+        # form (parity suites pin this)
         b0, b1, b2, b3, e, f = ts.tm
         p = ts.size * ts.hscale
         q = ts.size
@@ -1583,27 +1527,9 @@ def decode_pdf_pages(data: bytes):
     """bytes → (cells, pages) in the parse_cell_dump contract: cells are
     (page_no, x0, y0, x1, y1, text) with TOP-LEFT origin; pages maps
     page_no → (width, height)."""
-    cells, page_dims, _layout = _decode_pages_impl(data)
-    return cells, page_dims
-
-
-@untrusted_pdf
-def decode_pdf_layout(data: bytes):
-    """bytes → per-page layout-model inputs: {page_no: {"dims": (w, h),
-    "cells": [(x0, top0, x1, top1, text)], "images": [(x0, top0, x1, top1)],
-    "segments": [(x0, top0, x1, top1)]}} — all TOP-LEFT origin in page
-    points. Images are raster XObject placements (CTM unit square); segments
-    are straight path pieces (m/l/re, curve chords) for table-grid and
-    decoration detection."""
-    _cells, _dims, layout = _decode_pages_impl(data)
-    return layout
-
-
-def _decode_pages_impl(data: bytes):
     doc = PdfDocument(data)
     all_cells = []
     page_dims: dict[int, tuple[float, float]] = {}
-    layout: dict[int, dict] = {}
     for pno, page in enumerate(doc.pages(), start=1):
         media = [float(x) for x in (doc.resolve(page.get("MediaBox")) or [0, 0, 612, 792])]
         crop = doc.resolve(page.get("CropBox"))
@@ -1625,10 +1551,6 @@ def _decode_pages_impl(data: bytes):
             page_dims[pno] = (width, height)
         resources = doc.resolve(page.get("Resources")) or {}
         interp = ContentInterpreter(doc, resources)
-        page_layout = {
-            "dims": page_dims[pno], "cells": [], "images": [], "segments": []
-        }
-        layout[pno] = page_layout
         try:
             content = doc.page_content(page)
         except PdfError:
@@ -1657,12 +1579,4 @@ def _decode_pages_impl(data: bytes):
         ):
             nx0, top0, nx1, top1 = norm(x0, y0, x1, y1)
             all_cells.append((pno, nx0, top0, nx1, top1, text))
-            page_layout["cells"].append((nx0, top0, nx1, top1, text))
-        for x0, y0, x1, y1 in interp.images:
-            page_layout["images"].append(norm(x0, y0, x1, y1))
-        for x0, y0, x1, y1 in interp.segments:
-            # segments are directed; normalize endpoints then sort the box
-            ax, ay, bx, by = norm(min(x0, x1), min(y0, y1),
-                                  max(x0, x1), max(y0, y1))
-            page_layout["segments"].append((ax, ay, bx, by))
-    return all_cells, page_dims, layout
+    return all_cells, page_dims

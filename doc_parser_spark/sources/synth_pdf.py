@@ -78,98 +78,6 @@ def build_pdf(pages: list[list[tuple[float, float, str]]]) -> bytes:
     return bytes(out)
 
 
-def build_layout_pdf(pages: list[dict]) -> bytes:
-    """Layout-exercise builder (round-6: adversarial annotated pages for
-    the heuristic layout model — unruled tables, multi-column, figures).
-
-    ``pages`` = per-page dict with any of:
-      - ``texts``:  [(x, y_baseline, size_pt, text)]
-      - ``rects``:  [(x, y, w, h)]  stroked rectangles (rulings / bars)
-      - ``images``: [(x, y, w, h)]  raster XObject placements
-
-    All coordinates PDF-native bottom-up points on a 612×792 page. Emits
-    one shared 2×2 grayscale image XObject ``/Im1``; kept separate from
-    ``build_pdf`` so the b4 contract bytes stay byte-identical.
-    """
-    n_pages = len(pages)
-    objects: list[bytes] = []
-    font_num = 3 + 2 * n_pages
-    img_num = font_num + 1
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
-    objects.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objects.append(
-        f"<< /Type /Pages /Count {n_pages} /Kids [{kids}] >>".encode()
-    )
-    for i, page in enumerate(pages):
-        page_num = 3 + 2 * i
-        content_num = page_num + 1
-        objects.append(
-            (
-                f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 {PAGE_W} {PAGE_H}] "
-                f"/Contents {content_num} 0 R "
-                f"/Resources << /Font << /F1 {font_num} 0 R >> "
-                f"/XObject << /Im1 {img_num} 0 R >> >> >>"
-            ).encode()
-        )
-        ops: list[str] = []
-        for x, y, w, h in page.get("rects", ()):
-            ops.append(f"{x:g} {y:g} {w:g} {h:g} re S")
-        for x, y, w, h in page.get("images", ()):
-            ops.append(f"q {w:g} 0 0 {h:g} {x:g} {y:g} cm /Im1 Do Q")
-        if page.get("texts"):
-            ops.append("BT")
-            cur_size = None
-            for x, y, size, text in page["texts"]:
-                if size != cur_size:
-                    ops.append(f"/F1 {size:g} Tf")
-                    cur_size = size
-                safe = (
-                    text.replace("\\", r"\\")
-                    .replace("(", r"\(")
-                    .replace(")", r"\)")
-                )
-                ops.append(f"1 0 0 1 {x:g} {y:g} Tm ({safe}) Tj")
-            ops.append("ET")
-        # latin-1: the shared /F1 is WinAnsi — ASCII marker conventions
-        # (roman "II.", angled "<...>", "- " bullets) cover every label
-        stream = zlib.compress("\n".join(ops).encode("latin-1"), 6)
-        objects.append(
-            f"<< /Length {len(stream)} /Filter /FlateDecode >>\nstream\n".encode()
-            + stream
-            + b"\nendstream"
-        )
-    objects.append(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>"
-    )
-    pix = bytes([128, 200, 200, 128])
-    objects.append(
-        (
-            "<< /Type /XObject /Subtype /Image /Width 2 /Height 2 "
-            "/ColorSpace /DeviceGray /BitsPerComponent 8 "
-            f"/Length {len(pix)} >>\nstream\n"
-        ).encode()
-        + pix
-        + b"\nendstream"
-    )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for num, body in enumerate(objects, start=1):
-        offsets.append(len(out))
-        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objects) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objects) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
-
-
 def build_report_pdf(doc_id: int) -> bytes:
     """The b4 contract document: two pages with header/footer furniture.
 

@@ -92,70 +92,3 @@ class TestSaltedAgg:
             exp[["conv_id", "n_turns", "max_turn", "total_chars"]],
         )
 
-
-class TestStatefulStreaming:
-    def test_state_persists_across_batches(self, spark, tmp_path):
-        import pandas as pd
-        from doc_parser_spark.streaming.stream import read_transcript_stream
-        from doc_parser_spark.streaming.stream import extract_stream
-        from doc_parser_spark.streaming.stateful import (
-            conversation_context_stream,
-        )
-
-        inp = tmp_path / "in"
-        inp.mkdir()
-
-        def write(name, rows):
-            pdf = pd.DataFrame(rows)
-            pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-            pdf["tool"] = pdf["tool"].astype("string")
-            pdf.to_parquet(
-                str(inp / name), index=False,
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-
-        base = {"role": "user", "tool": None, "ts": pd.Timestamp("2026-01-01")}
-        write(
-            "b1.parquet",
-            [
-                {"conv_id": "c1", "turn_idx": 0,
-                 "text": "<h1>Guide</h1><p>intro</p>", **base},
-                {"conv_id": "c1", "turn_idx": 1, "text": "plain turn", **base},
-            ],
-        )
-
-        stream = conversation_context_stream(
-            extract_stream(read_transcript_stream(spark, str(inp)))
-        )
-        out = str(tmp_path / "out")
-
-        def drain():
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return spark.read.parquet(out).toPandas()
-
-        first = drain()
-        assert first.sort_values("turn_idx")["active_title"].tolist() == [
-            "Guide", "Guide",
-        ]
-
-        # second batch later: state (title + counter) must carry over
-        write(
-            "b2.parquet",
-            [{"conv_id": "c1", "turn_idx": 2,
-              "text": "<h2>Install</h2><p>steps</p>", **base}],
-        )
-        both = drain()
-        second = both[both["turn_idx"] == 2]
-        assert len(both) == 3 and len(second) == 1
-        row = second.iloc[0]
-        assert row["active_title"] == "Guide"
-        assert row["active_section"] == "Install"
-        assert row["n_turns_seen"] == 3

@@ -54,6 +54,7 @@ from doc_parser_spark.sources import synth_media, synth_office, synth_pdf
 REF = Path("/root/reference")
 REF_JPEG = REF / "genon/preprocessor/sample_files/jpeg_sample.jpeg"
 REF_HWPX = REF / "genon/preprocessor/sample_files/hwpx_sample.hwpx"
+REF_WEBP = REF / "tests/data/webp/webp-test.webp"
 
 # exception classes that signal MALFORMED DATA when a zip-container
 # extractor meets corrupt bytes; programming-error classes are absent on
@@ -143,13 +144,14 @@ def test_media_decoder_corruption(name, builder, decoder, check):
     _sweep_hard(decoder, builder(7), MediaDecodeError, check=check)
 
 
+@pytest.mark.skipif(not REF_WEBP.exists(), reason="reference asset missing")
 def test_reference_webp_corruption():
     """Round 5: the fixture fully pixel-decodes now, so a corrupted-but-
     still-valid stream costs seconds of real decode — the broad bit-flip
     schedule lives on the small synth lossy stream above; here the big
     reference fixture gets every truncation (all fail fast at the RIFF
     chunk walk or a partition bound) plus a handful of flips."""
-    payload = (REF / "tests/data/webp/webp-test.webp").read_bytes()
+    payload = REF_WEBP.read_bytes()
     _sweep_hard(decode_webp, payload, MediaDecodeError, n_flips=6,
                 n_truncs=15)
 
@@ -167,6 +169,7 @@ def test_filtered_lossy_webp_corruption():
                 n_truncs=25)
 
 
+@pytest.mark.skipif(not REF_JPEG.exists(), reason="reference asset missing")
 def test_reference_jpeg_corruption():
     payload = REF_JPEG.read_bytes()
     _sweep_hard(decode_jpeg, payload, MediaDecodeError, n_flips=60,
@@ -218,15 +221,17 @@ def _office_payloads():
     from doc_parser_spark.functions.pptx_extract import extract_pptx
     from doc_parser_spark.functions.xlsx_extract import extract_xlsx
 
-    return [
+    payloads = [
         ("docx", extract_docx,
          synth_office.build_docx("T", ["alpha beta", "gamma"], ["x", "y"])),
         ("xlsx", extract_xlsx,
          synth_office.build_xlsx("S", [["a", "1"], ["b", "2"]])),
         ("pptx", extract_pptx, synth_office.build_pptx("T", ["p", "q"])),
         ("hwpx", extract_hwpx, synth_office.build_hwpx(1, "사례 본문 내용")),
-        ("hwpx-ref", extract_hwpx, REF_HWPX.read_bytes()),
     ]
+    if REF_HWPX.exists():
+        payloads.append(("hwpx-ref", extract_hwpx, REF_HWPX.read_bytes()))
+    return payloads
 
 
 @pytest.mark.parametrize("name,extractor,payload",
@@ -259,18 +264,27 @@ def test_office_envelope_never_raises():
 # confusion envelope (run()'s per-op catch + untrusted_pdf) is what's
 # actually exercised.
 
-def _wrap_content(stream: bytes) -> bytes:
-    """Minimal single-page PDF with an UNCOMPRESSED content stream."""
+def _wrap_content(stream: bytes, with_image: bool = False) -> bytes:
+    """Minimal single-page PDF with an UNCOMPRESSED content stream (and,
+    with ``with_image``, a 2x2 gray image XObject named ``/Im1``)."""
+    xobject = b" /XObject << /Im1 6 0 R >>" if with_image else b""
     objects = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Count 1 /Kids [3 0 R] >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
+        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >>"
+        + xobject + b" >> >>",
         b"<< /Length " + str(len(stream)).encode() + b" >>\nstream\n"
         + stream + b"\nendstream",
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
         b"/Encoding /WinAnsiEncoding >>",
     ]
+    if with_image:
+        objects.append(
+            b"<< /Type /XObject /Subtype /Image /Width 2 /Height 2 "
+            b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length 4 >>"
+            b"\nstream\n\x80\xc8\xc8\x80\nendstream"
+        )
     out = bytearray(b"%PDF-1.4\n")
     offsets = []
     for num, body in enumerate(objects, start=1):
@@ -314,6 +328,24 @@ def test_pdf_content_stream_interpreter_fuzz():
             decode_pdf_pages(_wrap_content(stream))
         except PdfError:
             pass
+
+
+def test_graphics_operators_do_not_change_text_cells():
+    """Path segments, stroked and filled rulings and an image placement
+    around the text leave the decoded cells exactly as the text-only
+    stream gives them."""
+    text = (b"BT /F1 12 Tf 72 700 Td (Total revenue) Tj "
+            b"0 -20 Td (alpha beta 42) Tj ET")
+    graphics = (b"72 690 m 540 690 l 300 600 400 650 500 620 c S "
+                b"70 560 200 100 re S 300 560 40 20 re f "
+                b"q 120 0 0 80 300 400 cm /Im1 Do Q")
+    expected = decode_pdf_pages(_wrap_content(text))
+    assert [c[5] for c in expected[0]] == ["Total revenue", "alpha beta 42"]
+    for stream in (graphics + b" " + text, text + b" " + graphics,
+                   graphics + b" " + text + b" " + graphics):
+        assert decode_pdf_pages(
+            _wrap_content(stream, with_image=True)
+        ) == expected
 
 
 def test_pdf_tounicode_cmap_fuzz():

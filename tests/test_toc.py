@@ -1,194 +1,7 @@
-"""TOC reconstruction (portable half of E4): exact-port machinery tests +
-the reference BOK PDF fixture (a real document with a real dotted-leader
-index page), plus the distributed operator's semantics on a hand-built
-frame."""
+"""TOC match-back (E4): the distributed operator's semantics on
+hand-built frames."""
 
 from __future__ import annotations
-
-from pathlib import Path
-
-import pytest
-
-from doc_parser_spark.functions.toc import (
-    apply_toc,
-    dedupe_items,
-    parse_toc_content,
-    toc_from_index_page,
-)
-
-PDF = Path(
-    "/root/reference/genon/preprocessor/facade/evaluation/test_files/pdf/"
-    "최근의 미국경제 상황과 평가(2024.8월).pdf"
-)
-
-
-class TestParseTocContent:
-    def test_levels_and_title(self):
-        parsed = parse_toc_content(
-            "TITLE: Annual Report\n"
-            "1. Introduction\n"
-            "1.1. Scope\n"
-            "1.1.1. Details\n"
-            "1.1.1.1. Fine print\n"
-            "Appendix\n"
-        )
-        assert parsed["title"] == "Annual Report"
-        levels = [t["level"] for t in parsed["toc_items"]]
-        assert levels == [1, 2, 3, 4, 1]
-        assert parsed["toc_items"][1]["number"] == "1.1"
-        assert parsed["toc_items"][4]["title"] == "Appendix"
-
-    def test_dedupe_adjacent_similar(self):
-        items = parse_toc_content(
-            "1. Methodology\n1.1. Methodology\n2. Results\n"
-        )["toc_items"]
-        # levels 1 and 2 differ by one and titles are identical → deduped
-        assert [t["title"] for t in dedupe_items(items)] == [
-            "Methodology", "Results",
-        ]
-
-    def test_dedupe_keeps_distinct(self):
-        items = parse_toc_content("1. Alpha\n2. Beta\n")["toc_items"]
-        assert len(dedupe_items(items)) == 2
-
-
-class TestApplyToc:
-    def test_sequential_greedy_with_exclusion(self):
-        # two TOC entries whose best candidate is the SAME repeated heading
-        # line: the first entry takes one occurrence (the reference scans
-        # candidates in reversed document order, so ties go to the LATER
-        # item), the second is excluded from it and takes the other
-        items = [
-            (0, "Results"),
-            (1, "body text that matches nothing here"),
-            (2, "Results"),
-            (3, "Conclusions"),
-        ]
-        res = apply_toc(
-            items, "1. Results summary\n2. Results detail\n3. Conclusions\n"
-        )
-        taken = [idx for idx, _ in res["sections"]]
-        assert taken[0] == 2  # reversed-order scan: later occurrence first
-        assert taken[1] == 0  # exclusion forces the earlier occurrence
-        assert taken[2] == 3
-        assert res["matched_count"] == 3
-
-    def test_adjacent_duplicate_toc_entries_dedupe(self):
-        # document_enrichment.py:210-230: adjacent ≥0.92-similar entries
-        # with level distance ≤1 collapse to the first BEFORE matching
-        items = [(0, "Overview"), (1, "Conclusions")]
-        res = apply_toc(items, "1. Overview\n2. Overview\n3. Conclusions\n")
-        assert res["matched_count"] == 2
-        assert [idx for idx, _ in res["sections"]] == [0, 1]
-
-    def test_title_matching_uses_cutoffs(self):
-        items = [(0, "The Greatest Annual Report 2024"), (1, "body")]
-        res = apply_toc(items, "TITLE: Greatest Annual Report\n")
-        assert res["title_idx"] == 0
-        # a hopeless title never matches
-        res2 = apply_toc(items, "TITLE: zzzz qqqq xxxx\n")
-        assert res2["title_idx"] is None
-
-    def test_threshold_blocks_weak_candidates(self):
-        items = [(0, "completely unrelated line")]
-        res = apply_toc(items, "1. Quarterly financial summary\n")
-        assert res["sections"] == []
-
-
-class TestTocFromIndexPage:
-    def test_dotted_leader_lines_become_entries(self):
-        toc = toc_from_index_page(
-            [
-                "차   례",
-                "Ⅰ. 최근의 미국경제 동향 ········································ 3",
-                "1. 실물경제 ··········· 3",
-                "2. 금융시장 ··········· 8",
-                "Ⅱ. 연준 통화정책 ··········· 10",
-                "ordinary body line",
-            ]
-        )
-        assert toc is not None
-        assert toc.splitlines() == [
-            "Ⅰ. 최근의 미국경제 동향",
-            "1. 실물경제",
-            "2. 금융시장",
-            "Ⅱ. 연준 통화정책",
-        ]
-
-    def test_too_few_dotted_lines_is_no_index(self):
-        assert toc_from_index_page(["a ····· 3", "b ····· 4"]) is None
-
-
-@pytest.mark.skipif(not PDF.exists(), reason="reference asset missing")
-class TestBokPdfFixture:
-    """The real thing: our decoder extracts the BOK report's 차례 page,
-    toc_from_index_page sources the TOC without any LLM, and apply_toc
-    matches every entry back to the correct body heading."""
-
-    @pytest.fixture(scope="class")
-    def doc_lines(self):
-        from doc_parser_spark.functions.pdf_decode import decode_pdf_pages
-        from doc_parser_spark.functions.pdfish_extract import (
-            Cell,
-            group_rows,
-            merge_row,
-        )
-
-        cells, pages = decode_pdf_pages(PDF.read_bytes())
-        by_page = {}
-        for pno in sorted(pages):
-            pc = [Cell(*c) for c in cells if c[0] == pno]
-            lines = []
-            for row in group_rows(pc):
-                segs = merge_row(row)
-                lines.append(
-                    " ".join(
-                        s.text for s in sorted(segs, key=lambda c: c.x0)
-                    )
-                )
-            by_page[pno] = lines
-        return by_page
-
-    def test_toc_sourced_from_own_index_page(self, doc_lines):
-        toc = next(
-            (
-                t
-                for pno in sorted(doc_lines)
-                if (t := toc_from_index_page(doc_lines[pno])) is not None
-            ),
-            None,
-        )
-        assert toc is not None
-        assert toc.splitlines() == [
-            "Ⅰ. 최근의 미국경제 동향",
-            "1. 실물경제",
-            "2. 금융시장",
-            "Ⅱ. 연준 통화정책",
-        ]
-
-    def test_match_back_finds_every_section_heading(self, doc_lines):
-        items = []
-        i = 0
-        for pno in sorted(doc_lines):
-            for ln in doc_lines[pno]:
-                items.append((i, ln))
-                i += 1
-        toc = next(
-            t
-            for pno in sorted(doc_lines)
-            if (t := toc_from_index_page(doc_lines[pno])) is not None
-        )
-        res = apply_toc(items, toc)
-        assert res["matched_count"] == 4
-        matched_texts = [items[idx][1] for idx, _ in res["sections"]]
-        assert matched_texts == [
-            "Ⅰ. 최근의 미국경제 동향",
-            "1 실물경제",
-            "2 금융시장",
-            "II. 연준 통화정책",  # the body uses latin II; fuzzy match holds
-        ]
-        levels = [t["level"] for _, t in res["sections"]]
-        assert levels == [1, 1, 1, 1]
 
 
 class TestDistributedOperator:
