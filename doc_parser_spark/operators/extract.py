@@ -1,4 +1,4 @@
-"""The extraction operator — Arrow-batched mapInPandas over transcript turns.
+"""The extraction operator — Arrow-batched mapInArrow over transcript turns.
 
 Spark-first design notes (SURVEY.md §3.4):
 
@@ -14,8 +14,11 @@ Spark-first design notes (SURVEY.md §3.4):
   becomes a per-row try/except chain inside the batch: primary extractor →
   plain-text fallback (partial_success) → failure row. A poison document
   never kills the task.
-- metrics: each output row carries ``_proc_us`` (its share of the batch's
-  wall time) and ``_n_bytes`` so per-partition metrics (docs, bytes,
+- the batch stays in Arrow: one per-row loop (scalar sniff, extraction,
+  scoring) fills flat column lists that become one ``pa.RecordBatch`` —
+  no pandas frame and no per-element struct conversion on either side.
+- metrics: each output row carries ``_proc_us`` (its own extraction and
+  scoring time) and ``_n_bytes`` so per-partition metrics (docs, bytes,
   failures, wall) are a pure relational aggregate afterwards — Spark
   accumulators are lossy under task retries (SURVEY.md §1.4).
 """
@@ -25,11 +28,12 @@ from __future__ import annotations
 import time
 from typing import Iterable, Iterator
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from doc_parser_spark.datamodel import (
     CT_ASCIIDOC,
@@ -56,7 +60,7 @@ from doc_parser_spark.functions.md_extract import extract_md
 from doc_parser_spark.functions.pdfish_extract import extract_pdfish
 from doc_parser_spark.functions.plain_extract import extract_plain
 from doc_parser_spark.functions.quality import rate_text_quality
-from doc_parser_spark.sources.sniff import sniff_series
+from doc_parser_spark.sources.sniff import sniff_series, sniff_text
 
 # internal metric columns appended to EXTRACTED_SCHEMA by the UDF
 EXTRACT_OUTPUT_SCHEMA = T.StructType(
@@ -66,6 +70,8 @@ EXTRACT_OUTPUT_SCHEMA = T.StructType(
         T.StructField("_proc_us", T.LongType(), False),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(EXTRACT_OUTPUT_SCHEMA)
+_SPANS_TYPE = _ARROW_SCHEMA.field("spans").type
 
 _EXTRACTORS = {
     CT_ASCIIDOC: extract_asciidoc,
@@ -200,85 +206,81 @@ def _score(extracted: str | None, spans) -> float | None:
     return _q10(scores)
 
 
+def extract_batch(batch: pa.RecordBatch, boilerplate_mode: str) -> pa.RecordBatch:
+    """One Arrow batch of (conv_id, turn_idx, text) → EXTRACT_OUTPUT_SCHEMA.
+
+    A single per-row loop sniffs, extracts and scores each turn into flat
+    column lists; ``spans`` is a ListArray over a StructArray built from
+    flat start/end/label/page lists, so no per-span dict, pandas frame or
+    per-element struct conversion runs. ``_proc_us`` is the row's own
+    ``_extract_one`` + ``_score`` time.
+    """
+    clock = time.perf_counter
+    ctypes, extracted_l, status_l, score_l, stats, n_bytes_l, proc_l = (
+        [], [], [], [], [], [], []
+    )
+    offsets, no_spans, span_cols = [0], [], ([], [], [], [])
+    for text in batch.column("text").to_pylist():
+        ct = sniff_text(text)
+        text = text or ""
+        t0 = clock()
+        extracted, spans, status = _extract_one(ct, text, boilerplate_mode)
+        score = _score(extracted, spans)
+        proc_l.append(int((clock() - t0) * 1e6))
+        ctypes.append(ct)
+        extracted_l.append(extracted)
+        status_l.append(status)
+        score_l.append(score)
+        n_bytes_l.append(len(text))
+        stats.append(
+            (0, 0, 0) if extracted is None else
+            (len(extracted), len(extracted.split()), extracted.count("\n") + 1)
+        )
+        no_spans.append(spans is None)
+        for i, col in enumerate(span_cols):
+            col.extend(sp[i] for sp in spans or ())
+        offsets.append(len(span_cols[0]))
+
+    fields = list(_SPANS_TYPE.value_type)
+    span_values = pa.StructArray.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(span_cols, fields)],
+        fields=fields,
+    )
+    n_char, n_word, n_line = zip(*stats)
+    return pa.RecordBatch.from_pydict(
+        {
+            "conv_id": batch.column("conv_id"),
+            "turn_idx": batch.column("turn_idx"),
+            "content_type": ctypes,
+            "extracted_text": extracted_l,
+            "spans": pa.ListArray.from_arrays(
+                offsets, span_values, type=_SPANS_TYPE, mask=pa.array(no_spans)
+            ),
+            "parse_status": status_l,
+            "parse_score": score_l,
+            "n_char": n_char,
+            "n_word": n_word,
+            "n_line": n_line,
+            "_n_bytes": n_bytes_l,
+            "_proc_us": proc_l,
+        },
+        schema=_ARROW_SCHEMA,
+    )
+
+
 def make_extract_udf(boilerplate_mode: str = "reference"):
-    """Build the mapInPandas function (iterator form → init-once per task)."""
+    """pandas-in/pandas-out adapter over ``extract_batch`` (iterator form),
+    the reference for callers that hold pandas frames."""
 
     def extract_batches(
         batches: Iterable[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            t0 = time.perf_counter()
-            n = len(pdf)
-            if n == 0:
-                continue
-            texts = pdf["text"]
-            if "content_type" in pdf.columns:
-                ctypes = pdf["content_type"]
-            else:
-                ctypes = sniff_series(texts)
-
-            extracted_l: list = []
-            spans_l: list = []
-            status_l: list = []
-            score_l: list = []
-            # stat columns computed inline while the per-row loop already
-            # holds each string (saves three object-dtype .str passes;
-            # ~2% wall — cProfile shows 12% but taxes the .str call fan-out)
-            n_char_l: list = []
-            n_word_l: list = []
-            n_line_l: list = []
-            for ct, text in zip(ctypes.tolist(), texts.tolist()):
-                extracted, spans, status = _extract_one(
-                    ct, text or "", boilerplate_mode
+            if len(pdf):
+                batch = pa.RecordBatch.from_pandas(
+                    pdf[["conv_id", "turn_idx", "text"]], preserve_index=False
                 )
-                extracted_l.append(extracted)
-                spans_l.append(
-                    [
-                        {"start": s[0], "end": s[1], "label": s[2], "page": s[3]}
-                        for s in spans
-                    ]
-                    if spans is not None
-                    else None
-                )
-                status_l.append(status)
-                score_l.append(_score(extracted, spans))
-                if extracted is None:
-                    n_char_l.append(0)
-                    n_word_l.append(0)
-                    n_line_l.append(0)
-                else:
-                    n_char_l.append(len(extracted))
-                    n_word_l.append(len(extracted.split()))
-                    n_line_l.append(extracted.count("\n") + 1)
-
-            ext = pd.Series(extracted_l, index=pdf.index, dtype="object")
-            elapsed_us = int((time.perf_counter() - t0) * 1e6)
-
-            out = pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "turn_idx": pdf["turn_idx"].astype("int32"),
-                    "content_type": ctypes,
-                    "extracted_text": ext,
-                    "spans": spans_l,
-                    "parse_status": status_l,
-                    "parse_score": pd.Series(
-                        score_l, index=pdf.index, dtype="float32"
-                    ),
-                    "n_char": pd.Series(
-                        n_char_l, index=pdf.index, dtype="int32"
-                    ),
-                    "n_word": pd.Series(
-                        n_word_l, index=pdf.index, dtype="int32"
-                    ),
-                    "n_line": pd.Series(
-                        n_line_l, index=pdf.index, dtype="int32"
-                    ),
-                    "_n_bytes": texts.fillna("").str.len().astype("int64"),
-                    "_proc_us": np.int64(elapsed_us // n),
-                }
-            )
-            yield out
+                yield extract_batch(batch, boilerplate_mode).to_pandas()
 
     return extract_batches
 
@@ -295,16 +297,12 @@ def extract_turns(
     conversations — then runs the Arrow-batched extraction, which sniffs
     content type in-batch.
 
-    Round-8 note: the sniff used to run as a SEPARATE pandas UDF before the
-    routing shuffle so the repartition key could include content_type. But
-    (conv_id, turn_idx) is already unique per row, so hashing the extra
-    column changes nothing about the distribution (partitions were never
-    content-homogeneous), while the pre-shuffle ArrowEvalPython node cost a
-    second full JVM→Python→JVM round trip for every row (guide §4.1) and
-    shuffled one extra string column. The extraction UDF has always sniffed
-    in-batch when content_type is absent; routing now relies on that.
+    The sniff runs in the extraction batch, not as a pandas UDF before the
+    shuffle: (conv_id, turn_idx) is already unique per row, so adding
+    content_type to the routing key changed no distribution, while the
+    extra Python node cost every row a second JVM→Python→JVM round trip.
     """
-    # explicit projection: Catalyst cannot prune through mapInPandas (the
+    # explicit projection: Catalyst cannot prune through mapInArrow (the
     # UDF is a black box receiving every child column), so unused transcript
     # columns (role/tool/ts) would otherwise be scanned AND shuffled
     typed = df.select("conv_id", "turn_idx", "text")
@@ -316,9 +314,13 @@ def extract_turns(
         )
     else:
         typed = typed.repartition(F.col("conv_id"), F.col("turn_idx"))
-    out = typed.mapInPandas(
-        make_extract_udf(boilerplate_mode), schema=EXTRACT_OUTPUT_SCHEMA
-    )
+
+    def extract_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield extract_batch(batch, boilerplate_mode)
+
+    out = typed.mapInArrow(extract_batches, schema=EXTRACT_OUTPUT_SCHEMA)
     if not keep_metrics_cols:
         out = out.drop("_n_bytes", "_proc_us")
     return out

@@ -19,7 +19,7 @@ from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-ARROW_BATCH_ROWS = 1024  # Arrow batch size for mapInPandas (R1 analog)
+ARROW_BATCH_ROWS = 1024  # rows per Arrow batch sent to Python workers (R1 analog)
 
 
 def get_spark(
