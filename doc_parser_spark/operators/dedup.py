@@ -762,82 +762,6 @@ def duplicated_token_fraction(
     )
 
 
-def dedup_incremental(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.2,
-    k: int = DEFAULT_MINHASH_K,
-    bands: int = DEFAULT_BANDS,
-    n: int = DEFAULT_SHINGLE,
-) -> DataFrame:
-    """Incremental batch-vs-corpus dedup — the production ingest shape: a
-    NEW batch is checked against the EXISTING corpus without any old×old
-    work (full re-clustering of 100 TB per ingest is the thing this
-    avoids). Per new doc:
-
-    - ``exact_dup``: content md5 already present in the old corpus;
-    - ``near_dup``: shares a MinHash-LSH band bucket with an old doc AND
-      the true shingle Jaccard verifies ≥ ``threshold``;
-    - ``novel`` otherwise.
-
-    ``matched_old_id`` is the smallest matching old id (exact match takes
-    precedence). At scale the old side's hashes and band buckets are
-    PRECOMPUTED tables maintained at ingest (this function recomputes them
-    for self-containedness); the joins are new-batch-sized against those
-    indexes — never corpus×corpus.
-    """
-    old_hash = (
-        old_df.select(
-            F.md5(F.col(text_col)).alias("h"),
-            F.col(id_col).alias("old_id"),
-        )
-        .groupBy("h")
-        .agg(F.min("old_id").alias("exact_old_id"))
-    )
-    base = new_df.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("h")
-    ).join(old_hash, "h", "left").drop("h")
-    bn = lsh_buckets(new_df, id_col, text_col, k, bands, n).withColumnRenamed(
-        "id", "new_id"
-    )
-    bo = lsh_buckets(old_df, id_col, text_col, k, bands, n).withColumnRenamed(
-        "id", "old_id"
-    )
-    cand = bn.join(bo, ["band", "bucket"]).select("new_id", "old_id").distinct()
-    shn = with_shingles(new_df.select(id_col, text_col), text_col, n).select(
-        F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n")
-    )
-    sho = with_shingles(old_df.select(id_col, text_col), text_col, n).select(
-        F.col(id_col).alias("old_id"), F.col("shingles").alias("sh_o")
-    )
-    near = (
-        _jaccard_col(
-            cand.join(shn, "new_id").join(sho, "old_id"),
-            "sh_n",
-            "sh_o",
-            "j",
-            threshold=threshold,
-        )
-        .where(F.col("j") >= threshold)
-        .groupBy("new_id")
-        .agg(F.min("old_id").alias("near_old_id"))
-        .withColumnRenamed("new_id", id_col)
-    )
-    out = base.join(near, id_col, "left")
-    return out.select(
-        id_col,
-        F.when(F.col("exact_old_id").isNotNull(), "exact_dup")
-        .when(F.col("near_old_id").isNotNull(), "near_dup")
-        .otherwise("novel")
-        .alias("status"),
-        F.coalesce("exact_old_id", "near_old_id")
-        .cast("long")
-        .alias("matched_old_id"),
-    )
-
-
 def dedup_index(
     df: DataFrame,
     id_col: str,
@@ -849,9 +773,9 @@ def dedup_index(
 ) -> DataFrame:
     """Materialized dedup index of a corpus — ONE pass over the text,
     after which incremental ingest never touches old text again
-    (``dedup_incremental`` recomputes md5 + MinHash over the WHOLE old
-    side per batch: O(corpus) per ingest, the one cost that disqualifies
-    the self-contained form at 100 TB).
+    (re-deriving md5 + MinHash from the whole old side per batch costs
+    O(corpus) per ingest: ~158 s against 4.5-6.4 s per 5k batch at a 1M
+    corpus, docs/SCALE.md).
 
     One row per doc: ``(id, h, buckets, shingles)`` — content md5, the
     per-band bucket hashes (null for shingle-less docs, matching
@@ -861,9 +785,9 @@ def dedup_index(
     (8 bytes/shingle, multiplicity preserved so the Jaccard expression
     evaluates identically) and verification joins hash arrays — identical
     classification up to 64-bit collisions (none observable). The default
-    keeps raw strings so classification is BIT-IDENTICAL to
-    ``dedup_incremental`` (proven in tests); pass the SAME ``hashed`` to
-    ``dedup_incremental_indexed``.
+    keeps raw strings, the same shingles the SQL classification twin
+    (``plans/driver_queries._incr_classify_sql``) compares; pass the SAME
+    ``hashed`` to ``dedup_incremental_indexed``.
     """
     rows_per_band = k // bands
     sh = with_shingles(df.select(id_col, text_col), text_col, n)
@@ -914,12 +838,14 @@ def dedup_incremental_indexed(
     hashed: bool = False,
     cast_matched: str | None = "long",
 ) -> DataFrame:
-    """``dedup_incremental`` against a MATERIALIZED old-side index
-    (``dedup_index`` output) instead of the old corpus text — the true
-    production ingest shape: per-batch cost is O(batch + matched
-    candidates); the only old-side work is the index read. Classification
-    is bit-identical to ``dedup_incremental(new_df, old_df, ...)`` when
-    ``index = dedup_index(old_df, ...)`` with the same parameters.
+    """Incremental batch-vs-corpus dedup of ``new_df`` against a
+    MATERIALIZED corpus index (``dedup_index``, built with the same
+    k/bands/n/hashed) — never corpus text, never corpus×corpus; cost is
+    O(batch + matched candidates). Status per new doc: ``exact_dup``
+    (content md5 in the index), ``near_dup`` (shares an LSH band bucket
+    AND shingle Jaccard ≥ ``threshold``), else ``novel``;
+    ``matched_old_id`` is the smallest match, exact first. Equals the SQL
+    ``plans/driver_queries._incr_classify_sql`` over the old text.
 
     Index maintenance is append-only: after a batch, append
     ``dedup_index(novel docs)`` — exactly what the streaming wiring does
@@ -941,9 +867,7 @@ def dedup_incremental_indexed(
     # columns riding the bucket tables, BEFORE the pair distinct, so the
     # distinct shuffles only surviving pairs and the arrays are joined
     # only to them (measured 57% killed). Sizes are cheap on this path
-    # because the old side's arrays are STORED; the text-path
-    # dedup_incremental keeps the in-place prefilter instead, because
-    # deriving old-side sizes there would cost a second corpus tokenize.
+    # because the old side's arrays are STORED.
     bo = index.where(F.col("buckets").isNotNull()).selectExpr(
         "id AS old_id",
         "size(shingles) AS _so",
@@ -987,9 +911,9 @@ def dedup_incremental_indexed(
     out = base.join(near, id_col, "left")
     matched = F.coalesce("exact_old_id", "near_old_id")
     if cast_matched is not None:
-        # default "long" matches dedup_incremental (and the BIGINT
-        # oracles); pass None for non-numeric ids — ANSI mode would
-        # otherwise THROW casting e.g. "conv#3" to long
+        # default "long" matches the BIGINT oracles; pass None for
+        # non-numeric ids — ANSI mode would otherwise THROW casting e.g.
+        # "conv#3" to long
         matched = matched.cast(cast_matched)
     return out.select(
         id_col,

@@ -60,7 +60,7 @@ from doc_parser_spark.functions.md_extract import extract_md
 from doc_parser_spark.functions.pdfish_extract import extract_pdfish
 from doc_parser_spark.functions.plain_extract import extract_plain
 from doc_parser_spark.functions.quality import rate_text_quality
-from doc_parser_spark.sources.sniff import sniff_series, sniff_text
+from doc_parser_spark.sources.sniff import sniff_text
 
 # internal metric columns appended to EXTRACTED_SCHEMA by the UDF
 EXTRACT_OUTPUT_SCHEMA = T.StructType(
@@ -83,16 +83,6 @@ _EXTRACTORS = {
     CT_MARKDOWN: extract_md,
     CT_CSV: extract_csv,
 }
-
-
-def with_content_type(df: DataFrame) -> DataFrame:
-    """Add the sniffer column (S1). Vectorized pandas UDF over the text head."""
-
-    @F.pandas_udf(T.StringType())
-    def _sniff(texts: pd.Series) -> pd.Series:
-        return sniff_series(texts)
-
-    return df.withColumn("content_type", _sniff(F.col("text")))
 
 
 # size limit (S2 analog, document.py:116-206 limits + R5 time budget): a

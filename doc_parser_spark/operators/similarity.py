@@ -34,6 +34,11 @@ NORM_EXPR = (
 )
 COS_PRE_EXPR = DOT_EXPR + " / ({na} * {nb})"
 
+# allpairs_cosine_pairs refuses inputs above this many rows: its work and
+# shuffle grow as n^2. 10x the largest contract input (embeddings, 2,000
+# rows at sf0.1), i.e. 100x that input's pair work.
+ALLPAIRS_MAX_ROWS = 20_000
+
 
 def allpairs_cosine_pairs(
     df: DataFrame,
@@ -82,12 +87,19 @@ def allpairs_cosine_pairs(
     Still O(n^2) by construction — this is the correctness BASELINE;
     ``lsh_neardup_pairs``/IVF remain the scale path. Shuffle volume is
     nblocks x corpus bytes (each block meets every other once), so keep
-    ``block_size`` large enough that nblocks stays modest.
+    ``block_size`` large enough that nblocks stays modest. Inputs above
+    ``ALLPAIRS_MAX_ROWS`` rows raise ``ValueError`` (the check reuses the
+    row count the blocking needs anyway — no extra job).
     """
     import numpy as np
     import pandas as pd
 
     n = df.count()
+    if n > ALLPAIRS_MAX_ROWS:
+        raise ValueError(
+            f"allpairs_cosine_pairs: {n} rows > ALLPAIRS_MAX_ROWS="
+            f"{ALLPAIRS_MAX_ROWS}; use lsh_neardup_pairs or ivf_topk"
+        )
     nblocks = max(1, -(-n // block_size))
     cut = threshold - 6e-5
 

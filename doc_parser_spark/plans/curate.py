@@ -175,38 +175,10 @@ def run_curation(
             transcripts, observations, min_quality, boilerplate_mode
         )
 
-        # 2. exact dedup on the extracted main text
-        deduped = exact_dedup(kept, "uid", "extracted_text")
-        deduped = deduped.where("keep").drop("keep", "doc_hash")
-        deduped = _observe(deduped, observations, "exact_unique")
-        # the LSH-pair branch and the survivor anti-join below BOTH consume
-        # deduped inside the one terminal action — fork it so extraction +
-        # dedup don't run twice. The caller releases it via stats.unpersist():
-        # until then the CacheManager keeps the entry (LRU may evict its
-        # blocks, never the entry)
-        deduped = fork(deduped)
-
-        # 3. near-dup removal: LSH candidates → verified pairs → drop the
-        # larger uid of every pair (greedy, deterministic)
-        # 8 bands × 1 row: candidate probability 1-(1-j)^8 ≈ 1.0 for
-        # j ≥ 0.5 — high recall for a dedup pass (false candidates are
-        # killed by the exact Jaccard verification inside
-        # lsh_candidate_pairs)
-        # lsh_max_bucket: production guard against near-identical template
-        # families (survive exact dedup, land m docs in one bucket per
-        # band → m²/2 pairs); oversized buckets emit a Jaccard-verified
-        # star instead, which keeps the loser set (everything but the min
-        # uid) identical for a true family. No bucket in the contract
-        # corpora comes near the cap, so oracle parity is unaffected.
-        pairs = lsh_candidate_pairs(
-            deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
-            k=8, bands=8, max_bucket=lsh_max_bucket,
+        # 2-3. exact, then near-dup removal within the input
+        survivors = _dedup_within(
+            kept, observations, near_dup_jaccard, lsh_max_bucket
         )
-        # no broadcast hint: the loser set can be corpus-sized on dup-heavy
-        # data — AQE picks broadcast when it actually fits
-        losers = pairs.select(F.col("b_id").alias("uid")).distinct()
-        survivors = deduped.join(losers, "uid", "left_anti")
-        survivors = _observe(survivors, observations, "near_dup_unique")
 
         # 4. chunk + vector metadata
         chunks = chunk_turns(survivors, max_tokens=max_tokens)
@@ -244,6 +216,47 @@ def _extract_gate(
         & (F.coalesce(F.col("parse_score"), F.lit(0.0)) >= min_quality)
     )
     return _observe(kept, observations, "quality_kept")
+
+
+def _dedup_within(
+    kept: DataFrame,
+    observations: dict[str, Observation],
+    near_dup_jaccard: float,
+    lsh_max_bucket: int | None,
+    n: int = 3,
+) -> DataFrame:
+    """Within-input dedup shared by run_curation / curate_ingest: exact
+    dedup, then drop the larger uid of every verified LSH pair (greedy,
+    deterministic). Runs inside the caller's ForkCache."""
+    deduped = exact_dedup(kept, "uid", "extracted_text")
+    deduped = deduped.where("keep").drop("keep", "doc_hash")
+    deduped = _observe(deduped, observations, "exact_unique")
+    # the LSH-pair branch and the survivor anti-join below BOTH consume
+    # deduped inside the one terminal action — fork it so extraction +
+    # dedup don't run twice. The caller releases it via stats.unpersist():
+    # until then the CacheManager keeps the entry (LRU may evict its
+    # blocks, never the entry)
+    deduped = fork(deduped)
+    # 8 bands × 1 row: candidate probability 1-(1-j)^8 ≈ 1.0 for j ≥ 0.5 —
+    # high recall for a dedup pass (false candidates are killed by the
+    # exact Jaccard verification inside lsh_candidate_pairs). bands=8 (r=1)
+    # is the policy the standing oracles pin; docs/SCALE.md round 8
+    # measures the r=2 candidate-volume/recall trade-off.
+    # lsh_max_bucket: production guard against near-identical template
+    # families (survive exact dedup, land m docs in one bucket per band →
+    # m²/2 pairs); oversized buckets emit a Jaccard-verified star instead,
+    # which keeps the loser set (everything but the min uid) identical for
+    # a true family. No bucket in the contract corpora comes near the cap,
+    # so oracle parity is unaffected.
+    pairs = lsh_candidate_pairs(
+        deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
+        k=8, bands=8, n=n, max_bucket=lsh_max_bucket,
+    )
+    # no broadcast hint: the loser set can be corpus-sized on dup-heavy
+    # data — AQE picks broadcast when it actually fits
+    losers = pairs.select(F.col("b_id").alias("uid")).distinct()
+    survivors = deduped.join(losers, "uid", "left_anti")
+    return _observe(survivors, observations, "near_dup_unique")
 
 
 def build_curation_index(
@@ -329,24 +342,14 @@ def curate_ingest(
             transcripts, observations, min_quality, boilerplate_mode
         )
 
-        # within-batch exact + near dedup (identical policy to run_curation)
-        deduped = exact_dedup(kept, "uid", "extracted_text")
-        deduped = deduped.where("keep").drop("keep", "doc_hash")
-        deduped = _observe(deduped, observations, "exact_unique")
-        deduped = fork(deduped)  # LSH-pair branch + anti-join fork point
+        # within-batch exact + near dedup (identical policy to run_curation).
         # n=n: the shingle size is part of the index identity — the in-batch
         # pass must shingle the same way as the vs-corpus classification
         # below (k stays pinned to run_curation's in-batch policy; see
         # build_curation_index's recall note). Round-7 ADVICE.
-        # bands=8 (r=1) is the policy the standing oracles pin; docs/SCALE.md
-        # round 8 measures the r=2 candidate-volume/recall trade-off.
-        pairs = lsh_candidate_pairs(
-            deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
-            k=8, bands=8, n=n, max_bucket=lsh_max_bucket,
+        survivors = _dedup_within(
+            kept, observations, near_dup_jaccard, lsh_max_bucket, n=n
         )
-        losers = pairs.select(F.col("b_id").alias("uid")).distinct()
-        survivors = deduped.join(losers, "uid", "left_anti")
-        survivors = _observe(survivors, observations, "near_dup_unique")
         # fork point: consumed by the classification lineage AND the novels
         # semi-join — without the fork the in-batch LSH pipeline
         # re-evaluates per branch (the differing projections defeat

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from doc_parser_spark.functions.sanitize import sanitize_text
-from doc_parser_spark.operators.extract import extract_turns, with_content_type
+from doc_parser_spark.operators.extract import extract_turns
 from doc_parser_spark.session import fork
 
 # ---------------------------------------------------------------------------
@@ -134,13 +134,8 @@ def _one_turn_extract(
 # S1 — content-type sniff (document.py:306-506)
 # ---------------------------------------------------------------------------
 def q_s1_content_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).withColumn("payload", F.expr(PAYLOAD_SNIFF))
-    typed = with_content_type(docs.select(F.col("payload").alias("text")))
-    return (
-        typed.groupBy("content_type")
-        .agg(F.count("*").alias("cnt"))
-        .select("content_type", "cnt")
-    )
+    typed = _one_turn_extract(spark, sf_dir, PAYLOAD_SNIFF, "content_type")
+    return typed.groupBy("content_type").agg(F.count("*").alias("cnt"))
 
 
 ORACLE_S1 = f"""
@@ -4391,15 +4386,26 @@ FROM scored ORDER BY raw DESC, doc_id LIMIT {_BM25_K}
 
 # ===========================================================================
 # batch 40 — incremental batch-vs-corpus dedup (the production ingest
-# shape: new batch checked against the existing corpus's hash + LSH-band
-# indexes, never corpus×corpus). old = even neardup docs; new = the odd
-# near-dup variants plus re-labeled exact copies of every 10th old doc.
+# shape: new batch checked against a materialized dedup_index of the
+# existing corpus, never corpus×corpus). old = even neardup docs; new = the
+# odd near-dup variants plus re-labeled exact copies of every 10th old doc.
+# This row classifies against the HASHED index (xxhash64 shingle arrays),
+# dedup_incremental_indexed below against the raw-shingle one: one oracle,
+# both index formats.
 # ===========================================================================
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import dedup_incremental
+    from doc_parser_spark.operators.dedup import (
+        dedup_incremental_indexed,
+        dedup_index,
+    )
 
     old, new = _sql_ctes(spark, sf_dir, _INCR_SPLIT_SQL, "old", "new")
-    return dedup_incremental(new, old, "doc_id", "payload", threshold=0.2)
+    # the classifier reads the index three times (hashes, buckets,
+    # shingles): fork it so the lazy index is derived once
+    index = fork(dedup_index(old, "doc_id", "payload", hashed=True))
+    return dedup_incremental_indexed(
+        new, index, "doc_id", "payload", threshold=0.2, hashed=True
+    )
 
 
 _INCR_SPLIT_SQL = f"""corpus AS ({NEARDUP_SQL}),
@@ -4463,11 +4469,8 @@ LEFT JOIN near nr ON nr.doc_id = n.doc_id
 """
 
 
-# --- materialized-index variant (round 6): identical classification, but
-# the old side is dedup_index(old) — md5/MinHash/shingles computed ONCE,
-# never re-derived from old text at ingest (the O(corpus)-per-batch cost
-# the self-contained form pays). Same inputs, so the ORACLE IS REUSED
-# VERBATIM: the index path must be bit-identical to the text path.
+# --- raw-shingle index: the same inputs and the same ORACLE as
+# dedup_incremental, so both index formats must classify identically.
 def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_parser_spark.operators.dedup import (
         dedup_incremental_indexed,
@@ -5534,50 +5537,60 @@ SELECT doc_id, status, matched_old_id, 2 AS batch FROM cls2
 
 # ===========================================================================
 # batch 51 — STREAMING replay-guard semantics as a contract row (round-6
-# verdict #7): incremental_dedup_processor's per-batch logic replayed as a
+# verdict #7): indexed_dedup_processor's per-batch logic replayed as a
 # deterministic batch sequence. The crash model: batch 1 ran to completion
-# (its novel rows sit in the accepted state under batch_id=1) but the
-# checkpoint didn't commit, so batch 1 REPLAYS. The replay's old side must
-# be corpus ∪ accepted WHERE batch_id < 1 — built with the SAME
-# guarded_accepted used by the production foreachBatch processors. If the
-# guard broke, every batch-1 novel would classify exact_dup of ITSELF
+# (its novels' index rows sit in the accepted state under batch_id=1) but
+# the checkpoint didn't commit, so batch 1 REPLAYS. The replay's old side
+# must be corpus index ∪ accepted index WHERE batch_id < 1 — built with the
+# SAME guarded_accepted used by the production foreachBatch processor. If
+# the guard broke, every batch-1 novel would classify exact_dup of ITSELF
 # (its first-attempt accepted row), and the oracle — which encodes the
-# guard in SQL — would hash-mismatch.
+# guard in SQL over the text — would hash-mismatch.
 # ===========================================================================
 def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import dedup_incremental
+    from doc_parser_spark.operators.dedup import (
+        dedup_incremental_indexed,
+        dedup_index,
+    )
     from doc_parser_spark.streaming.stream import guarded_accepted
 
     corpus, batch0, batch1 = _sql_ctes(
         spark, sf_dir, _INGEST_TABLES_SQL, "corpus", "b1", "b2"
     )
+    corpus_idx = dedup_index(corpus, "doc_id", "payload")
+    cols = corpus_idx.columns
+
+    def classify(batch, old):
+        # the classifier reads its old side three times (hashes, buckets,
+        # shingles); fork it, as the processor reads it from parquet
+        return dedup_incremental_indexed(
+            batch, fork(old), "doc_id", "payload", threshold=0.2
+        )
+
+    def accepted(batch, res, batch_id):
+        novels = batch.join(
+            res.where("status = 'novel'").select("doc_id"), "doc_id", "semi"
+        )
+        return dedup_index(novels, "doc_id", "payload").withColumn(
+            "batch_id", F.lit(batch_id)
+        )
 
     # batch 0 processes clean: accepted state gains its novels (batch_id 0)
-    r0 = dedup_incremental(batch0, corpus, "doc_id", "payload", threshold=0.2)
-    acc0 = batch0.join(
-        r0.where("status = 'novel'").select("doc_id"), "doc_id", "semi"
-    ).withColumn("batch_id", F.lit(0))
+    r0 = classify(batch0, corpus_idx)
+    acc0 = accepted(batch0, r0, 0)
 
     # batch 1 FIRST ATTEMPT: old side = corpus ∪ guarded accepted (only
     # batch 0 rows exist yet); its novels land in accepted under batch_id 1
-    old_first = corpus.unionByName(
-        guarded_accepted(acc0, 1, ["doc_id", "payload"])
+    r1_first = classify(
+        batch1, corpus_idx.unionByName(guarded_accepted(acc0, 1, cols))
     )
-    r1_first = dedup_incremental(
-        batch1, old_first, "doc_id", "payload", threshold=0.2
-    )
-    acc1 = batch1.join(
-        r1_first.where("status = 'novel'").select("doc_id"), "doc_id", "semi"
-    ).withColumn("batch_id", F.lit(1))
-    accepted_full = acc0.unionByName(acc1)
+    accepted_full = acc0.unionByName(accepted(batch1, r1_first, 1))
 
     # batch 1 REPLAY: the accepted state now CONTAINS the first attempt's
     # own rows — the guard must exclude exactly those
-    old_replay = corpus.unionByName(
-        guarded_accepted(accepted_full, 1, ["doc_id", "payload"])
-    )
-    r1_replay = dedup_incremental(
-        batch1, old_replay, "doc_id", "payload", threshold=0.2
+    r1_replay = classify(
+        batch1,
+        corpus_idx.unionByName(guarded_accepted(accepted_full, 1, cols)),
     )
     return r0.withColumn("batch", F.lit(0)).unionByName(
         r1_replay.withColumn("batch", F.lit(1))

@@ -1,8 +1,9 @@
 """Structured Streaming variants of the extraction pipeline.
 
-The batch operators compose unchanged onto streaming DataFrames: the sniff
-pandas UDF and the mapInPandas extraction are stateless per-row transforms,
-so ``readStream → extract → writeStream`` is the whole job. Checkpointing is
+The batch operators compose unchanged onto streaming DataFrames: extraction
+is one ``mapInArrow`` that sniffs each turn's content type in-batch and
+parses it, a stateless per-row transform, so
+``readStream → extract → writeStream`` is the whole job. Checkpointing is
 Spark-native here (offsets + sink commit log) — the batch pipeline's manifest
 (plans/pipeline.py) covers the batch path.
 
@@ -96,7 +97,7 @@ def dedup_stream(
 def guarded_accepted(
     accepted_raw: DataFrame, batch_id: int, cols: list[str]
 ) -> DataFrame:
-    """THE replay guard (shared by both foreachBatch processors and the
+    """THE replay guard (shared by ``indexed_dedup_processor`` and the
     ``stream_dedup_replay`` contract query): when batch ``batch_id``
     replays after a crash, the accepted state may already contain the
     first attempt's rows under the SAME batch_id — without this filter
@@ -107,86 +108,6 @@ def guarded_accepted(
     ).select(*cols)
 
 
-def incremental_dedup_processor(
-    corpus_path: str,
-    accepted_path: str,
-    output_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **dedup_kwargs,
-):
-    """Build the foreachBatch body for ``dedup_incremental_stream`` —
-    exposed so fault-injection tests can invoke it directly with a
-    replayed ``batch_id`` (the kill/restart shape) without driving a
-    real query through a checkpoint.
-
-    Exactly-once design (foreachBatch itself is only at-least-once):
-
-    - Both sinks are written ``partitionBy(batch_id)`` with DYNAMIC
-      partition overwrite, so a replayed batch REPLACES its own
-      partition instead of appending next to the first attempt's rows —
-      including healing a partially-committed partition from a crash
-      mid-write.
-    - The accepted-corpus read filters to ``batch_id < current``: a
-      replay of batch k must see exactly the pre-k corpus, or the first
-      attempt's accepted novels would make the replay classify the
-      batch's own docs as exact_dup of themselves (a replay-divergence,
-      not just a duplicate row).
-
-    Replay therefore recomputes a bit-identical result (the operator is
-    deterministic: min-id aggregates, content hashes) and overwrites the
-    same partitions — the committed state after any kill/restart sequence
-    equals the single-clean-run state. Proven by a SIGKILL soak
-    (tools/stream_kill_soak.py) and tests/test_streaming_dedup.py.
-    """
-    from doc_parser_spark.operators.dedup import dedup_incremental
-
-    def process(mb: DataFrame, batch_id: int) -> None:
-        spark = mb.sparkSession
-        corpus = spark.read.parquet(corpus_path).select(id_col, text_col)
-        try:
-            # ONLY the path read may be swallowed (first batch: the
-            # accepted sink doesn't exist yet). spark.read.parquet
-            # resolves the schema eagerly, so a missing path raises HERE.
-            accepted_raw = spark.read.parquet(accepted_path)
-        except AnalysisException:
-            accepted_raw = None  # first batch.  Any OTHER failure —
-            # schema drift, legacy data without batch_id, type mismatch —
-            # raises OUTSIDE this try and fails the batch so the
-            # checkpoint retries it; swallowing it would classify prior
-            # novels as novel again: a permanent dedup leak.
-        if accepted_raw is not None:
-            corpus = corpus.unionByName(
-                guarded_accepted(accepted_raw, batch_id, [id_col, text_col])
-            )
-        mb = mb.persist()
-        res = dedup_incremental(
-            mb, corpus, id_col, text_col, **dedup_kwargs
-        ).persist()
-        (
-            res.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(output_path)
-        )
-        (
-            mb.join(
-                res.where(F.col("status") == "novel").select(id_col), id_col
-            )
-            .select(id_col, text_col)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(accepted_path)
-        )
-        res.unpersist()
-        mb.unpersist()
-
-    return process
-
-
 def indexed_dedup_processor(
     corpus_index_path: str,
     accepted_index_path: str,
@@ -195,17 +116,20 @@ def indexed_dedup_processor(
     text_col: str = "text",
     **dedup_kwargs,
 ):
-    """foreachBatch body for ``dedup_incremental_stream_indexed``: the
-    old side is a MATERIALIZED index (``operators/dedup.dedup_index``),
-    never corpus text — per-batch cost is O(batch + candidates) plus the
-    index read, instead of re-hashing/re-minhashing the whole corpus
-    every micro-batch (the O(corpus)-per-batch cost the text-based loop
-    pays). Novel docs append their own index rows, so the index is
-    maintained by the loop itself.
+    """foreachBatch body for ``dedup_incremental_stream_indexed``, exposed
+    so fault-injection tests can replay a ``batch_id`` directly. Each
+    micro-batch is classified (``dedup_incremental_indexed``) against the
+    corpus index plus the index rows of earlier novels, never corpus
+    text; novels append their own ``dedup_index`` rows.
 
-    Exactly-once: same machinery as ``incremental_dedup_processor`` —
-    batch_id-partitioned dynamic-overwrite sinks + the batch_id < current
-    replay guard on the accepted-index read."""
+    Exactly-once (foreachBatch itself is only at-least-once): both sinks
+    are written ``partitionBy(batch_id)`` with DYNAMIC partition
+    overwrite, so a replayed batch REPLACES its own partition — healing a
+    partial commit too — and the accepted-index read keeps only
+    ``batch_id < current`` (``guarded_accepted``). The operator is
+    deterministic (min-id aggregates, content hashes), so after any
+    kill/restart sequence the committed state equals a clean run's.
+    Proven by tools/stream_kill_soak.py and tests/test_streaming_dedup.py."""
     from doc_parser_spark.operators.dedup import (
         dedup_incremental_indexed,
         dedup_index,
@@ -224,10 +148,15 @@ def indexed_dedup_processor(
         spark = mb.sparkSession
         idx = spark.read.parquet(corpus_index_path)
         try:
-            # only the path read is guarded — see the text-based processor
+            # ONLY the path read may be swallowed (first batch: the
+            # accepted sink doesn't exist yet). spark.read.parquet
+            # resolves the schema eagerly, so a missing path raises HERE.
             accepted_raw = spark.read.parquet(accepted_index_path)
         except AnalysisException:
-            accepted_raw = None  # first batch: no accepted index yet
+            # first batch. Any OTHER failure — schema drift, legacy data
+            # without batch_id — raises OUTSIDE this try and fails the
+            # batch; swallowing it would be a permanent dedup leak.
+            accepted_raw = None
         if accepted_raw is not None:
             accepted = guarded_accepted(
                 accepted_raw, batch_id,
@@ -275,58 +204,14 @@ def dedup_incremental_stream_indexed(
     available_now: bool = True,
     **dedup_kwargs,
 ):
-    """Index-maintained continuous-ingestion dedup: classification results
-    are bit-identical to ``dedup_incremental_stream`` (proven in
-    tests/test_streaming_dedup.py), but the corpus text is read ZERO times
-    per batch — only its one-time index (build with
-    ``dedup_index(corpus).write.parquet(corpus_index_path)``)."""
+    """Continuous-ingestion dedup: every micro-batch is classified
+    exact_dup / near_dup / novel against the corpus-so-far, and novel docs
+    JOIN the old side for later batches. Corpus text is never read — only
+    its one-time index (``dedup_index(corpus).write.parquet(...)``). Sinks
+    are exactly-once under kill/replay (``indexed_dedup_processor``)."""
     process = indexed_dedup_processor(
         corpus_index_path, accepted_index_path, output_path, id_col,
         text_col, **dedup_kwargs,
-    )
-    writer = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def dedup_incremental_stream(
-    stream_df: DataFrame,
-    corpus_path: str,
-    accepted_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-    **dedup_kwargs,
-):
-    """Continuous-ingestion dedup: every arriving micro-batch is classified
-    exact_dup / near_dup / novel against the corpus-so-far, and novel docs
-    JOIN the corpus for subsequent batches.
-
-    This is the production wiring of ``operators/dedup.dedup_incremental``
-    (the batch operator runs VERBATIM inside ``foreachBatch``, so streaming
-    results are bit-identical to running the batch operator per arrival
-    group — proven by tests/test_streaming_dedup.py): the micro-batch is
-    the new side, the static corpus (``corpus_path``) plus previously
-    accepted novel docs (``accepted_path``) is the old side. All joins are
-    batch-sized-vs-index — never corpus×corpus — exactly like the batch
-    form.
-
-    At 100 TB the old side's md5 + LSH band indexes are precomputed tables
-    maintained by this same loop (dedup_incremental recomputes them from
-    text for self-containedness; swapping in materialized index tables
-    changes only the two reads). Sinks are EXACTLY-once under kill/replay
-    — see ``incremental_dedup_processor`` for the mechanism and proof
-    surface.
-    """
-    process = incremental_dedup_processor(
-        corpus_path, accepted_path, output_path, id_col, text_col,
-        **dedup_kwargs,
     )
     writer = (
         stream_df.writeStream.foreachBatch(process)

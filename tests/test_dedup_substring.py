@@ -110,7 +110,10 @@ class TestSubstringSpans:
 
 class TestIncrementalDedup:
     def test_statuses(self, spark):
-        from doc_parser_spark.operators.dedup import dedup_incremental
+        from doc_parser_spark.operators.dedup import (
+            dedup_incremental_indexed,
+            dedup_index,
+        )
 
         old = _mkdocs(
             spark,
@@ -130,8 +133,9 @@ class TestIncrementalDedup:
         )
         out = {
             r["doc_id"]: (r["status"], r["matched_old_id"])
-            for r in dedup_incremental(
-                new, old, "doc_id", "text", threshold=0.2
+            for r in dedup_incremental_indexed(
+                new, dedup_index(old, "doc_id", "text"), "doc_id", "text",
+                threshold=0.2,
             ).collect()
         }
         assert out[10] == ("exact_dup", 0)
@@ -139,17 +143,20 @@ class TestIncrementalDedup:
         assert out[12] == ("novel", None)
 
     def test_no_old_by_old_work(self, spark):
-        # the old side must appear only as aggregated indexes (hash set,
-        # band buckets, shingles for verify) joined against the NEW batch;
+        # the old side must appear only as its index (hash set, band
+        # buckets, shingles for verify) joined against the NEW batch;
         # no old-old self join → no plan node joins two old-derived scans
         # on equality of old ids. Weak but cheap proxy: candidate count is
         # bounded by new×bands, and a pure-old corpus yields no rows.
-        from doc_parser_spark.operators.dedup import dedup_incremental
+        from doc_parser_spark.operators.dedup import (
+            dedup_incremental_indexed,
+            dedup_index,
+        )
 
         old = _mkdocs(spark, ["aa bb cc dd ee ff gg", "hh ii jj kk ll mm"])
         empty_new = spark.createDataFrame([], "doc_id long, text string")
-        assert dedup_incremental(
-            empty_new, old, "doc_id", "text"
+        assert dedup_incremental_indexed(
+            empty_new, dedup_index(old, "doc_id", "text"), "doc_id", "text"
         ).count() == 0
 
 

@@ -14,7 +14,7 @@ from doc_parser_spark.datamodel import CT_EMPTY, STATUS_SKIPPED, STATUS_SUCCESS
 from doc_parser_spark.functions.html_extract import extract_html
 from doc_parser_spark.functions.pdfish_extract import extract_pdfish
 from doc_parser_spark.functions.plain_extract import extract_plain
-from doc_parser_spark.operators.extract import extract_turns, with_content_type
+from doc_parser_spark.operators.extract import extract_turns
 from doc_parser_spark.sources.sniff import sniff_text
 
 
@@ -105,25 +105,6 @@ class TestExtractOperator:
     def test_counts(self, extracted):
         nonnull = extracted[extracted["extracted_text"].notna()]
         assert (nonnull["n_char"] == nonnull["extracted_text"].str.len()).all()
-
-
-class TestSniffColumn:
-    def test_matches_scalar(self, spark, transcripts_pdf):
-        df = spark.createDataFrame(transcripts_pdf.head(50))
-        got = (
-            with_content_type(df)
-            .select("conv_id", "turn_idx", "content_type")
-            .orderBy("conv_id", "turn_idx")
-            .toPandas()
-        )
-        inp = (
-            transcripts_pdf.head(50)
-            .sort_values(["conv_id", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        assert got["content_type"].tolist() == [
-            sniff_text(t) for t in inp["text"]
-        ]
 
 
 class TestPipelineJob:

@@ -171,6 +171,41 @@ class TestAllpairsCosineParity:
         empty = emb.where("vec_id < 0")
         assert allpairs_cosine_pairs(empty, "vec_id", "embedding", 0.3).count() == 0
 
+    def test_row_bound_raises_before_pair_work(self, spark, monkeypatch):
+        """Past ALLPAIRS_MAX_ROWS the baseline refuses with a message that
+        names the bound and the scale paths; the check rides the row count
+        the blocking needs anyway, so it runs no job beyond that count."""
+        import uuid
+
+        from doc_parser_spark.operators import similarity
+
+        monkeypatch.setattr(similarity, "ALLPAIRS_MAX_ROWS", 10)
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+            "vec_id", "embedding"
+        ).where("vec_id < 30")
+        sc = spark.sparkContext
+
+        def n_jobs(fn):
+            group = f"allpairs-bound-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        def guarded():
+            with pytest.raises(ValueError, match="ALLPAIRS_MAX_ROWS=10") as e:
+                similarity.allpairs_cosine_pairs(emb, "vec_id", "embedding")
+            assert "lsh_neardup_pairs" in str(e.value)
+            assert "ivf_topk" in str(e.value)
+
+        assert n_jobs(guarded) == n_jobs(emb.count)
+        # at the bound itself the baseline still builds
+        at_bound = emb.where("vec_id < 10")
+        assert at_bound.count() == 10
+        similarity.allpairs_cosine_pairs(at_bound, "vec_id", "embedding")
+
 
 class TestSignLiteralParity:
     def test_literal_equals_md5_expression(self, spark):

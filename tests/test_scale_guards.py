@@ -221,18 +221,18 @@ class TestIndexedIncrementalPlan:
 
     def test_minhash_runs_only_on_the_new_side(self, spark, tmp_path):
         from doc_parser_spark.operators.dedup import (
-            dedup_incremental,
             dedup_incremental_indexed,
+            lsh_buckets,
         )
 
-        new, old, idx = self._sides(spark, tmp_path)
+        new, _old, idx = self._sides(spark, tmp_path)
         # the minhash kernel's signature expression: array_min(transform(
-        plan_text = _plan(dedup_incremental(new, old, "doc_id", "text"))
+        sig = "array_min(transform("
+        plan_new = _plan(lsh_buckets(new, "doc_id", "text"))
         plan_idx = _plan(dedup_incremental_indexed(new, idx, "doc_id", "text"))
-        # text-based computes signatures for BOTH sides; indexed only for
-        # the new batch — strictly fewer signature expressions in the plan
-        assert 0 < plan_idx.count("array_min(transform(") < plan_text.count(
-            "array_min(transform(")
+        # the classification carries exactly the new batch's own banding
+        # signatures — the old side adds none
+        assert plan_idx.count(sig) == plan_new.count(sig) > 0
         # the old side appears ONLY as parquet index scans: every parquet
         # read schema is index-shaped (h/buckets/shingles), never raw text
         scans = [l for l in plan_idx.splitlines() if "ReadSchema" in l]

@@ -1,7 +1,10 @@
 """Streaming incremental dedup: continuous ingestion gets exact/near/novel
-tagging with BIT-PARITY to the batch operator across micro-batch
-boundaries, and novel docs from earlier batches are visible as corpus to
-later batches (the cross-batch property foreachBatch exists for)."""
+tagging that equals the SQL classification of the same rows across
+micro-batch boundaries, and novel docs from earlier batches are visible as
+corpus to later batches (the cross-batch property foreachBatch exists for).
+The old side is a materialized ``dedup_index``; the reference is the
+contract oracles' DuckDB classification over the TEXT
+(``driver_queries._incr_classify_sql``)."""
 
 from __future__ import annotations
 
@@ -34,8 +37,55 @@ def _write(df_rows, path):
     ).to_parquet(path, index=False)
 
 
+def _sql_classify(new_rows, old_rows):
+    """DuckDB classification of ``new_rows`` against ``old_rows`` — the
+    SQL the contract oracles use — as sorted (doc_id, status,
+    matched_old_id) tuples."""
+    import duckdb
+
+    from doc_parser_spark.plans.driver_queries import _incr_classify_sql
+
+    con = duckdb.connect()
+    try:
+        for name, rows in (("new_t", new_rows), ("old_t", old_rows)):
+            frame = pd.DataFrame(rows, columns=["doc_id", "payload"])
+            con.register(name, frame.astype({"doc_id": "int64"}))
+        rows = con.execute(
+            f"WITH {_incr_classify_sql('new_t', 'old_t', 'cls')} "
+            "SELECT doc_id, status, matched_old_id FROM cls"
+        ).fetchall()
+    finally:
+        con.close()
+    return sorted(rows)
+
+
+def _tuples(pdf):
+    """Spark result rows in ``_sql_classify``'s shape."""
+    return sorted(
+        (int(d), s, None if pd.isna(m) else int(m))
+        for d, s, m in zip(
+            pdf["doc_id"], pdf["status"], pdf["matched_old_id"]
+        )
+    )
+
+
+def _write_corpus_index(spark, root, **kwargs):
+    from doc_parser_spark.operators.dedup import dedup_index
+
+    corpus = spark.read.parquet(str(root / "corpus"))
+    dedup_index(corpus, "doc_id", "text", **kwargs).write.parquet(
+        str(root / "corpus_index")
+    )
+
+
 @pytest.fixture(scope="module")
 def dirs(spark, tmp_path_factory):
+    """Two arrival files drained as two micro-batches through the indexed
+    stream (one file per micro-batch)."""
+    from doc_parser_spark.streaming.stream import (
+        dedup_incremental_stream_indexed,
+    )
+
     root = tmp_path_factory.mktemp("sdedup")
     corpus = root / "corpus"
     incoming = root / "incoming"
@@ -44,64 +94,38 @@ def dirs(spark, tmp_path_factory):
     _write(CORPUS, corpus / "corpus.parquet")
     _write(BATCH_1, incoming / "b1.parquet")
     _write(BATCH_2, incoming / "b2.parquet")
-    return root
-
-
-def _run_stream(spark, root):
-    from doc_parser_spark.streaming.stream import dedup_incremental_stream
-
+    _write_corpus_index(spark, root)
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)  # one arrival file per micro-batch
-        .parquet(str(root / "incoming"))
+        .parquet(str(incoming))
     )
-    q = dedup_incremental_stream(
+    q = dedup_incremental_stream_indexed(
         stream,
-        corpus_path=str(root / "corpus"),
-        accepted_path=str(root / "accepted"),
+        corpus_index_path=str(root / "corpus_index"),
+        accepted_index_path=str(root / "accepted"),
         output_path=str(root / "out"),
         checkpoint_path=str(root / "ckpt"),
     )
     q.awaitTermination(180)
-    return spark.read.parquet(str(root / "out"))
+    return root
 
 
 def test_streaming_matches_sequential_batch_exactly(spark, dirs):
-    """Drain the two arrival files as two micro-batches, then replay the
-    same sequence with the BATCH operator (batch 2's corpus = corpus +
-    batch 1 novels) — statuses and matched ids must be identical."""
-    from doc_parser_spark.operators.dedup import dedup_incremental
-
-    out = _run_stream(spark, dirs).toPandas()
+    """The two micro-batches must equal the SQL classification replayed
+    as a batch sequence (batch 2's old side = corpus + batch 1 novels) —
+    statuses and matched ids identical."""
+    out = spark.read.parquet(str(dirs / "out")).toPandas()
     assert len(out) == 5
     # micro-batch boundaries respected: one file per batch
     assert sorted(out["batch_id"].unique().tolist()) == [0, 1]
 
-    corpus = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
-    b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
-    r1 = dedup_incremental(b1, corpus, "doc_id", "text").toPandas()
-    novel1 = b1.join(
-        spark.createDataFrame(
-            r1[r1.status == "novel"][["doc_id"]]
-        ),
-        "doc_id",
+    r1 = _sql_classify(BATCH_1, CORPUS)
+    novel1 = {d for d, s, _ in r1 if s == "novel"}
+    r2 = _sql_classify(
+        BATCH_2, CORPUS + [r for r in BATCH_1 if r[0] in novel1]
     )
-    r2 = dedup_incremental(
-        b2, corpus.unionByName(novel1), "doc_id", "text"
-    ).toPandas()
-    batch_ref = (
-        pd.concat([r1, r2])
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    stream_got = (
-        out.drop(columns=["batch_id"]).sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        stream_got.astype(str), batch_ref.astype(str)
-    )
+    assert _tuples(out) == sorted(r1 + r2)
 
 
 def test_cross_batch_statuses(spark, dirs):
@@ -122,33 +146,38 @@ def test_cross_batch_statuses(spark, dirs):
 
 
 def test_accepted_corpus_contains_exactly_the_novels(spark, dirs):
+    # the loop appends INDEX rows, and for exactly the novels
     acc = spark.read.parquet(str(dirs / "accepted")).toPandas()
-    assert sorted(acc["doc_id"].tolist()) == [101, 202]
+    assert sorted(acc["id"].tolist()) == [101, 202]
+    assert set(acc.columns) >= {"id", "h", "buckets", "shingles", "batch_id"}
 
 
 # ---------------------------------------------------------------------------
 # exactly-once under foreachBatch replay (the kill/restart shape)
 # ---------------------------------------------------------------------------
 
-def _processor(root):
-    from doc_parser_spark.streaming.stream import incremental_dedup_processor
+def _processor(root, **kwargs):
+    from doc_parser_spark.streaming.stream import indexed_dedup_processor
 
-    return incremental_dedup_processor(
-        corpus_path=str(root / "corpus"),
-        accepted_path=str(root / "accepted"),
+    return indexed_dedup_processor(
+        corpus_index_path=str(root / "corpus_index"),
+        accepted_index_path=str(root / "accepted_index"),
         output_path=str(root / "out"),
+        **kwargs,
     )
 
 
-def _fresh_root(spark, tmp_path):
+def _fresh_root(spark, tmp_path, **index_kwargs):
+    """A corpus and its materialized index under ``tmp_path``."""
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     _write(CORPUS, corpus / "corpus.parquet")
+    _write_corpus_index(spark, tmp_path, **index_kwargs)
     return tmp_path
 
 
 def _state(spark, root):
-    """(output rows, accepted doc_ids) — the full externally-visible state."""
+    """(output rows, accepted ids) — the full externally-visible state."""
     out = (
         spark.read.parquet(str(root / "out"))
         .toPandas()
@@ -157,38 +186,9 @@ def _state(spark, root):
         .reset_index(drop=True)
     )
     acc = sorted(
-        spark.read.parquet(str(root / "accepted")).toPandas()["doc_id"]
+        spark.read.parquet(str(root / "accepted_index")).toPandas()["id"]
     )
     return out, acc
-
-
-def test_replay_of_a_committed_batch_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: after a kill between the sink commits
-    and the checkpoint commit, the SAME batch_id replays with both sinks
-    already written.  The replay must (a) not duplicate rows (partition
-    overwrite, not append) and (b) not reclassify the batch's own novels
-    as exact_dup of themselves via the accepted rows the first attempt
-    wrote (the batch_id < current replay guard)."""
-    root = _fresh_root(spark, tmp_path)
-    process = _processor(root)
-    b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
-    b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
-
-    process(b1, 0)
-    process(b2, 1)
-    clean_out, clean_acc = _state(spark, root)
-
-    # replay both batches (kill-after-commit shape), oldest first
-    process(b1, 0)
-    process(b2, 1)
-    replay_out, replay_acc = _state(spark, root)
-
-    pd.testing.assert_frame_equal(replay_out, clean_out)
-    assert replay_acc == clean_acc == [101, 202]
-    # the decisive assertion: batch 0's novel stayed novel on replay
-    assert (
-        replay_out.set_index("doc_id").loc["101", "status"] == "novel"
-    )
 
 
 def test_replay_heals_partial_commit(spark, tmp_path):
@@ -204,7 +204,7 @@ def test_replay_heals_partial_commit(spark, tmp_path):
 
     process(b1, 0)
     # simulate the crash window: accepted side of batch 0 never committed
-    shutil.rmtree(root / "accepted" / "batch_id=0")
+    shutil.rmtree(root / "accepted_index" / "batch_id=0")
     process(b1, 0)  # checkpoint retries the batch
     process(b2, 1)
 
@@ -217,147 +217,79 @@ def test_replay_heals_partial_commit(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# materialized-index variant (round 6): old text is never re-hashed
+# the materialized index and its classifier
 # ---------------------------------------------------------------------------
+
+# old/new rows for the one-shot parity tests: the fixture rows plus a
+# shingle-less short doc on each side (the null-buckets path)
+OLD_ROWS = CORPUS + [(3, "too short")]
+NEW_ROWS = BATCH_1 + BATCH_2 + [
+    (300, "too short"),                          # exact dup of 3
+    (301, "also tiny"),                          # shingle-less novel
+]
+
 
 class TestIndexedIncremental:
     def test_bit_parity_with_text_based(self, spark):
         """dedup_incremental_indexed(new, dedup_index(old)) must classify
-        identically to dedup_incremental(new, old) — including a
-        shingle-less short doc on each side (null buckets path)."""
+        identically to the SQL classification over the old TEXT —
+        including a shingle-less short doc on each side."""
         from doc_parser_spark.operators.dedup import (
-            dedup_incremental,
             dedup_incremental_indexed,
             dedup_index,
         )
 
-        old_rows = CORPUS + [(3, "too short")]          # shingle-less old
-        new_rows = BATCH_1 + BATCH_2 + [
-            (300, "too short"),                          # exact dup of 3
-            (301, "also tiny"),                          # shingle-less novel
-        ]
-        old = spark.createDataFrame(old_rows, "doc_id long, text string")
-        new = spark.createDataFrame(new_rows, "doc_id long, text string")
-
-        ref = dedup_incremental(new, old, "doc_id", "text").toPandas()
+        old = spark.createDataFrame(OLD_ROWS, "doc_id long, text string")
+        new = spark.createDataFrame(NEW_ROWS, "doc_id long, text string")
         idx = dedup_index(old, "doc_id", "text")
         got = dedup_incremental_indexed(new, idx, "doc_id", "text").toPandas()
-        ref = ref.sort_values("doc_id").reset_index(drop=True).astype(str)
-        got = got.sort_values("doc_id").reset_index(drop=True).astype(str)
-        pd.testing.assert_frame_equal(got, ref)
+        assert _tuples(got) == _sql_classify(NEW_ROWS, OLD_ROWS)
         # sanity on the interesting rows
         byid = got.set_index("doc_id")["status"]
-        assert byid.loc["300"] == "exact_dup"
-        assert byid.loc["301"] == "novel"
+        assert byid.loc[300] == "exact_dup"
+        assert byid.loc[301] == "novel"
 
     def test_index_shape(self, spark):
         from doc_parser_spark.operators.dedup import dedup_index
 
-        old = spark.createDataFrame(
-            CORPUS + [(3, "too short")], "doc_id long, text string"
-        )
+        old = spark.createDataFrame(OLD_ROWS, "doc_id long, text string")
         idx = {r["id"]: r for r in dedup_index(old, "doc_id", "text").collect()}
         assert len(idx[1]["buckets"]) > 0          # banded
         assert idx[3]["buckets"] is None           # shingle-less: excluded
         assert idx[3]["shingles"] == []
 
-    def test_streaming_indexed_matches_text_based(self, spark, dirs,
-                                                  tmp_path):
-        """Drain the same 2-file arrival sequence through the indexed
-        stream; output rows must equal the text-based stream's
-        (dirs/out, already drained by the module fixture)."""
-        from doc_parser_spark.operators.dedup import dedup_index
-        from doc_parser_spark.streaming.stream import (
-            dedup_incremental_stream_indexed,
-        )
-
-        corpus = spark.read.parquet(str(dirs / "corpus"))
-        dedup_index(corpus, "doc_id", "text").write.parquet(
-            str(tmp_path / "corpus_index")
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(dirs / "incoming"))
-        )
-        q = dedup_incremental_stream_indexed(
-            stream,
-            corpus_index_path=str(tmp_path / "corpus_index"),
-            accepted_index_path=str(tmp_path / "accepted_index"),
-            output_path=str(tmp_path / "out"),
-            checkpoint_path=str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(180)
-        got = (
-            spark.read.parquet(str(tmp_path / "out"))
-            .toPandas().astype(str)
-            .sort_values("doc_id").reset_index(drop=True)
-        )
-        ref = (
-            spark.read.parquet(str(dirs / "out"))
-            .toPandas().astype(str)
-            .sort_values("doc_id").reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(
-            got[sorted(got.columns)], ref[sorted(ref.columns)]
-        )
-        # accepted INDEX rows exist for exactly the novels
-        acc = spark.read.parquet(str(tmp_path / "accepted_index")).toPandas()
-        assert sorted(acc["id"].tolist()) == [101, 202]
-        assert set(acc.columns) >= {"id", "h", "buckets", "shingles"}
-
     def test_indexed_replay_is_idempotent(self, spark, tmp_path):
-        from doc_parser_spark.operators.dedup import dedup_index
-        from doc_parser_spark.streaming.stream import indexed_dedup_processor
-
+        """foreachBatch is at-least-once: after a kill between the sink
+        commits and the checkpoint commit, the SAME batch_id replays with
+        both sinks already written.  The replay must (a) not duplicate rows
+        (partition overwrite, not append) and (b) not reclassify the batch's
+        own novels as exact_dup of themselves via the accepted index rows
+        the first attempt wrote (the batch_id < current replay guard)."""
         root = _fresh_root(spark, tmp_path)
-        corpus = spark.read.parquet(str(root / "corpus"))
-        dedup_index(corpus, "doc_id", "text").write.parquet(
-            str(root / "corpus_index")
-        )
-        process = indexed_dedup_processor(
-            corpus_index_path=str(root / "corpus_index"),
-            accepted_index_path=str(root / "accepted_index"),
-            output_path=str(root / "out"),
-        )
+        process = _processor(root)
         b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
         b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
         process(b1, 0)
         process(b2, 1)
-        clean = (
-            spark.read.parquet(str(root / "out"))
-            .toPandas().astype(str)
-            .sort_values(["batch_id", "doc_id"]).reset_index(drop=True)
-        )
-        process(b1, 0)  # kill-after-commit replay
+        clean_out, clean_acc = _state(spark, root)
+
+        # replay both batches (kill-after-commit shape), oldest first
+        process(b1, 0)
         process(b2, 1)
-        replay = (
-            spark.read.parquet(str(root / "out"))
-            .toPandas().astype(str)
-            .sort_values(["batch_id", "doc_id"]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(replay, clean)
-        assert replay.set_index("doc_id").loc["101", "status"] == "novel"
+        replay_out, replay_acc = _state(spark, root)
+
+        pd.testing.assert_frame_equal(replay_out, clean_out)
+        assert replay_acc == clean_acc == [101, 202]
+        # the decisive assertion: batch 0's novel stayed novel on replay
+        assert replay_out.set_index("doc_id").loc["101", "status"] == "novel"
 
     def test_hashed_streaming_cross_batch(self, spark, tmp_path):
         """hashed=True through the STREAMING processor: the novel-index
         rows the loop appends must use the same hashed schema as the
         corpus index, or batch 2's unionByName fails and prior novels
         silently vanish from the old side (the cross-batch leak)."""
-        from doc_parser_spark.operators.dedup import dedup_index
-        from doc_parser_spark.streaming.stream import indexed_dedup_processor
-
-        root = _fresh_root(spark, tmp_path)
-        corpus = spark.read.parquet(str(root / "corpus"))
-        dedup_index(corpus, "doc_id", "text", hashed=True).write.parquet(
-            str(root / "corpus_index")
-        )
-        process = indexed_dedup_processor(
-            corpus_index_path=str(root / "corpus_index"),
-            accepted_index_path=str(root / "accepted_index"),
-            output_path=str(root / "out"),
-            hashed=True,
-        )
+        root = _fresh_root(spark, tmp_path, hashed=True)
+        process = _processor(root, hashed=True)
         b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
         b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
         process(b1, 0)
@@ -382,13 +314,8 @@ class TestIndexedIncremental:
         failure mode the try-scope exists to prevent."""
         from pyspark.errors import AnalysisException
         from doc_parser_spark.operators.dedup import dedup_index
-        from doc_parser_spark.streaming.stream import indexed_dedup_processor
 
         root = _fresh_root(spark, tmp_path)
-        corpus = spark.read.parquet(str(root / "corpus"))
-        dedup_index(corpus, "doc_id", "text").write.parquet(
-            str(root / "corpus_index")
-        )
         # legacy/corrupt accepted index: rows but NO batch_id column
         dedup_index(
             spark.createDataFrame(
@@ -396,11 +323,7 @@ class TestIndexedIncremental:
             ),
             "doc_id", "text",
         ).write.parquet(str(root / "accepted_index"))
-        process = indexed_dedup_processor(
-            corpus_index_path=str(root / "corpus_index"),
-            accepted_index_path=str(root / "accepted_index"),
-            output_path=str(root / "out"),
-        )
+        process = _processor(root)
         b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
         with pytest.raises(AnalysisException):
             process(b2, 1)
@@ -408,25 +331,22 @@ class TestIndexedIncremental:
     def test_hashed_index_classifies_identically(self, spark):
         """hashed=True stores xxhash64(shingle) arrays (8 bytes/shingle —
         the 100-TB storage lever); classification must equal both the
-        raw-shingle index and the text-based operator."""
+        raw-shingle index and the SQL classification over the text."""
         from doc_parser_spark.operators.dedup import (
-            dedup_incremental,
             dedup_incremental_indexed,
             dedup_index,
         )
 
-        old_rows = CORPUS + [(3, "too short")]
         new_rows = BATCH_1 + BATCH_2 + [(300, "too short"), (301, "tiny")]
-        old = spark.createDataFrame(old_rows, "doc_id long, text string")
+        old = spark.createDataFrame(OLD_ROWS, "doc_id long, text string")
         new = spark.createDataFrame(new_rows, "doc_id long, text string")
 
-        ref = dedup_incremental(new, old, "doc_id", "text").toPandas()
         hidx = dedup_index(old, "doc_id", "text", hashed=True)
         assert dict(hidx.dtypes)["shingles"] == "array<bigint>"
         got = dedup_incremental_indexed(
             new, hidx, "doc_id", "text", hashed=True
         ).toPandas()
-        pd.testing.assert_frame_equal(
-            got.sort_values("doc_id").reset_index(drop=True).astype(str),
-            ref.sort_values("doc_id").reset_index(drop=True).astype(str),
-        )
+        raw = dedup_incremental_indexed(
+            new, dedup_index(old, "doc_id", "text"), "doc_id", "text"
+        ).toPandas()
+        assert _tuples(got) == _tuples(raw) == _sql_classify(new_rows, OLD_ROWS)

@@ -1,9 +1,11 @@
 """Mid-micro-batch SIGKILL / restart soak for the streaming incremental
 dedup (VERDICT r5 #2).
 
-Proves the exactly-once design of ``dedup_incremental_stream`` with a REAL
-kill — SIGKILL of the whole driver process group while foreachBatch sinks
-are mid-write — not a simulated replay:
+Proves the exactly-once design of ``dedup_incremental_stream_indexed`` with
+a REAL kill — SIGKILL of the whole driver process group while foreachBatch
+sinks are mid-write — not a simulated replay. The corpus is materialized
+once as a ``dedup_index`` and the accepted sink holds the INDEX rows the
+loop maintains, so the kill must also not corrupt index maintenance:
 
   1. clean run    -> work/clean/*   (single uninterrupted drain: ground truth)
   2. killed run   -> work/killed/*  (SIGKILL once >= KILL_AFTER batch
@@ -11,7 +13,7 @@ are mid-write — not a simulated replay:
                      inside sink commits, before the checkpoint commit)
   3. restart run  -> same dirs + checkpoint (replays the in-flight batch,
                      drains the rest)
-  4. verify       -> output and accepted-corpus state equal the clean run:
+  4. verify       -> output and accepted-index state equal the clean run:
                      row count, per-batch_id counts, and an
                      order-independent value hash (decimal sum of xxhash64
                      over all columns — the round-5 batch soak protocol).
@@ -19,16 +21,9 @@ are mid-write — not a simulated replay:
 The comparison is exact because batch numbering is deterministic for the
 same file listing (availableNow + maxFilesPerTrigger=1) and the processor
 recomputes bit-identical results on replay (min-id aggregates, md5/LSH on
-content) — see streaming/stream.py::incremental_dedup_processor.
+content) — see streaming/stream.py::indexed_dedup_processor.
 
 Usage:  python tools/stream_kill_soak.py <workdir> [n_files] [docs_per_file]
-        python tools/stream_kill_soak.py --indexed <workdir> [...]
-
-``--indexed`` drives ``dedup_incremental_stream_indexed`` instead: the
-corpus is materialized once as a dedup_index and the accepted sink holds
-INDEX rows the loop maintains — the kill must also not corrupt the
-index-maintenance path (same verify: output + accepted-index state
-fingerprint-equal to an uninterrupted run).
 """
 from __future__ import annotations
 
@@ -89,40 +84,27 @@ print("GEN_DONE", next_id - 1_000_000)
 """
 
 STREAM = """\
-import sys
+import os, sys
 sys.path.insert(0, {repo!r})
+from doc_parser_spark.operators.dedup import dedup_index
 from doc_parser_spark.session import get_spark
-from doc_parser_spark.streaming.stream import (
-    dedup_incremental_stream,
-    dedup_incremental_stream_indexed,
-)
+from doc_parser_spark.streaming.stream import dedup_incremental_stream_indexed
 spark = get_spark(master="local[16]")
 stream = (spark.readStream.schema("doc_id long, text string")
           .option("maxFilesPerTrigger", 1)
           .parquet({incoming_dir!r}))
-if {indexed!r}:
-    import os
-    index_path = {corpus_dir!r} + "_index"
-    if not os.path.isdir(index_path):
-        from doc_parser_spark.operators.dedup import dedup_index
-        dedup_index(
-            spark.read.parquet({corpus_dir!r}), "doc_id", "text"
-        ).write.parquet(index_path)
-    q = dedup_incremental_stream_indexed(
-        stream,
-        corpus_index_path=index_path,
-        accepted_index_path={root!r} + "/accepted",
-        output_path={root!r} + "/out",
-        checkpoint_path={root!r} + "/ckpt",
-    )
-else:
-    q = dedup_incremental_stream(
-        stream,
-        corpus_path={corpus_dir!r},
-        accepted_path={root!r} + "/accepted",
-        output_path={root!r} + "/out",
-        checkpoint_path={root!r} + "/ckpt",
-    )
+index_path = {corpus_dir!r} + "_index"
+if not os.path.isdir(index_path):
+    dedup_index(
+        spark.read.parquet({corpus_dir!r}), "doc_id", "text"
+    ).write.parquet(index_path)
+q = dedup_incremental_stream_indexed(
+    stream,
+    corpus_index_path=index_path,
+    accepted_index_path={root!r} + "/accepted",
+    output_path={root!r} + "/out",
+    checkpoint_path={root!r} + "/ckpt",
+)
 q.awaitTermination()
 print("STREAM_DONE")
 spark.stop()
@@ -173,15 +155,14 @@ def _run(code: str, timeout: int = 3600) -> str:
     return p.stdout
 
 
-def killed_run(root: str, corpus_dir: str, incoming_dir: str,
-               indexed: bool = False) -> int:
+def killed_run(root: str, corpus_dir: str, incoming_dir: str) -> int:
     """Start the stream in its own process group; SIGKILL the group once
     KILL_AFTER batch partitions exist in the output (a later batch's sink
     writes are then in flight)."""
     proc = subprocess.Popen(
         [sys.executable, "-c", STREAM.format(
             repo=REPO, root=root, corpus_dir=corpus_dir,
-            incoming_dir=incoming_dir, indexed=indexed)],
+            incoming_dir=incoming_dir)],
         env=dict(os.environ, SPARK_DRIVER_MEM="16g"),
         start_new_session=True,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
@@ -206,8 +187,7 @@ def killed_run(root: str, corpus_dir: str, incoming_dir: str,
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if a != "--indexed"]
-    indexed = "--indexed" in sys.argv[1:]
+    args = sys.argv[1:]
     work = args[0]
     n_files = int(args[1]) if len(args) > 1 else 24
     per_file = int(args[2]) if len(args) > 2 else 4000
@@ -229,13 +209,13 @@ def main() -> None:
     print("phase 1: clean reference drain", flush=True)
     os.makedirs(clean, exist_ok=True)
     _run(STREAM.format(repo=REPO, root=clean, corpus_dir=corpus_dir,
-                       incoming_dir=incoming_dir, indexed=indexed))
+                       incoming_dir=incoming_dir))
     print("phase 2: killed drain", flush=True)
     os.makedirs(killed, exist_ok=True)
-    killed_run(killed, corpus_dir, incoming_dir, indexed=indexed)
+    killed_run(killed, corpus_dir, incoming_dir)
     print("phase 3: restart from checkpoint", flush=True)
     _run(STREAM.format(repo=REPO, root=killed, corpus_dir=corpus_dir,
-                       incoming_dir=incoming_dir, indexed=indexed))
+                       incoming_dir=incoming_dir))
     print("phase 4: verify", flush=True)
     out = _run(VERIFY.format(repo=REPO, clean=clean, killed=killed))
     sys.stdout.write("\n".join(

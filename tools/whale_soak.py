@@ -1,9 +1,8 @@
 """Extreme whale-skew extraction soak.
 
-The north rule requires salting skewed long-conversation keys. The
-extraction path routes by (content_type, conv_id, turn_idx) — turn_idx
-in the hash means even a single whale conversation spreads across all
-partitions. This soak PROVES that at extreme skew: two 200,000-turn
+The north rule requires salting skewed long-conversation keys.
+``extract_turns`` routes by (conv_id, turn_idx) — turn_idx in the hash
+means even a single whale conversation spreads across all partitions. This soak PROVES that at extreme skew: two 200,000-turn
 whale conversations holding ~2/3 of all rows (100x the standing
 5,000-turn verify probe), vs a uniform corpus of the same size.
 
@@ -69,10 +68,7 @@ def main() -> None:
 
     import pyspark.sql.functions as F
 
-    from doc_parser_spark.operators.extract import (
-        extract_turns,
-        with_content_type,
-    )
+    from doc_parser_spark.operators.extract import extract_turns
     from doc_parser_spark.session import get_spark
 
     spark = get_spark(master="local[32]")
@@ -90,11 +86,10 @@ def main() -> None:
         ),
     }), flush=True)
 
-    typed = with_content_type(df.select("conv_id", "turn_idx", "text"))
-    routed = typed.repartition(
-        rp, F.col("content_type"), F.col("conv_id"), F.col("turn_idx")
-    )
-    naive = typed.repartition(rp, F.col("conv_id"))
+    # the same routing shuffle extract_turns runs before the parse
+    turns = df.select("conv_id", "turn_idx", "text")
+    routed = turns.repartition(rp, F.col("conv_id"), F.col("turn_idx"))
+    naive = turns.repartition(rp, F.col("conv_id"))
     print(json.dumps(dist_stats(routed, "production routing (salted)")),
           flush=True)
     print(json.dumps(dist_stats(naive, "naive conv_id-only (contrast)")),
