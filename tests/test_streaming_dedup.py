@@ -191,6 +191,36 @@ def _state(spark, root):
     return out, acc
 
 
+def _assert_replay_is_idempotent(spark, tmp_path, **index_kwargs):
+    root = _fresh_root(spark, tmp_path, **index_kwargs)
+    process = _processor(root, **index_kwargs)
+    b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
+    b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
+    process(b1, 0)
+    process(b2, 1)
+    clean_out, clean_acc = _state(spark, root)
+
+    # replay both batches (kill-after-commit shape), oldest first
+    process(b1, 0)
+    process(b2, 1)
+    replay_out, replay_acc = _state(spark, root)
+
+    pd.testing.assert_frame_equal(replay_out, clean_out)
+    assert replay_acc == clean_acc == [101, 202]
+    # the decisive assertion: batch 0's novel stayed novel on replay
+    assert replay_out.set_index("doc_id").loc["101", "status"] == "novel"
+
+
+def test_replay_of_a_committed_batch_is_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: after a kill between the sink commits
+    and the checkpoint commit, the SAME batch_id replays with both sinks
+    already written.  The replay must (a) not duplicate rows (partition
+    overwrite, not append) and (b) not reclassify the batch's own novels
+    as exact_dup of themselves via the accepted index rows the first
+    attempt wrote (the batch_id < current replay guard)."""
+    _assert_replay_is_idempotent(spark, tmp_path)
+
+
 def test_replay_heals_partial_commit(spark, tmp_path):
     """Kill between the two sink writes: output partition committed,
     accepted partition missing.  The replay must recompute the identical
@@ -259,29 +289,10 @@ class TestIndexedIncremental:
         assert idx[3]["shingles"] == []
 
     def test_indexed_replay_is_idempotent(self, spark, tmp_path):
-        """foreachBatch is at-least-once: after a kill between the sink
-        commits and the checkpoint commit, the SAME batch_id replays with
-        both sinks already written.  The replay must (a) not duplicate rows
-        (partition overwrite, not append) and (b) not reclassify the batch's
-        own novels as exact_dup of themselves via the accepted index rows
-        the first attempt wrote (the batch_id < current replay guard)."""
-        root = _fresh_root(spark, tmp_path)
-        process = _processor(root)
-        b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
-        b2 = spark.createDataFrame(BATCH_2, "doc_id long, text string")
-        process(b1, 0)
-        process(b2, 1)
-        clean_out, clean_acc = _state(spark, root)
-
-        # replay both batches (kill-after-commit shape), oldest first
-        process(b1, 0)
-        process(b2, 1)
-        replay_out, replay_acc = _state(spark, root)
-
-        pd.testing.assert_frame_equal(replay_out, clean_out)
-        assert replay_acc == clean_acc == [101, 202]
-        # the decisive assertion: batch 0's novel stayed novel on replay
-        assert replay_out.set_index("doc_id").loc["101", "status"] == "novel"
+        """The committed-batch replay over a hashed index: the novel-index
+        rows the first attempt appended carry the hashed schema, and the
+        replay guard must still exclude them."""
+        _assert_replay_is_idempotent(spark, tmp_path, hashed=True)
 
     def test_hashed_streaming_cross_batch(self, spark, tmp_path):
         """hashed=True through the STREAMING processor: the novel-index
