@@ -2,21 +2,23 @@
 GenOSVectorMeta-shaped vector rows.
 
 The chunking itself is row-local (a turn's item list lives in its ``spans``
-column), so it runs inside mapInPandas with zero shuffle. The vector-meta
-indices (i_chunk_on_doc / n_chunk_of_doc / ...) are window functions over
-(conv_id, turn_idx) — the one place a shuffle is inherent, and it reuses the
-extraction output's bucketing when written bucketed.
+column), so it is a row function over ``operators/extract.py::map_rows``
+with zero shuffle. The vector-meta indices (i_chunk_on_doc /
+n_chunk_of_doc / ...) are window functions over (conv_id, turn_idx) — the
+one place a shuffle is inherent, and it reuses the extraction output's
+bucketing when written bucketed.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from doc_parser_spark.operators.extract import map_rows
 
 CHUNK_ROWS_SCHEMA = T.StructType(
     [
@@ -43,62 +45,28 @@ def chunk_turns(extracted: DataFrame, max_tokens: int = 2000) -> DataFrame:
     """
     from doc_parser_spark.functions.chunking import chunk_items
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text, spans in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["extracted_text"], pdf["spans"]
-            ):
-                if text is None or spans is None or len(spans) == 0:
-                    continue
-                items = [
-                    (s["label"], text[s["start"] : s["end"]]) for s in spans
-                ]
-                pages = [int(s["page"]) for s in spans]
-                for ci, chunk in enumerate(chunk_items(items, max_tokens)):
-                    # per-chunk page bounds from the chunk's OWN items
-                    # (preprocessor.py:294-331), not the whole turn
-                    idxs = chunk.item_indices or list(range(len(spans)))
-                    own = [pages[j] for j in idxs]
-                    chunk_spans = json.dumps(
-                        [
-                            {
-                                "start": int(spans[j]["start"]),
-                                "end": int(spans[j]["end"]),
-                                "label": spans[j]["label"],
-                                "page": int(spans[j]["page"]),
-                            }
-                            for j in idxs
-                        ],
-                        separators=(",", ":"),
-                    )
-                    rows.append(
-                        (
-                            conv_id,
-                            int(turn_idx),
-                            ci,
-                            chunk.text,
-                            chunk.headings,
-                            chunk.n_tokens,
-                            min(own),
-                            max(own),
-                            chunk_spans,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "chunk_idx", "text", "headings",
-                    "n_tokens", "i_page", "e_page", "chunk_spans",
-                ],
-            ).astype(
-                {
-                    "turn_idx": "int32", "chunk_idx": "int32",
-                    "n_tokens": "int32", "i_page": "int32", "e_page": "int32",
-                }
-            )
+    def row(conv_id, turn_idx, text, spans):
+        if text is None or not spans:
+            return []
+        items = [(s["label"], text[s["start"] : s["end"]]) for s in spans]
+        out = []
+        for ci, chunk in enumerate(chunk_items(items, max_tokens)):
+            # per-chunk page bounds from the chunk's OWN items
+            # (preprocessor.py:294-331), not the whole turn
+            own = [spans[j] for j in chunk.item_indices or range(len(spans))]
+            pages = [s["page"] for s in own]
+            out.append((
+                conv_id, turn_idx, ci, chunk.text, chunk.headings,
+                chunk.n_tokens, min(pages), max(pages),
+                json.dumps(own, separators=(",", ":")),
+            ))
+        return out
 
-    return extracted.mapInPandas(gen, schema=CHUNK_ROWS_SCHEMA)
+    return map_rows(
+        extracted.select("conv_id", "turn_idx", "extracted_text", "spans"),
+        row,
+        CHUNK_ROWS_SCHEMA,
+    )
 
 
 def compose_vectors(

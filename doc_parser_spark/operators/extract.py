@@ -275,6 +275,41 @@ def make_extract_udf(boilerplate_mode: str = "reference"):
     return extract_batches
 
 
+# rows per slice of an Arrow batch in ``map_rows``: bounds the Python copies
+# of one slice's inputs and outputs (binary payloads, per-frame rows)
+MAP_ROWS_SLICE = 16
+
+
+def map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """One ``mapInArrow`` of a per-row function over ``df``'s columns.
+
+    ``fn(*row)`` gets one row's Python values in ``df.columns`` order and
+    returns zero or more output tuples in ``schema`` order (a ``list<struct>``
+    value is a list of tuples). Each Arrow batch is read in slices of
+    ``MAP_ROWS_SLICE`` rows, and each slice's outputs become one
+    ``pa.RecordBatch`` — no pandas frame on either side. The row function
+    owns the error envelope: it turns a poison input into a status row.
+    """
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for lo in range(0, batch.num_rows, MAP_ROWS_SLICE):
+                part = batch.slice(lo, MAP_ROWS_SLICE)
+                rows = zip(*(col.to_pylist() for col in part.columns))
+                out = [res for row in rows for res in fn(*row)]
+                if out:
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(col, field.type)
+                            for col, field in zip(zip(*out), arrow_schema)
+                        ],
+                        schema=arrow_schema,
+                    )
+
+    return df.mapInArrow(run, schema=schema)
+
+
 def extract_turns(
     df: DataFrame,
     boilerplate_mode: str = "reference",

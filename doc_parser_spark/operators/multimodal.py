@@ -6,27 +6,31 @@ TIFF 6.0, and lossless WebP (VP8L) images, RIFF/PCM WAV audio, ISO-BMFF
 stdlib + numpy (functions/media_decode.py, functions/vp8l.py) — the same
 from-scratch approach as the %PDF decoder. What remains codec-bound is
 explicit, never faked: lossy-VP8 WebP yields real header dimensions with
-status='header_only'; compressed audio (MP3) and non-MJPEG video stay
-behind the injectable-decoder seam with a deterministic stub
-(``_fake_decode_image`` / frame hashes) — swap in PIL/ffmpeg on a cluster
-that has them; the stub rows are explicitly status='stub_decoded'.
+status='header_only'; MP3 walks frame headers under 'header_only'; other
+image formats and non-MJPEG video get a deterministic stub
+(``_fake_decode_image`` / frame hashes), flagged per row as
+status='stub_decoded'. The one image decoder is the stdlib one on every
+machine; a codec-library decoder plugs in through ``decode_images``'
+``decoder=`` parameter. A zero-byte payload is a 'failure' row and a null
+payload a 'skipped' row in every operator.
 
-Scale notes: binary payloads never enter a shuffle — decode/feature-extract
-runs mapInPandas directly on the scan partitions, and only the (small)
-feature columns flow downstream. spark.sql.files.maxPartitionBytes bounds
-per-task memory for big media files.
+Scale notes: binary payloads never enter a shuffle — each operator is a row
+function over ``operators/extract.py::map_rows`` (one ``mapInArrow``,
+sliced Arrow batches, no pandas frame) on the scan partitions, and only the
+(small) feature columns flow downstream. spark.sql.files.maxPartitionBytes
+bounds per-task memory for big media files.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from doc_parser_spark.operators.extract import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -51,40 +55,23 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
     ]
 )
 
-HAVE_PIL = False
-try:  # pragma: no cover - not present in this container
-    import PIL.Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    pass
+def _map_media(media: DataFrame, kind: str, row, schema) -> DataFrame:
+    """``row(media_id, payload)`` over the media rows of one ``kind``."""
+    return map_rows(
+        media.where(F.col("kind") == kind).select("media_id", "payload"),
+        row,
+        schema,
+    )
 
 
 def _fake_decode_image(payload: bytes) -> tuple[int, int, float]:
     """Deterministic stand-in for a real decode: dims and luma derive from
-    the payload hash. Replace with PIL decode + resize on a real cluster."""
+    the payload hash. Replace with a codec-library decoder on a cluster."""
     h = hashlib.sha256(payload).digest()
     width = 64 + h[0] * 4
     height = 64 + h[1] * 4
     mean_luma = h[2] / 255.0
     return width, height, mean_luma
-
-
-def _pil_decode_image(payload: bytes) -> tuple[int, int, float]:  # pragma: no cover
-    """The real decoder, used automatically when PIL is importable (it is
-    not in this container — the seam is exercised in tests by injecting a
-    custom decoder through the same parameter)."""
-    import io
-
-    import PIL.Image
-
-    img = PIL.Image.open(io.BytesIO(payload))
-    img.load()
-    w, h = img.size
-    luma = float(
-        np.asarray(img.convert("L"), dtype=np.float64).mean() / 255.0
-    )
-    return w, h, luma
 
 
 def _stdlib_decode_image(payload: bytes):
@@ -128,67 +115,33 @@ def _stdlib_decode_image(payload: bytes):
     return w, h, luma, "stub_decoded"
 
 
-DEFAULT_IMAGE_DECODER = _pil_decode_image if HAVE_PIL else _stdlib_decode_image
-
-
-def decode_images(
-    media: DataFrame, batch_rows: int = 64, decoder=None
-) -> DataFrame:
+def decode_images(media: DataFrame, decoder=None) -> DataFrame:
     """Image decode / feature extraction over binary payloads.
 
-    Arrow batch shape: the UDF sub-batches to ``batch_rows`` so one oversized
-    payload batch can't blow executor memory (R1 batching analog).
-
-    ``decoder``: payload bytes → (width, height, mean_luma). Defaults to the
-    PIL decoder when PIL is importable, else the deterministic stub; the
-    function object is captured by the UDF closure, so a custom decoder runs
-    on the executors through the identical distributed path (this is the
-    swap-in seam — no code change needed on a cluster with codec libs).
-    A decoder exception yields a ``failure`` row, never a stub fallback.
+    ``decoder``: payload bytes → (width, height, mean_luma) or (width,
+    height, mean_luma, status); defaults to the stdlib decoder, which
+    reports per row whether the decode was real. The function object is
+    captured by the row function's closure, so a custom decoder runs on the
+    executors through the identical distributed path (the swap-in seam — no
+    code change needed on a cluster with codec libs). A decoder exception or
+    an empty payload yields a ``failure`` row, never a stub fallback.
     """
-    dec = decoder or DEFAULT_IMAGE_DECODER
-    status_ok = "stub_decoded" if dec is _fake_decode_image else "decoded"
-    # a decoder may return (w, h, luma) or (w, h, luma, status) — the
-    # default stdlib hybrid reports per-row whether the decode was real
+    dec = decoder or _stdlib_decode_image
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                sub = pdf.iloc[lo : lo + batch_rows]
-                rows = []
-                for media_id, payload in zip(sub["media_id"], sub["payload"]):
-                    if payload is None:
-                        rows.append((int(media_id), "", 0, None, None, None,
-                                     "skipped"))
-                        continue
-                    payload = bytes(payload)
-                    sha = hashlib.sha256(payload).hexdigest()
-                    try:
-                        res = dec(payload)
-                        if len(res) == 4:
-                            w, h, luma, st = res
-                        else:
-                            w, h, luma = res
-                            st = status_ok
-                        rows.append(
-                            (int(media_id), sha, len(payload), w, h, luma, st)
-                        )
-                    except Exception:
-                        rows.append(
-                            (int(media_id), sha, len(payload), None, None,
-                             None, "failure")
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "media_id", "sha256", "n_bytes", "width", "height",
-                        "mean_luma", "decode_status",
-                    ],
-                ).astype({"media_id": "int64", "n_bytes": "int32"})
+    def row(media_id, payload):
+        if payload is None:
+            return [(media_id, "", 0, None, None, None, "skipped")]
+        lineage = (media_id, hashlib.sha256(payload).hexdigest(), len(payload))
+        failed = [lineage + (None, None, None, "failure")]
+        if not payload:
+            return failed
+        try:
+            res = dec(payload)
+        except Exception:
+            return failed
+        return [lineage + tuple(res) + (("decoded",) if len(res) == 3 else ())]
 
-    return media.where(F.col("kind") == "image").mapInPandas(
-        gen, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return _map_media(media, "image", row, IMAGE_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -205,18 +158,18 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def audio_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """REAL audio feature extraction for RIFF/PCM WAV on the stdlib
     (functions/media_decode.py::decode_wav): channels / rate / frames /
     duration + full-scale-normalized RMS and peak. MP3 walks every frame
     header for exact channels / rate / frame count / duration under an
     honest 'header_only' status with null RMS/peak (PCM decode is
     codec-bound — hybrid filterbank + IMDCT — same seam policy as
-    lossy-VP8 WebP). Other/corrupt payloads land status='failure' with
-    null features — no stub fallback.
+    lossy-VP8 WebP). Other/corrupt/empty payloads land status='failure'
+    with null features — no stub fallback.
 
     Same scale shape as decode_images: runs on the scan partitions, binary
-    never shuffles, sub-batched to bound per-task memory."""
+    never shuffles."""
     from doc_parser_spark.functions.media_decode import (
         MediaDecodeError,
         decode_wav,
@@ -224,45 +177,22 @@ def audio_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
         parse_mp3_meta,
     )
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "channels", "sample_rate", "n_frames",
-            "duration_s", "rms", "peak", "decode_status",
-        ]
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                sub = pdf.iloc[lo : lo + batch_rows]
-                rows = []
-                for media_id, payload in zip(sub["media_id"], sub["payload"]):
-                    if payload is None:
-                        rows.append((int(media_id),) + (None,) * 6 + ("skipped",))
-                        continue
-                    try:
-                        raw = bytes(payload)
-                        if is_mp3(raw):
-                            f = parse_mp3_meta(raw)
-                            rows.append(
-                                (int(media_id), f["channels"],
-                                 f["sample_rate"], f["n_frames"],
-                                 f["duration_s"], None, None, "header_only")
-                            )
-                        else:
-                            f = decode_wav(raw)
-                            rows.append(
-                                (int(media_id), f["channels"],
-                                 f["sample_rate"], f["n_frames"],
-                                 f["duration_s"], f["rms"], f["peak"],
-                                 "decoded")
-                            )
-                    except MediaDecodeError:
-                        rows.append((int(media_id),) + (None,) * 6 + ("failure",))
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {"media_id": "int64"}
-                )
+    def row(media_id, payload):
+        if payload is None:
+            return [(media_id,) + (None,) * 6 + ("skipped",)]
+        try:
+            if is_mp3(payload):
+                f = parse_mp3_meta(payload)
+                rms, peak, status = None, None, "header_only"
+            else:
+                f = decode_wav(payload)
+                rms, peak, status = f["rms"], f["peak"], "decoded"
+        except MediaDecodeError:
+            return [(media_id,) + (None,) * 6 + ("failure",)]
+        return [(media_id, f["channels"], f["sample_rate"], f["n_frames"],
+                 f["duration_s"], rms, peak, status)]
 
-    return media.where(F.col("kind") == "audio").mapInPandas(
-        gen, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return _map_media(media, "audio", row, AUDIO_FEATURES_SCHEMA)
 
 
 VIDEO_META_SCHEMA = T.StructType(
@@ -279,74 +209,23 @@ VIDEO_META_SCHEMA = T.StructType(
 def video_metadata(media: DataFrame) -> DataFrame:
     """REAL container metadata for ISO-BMFF (MP4/MOV) video: ftyp brand,
     mvhd duration, trak count via a stdlib box walk — no codec work.
-    Frame decoding stays behind sample_frames' injectable seam."""
+    Frame decoding is ``video_frames``."""
     from doc_parser_spark.functions.media_decode import (
         MediaDecodeError,
         parse_mp4_meta,
     )
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "brand", "duration_s", "n_tracks", "decode_status"]
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append((int(media_id), None, None, None, "skipped"))
-                    continue
-                try:
-                    m = parse_mp4_meta(bytes(payload))
-                    rows.append(
-                        (int(media_id), m["brand"], m["duration_s"],
-                         m["n_tracks"], "decoded")
-                    )
-                except MediaDecodeError:
-                    rows.append((int(media_id), None, None, None, "failure"))
-            yield pd.DataFrame(rows, columns=cols).astype({"media_id": "int64"})
+    def row(media_id, payload):
+        if payload is None:
+            return [(media_id, None, None, None, "skipped")]
+        try:
+            m = parse_mp4_meta(payload)
+        except MediaDecodeError:
+            return [(media_id, None, None, None, "failure")]
+        return [(media_id, m["brand"], m["duration_s"], m["n_tracks"],
+                 "decoded")]
 
-    return media.where(F.col("kind") == "video").mapInPandas(
-        gen, schema=VIDEO_META_SCHEMA
-    )
-
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_sha", T.StringType(), False),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling stub: emits one row per sampled frame. The frame
-    count/hash derive deterministically from the payload; a real
-    implementation replaces the inner loop with an ffmpeg/pyav reader.
-    For MJPEG AVI, ``video_frames`` below does the real decode already."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                n_frames = 1 + payload[0] % 30 if payload else 0
-                for fi in range(0, n_frames, every_n):
-                    rows.append(
-                        (
-                            int(media_id),
-                            fi,
-                            hashlib.sha256(payload + fi.to_bytes(4, "big"))
-                            .hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_sha"]
-            ).astype({"media_id": "int64", "frame_idx": "int32"})
-
-    return media.where(F.col("kind") == "video").mapInPandas(
-        gen, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return _map_media(media, "video", row, VIDEO_META_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -361,18 +240,16 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def video_frames(
-    media: DataFrame, every_n: int = 1, batch_rows: int = 16
-) -> DataFrame:
+def video_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
     """REAL video frame sampling: MJPEG-in-AVI payloads are fully decoded
     on the stdlib (RIFF chunk walk → per-frame baseline-JPEG decode via the
     from-scratch T.81 decoder), one row per sampled frame with true dims and
     BT.601 mean luma. Non-AVI containers (MP4/H.264 etc. — genuinely
     codec-library-bound) fall back to the deterministic frame stub, flagged
     per row as 'stub_decoded' (same honest seam as the image path); a
-    malformed AVI or a non-JPEG frame inside one is a 'failure' row, never
-    a stub. Sub-batched like decode_images so one long video can't blow an
-    Arrow batch."""
+    malformed AVI, a non-JPEG frame inside one or an empty payload is a
+    'failure' row, never a stub. ``map_rows`` slices the Arrow batch, so
+    one slice of long videos bounds a task's frame rows."""
     from doc_parser_spark.functions.media_decode import (
         AVI_MAGIC_HEAD,
         AVI_MAGIC_TYPE,
@@ -380,47 +257,26 @@ def video_frames(
         decode_avi_mjpeg,
     )
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "frame_idx", "width", "height", "mean_luma",
-                "decode_status"]
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                sub = pdf.iloc[lo : lo + batch_rows]
-                rows = []
-                for media_id, payload in zip(sub["media_id"], sub["payload"]):
-                    mid = int(media_id)
-                    if payload is None:
-                        rows.append((mid, None, None, None, None, "skipped"))
-                        continue
-                    payload = bytes(payload)
-                    if (payload[:4] == AVI_MAGIC_HEAD
-                            and payload[8:12] == AVI_MAGIC_TYPE):
-                        try:
-                            for idx, w, h, luma in decode_avi_mjpeg(
-                                payload, every_n=every_n
-                            ):
-                                rows.append((mid, idx, w, h, luma, "decoded"))
-                        except MediaDecodeError:
-                            rows.append(
-                                (mid, None, None, None, None, "failure")
-                            )
-                        continue
-                    n_frames = 1 + payload[0] % 30 if payload else 0
-                    for fi in range(0, n_frames, every_n):
-                        h = hashlib.sha256(
-                            payload + fi.to_bytes(4, "big")
-                        ).digest()
-                        rows.append(
-                            (mid, fi, 64 + h[0] * 4, 64 + h[1] * 4,
-                             h[2] / 255.0, "stub_decoded")
-                        )
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {"media_id": "int64"}
-                )
+    def row(media_id, payload):
+        if payload is None:
+            return [(media_id, None, None, None, None, "skipped")]
+        if not payload:
+            return [(media_id, None, None, None, None, "failure")]
+        if payload[:4] == AVI_MAGIC_HEAD and payload[8:12] == AVI_MAGIC_TYPE:
+            try:
+                frames = decode_avi_mjpeg(payload, every_n=every_n)
+            except MediaDecodeError:
+                return [(media_id, None, None, None, None, "failure")]
+            return [(media_id, idx, w, h, luma, "decoded")
+                    for idx, w, h, luma in frames]
+        out = []
+        for fi in range(0, 1 + payload[0] % 30, every_n):
+            h = hashlib.sha256(payload + fi.to_bytes(4, "big")).digest()
+            out.append((media_id, fi, 64 + h[0] * 4, 64 + h[1] * 4,
+                        h[2] / 255.0, "stub_decoded"))
+        return out
 
-    return media.where(F.col("kind") == "video").mapInPandas(
-        gen, schema=VIDEO_FRAME_SCHEMA
-    )
+    return _map_media(media, "video", row, VIDEO_FRAME_SCHEMA)
 
 
 def synth_media(spark, n: int = 50, seed: int = 42) -> DataFrame:

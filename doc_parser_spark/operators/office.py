@@ -2,18 +2,17 @@
 surface): sniff by zip member magic, dispatch to the stdlib backends, with
 the same per-row fallback chain as the text path.
 
-Scale shape: binary payloads NEVER enter a shuffle — extraction runs
-mapInPandas directly on the scan partitions (like operators/multimodal.py),
-and only the extracted text + spans flow downstream.
+Scale shape: binary payloads NEVER enter a shuffle — extraction is a row
+function over ``operators/extract.py::map_rows`` (one Arrow crossing, like
+operators/multimodal.py) on the scan partitions, and only the extracted
+text + spans flow downstream.
 """
 
 from __future__ import annotations
 
 import zipfile
 from io import BytesIO
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -26,6 +25,7 @@ from doc_parser_spark.functions.docx_extract import extract_docx
 from doc_parser_spark.functions.hwpx_extract import extract_hwpx
 from doc_parser_spark.functions.pptx_extract import extract_pptx
 from doc_parser_spark.functions.xlsx_extract import extract_xlsx
+from doc_parser_spark.operators.extract import map_rows
 
 OFFICE_SCHEMA = T.StructType(
     [
@@ -93,34 +93,7 @@ def extract_office_docs(
 ) -> DataFrame:
     """(id, binary payload) rows → extracted office documents."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                kind, text, spans, status = extract_office(
-                    bytes(payload) if payload is not None else b""
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        kind,
-                        text,
-                        [
-                            {"start": s[0], "end": s[1], "label": s[2],
-                             "page": s[3]}
-                            for s in spans
-                        ]
-                        if spans is not None
-                        else None,
-                        status,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "doc_kind", "extracted_text", "spans",
-                    "parse_status",
-                ],
-            ).astype({"doc_id": "int64"})
+    def row(doc_id, payload):
+        return [(doc_id, *extract_office(payload or b""))]
 
-    return df.mapInPandas(gen, schema=OFFICE_SCHEMA)
+    return map_rows(df.select(id_col, payload_col), row, OFFICE_SCHEMA)

@@ -2,7 +2,7 @@
 
 Each entry exercises one operator from SURVEY.md §2 over the driver's parquet
 tables (documents / events / embeddings / ...). The Spark side runs the REAL
-extraction kernels (mapInPandas / pandas UDFs / window functions); the oracle
+extraction kernels (mapInArrow / pandas UDFs / window functions); the oracle
 is plain ANSI SQL DuckDB can run on the same tables. Payload-construction SQL
 fragments are shared verbatim between both sides so the comparison checks the
 operator, not the test harness.
@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from doc_parser_spark.functions.sanitize import sanitize_text
-from doc_parser_spark.operators.extract import extract_turns
+from doc_parser_spark.operators.extract import extract_turns, map_rows
 from doc_parser_spark.session import fork
 
 # ---------------------------------------------------------------------------
@@ -2192,7 +2192,7 @@ def _kernel_spread(docs: DataFrame) -> DataFrame:
     """Spread rows before a compute-bound per-row kernel (office zip
     build+parse, media codec decode). The documents table is a few hundred
     KB, so the byte-derived parquet split count is ONE — and everything
-    downstream of the first mapInPandas inherits that single task, running
+    downstream of the first row map inherits that single task, running
     the whole per-doc kernel chain on one core (measured: m8 7.3 s,
     b10 1.4 s single-task walls, ~0 s of it Spark work). Guide §2: the
     work here is per-ROW compute that byte-based planning cannot see, the
@@ -2222,26 +2222,12 @@ def _office_query(builder) -> Callable[[SparkSession, str], DataFrame]:
             )
         )
 
-        def gen(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].astype("int64"),
-                        "payload": [
-                            builder(int(i), t or "")
-                            for i, t in zip(pdf["doc_id"], pdf["text"])
-                        ],
-                    }
-                )
-
-        payloads = docs.mapInPandas(
-            gen,
-            schema=T.StructType(
-                [
-                    T.StructField("doc_id", T.LongType()),
-                    T.StructField("payload", T.BinaryType()),
-                ]
-            ),
+        payloads = map_rows(
+            docs,
+            lambda doc_id, text: [(doc_id, builder(doc_id, text or ""))],
+            T.StructType()
+            .add("doc_id", T.LongType())
+            .add("payload", T.BinaryType()),
         )
         out = extract_office_docs(payloads)
         return out.select("doc_id", "doc_kind", "parse_status", "extracted_text")
@@ -2385,25 +2371,15 @@ def q_b4_pdf_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id")
     )
 
-    def gen(batches):
-        from doc_parser_spark.sources.synth_pdf import build_report_pdf
+    from doc_parser_spark.sources.synth_pdf import build_report_pdf
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["doc_id"].astype("str"),
-                    "turn_idx": pd.Series(
-                        [0] * len(pdf), index=pdf.index, dtype="int32"
-                    ),
-                    "text": [
-                        build_report_pdf(int(i)).decode("latin-1")
-                        for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    transcripts = docs.mapInPandas(
-        gen, schema="conv_id string, turn_idx int, text string"
+    transcripts = map_rows(
+        docs,
+        lambda i: [(str(i), 0, build_report_pdf(i).decode("latin-1"))],
+        T.StructType()
+        .add("conv_id", T.StringType())
+        .add("turn_idx", T.IntegerType())
+        .add("text", T.StringType()),
     )
     out = extract_turns(transcripts, route_partitions=8)
     return out.select(
@@ -2762,23 +2738,14 @@ def _media_query(kind: str, builder_name: str, op):
             )
         )
 
-        def gen(batches):
-            builder = getattr(SM, builder_name)
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["doc_id"].astype("int64"),
-                        "conv_id": pdf["doc_id"].astype(str),
-                        "turn_idx": (pdf["doc_id"] % 7).astype("int32"),
-                        "kind": kind,
-                        "payload": [builder(int(i)) for i in pdf["doc_id"]],
-                        "mime": None,
-                    }
-                )
-
         from doc_parser_spark.operators.multimodal import MEDIA_SCHEMA
 
-        media = docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
+        builder = getattr(SM, builder_name)
+        media = map_rows(
+            docs,
+            lambda i: [(i, str(i), i % 7, kind, builder(i), None)],
+            MEDIA_SCHEMA,
+        )
         return op(media)
 
     return q

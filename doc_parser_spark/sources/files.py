@@ -6,10 +6,10 @@ format detection → backend dispatch → per-document status envelope).
 Here the same surface is a DataFrame pipeline over Spark's built-in
 ``binaryFile`` source: each file is one row (path, length, modification
 time, content), scan parallelism comes from file splits, and routing +
-extraction run in one Arrow-batched ``mapInPandas`` on the scan
-partitions — file bytes never ride a shuffle, and
-``spark.sql.files.maxPartitionBytes`` bounds per-task memory exactly like
-the transcript pipeline.
+extraction run in one ``operators/extract.py::map_rows`` crossing (one
+``mapInArrow``, sliced Arrow batches) on the scan partitions — file bytes
+never ride a shuffle, and ``spark.sql.files.maxPartitionBytes`` bounds
+per-task memory exactly like the transcript pipeline.
 
 Routing (content sniff, never extensions — document.py:306-506's
 mime-by-content idea):
@@ -30,9 +30,7 @@ envelope) — a poison file can never kill the job.
 from __future__ import annotations
 
 import time
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,6 +40,7 @@ from doc_parser_spark.datamodel import (
     STATUS_SKIPPED,
     STATUS_SUCCESS,
 )
+from doc_parser_spark.operators.extract import map_rows
 
 # the binaryFile source's fixed schema — needed explicitly for readStream
 # (streaming file sources refuse inference)
@@ -151,18 +150,18 @@ def convert_files(
     files: DataFrame,
     path_col: str = "path",
     content_col: str = "content",
-    batch_rows: int = 16,
     max_bytes: int = 512 * 1024 * 1024,
     rebalance: int | None = None,
 ) -> DataFrame:
     """binaryFile rows → converted documents (CONVERTED_SCHEMA).
 
-    Sub-batches to ``batch_rows`` so a directory of large files cannot
-    blow one task's memory (R1 batching analog), and skips files over
-    ``max_bytes`` with a ``skipped`` row — the S2 InputDocument size limit
-    (reference document.py:116-206: over-limit inputs convert to a
-    failure envelope, never an attempt): one multi-GB stray on a 100-TB
-    crawl must cost one status row, not an executor OOM.
+    Each file is one row of ``map_rows``, which reads the Arrow batch in
+    small slices so a directory of large files cannot blow one task's
+    memory (R1 batching analog). Files over ``max_bytes`` get a
+    ``skipped`` row — the S2 InputDocument size limit (reference
+    document.py:116-206: over-limit inputs convert to a failure envelope,
+    never an attempt): one multi-GB stray on a 100-TB crawl must cost one
+    status row, not an executor OOM.
 
     ``rebalance``: optional round-robin repartition of the file ROWS before
     the parse. Spark's scan packs files into tasks by BYTES (size-desc
@@ -183,54 +182,33 @@ def convert_files(
     the under-limit branch filters on ``length`` at the scan so the
     predicate pushes down. The in-task payload check stays as a backstop
     for inputs without a trustworthy length column."""
-    cols = [f.name for f in CONVERTED_SCHEMA.fields]
+
+    def skipped_row(path, n_bytes):
+        return [(path, "binary", None, None, None, STATUS_SKIPPED, n_bytes, 0)]
 
     if "length" in files.columns:
-        small = files.filter(F.col("length") <= max_bytes)
-        cols_ = [f.name for f in CONVERTED_SCHEMA.fields]
-
-        def skip_gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = pd.DataFrame(
-                    [(p, "binary", None, None, None, STATUS_SKIPPED,
-                      int(ln), 0)
-                     for p, ln in zip(pdf[path_col], pdf["length"])],
-                    columns=cols_,
-                )
-                yield out.astype({"n_bytes": "int64", "_proc_us": "int64"})
-
-        skipped = (
+        skipped = map_rows(
             files.filter(F.col("length") > max_bytes)
-            .select(path_col, "length")  # content pruned: bytes never read
-            .mapInPandas(skip_gen, schema=CONVERTED_SCHEMA)
+            .select(path_col, "length"),  # content pruned: bytes never read
+            skipped_row,
+            CONVERTED_SCHEMA,
         )
         converted = convert_files(
-            small.drop("length"), path_col, content_col, batch_rows,
-            max_bytes, rebalance,
+            files.filter(F.col("length") <= max_bytes).drop("length"),
+            path_col, content_col, max_bytes, rebalance,
         )
         return converted.unionByName(skipped)
 
     if rebalance:
         files = files.repartition(rebalance)
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                sub = pdf.iloc[lo : lo + batch_rows]
-                rows = []
-                for p, c in zip(sub[path_col], sub[content_col]):
-                    payload = bytes(c) if c is not None else b""
-                    if len(payload) > max_bytes:
-                        rows.append((p, "binary", None, None, None,
-                                     STATUS_SKIPPED, len(payload), 0))
-                    else:
-                        rows.append(_convert_one(p, payload))
-                out = pd.DataFrame(rows, columns=cols)
-                yield out.astype({"n_bytes": "int64", "_proc_us": "int64"})
+    def row(path, content):
+        payload = content or b""
+        if len(payload) > max_bytes:
+            return skipped_row(path, len(payload))
+        return [_convert_one(path, payload)]
 
-    return files.select(path_col, content_col).mapInPandas(
-        gen, schema=CONVERTED_SCHEMA
-    )
+    return map_rows(files.select(path_col, content_col), row, CONVERTED_SCHEMA)
 
 
 def read_documents_dir(

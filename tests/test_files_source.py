@@ -268,3 +268,112 @@ class TestRebalance:
         b = sorted((r["path"], r["parse_status"], r["extracted_text"])
                    for r in reb.collect())
         assert a == b
+
+
+@pytest.fixture(scope="module")
+def synth_dir(tmp_path_factory):
+    """Only package-synthesized files: the office set, more report PDFs
+    than one ``map_rows`` slice, media, text markup and poison files."""
+    from doc_parser_spark.operators.extract import MAP_ROWS_SLICE
+
+    d = tmp_path_factory.mktemp("synth_docs")
+    (d / "report.docx").write_bytes(
+        synth_office.build_docx("Quarterly", ["alpha beta gamma", "delta"],
+                                ["point one", "point two"])
+    )
+    (d / "sheet.xlsx").write_bytes(
+        synth_office.build_xlsx("Data", [["h1", "h2"], ["1", "2"]])
+    )
+    (d / "deck.pptx").write_bytes(synth_office.build_pptx("Title", ["b1"]))
+    (d / "doc.hwpx").write_bytes(synth_office.build_hwpx(1, "한글 본문"))
+    for i in range(MAP_ROWS_SLICE + 4):
+        (d / f"report{i:02d}.pdf").write_bytes(synth_pdf.build_report_pdf(i))
+    (d / "img.png").write_bytes(synth_media.build_png(3))
+    (d / "img.webp").write_bytes(build_webp(3))
+    (d / "clip.avi").write_bytes(synth_media.build_avi(3))
+    (d / "sound.wav").write_bytes(synth_media.build_wav(3))
+    (d / "song.mp3").write_bytes(synth_media.build_mp3(3))
+    (d / "page.html").write_text(
+        "<html><body><h1>Head</h1><p>Main body paragraph text here.</p>"
+        "</body></html>"
+    )
+    (d / "notes.md").write_text("# Notes\n\nSome *markdown* body.\n")
+    (d / "table.csv").write_text("a,b,c\n1,2,3\n4,5,6\n")
+    (d / "poison.docx").write_bytes(b"PK\x03\x04" + b"\x00" * 64)
+    (d / "junk.bin").write_bytes(bytes(range(256)) * 4)
+    (d / "sub").mkdir()
+    (d / "sub" / "nested.txt").write_text("plain nested text file\n")
+    return d
+
+
+class TestConvertSynthesizedDirectory:
+    """The directory surface on synthesized files alone, so it runs
+    without the reference sample documents."""
+
+    @pytest.fixture(scope="class")
+    def rows(self, spark, synth_dir):
+        return convert_directory(spark, str(synth_dir)).collect()
+
+    def test_one_row_per_file(self, rows, synth_dir):
+        files = sorted(p.name for p in synth_dir.rglob("*") if p.is_file())
+        assert sorted(Path(r["path"]).name for r in rows) == files
+
+    def test_kind_type_and_status(self, rows):
+        by_name = {Path(r["path"]).name: r for r in rows}
+        expect = {
+            "report.docx": ("document", "docx", "success"),
+            "sheet.xlsx": ("document", "xlsx", "success"),
+            "deck.pptx": ("document", "pptx", "success"),
+            "doc.hwpx": ("document", "hwpx", "success"),
+            "img.png": ("image", "image", "skipped"),
+            "img.webp": ("image", "image", "skipped"),
+            "clip.avi": ("video", "video", "skipped"),
+            "sound.wav": ("audio", "audio", "skipped"),
+            "song.mp3": ("audio", "audio", "skipped"),
+            "page.html": ("document", "html", "success"),
+            "notes.md": ("document", "markdown", "success"),
+            "table.csv": ("document", "csv", "success"),
+            "nested.txt": ("document", "plain", "success"),
+        }
+        for name, r in by_name.items():
+            if name.startswith("report") and name.endswith(".pdf"):
+                expect[name] = ("document", "pdf", "success")
+        got = {name: (r["kind"], r["content_type"], r["parse_status"])
+               for name, r in by_name.items() if name in expect}
+        assert got == expect
+        for name, (kind, _, _) in expect.items():
+            r = by_name[name]
+            if kind == "document":
+                assert r["extracted_text"] and r["spans"], name
+            else:
+                assert r["extracted_text"] is None, name
+            assert r["n_bytes"] > 0 and r["_proc_us"] >= 0, name
+        assert "alpha beta gamma" in by_name["report.docx"]["extracted_text"]
+        assert all(sp["page"] >= 1 for sp in by_name["report07.pdf"]["spans"])
+        poison = by_name["poison.docx"]
+        assert poison["parse_status"] in ("failure", "skipped")
+        assert poison["extracted_text"] is None
+        assert by_name["junk.bin"]["parse_status"] in (
+            "success", "partial_success", "skipped", "failure"
+        )
+
+    def test_one_arrow_crossing_no_shuffle(self, spark, synth_dir):
+        df = convert_directory(spark, str(synth_dir))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
+
+    def test_one_task_equals_split_scan(self, spark, synth_dir, rows):
+        """All files in one Arrow batch (several ``map_rows`` slices) give
+        the rows of the split scan, ``_proc_us`` aside."""
+        from doc_parser_spark.sources.files import read_documents_dir
+
+        one = convert_files(read_documents_dir(spark, str(synth_dir))
+                            .coalesce(1)).drop("_proc_us").collect()
+        split = [r.asDict() for r in rows]
+        for r in split:
+            del r["_proc_us"]
+        key = lambda r: r["path"]  # noqa: E731
+        assert sorted((r.asDict() for r in one), key=key) == sorted(
+            split, key=key
+        )

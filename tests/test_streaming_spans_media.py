@@ -80,14 +80,14 @@ class TestMultimodal:
         from doc_parser_spark.operators.multimodal import decode_images, synth_media
 
         media = synth_media(spark, n=60)
-        feats = decode_images(media, batch_rows=8).toPandas()
+        feats = decode_images(media).toPandas()
         n_images = media.where(F.col("kind") == "image").count()
         assert len(feats) == n_images
         assert set(feats["decode_status"]) <= {"stub_decoded", "failure", "skipped"}
         assert (feats["n_bytes"] > 0).all()
         assert feats["sha256"].str.len().eq(64).all()
         # deterministic: rerun gives identical features
-        feats2 = decode_images(media, batch_rows=8).toPandas()
+        feats2 = decode_images(media).toPandas()
         pd.testing.assert_frame_equal(
             feats.sort_values("media_id").reset_index(drop=True),
             feats2.sort_values("media_id").reset_index(drop=True),
@@ -109,7 +109,7 @@ class TestMultimodal:
             return 320, 200, 0.25
 
         media = synth_media(spark, n=60)
-        feats = decode_images(media, batch_rows=8, decoder=fake_pil).toPandas()
+        feats = decode_images(media, decoder=fake_pil).toPandas()
         assert set(feats["decode_status"]) <= {"decoded", "failure"}
         ok = feats[feats["decode_status"] == "decoded"]
         bad = feats[feats["decode_status"] == "failure"]
@@ -120,13 +120,43 @@ class TestMultimodal:
         assert bad["sha256"].str.len().eq(64).all()
         assert (bad["n_bytes"] > 0).all()
 
+    def test_empty_and_null_payloads_are_one_row_each(self, spark):
+        """The per-input envelope in every media operator: a zero-byte
+        payload is one 'failure' row, a null payload one 'skipped' row —
+        no input vanishes and none gets invented features."""
+        from doc_parser_spark.operators.multimodal import (
+            MEDIA_SCHEMA,
+            audio_features,
+            decode_images,
+            video_frames,
+            video_metadata,
+        )
+
+        kinds = ("image", "audio", "video")
+        rows = [(2 * k, "c", 0, kind, b"", None) for k, kind in enumerate(kinds)]
+        rows += [(2 * k + 1, "c", 0, kind, None, None)
+                 for k, kind in enumerate(kinds)]
+        media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+        for op, k in ((decode_images, 0), (audio_features, 1),
+                      (video_metadata, 2), (video_frames, 2)):
+            out = sorted(op(media).collect(), key=lambda r: r["media_id"])
+            assert [(r["media_id"], r["decode_status"]) for r in out] == [
+                (2 * k, "failure"), (2 * k + 1, "skipped")
+            ], op.__name__
+        img = {r["media_id"]: r for r in decode_images(media).collect()}
+        assert (img[0]["width"], img[0]["height"], img[0]["n_bytes"]) == (
+            None, None, 0
+        )
+
     def test_frame_sampling(self, spark):
-        from doc_parser_spark.operators.multimodal import sample_frames, synth_media
+        from doc_parser_spark.operators.multimodal import synth_media, video_frames
 
         media = synth_media(spark, n=60)
-        frames = sample_frames(media, every_n=5).toPandas()
+        frames = video_frames(media, every_n=5).toPandas()
         assert len(frames) > 0
         assert (frames["frame_idx"] % 5 == 0).all()
+        # random payloads are not AVI: the deterministic frame stub
+        assert (frames["decode_status"] == "stub_decoded").all()
 
 
 class TestExport:
