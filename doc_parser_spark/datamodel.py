@@ -5,6 +5,8 @@ Mirrors the reference's data model (SURVEY.md §1):
   /root/reference/docling/backend/html_backend.py)
 - parse status  ~ ConversionStatus (/root/reference/docling/datamodel/base_models.py:36-42)
 - flat output   ~ GenOSVectorMeta (/root/reference/genon/preprocessor/src/preprocessor.py:86-103)
+- main text + spans ~ the DoclingDocument serializer's text + charspans:
+  ``join_spans``, which every extraction backend calls
 """
 
 from __future__ import annotations
@@ -46,7 +48,6 @@ CT_ASCIIDOC = "asciidoc"
 CT_JATS = "jats"
 CT_USPTO = "uspto"
 CT_EMPTY = "empty"
-CT_UNKNOWN = "unknown"
 
 # ---------------------------------------------------------------------------
 # Spark schemas
@@ -70,6 +71,26 @@ SPAN_SCHEMA = T.StructType(
         T.StructField("page", T.IntegerType(), False),
     ]
 )
+
+
+def join_spans(pieces) -> tuple[str, list[tuple[int, int, str, int]]]:
+    """(text, label, page) pieces → (main text, spans): the non-empty texts
+    joined with a blank line, one ``SPAN_SCHEMA`` span per piece holding its
+    char offsets into the joined text. The one serializer every extraction
+    backend shares (the reference's DoclingDocument → text + charspan)."""
+    parts: list[str] = []
+    spans: list[tuple[int, int, str, int]] = []
+    offset = 0
+    for text, label, page in pieces:
+        if not text:
+            continue
+        if parts:
+            offset += 2  # "\n\n" separator
+        spans.append((offset, offset + len(text), label, page))
+        parts.append(text)
+        offset += len(text)
+    return "\n\n".join(parts), spans
+
 
 EXTRACTED_SCHEMA = T.StructType(
     [

@@ -16,7 +16,7 @@ from __future__ import annotations
 import csv
 import io
 
-from doc_parser_spark.datamodel import LABEL_TABLE
+from doc_parser_spark.datamodel import LABEL_TABLE, join_spans
 from doc_parser_spark.functions.html_extract import render_table
 
 # Sniffer cost grows with sample size; the reference's content probes also
@@ -72,13 +72,10 @@ def extract_csv(text: str) -> tuple[str, list[tuple[int, int, str, int]]]:
     class dialect(csv.excel):
         delimiter = _guess_delimiter(content) or ","
     rows = [r for r in csv.reader(io.StringIO(content), dialect) if r]
-    if not rows:
-        return "", []
     # uniform-column check (csv_backend.py:80-95): ragged rows are padded
-    width = max(len(r) for r in rows)
+    width = max((len(r) for r in rows), default=0)
     grid = [r + [""] * (width - len(r)) for r in rows]
-    rendered = render_table(grid)
-    return rendered, [(0, len(rendered), LABEL_TABLE, 1)]
+    return join_spans([(render_table(grid), LABEL_TABLE, 1)])
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,9 @@ Semantics ported (file:line cites against the reference):
   groundtruth; see ``_paragraph_elements`` below
 
 Output is a docling-shaped node tree; ``flat_items`` yields the
-(label, text) stream the reference's indented-text export prints, and
+(label, text) stream the reference's indented-text export prints,
+``node_pieces`` turns that stream into ``datamodel.join_spans`` pieces for
+every tree backend (docx, pptx, xlsx, hwpx, jats, uspto), and
 ``export_docx_markdown`` mirrors its markdown serializer.
 """
 
@@ -44,6 +46,9 @@ from io import BytesIO
 from pathlib import Path
 from typing import Iterator, Optional
 from xml.etree import ElementTree as ET
+
+from doc_parser_spark.datamodel import join_spans
+from doc_parser_spark.functions.html_extract import render_table
 
 W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 R = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -751,23 +756,18 @@ def flat_items(node: DocxNode) -> Iterator[DocxNode]:
         yield from flat_items(child)
 
 
+def node_pieces(
+    node: DocxNode, page: int = 1
+) -> Iterator[tuple[str, str, int]]:
+    """``flat_items`` as ``join_spans`` pieces: a table renders its grid,
+    every other item contributes its text, all on ``page``."""
+    for item in flat_items(node):
+        if item.label == "table":
+            yield render_table(item.grid or []), item.label, page
+        else:
+            yield item.text, item.label, page
+
+
 def extract_docx(payload: bytes) -> tuple[str, list[tuple[int, int, str, int]]]:
     """docx bytes → (main text, spans) for the extraction surface."""
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    for node in flat_items(parse_docx(payload)):
-        if node.label == "table":
-            from doc_parser_spark.functions.html_extract import render_table
-
-            text = render_table(node.grid or [])
-        else:
-            text = node.text
-        if not text:
-            continue
-        if parts:
-            offset += 2
-        spans.append((offset, offset + len(text), node.label, 1))
-        parts.append(text)
-        offset += len(text)
-    return "\n\n".join(parts), spans
+    return join_spans(node_pieces(parse_docx(payload)))

@@ -35,6 +35,7 @@ from doc_parser_spark.datamodel import (
     LABEL_TABLE,
     LABEL_TEXT,
     LABEL_TITLE,
+    join_spans,
 )
 from doc_parser_spark.functions.htmldom import (
     Element,
@@ -591,23 +592,10 @@ def render_item(item: Item) -> str:
 
 
 def serialize_items(items: list[Item]) -> tuple[str, list[tuple[int, int, str, int]]]:
-    """BODY items → (extracted_text, spans). Spans are (start, end, label, page)
-    char offsets into extracted_text; items joined with a blank line."""
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    for item in items:
-        if item.layer != BODY:
-            continue
-        rendered = render_item(item)
-        if not rendered:
-            continue
-        if parts:
-            offset += 2  # "\n\n" separator
-        spans.append((offset, offset + len(rendered), item.label, 1))
-        parts.append(rendered)
-        offset += len(rendered)
-    return "\n\n".join(parts), spans
+    """BODY items → (extracted_text, spans) through ``join_spans``."""
+    return join_spans(
+        (render_item(item), item.label, 1) for item in items if item.layer == BODY
+    )
 
 
 def extract_html(

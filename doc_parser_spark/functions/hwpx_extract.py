@@ -46,7 +46,8 @@ from io import BytesIO
 from typing import Optional
 from xml.etree import ElementTree as ET
 
-from doc_parser_spark.functions.docx_extract import DocxNode
+from doc_parser_spark.datamodel import join_spans
+from doc_parser_spark.functions.docx_extract import DocxNode, node_pieces
 
 _HEADER_NUM_RE = re.compile(r"^(?:\d+\.\s+|[ⅠⅡⅢⅣⅤⅥⅦⅧⅨⅩ]+\.\s*)")
 _HEADER_NUM_STRICT_RE = re.compile(r"^(?:\d+|[ⅠⅡⅢⅣⅤⅥⅦⅧⅨⅩ]+)\.\s+")
@@ -724,21 +725,4 @@ def parse_hwpx(payload: bytes) -> DocxNode:
 
 def extract_hwpx(payload: bytes) -> tuple[str, list[tuple[int, int, str, int]]]:
     """HWPX → (main text, spans) through the shared flat-item stream."""
-    from doc_parser_spark.functions.docx_extract import flat_items
-    from doc_parser_spark.functions.html_extract import render_table
-
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    for node in flat_items(parse_hwpx(payload)):
-        text = (
-            render_table(node.grid or []) if node.label == "table" else node.text
-        )
-        if not text:
-            continue
-        if parts:
-            offset += 2
-        spans.append((offset, offset + len(text), node.label, 1))
-        parts.append(text)
-        offset += len(text)
-    return "\n\n".join(parts), spans
+    return join_spans(node_pieces(parse_hwpx(payload)))

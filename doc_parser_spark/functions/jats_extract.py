@@ -22,7 +22,8 @@ from __future__ import annotations
 from typing import Optional
 from xml.etree import ElementTree as ET
 
-from doc_parser_spark.functions.docx_extract import DocxNode
+from doc_parser_spark.datamodel import join_spans
+from doc_parser_spark.functions.docx_extract import DocxNode, node_pieces
 
 DEFAULT_HEADER_ABSTRACT = "Abstract"
 DEFAULT_HEADER_ACKNOWLEDGMENTS = "Acknowledgments"
@@ -424,23 +425,4 @@ def parse_jats(xml_text: str | bytes) -> DocxNode:
 
 def extract_jats(xml_text: str) -> tuple[str, list[tuple[int, int, str, int]]]:
     """JATS XML → (main text, spans)."""
-    from doc_parser_spark.functions.docx_extract import flat_items
-    from doc_parser_spark.functions.html_extract import render_table
-
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    for node in flat_items(parse_jats(xml_text)):
-        text = (
-            render_table(node.grid or [])
-            if node.label == "table"
-            else node.text
-        )
-        if not text:
-            continue
-        if parts:
-            offset += 2
-        spans.append((offset, offset + len(text), node.label, 1))
-        parts.append(text)
-        offset += len(text)
-    return "\n\n".join(parts), spans
+    return join_spans(node_pieces(parse_jats(xml_text)))

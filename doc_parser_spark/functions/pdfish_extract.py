@@ -44,6 +44,7 @@ from doc_parser_spark.datamodel import (
     LABEL_PAGE_FOOTER,
     LABEL_PAGE_HEADER,
     LABEL_PARAGRAPH,
+    join_spans,
 )
 from doc_parser_spark.functions.pdf_decode import decode_pdf_pages
 from doc_parser_spark.functions.sanitize import sanitize_text
@@ -280,15 +281,4 @@ def extract_pdfish(
     if buf:
         paragraphs.append((sanitize_text(buf), buf_page))
 
-    spans: list[tuple[int, int, str, int]] = []
-    parts: list[str] = []
-    offset = 0
-    for text, page in paragraphs:
-        if not text:
-            continue
-        if parts:
-            offset += 2
-        spans.append((offset, offset + len(text), LABEL_PARAGRAPH, page))
-        parts.append(text)
-        offset += len(text)
-    return "\n\n".join(parts), spans
+    return join_spans((text, LABEL_PARAGRAPH, page) for text, page in paragraphs)

@@ -8,7 +8,7 @@ with a single space) on every blank line and at EOF.
 
 from __future__ import annotations
 
-from doc_parser_spark.datamodel import LABEL_PARAGRAPH
+from doc_parser_spark.datamodel import LABEL_PARAGRAPH, join_spans
 
 
 def split_paragraphs(text: str) -> list[str]:
@@ -31,12 +31,4 @@ def split_paragraphs(text: str) -> list[str]:
 def extract_plain(text: str) -> tuple[str, list[tuple[int, int, str, int]]]:
     """text → (extracted_text, spans). Paragraphs joined with blank lines,
     one span per paragraph, label ``paragraph``, page 1."""
-    paragraphs = split_paragraphs(text)
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    for i, para in enumerate(paragraphs):
-        if i > 0:
-            offset += 2
-        spans.append((offset, offset + len(para), LABEL_PARAGRAPH, 1))
-        offset += len(para)
-    return "\n\n".join(paragraphs), spans
+    return join_spans((p, LABEL_PARAGRAPH, 1) for p in split_paragraphs(text))

@@ -30,7 +30,8 @@ from doc_parser_spark.functions.ziputil import open_zip
 from io import BytesIO
 from xml.etree import ElementTree as ET
 
-from doc_parser_spark.functions.docx_extract import DocxNode
+from doc_parser_spark.datamodel import join_spans
+from doc_parser_spark.functions.docx_extract import DocxNode, node_pieces
 
 P = "{http://schemas.openxmlformats.org/presentationml/2006/main}"
 A = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
@@ -216,37 +217,8 @@ def parse_pptx(payload: bytes) -> DocxNode:
 
 def extract_pptx(payload: bytes) -> tuple[str, list[tuple[int, int, str, int]]]:
     """pptx bytes → (main text, spans); page = 1-based slide index."""
-    from doc_parser_spark.functions.docx_extract import flat_items
-    from doc_parser_spark.functions.html_extract import render_table
-
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    root = parse_pptx(payload)
-    for page, slide in enumerate(root.children, 1):
-        def emit(node: DocxNode) -> None:
-            nonlocal offset
-            for child in node.children:
-                if child.is_group or child.label in ("chapter", "inline"):
-                    emit(child)
-                    continue
-                if child.label == "list":
-                    emit(child)
-                    continue
-                text = (
-                    render_table(child.grid or [])
-                    if child.label == "table"
-                    else child.text
-                )
-                if text:
-                    if parts:
-                        offset += 2
-                    spans.append(
-                        (offset, offset + len(text), child.label, page)
-                    )
-                    parts.append(text)
-                    offset += len(text)
-                emit(child)
-
-        emit(slide)
-    return "\n\n".join(parts), spans
+    return join_spans(
+        piece
+        for page, slide in enumerate(parse_pptx(payload).children, 1)
+        for piece in node_pieces(slide, page)
+    )

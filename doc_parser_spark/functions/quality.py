@@ -35,14 +35,3 @@ def rate_text_quality(text: str) -> float:
     if len(frag_matches) >= 3:
         penalty += 0.1 * len(frag_matches)
     return max(1.0 - penalty, 0.0)
-
-
-def grade(score: float) -> str:
-    """Confidence grade binning (base_models.py:370-457 analog)."""
-    if score >= 0.9:
-        return "excellent"
-    if score >= 0.8:
-        return "good"
-    if score >= 0.5:
-        return "fair"
-    return "poor"

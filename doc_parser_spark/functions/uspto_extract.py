@@ -35,7 +35,8 @@ import re
 from typing import Optional
 from xml.etree import ElementTree as ET
 
-from doc_parser_spark.functions.docx_extract import DocxNode
+from doc_parser_spark.datamodel import join_spans
+from doc_parser_spark.functions.docx_extract import DocxNode, node_pieces
 
 _SUPERSCRIPT = str.maketrans(
     {
@@ -745,23 +746,4 @@ def parse_uspto(xml_text: str | bytes) -> DocxNode:
 
 def extract_uspto(xml_text: str) -> tuple[str, list[tuple[int, int, str, int]]]:
     """USPTO ICE XML → (main text, spans)."""
-    from doc_parser_spark.functions.docx_extract import flat_items
-    from doc_parser_spark.functions.html_extract import render_table
-
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    for node in flat_items(parse_uspto(xml_text)):
-        text = (
-            render_table(node.grid or [])
-            if node.label == "table"
-            else node.text
-        )
-        if not text:
-            continue
-        if parts:
-            offset += 2
-        spans.append((offset, offset + len(text), node.label, 1))
-        parts.append(text)
-        offset += len(text)
-    return "\n\n".join(parts), spans
+    return join_spans(node_pieces(parse_uspto(xml_text)))

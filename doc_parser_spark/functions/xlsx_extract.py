@@ -28,7 +28,8 @@ from dataclasses import dataclass, field
 from typing import Optional
 from xml.etree import ElementTree as ET
 
-from doc_parser_spark.functions.docx_extract import DocxNode
+from doc_parser_spark.datamodel import join_spans
+from doc_parser_spark.functions.docx_extract import DocxNode, node_pieces
 
 SS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 REL = "{http://schemas.openxmlformats.org/package/2006/relationships}"
@@ -320,22 +321,10 @@ def parse_xlsx(payload: bytes) -> DocxNode:
 def extract_xlsx(payload: bytes) -> tuple[str, list[tuple[int, int, str, int]]]:
     """xlsx bytes → (main text, spans); one table item per discovered table,
     page = 1-based sheet index."""
-    from doc_parser_spark.functions.html_extract import render_table
-
-    parts: list[str] = []
-    spans: list[tuple[int, int, str, int]] = []
-    offset = 0
-    root = parse_xlsx(payload)
-    for page, sheet_group in enumerate(root.children, 1):
-        for node in sheet_group.children:
-            if node.label != "table" or not node.grid:
-                continue
-            text = render_table(node.grid)
-            if not text:
-                continue
-            if parts:
-                offset += 2
-            spans.append((offset, offset + len(text), "table", page))
-            parts.append(text)
-            offset += len(text)
-    return "\n\n".join(parts), spans
+    # parse_xlsx puts only table and picture nodes under a sheet, and a
+    # picture's empty text is skipped, so the pieces are the sheet's tables
+    return join_spans(
+        piece
+        for page, sheet in enumerate(parse_xlsx(payload).children, 1)
+        for piece in node_pieces(sheet, page)
+    )

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from doc_parser_spark.operators.dedup import shingle_expr_from_words
+from doc_parser_spark.operators.search import TOKENIZE
 from doc_parser_spark.session import fork
 
 DEFAULT_DECONTAM_N = 5
@@ -215,12 +216,7 @@ def lm_quality_score(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.expr(
-                f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-                "w -> w != '')"
-            )
-        ).alias("tok"),
+        F.explode(F.expr(TOKENIZE.format(col=text_col))).alias("tok"),
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = counts.agg(F.sum("c").cast("double").alias("t"))
@@ -274,12 +270,7 @@ def tfidf_top_terms(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.expr(
-                f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-                "w -> w != '')"
-            )
-        ).alias("term"),
+        F.explode(F.expr(TOKENIZE.format(col=text_col))).alias("term"),
     )
     doc_tok = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     # count(when(tf > 0, 1)) == count(*) (tf ≥ 1 by construction), but the
@@ -322,18 +313,6 @@ def tfidf_top_terms(
 LANG_ID_PREFIX = 200
 
 
-def char_trigram_expr(text_col: str, prefix: int = LANG_ID_PREFIX) -> str:
-    """SQL expression: ALL character trigrams (multiset, not distinct) of
-    the lowercased first ``prefix`` chars — the CLD-style budget that keeps
-    per-document work constant no matter how long documents get."""
-    s = f"lower(substr({text_col}, 1, {prefix}))"
-    return (
-        f"CASE WHEN length({s}) >= 3 THEN "
-        f"transform(sequence(1, length({s}) - 2), i -> substr({s}, i, 3)) "
-        f"ELSE array() END"
-    )
-
-
 def lang_id_ngram(
     df: DataFrame,
     id_col: str,
@@ -368,7 +347,7 @@ def lang_id_ngram(
     |langs|-rows-per-doc argmax window on id. Document text never shuffles.
     """
     # round 8: materialize the lowercased prefix as a COLUMN before the
-    # trigram transform — inlined via char_trigram_expr, the lambda body
+    # trigram transform — inlined in the transform, the lambda body
     # re-evaluated lower(substr(text, 1, prefix)) once PER TRIGRAM
     # (~prefix times per row; the SimHash/winnow non-CSE shape). One
     # explode pass dropped from ~1.9 s to ~0.6 s at sf0.1. Same strings,
@@ -633,12 +612,7 @@ def lm_bigram_score(
     # materialization (the fork-point rule of `big` below; constant-width rows)
     toks = fork(df.select(
         F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-                "w -> w != '')"
-            )
-        ).alias("pos", "tok"),
+        F.posexplode(F.expr(TOKENIZE.format(col=text_col))).alias("pos", "tok"),
     ))
     counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
     vocab = (
@@ -719,12 +693,7 @@ def mine_phrases(
 
     toks = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-                "w -> w != '')"
-            )
-        ).alias("pos", "tok"),
+        F.posexplode(F.expr(TOKENIZE.format(col=text_col))).alias("pos", "tok"),
     )
     uni = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = uni.agg(F.sum("c").cast("double").alias("n"))
@@ -807,11 +776,7 @@ def profile_corpus(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     scale. avg rounds via integer HALF_UP (exact token sums), the
     engine-portable form.
     """
-    toks = F.size(
-        F.expr(
-            f"filter(split(lower({text_col}), '[^a-z0-9]+'), w -> w != '')"
-        )
-    )
+    toks = F.size(F.expr(TOKENIZE.format(col=text_col)))
     base = df.select(
         F.col(id_col),
         F.col(text_col),
@@ -1023,12 +988,7 @@ def vocab_drift(
 
     def tok(d):
         return d.select(
-            F.explode(
-                F.expr(
-                    f"filter(split(lower({text_col}), '[^a-z0-9]+'), "
-                    "w -> w != '')"
-                )
-            ).alias("term")
+            F.explode(F.expr(TOKENIZE.format(col=text_col))).alias("term")
         )
 
     co = tok(old_df).groupBy("term").agg(F.count("*").alias("c_old"))
@@ -1067,8 +1027,6 @@ def subword_encode_counts(
     text_col: str,
     vocab_k: int = 64,
     max_piece: int = 6,
-    char_k: int | None = None,
-    word_pattern: str = "[^a-z0-9]+",
 ) -> DataFrame:
     """REAL subword tokenization (greedy longest-match, WordPiece-style)
     with a corpus-derived vocabulary — the upgrade over the reference's
@@ -1087,30 +1045,13 @@ def subword_encode_counts(
     oracle replays the same greedy walk as a recursive CTE — a
     cross-paradigm differential of the exact tokenization.
 
-    Driver-collect bound: the default ``word_pattern`` keeps only
-    [a-z0-9] word characters, so the char-coverage set Σ is ≤ 36 by
-    construction. With a wider pattern (unicode corpora) Σ is the
-    corpus's distinct-codepoint count — 10⁵–10⁶ on full-unicode web text
-    — and MUST be capped: ``char_k`` keeps only the top-K codepoints by
-    occurrence (count-then-lexicographic cutoff, engine-deterministic).
-    An out-of-vocabulary character costs nothing in correctness terms:
-    the greedy walk's step-1 fallback emits it as its own single
-    "unknown" piece (n_subwords still counts it once). The collect is
-    then O(vocab_k + char_k) regardless of corpus size.
+    Driver-collect bound: words are ``TOKENIZE`` runs of [a-z0-9], so the
+    char-coverage set Σ is ≤ 36 by construction and the vocab collect is
+    at most ``vocab_k`` + 36 pieces whatever the corpus.
     """
-    # word_pattern lands inside a single-quoted Spark SQL literal, whose
-    # parser consumes backslash escapes — without re-escaping, r"\s+"
-    # would reach the regex engine as "s+" (split on the LETTER s) with
-    # no error, and a quote would break out of the literal entirely
-    sql_pattern = word_pattern.replace("\\", "\\\\").replace("'", "\\'")
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.expr(
-                f"filter(split(lower({text_col}), '{sql_pattern}'), "
-                "w -> w != '')"
-            )
-        ).alias("word"),
+        F.explode(F.expr(TOKENIZE.format(col=text_col))).alias("word"),
     )
     occ = toks.groupBy("word").agg(F.count("*").alias("occ"))
     subs = occ.select(
@@ -1131,28 +1072,14 @@ def subword_encode_counts(
         .limit(vocab_k)
         .select("piece")
     )
-    char_pieces = occ.select(
+    chars = occ.select(
         F.explode(
             F.expr(
                 "transform(sequence(1, length(word)), "
                 "i -> substring(word, i, 1))"
             )
-        ).alias("piece"),
-        "occ",
-    )
-    if char_k is not None:
-        # bounded char coverage: top-K codepoints by occurrence, same
-        # deterministic cutoff as the multi-char pieces; everything else
-        # encodes via the greedy walk's single-char unknown fallback
-        chars = (
-            char_pieces.groupBy("piece")
-            .agg(F.sum("occ").alias("c"))
-            .orderBy(F.col("c").desc(), "piece")
-            .limit(char_k)
-            .select("piece")
-        )
-    else:
-        chars = char_pieces.select("piece").distinct()
+        ).alias("piece")
+    ).distinct()
     vocab_rows = [
         r["piece"] for r in multi.unionByName(chars).distinct().collect()
     ]

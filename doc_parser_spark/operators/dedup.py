@@ -100,20 +100,6 @@ def _cc_driver(pairs1d: DataFrame, max_iterations: int) -> DataFrame:
     return spark.createDataFrame(out, schema=out_schema)
 
 
-def shingle_expr(text_col: str, n: int = DEFAULT_SHINGLE) -> str:
-    """SQL expression: distinct word n-gram shingles of a text column.
-
-    Guarded so short texts yield an empty array (Spark's sequence(0,-1)
-    would otherwise produce a DESCENDING range).
-    """
-    return (
-        f"CASE WHEN size(split({text_col}, ' ')) >= {n} THEN "
-        f"array_distinct(transform(sequence(0, size(split({text_col}, ' ')) - {n}), "
-        f"i -> concat_ws(' ', slice(split({text_col}, ' '), i + 1, {n})))) "
-        f"ELSE array() END"
-    )
-
-
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup: md5 content hash; keeper = min id per hash.
 
@@ -132,10 +118,12 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def shingle_expr_from_words(words_col: str, n: int = DEFAULT_SHINGLE) -> str:
-    """``shingle_expr`` over a pre-split word-array column (round 8):
-    inlined, the transform lambda re-ran split(text) once per SHINGLE
-    (split cost × tokens per row — the winnow non-CSE shape); callers
-    materialize the split once and shingle from it."""
+    """SQL expression: distinct word n-gram shingles of a pre-split
+    word-array column. Guarded so short texts yield an empty array
+    (Spark's sequence(0,-1) would otherwise produce a DESCENDING range).
+    Round 8: shingling from split(text) inline re-ran the split once per
+    SHINGLE (split cost × tokens per row — the winnow non-CSE shape);
+    callers materialize the split once and shingle from it."""
     return (
         f"CASE WHEN size({words_col}) >= {n} THEN "
         f"array_distinct(transform(sequence(0, size({words_col}) - {n}), "
@@ -158,13 +146,6 @@ def with_shingles(
     )
 
 
-def jaccard_expr(a: str = "a.shingles", b: str = "b.shingles") -> str:
-    return (
-        f"size(array_intersect({a}, {b})) / "
-        f"(size({a}) + size({b}) - size(array_intersect({a}, {b})))"
-    )
-
-
 def _jaccard_col(
     df: DataFrame,
     a: str,
@@ -172,10 +153,11 @@ def _jaccard_col(
     out: str,
     threshold: float | None = None,
 ) -> DataFrame:
-    """``jaccard_expr`` with the intersection size materialized once
-    (round 8): inlined, size(array_intersect(a, b)) — the expensive half
-    — was evaluated twice per candidate pair. Same operands, same
-    left-to-right double division → identical values.
+    """Jaccard |A∩B| / (|A| + |B| − |A∩B|) of two shingle-array columns,
+    with the intersection size materialized once (round 8): inlined,
+    size(array_intersect(a, b)) — the expensive half — was evaluated twice
+    per candidate pair. Same operands, same left-to-right double division
+    → identical values.
 
     ``threshold`` (round 8): when the caller will keep only
     ``out >= threshold`` rows, a size-ratio prefilter drops candidates

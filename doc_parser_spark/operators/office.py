@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from doc_parser_spark.datamodel import (
+    SPAN_SCHEMA,
     STATUS_FAILURE,
     STATUS_SKIPPED,
     STATUS_SUCCESS,
@@ -32,20 +33,7 @@ OFFICE_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("doc_kind", T.StringType(), False),
         T.StructField("extracted_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType()),
-                        T.StructField("end", T.IntegerType()),
-                        T.StructField("label", T.StringType()),
-                        T.StructField("page", T.IntegerType()),
-                    ]
-                )
-            ),
-            True,
-        ),
+        T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
         T.StructField("parse_status", T.StringType(), False),
     ]
 )

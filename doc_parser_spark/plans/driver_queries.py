@@ -938,8 +938,8 @@ FROM documents
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_parser_spark.operators.dedup import shingle_expr_from_words
 
-    # round 8: split materialized once per row (the inlined shingle_expr
-    # re-split the text per shingle inside its transform lambda)
+    # round 8: split materialized once per row (shingling from an inline
+    # split re-split the text per shingle inside its transform lambda)
     return (
         _docs(spark, sf_dir)
         .withColumn("_w", F.split(F.col("text"), " "))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from doc_parser_spark.datamodel import (
+    SPAN_SCHEMA,
     STATUS_FAILURE,
     STATUS_SKIPPED,
     STATUS_SUCCESS,
@@ -59,20 +60,7 @@ CONVERTED_SCHEMA = T.StructType(
         T.StructField("kind", T.StringType(), False),
         T.StructField("content_type", T.StringType(), True),
         T.StructField("extracted_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                        T.StructField("label", T.StringType(), False),
-                        T.StructField("page", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            True,
-        ),
+        T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
         T.StructField("parse_status", T.StringType(), False),
         T.StructField("n_bytes", T.LongType(), False),
         T.StructField("_proc_us", T.LongType(), False),
@@ -239,5 +227,18 @@ def convert_directory(
     spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:
     """The ``DocumentConverter.convert_all`` analog: one call from a
-    directory to a DataFrame of converted documents."""
-    return convert_files(read_documents_dir(spark, path, glob))
+    directory to a DataFrame of converted documents, one row per listed
+    file. Spark's file index lists a zero-length file but its scan yields no
+    row for it, so those files get their (``empty``, ``skipped``) rows from
+    the driver; only their lengths are read."""
+    files = read_documents_dir(spark, path, glob)
+    converted = convert_files(files)
+    conf = spark._jsc.hadoopConfiguration()
+    empty = []
+    for uri in files.inputFiles():
+        p = spark._jvm.org.apache.hadoop.fs.Path(uri)
+        if p.getFileSystem(conf).getFileStatus(p).getLen() == 0:
+            empty.append(_convert_one(p.toString(), b""))
+    if not empty:
+        return converted
+    return converted.unionByName(spark.createDataFrame(empty, CONVERTED_SCHEMA))

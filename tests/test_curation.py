@@ -218,7 +218,8 @@ def test_pack_arithmetic_invariants(tokens, budget):
     st.integers(min_value=2, max_value=4),
 )
 def test_shingle_contamination_symmetry(texts, n):
-    """Decontamination's n-gram rule (python mirror of shingle_expr):
+    """Decontamination's n-gram rule (python mirror of
+    dedup.shingle_expr_from_words over a space split):
     a document is contaminated by a benchmark containing itself iff it has
     at least one n-gram; contamination is monotone in benchmark growth."""
 
@@ -875,76 +876,50 @@ class TestSubwordEncode:
             assert r["n_words"] == 2
             assert 2 <= r["n_subwords"] <= 10
 
-    def test_charset_cap_on_50k_codepoint_corpus(self, spark):
-        """char_k bounds the driver-side vocab collect to O(vocab_k +
-        char_k) on a full-unicode corpus (round-6 verdict #6). 50k+
-        distinct codepoints flow through a whitespace word pattern; the
-        capped charset keeps only the hot codepoints and every OOV char
-        still encodes as exactly one unknown piece (the greedy step-1
-        fallback), so coverage is total and counts stay exact."""
+    def test_vocab_collect_bounded_on_50k_codepoint_corpus(
+        self, spark, monkeypatch
+    ):
+        """The one word tokenizer keeps only [a-z0-9] runs, so the vocab
+        the driver collects is at most vocab_k + 36 pieces even on a
+        corpus of 50k+ distinct codepoints; those codepoints split words
+        and never reach the vocab."""
         from doc_parser_spark.operators.curation import subword_encode_counts
 
         # ~51k distinct codepoints: CJK Unified + Hangul + CJK Ext-B
-        # (astral plane included deliberately — Arrow round-trip check)
+        # (astral plane included deliberately — Arrow round-trip check),
+        # each one glued between two ASCII words
         points = (
             list(range(0x4E00, 0x9FC0))
             + list(range(0xAC00, 0xD7A4))
             + list(range(0x20000, 0x24E00))
         )
         assert len(points) >= 50_000
-        rare_rows = [
-            (i, " ".join(chr(c) for c in points[i * 50:(i + 1) * 50]))
-            for i in range(len(points) // 50)
-        ]
-        # one HOT 3-char word, repeated: its chars win the char_k cut and
-        # the word itself wins a multi-char vocab slot
-        hot = chr(0xAC00) + chr(0xB098) + chr(0xB2E4)
-        # probe word: 3 occ-1 astral codepoints NOT in `points` — they
-        # lose the char_k cut (lex-largest among occ-1) AND, with
-        # vocab_k=3, its substrings lose the multi-piece cut to the hot
-        # word's three occ-6 substrings
-        probe = chr(0x30000) + chr(0x30001) + chr(0x30002)
         docs = spark.createDataFrame(
-            rare_rows
-            + [(90_000, " ".join([hot] * 5))]
-            + [(90_001, hot + " " + probe)],
+            [
+                (i, "".join(f"w{c % 97}" + chr(c)
+                            for c in points[i * 50:(i + 1) * 50]))
+                for i in range(len(points) // 50)
+            ],
             ["doc_id", "text"],
         ).repartition(8)
-        out = {
-            r["doc_id"]: (r["n_words"], r["n_subwords"])
-            for r in subword_encode_counts(
-                docs, "doc_id", "text", vocab_k=3, char_k=100,
-                word_pattern=r"\s+",
-            ).collect()
-        }
-        # hot word is one vocab piece per occurrence
-        assert out[90_000] == (5, 5)
-        # hot word (1 piece) + one 3-char word of rare OOV codepoints
-        # (3 unknown single-char pieces)
-        assert out[90_001] == (2, 1 + 3)
-        # every rare doc: 50 single-codepoint words -> 50 pieces, whether
-        # the codepoint made the cap or not
-        assert out[0] == (50, 50)
-        assert out[len(points) // 50 - 1] == (50, 50)
+        collected = []
+        frame_class = type(docs)
+        real_collect = frame_class.collect
 
-    def test_charset_cap_none_is_bit_identical(self, spark):
-        """Default char_k=None keeps the historical unbounded behavior —
-        the contract query path must be byte-identical."""
-        from doc_parser_spark.operators.curation import subword_encode_counts
+        def spy(df):
+            rows = real_collect(df)
+            collected.append(rows)
+            return rows
 
-        docs = spark.createDataFrame(
-            [(i, f"alpha beta{i} gamma delta epsilon word{i}")
-             for i in range(30)],
-            ["doc_id", "text"],
-        )
-        base = sorted(
-            map(tuple, subword_encode_counts(
-                docs, "doc_id", "text", vocab_k=16).collect())
-        )
-        # cap far above the true charset (36 max under the default
-        # pattern): identical output
-        capped = sorted(
-            map(tuple, subword_encode_counts(
-                docs, "doc_id", "text", vocab_k=16, char_k=500).collect())
-        )
-        assert base == capped
+        monkeypatch.setattr(frame_class, "collect", spy)
+        vocab_k = 3
+        out = subword_encode_counts(docs, "doc_id", "text", vocab_k=vocab_k)
+        (vocab,) = collected
+        pieces = [r["piece"] for r in vocab]
+        assert vocab_k < len(pieces) <= vocab_k + 36
+        assert all(p.isascii() and p.isalnum() for p in pieces)
+        rows = out.collect()
+        assert len(rows) == len(points) // 50
+        # 50 words of 2-3 chars per doc, each at most one piece per char
+        assert all(r["n_words"] == 50 for r in rows)
+        assert all(50 <= r["n_subwords"] <= 150 for r in rows)

@@ -377,3 +377,42 @@ class TestConvertSynthesizedDirectory:
         assert sorted((r.asDict() for r in one), key=key) == sorted(
             split, key=key
         )
+
+
+class TestZeroByteFiles:
+    """Spark's file index lists a zero-length file but its scan yields no
+    row for it; ``convert_directory`` still gives every listed file one
+    row, an empty one the (``empty``, ``skipped``) row of a zero-byte
+    payload."""
+
+    @pytest.fixture(scope="class")
+    def empty_dir(self, tmp_path_factory):
+        d = tmp_path_factory.mktemp("zero")
+        (d / "a.txt").write_text("hello world\n")
+        (d / "empty.txt").write_bytes(b"")
+        (d / "sub").mkdir()
+        (d / "sub" / "b.md").write_text("# B\n\nbody\n")
+        (d / "sub" / "empty.md").write_bytes(b"")
+        return d
+
+    @pytest.mark.parametrize(
+        "glob, names",
+        [
+            (None, ["a.txt", "empty.txt", "sub/b.md", "sub/empty.md"]),
+            ("*.txt", ["a.txt", "empty.txt"]),
+            ("*.md", ["sub/b.md", "sub/empty.md"]),
+        ],
+    )
+    def test_every_listed_file_gets_one_row(self, spark, empty_dir, glob, names):
+        rows = convert_directory(spark, str(empty_dir), glob).collect()
+        prefix = f"file:{empty_dir}/"
+        by_name = {r["path"].removeprefix(prefix): r for r in rows}
+        assert sorted(by_name) == names and len(rows) == len(names)
+        for name, r in by_name.items():
+            if "empty" in name:
+                assert (r["kind"], r["content_type"], r["extracted_text"],
+                        r["spans"], r["parse_status"], r["n_bytes"]) == (
+                    "document", "empty", "", [], "skipped", 0
+                )
+            else:
+                assert r["parse_status"] == "success" and r["n_bytes"] > 0
