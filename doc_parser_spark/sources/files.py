@@ -228,17 +228,22 @@ def convert_directory(
 ) -> DataFrame:
     """The ``DocumentConverter.convert_all`` analog: one call from a
     directory to a DataFrame of converted documents, one row per listed
-    file. Spark's file index lists a zero-length file but its scan yields no
-    row for it, so those files get their (``empty``, ``skipped``) rows from
-    the driver; only their lengths are read."""
+    file. Spark splits a file into ``[0, length)`` ranges, so its scan
+    yields no row for a zero-length file that its file index lists; those
+    files get their (``empty``, ``skipped``) rows from the driver. Their
+    lengths and paths come from the listing that index already holds: no
+    file-system call, no byte read, and the path is the one the scan's
+    ``path`` column would carry."""
     files = read_documents_dir(spark, path, glob)
     converted = convert_files(files)
-    conf = spark._jsc.hadoopConfiguration()
-    empty = []
-    for uri in files.inputFiles():
-        p = spark._jvm.org.apache.hadoop.fs.Path(uri)
-        if p.getFileSystem(conf).getFileStatus(p).getLen() == 0:
-            empty.append(_convert_one(p.toString(), b""))
+    listed = files._jdf.queryExecution().analyzed().relation().location()
+    empty = [
+        _convert_one(s.getPath().toString(), b"")
+        for s in spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            listed.allFiles()
+        )
+        if s.getLen() == 0
+    ]
     if not empty:
         return converted
     return converted.unionByName(spark.createDataFrame(empty, CONVERTED_SCHEMA))

@@ -383,24 +383,27 @@ class TestZeroByteFiles:
     """Spark's file index lists a zero-length file but its scan yields no
     row for it; ``convert_directory`` still gives every listed file one
     row, an empty one the (``empty``, ``skipped``) row of a zero-byte
-    payload."""
+    payload. Names with a space or ``%`` (which the index's URIs escape)
+    keep the scan's ``path`` format, and a hidden empty file stays
+    unlisted, as Spark's listing leaves it."""
 
     @pytest.fixture(scope="class")
     def empty_dir(self, tmp_path_factory):
         d = tmp_path_factory.mktemp("zero")
-        (d / "a.txt").write_text("hello world\n")
-        (d / "empty.txt").write_bytes(b"")
+        (d / "a b.txt").write_text("hello world\n")
+        (d / "empty file.txt").write_bytes(b"")
+        (d / "_empty.txt").write_bytes(b"")
         (d / "sub").mkdir()
         (d / "sub" / "b.md").write_text("# B\n\nbody\n")
-        (d / "sub" / "empty.md").write_bytes(b"")
+        (d / "sub" / "empty%41.md").write_bytes(b"")
         return d
 
     @pytest.mark.parametrize(
         "glob, names",
         [
-            (None, ["a.txt", "empty.txt", "sub/b.md", "sub/empty.md"]),
-            ("*.txt", ["a.txt", "empty.txt"]),
-            ("*.md", ["sub/b.md", "sub/empty.md"]),
+            (None, ["a b.txt", "empty file.txt", "sub/b.md", "sub/empty%41.md"]),
+            ("*.txt", ["a b.txt", "empty file.txt"]),
+            ("*.md", ["sub/b.md", "sub/empty%41.md"]),
         ],
     )
     def test_every_listed_file_gets_one_row(self, spark, empty_dir, glob, names):
