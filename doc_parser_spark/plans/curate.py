@@ -20,6 +20,8 @@ operators; this plan wires them the way a 100 TB pretraining-data job would:
 
 from __future__ import annotations
 
+from collections import UserDict
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,12 +32,17 @@ from doc_parser_spark.operators.extract import extract_turns
 from doc_parser_spark.session import ForkCache, fork
 
 
-class CurationStats(dict):
+class CurationStats(UserDict):
     """Per-stage row counts, collected from the plan's CollectMetrics nodes
     by whatever action the CALLER runs on the returned vectors DataFrame
     (normally the one real write). If the stats are read before any action
     has run, ONE fallback count() fires and fills every stage at once —
     the worst case is one extra job, never five.
+
+    Every read goes through ``__getitem__``, ``__iter__``, ``__len__``,
+    ``__contains__`` or ``__repr__``, and each fills first; the Mapping
+    mixins route ``get``, ``==``, ``copy``, ``pop``, ``keys``/``items``/
+    ``values`` and ``dict(stats)`` through them.
 
     ``unpersist()`` releases ``forks``, the ForkCache the plan was built
     in — the dedup-survivor fork points AND lsh_candidate_pairs' bucket
@@ -70,7 +77,7 @@ class CurationStats(dict):
         if not action_ran:
             self._vectors.count()
         for name, obs in self._observations.items():
-            super().__setitem__(name, int(obs.get["count"]))
+            self.data[name] = int(obs.get["count"])
         self._filled = True
 
     def unpersist(self) -> None:
@@ -80,10 +87,6 @@ class CurationStats(dict):
         self._fill()
         return super().__getitem__(key)
 
-    def __contains__(self, key):
-        self._fill()
-        return super().__contains__(key)
-
     def __iter__(self):
         self._fill()
         return super().__iter__()
@@ -92,57 +95,13 @@ class CurationStats(dict):
         self._fill()
         return super().__len__()
 
-    def keys(self):
+    def __contains__(self, key):
         self._fill()
-        return super().keys()
-
-    def items(self):
-        self._fill()
-        return super().items()
-
-    def values(self):
-        self._fill()
-        return super().values()
-
-    # dict's C-level read paths bypass __getitem__ — each must fill first,
-    # or e.g. stats.get("extracted") before the first action silently
-    # returns None instead of the count.
-    def get(self, key, default=None):
-        self._fill()
-        return super().get(key, default)
-
-    def __eq__(self, other):
-        self._fill()
-        return dict.__eq__(dict(self.items()), other)
-
-    def __ne__(self, other):
-        # dict.__eq__ returns NotImplemented for non-dict others; `not
-        # NotImplemented` is a TypeError on Python 3.12+ — propagate it
-        # so the interpreter falls back to identity comparison.
-        r = self.__eq__(other)
-        return r if r is NotImplemented else not r
-
-    __hash__ = None  # mutable mapping, same as dict
-
-    def copy(self):
-        self._fill()
-        return dict(super().items())
-
-    def pop(self, key, *default):
-        self._fill()
-        return super().pop(key, *default)
-
-    def popitem(self):
-        self._fill()
-        return super().popitem()
-
-    def setdefault(self, key, default=None):
-        self._fill()
-        return super().setdefault(key, default)
+        return super().__contains__(key)
 
     def __repr__(self):
         self._fill()
-        return dict.__repr__(self)
+        return super().__repr__()
 
 
 def _observe(df: DataFrame, obs_map: dict[str, Observation],

@@ -7,6 +7,16 @@ is plain ANSI SQL DuckDB can run on the same tables. Payload-construction SQL
 fragments are shared verbatim between both sides so the comparison checks the
 operator, not the test harness.
 
+Each rule is written once. A CTE that two oracles share is one module
+constant or one small ``_x_sql(...)`` function interpolated at each use
+(the paragraph split, the MinHash-LSH buckets and Jaccard verify, the IVF
+assignment, sequence and segment packing, the connected-components
+closure, the token list); query builders that differ in one argument are
+one factory (``_office_query``, ``_media_query``, ``_bbox_merge_query``,
+``_asof_query``, ``_ivf_query``). The sha256 of ``ORACLES`` pinned in
+tests/test_driver_contract.py proves that sharing a fragment changed no
+oracle byte.
+
 Determinism rules:
 - every float output is round(x, 4) double on both sides;
 - every computed column is aliased identically on both sides;
@@ -16,6 +26,7 @@ Determinism rules:
 from __future__ import annotations
 
 import re
+from textwrap import indent
 from typing import Callable
 
 import pandas as pd
@@ -23,9 +34,108 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from doc_parser_spark.functions.export_md import extract_html_markdown
 from doc_parser_spark.functions.sanitize import sanitize_text
+from doc_parser_spark.functions.textnorm import nfc_normalize_col
+from doc_parser_spark.operators.chunking import compose_vectors
+from doc_parser_spark.operators.conversation import (
+    salted_agg,
+    with_conversation_context,
+)
+from doc_parser_spark.operators.curation import (
+    corpus_diff,
+    curriculum_shards,
+    decontaminate_ngrams,
+    lang_id_ngram,
+    lm_bigram_score,
+    lm_quality_score,
+    mine_phrases,
+    pack_segments,
+    pack_sequences,
+    profile_corpus,
+    sample_threshold_hex,
+    script_profile,
+    stratified_sample,
+    subword_encode_counts,
+    temperature_mixture_sample,
+    tfidf_top_terms,
+    train_val_test_split,
+    vocab_drift,
+    weighted_sample_k,
+)
+from doc_parser_spark.operators.dedup import (
+    cluster_canonical,
+    connected_components,
+    dedup_incremental_indexed,
+    dedup_index,
+    duplicated_substring_spans,
+    duplicated_token_fraction,
+    exact_dedup,
+    lsh_candidate_pairs,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+    shingle_expr_from_words,
+    simhash,
+    simhash_hamming_pairs,
+    simhash_oracle_sql,
+)
+from doc_parser_spark.operators.enrichment import toc_match_back
+from doc_parser_spark.operators.export import from_doc_json, to_doc_json
 from doc_parser_spark.operators.extract import extract_turns, map_rows
+from doc_parser_spark.operators.graph import pagerank, triangle_count
+from doc_parser_spark.operators.layout import zorder_value
+from doc_parser_spark.operators.multimodal import (
+    MEDIA_SCHEMA,
+    audio_features,
+    decode_images,
+    video_frames,
+    video_metadata,
+)
+from doc_parser_spark.operators.office import extract_office_docs
+from doc_parser_spark.operators.search import bm25_topk, build_inverted_index
+from doc_parser_spark.operators.similarity import (
+    allpairs_cosine_pairs,
+    ann_lsh_topk,
+    cosine_scores,
+    ivf_assignments,
+    ivf_topk,
+    ivf_train_kmeans,
+    lsh_bucket_oracle_sql,
+    lsh_neardup_pairs,
+    quantize_int8,
+    random_projection,
+    topk,
+)
+from doc_parser_spark.operators.spans import merge_bboxes_2d
+from doc_parser_spark.operators.temporal import (
+    asof_join,
+    choose_rollup_levels,
+    funnel,
+    range_join,
+    resample_ffill,
+    rolling_features,
+    rollup_timeseries,
+)
 from doc_parser_spark.session import fork
+from doc_parser_spark.sources.synth_media import (
+    build_avi,
+    build_gif,
+    build_jpeg,
+    build_mp3,
+    build_mp4,
+    build_png,
+    build_tiff,
+    build_wav,
+)
+from doc_parser_spark.sources.synth_office import (
+    build_docx,
+    build_hwpx,
+    build_pptx,
+    build_xlsx,
+)
+from doc_parser_spark.sources.synth_pdf import build_report_pdf
+from doc_parser_spark.sources.synth_webp import build_webp, build_webp_lossy
+from doc_parser_spark.streaming.stream import guarded_accepted
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (valid in both Spark SQL and DuckDB)
@@ -186,14 +296,12 @@ FROM documents
 # B2 — blank-line paragraph segmentation (pymupdf_backend.py:88-121)
 # ---------------------------------------------------------------------------
 def _paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blank-line paragraph segmentation, fully in JVM expressions (round 8).
+    """Blank-line paragraph segmentation, fully in JVM expressions.
 
-    The old mapInPandas ran ``split_paragraphs`` row-at-a-time in Python —
-    an Arrow round trip plus a per-row Python loop for logic the oracle
-    itself states relationally (split on the exact "\\n \\n" separator,
-    collapse intra-paragraph line breaks, trim, drop empties, re-index).
-    This mirrors that relational form with split/transform/filter/
-    posexplode so the whole query stays in WholeStageCodegen: no
+    The oracle states the rule relationally (split on the exact "\\n \\n"
+    separator, collapse intra-paragraph line breaks, trim, drop empties,
+    re-index); this mirrors it with split/transform/filter/posexplode so
+    the whole query stays in WholeStageCodegen: no Arrow round trip, no
     BatchEvalPython/ArrowEvalPython node, no shuffle (the paragraph index
     is the position in the filtered array, not a window).
 
@@ -228,10 +336,9 @@ def q_b2_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the oracle mirrors the flush semantics relationally: split on the exact
+# the oracles mirror the flush semantics relationally: split on the exact
 # separator, collapse intra-paragraph line breaks, drop empties, re-index
-ORACLE_B2 = f"""
-WITH parts AS (
+_CLEANED_CTES = f"""WITH parts AS (
   SELECT doc_id,
          unnest(string_split({PAYLOAD_PARAS}, chr(10) || ' ' || chr(10)))
            AS part,
@@ -242,7 +349,15 @@ WITH parts AS (
   SELECT doc_id, pos,
          trim(regexp_replace(part, '[ \t]*\n[ \t]*', ' ', 'g')) AS para
   FROM parts
-)
+)"""
+_PARA_CTES = _CLEANED_CTES + """, paras AS (
+  SELECT doc_id, para,
+         row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS para_idx
+  FROM cleaned WHERE para <> ''
+)"""
+
+ORACLE_B2 = f"""
+{_CLEANED_CTES}
 SELECT doc_id::BIGINT AS doc_id,
        row_number() OVER (PARTITION BY doc_id ORDER BY pos)::INT AS para_idx,
        para,
@@ -255,16 +370,15 @@ FROM cleaned WHERE para <> ''
 # P1 — text-quality scoring (page_preprocessing_model.py:116-141)
 # ---------------------------------------------------------------------------
 def _quality_col(payload: "F.Column") -> "F.Column":
-    """``rate_text_quality`` as a JVM expression (round 8, guide §4).
+    """``rate_text_quality`` as a JVM expression (guide §4).
 
     Mirrors functions/quality.py:19-37 branch for branch, including the
     exact substring fast path (no '/', no '\\ufffd', no 'GLYPH<' → 1.0)
     so clean text never runs a regex; the regexes are byte-identical to
     the Python ones (Java and Python agree on these ASCII-only patterns —
     pinned by tests/test_r08_jvm_parity.py, exact double equality).
-    The old pandas UDF shipped every payload across the Arrow boundary
-    just to run four regex probes; this keeps the whole scorer inside
-    WholeStageCodegen (no ArrowEvalPython node).
+    No payload crosses the Arrow boundary for four regex probes: the
+    whole scorer stays inside WholeStageCodegen (no ArrowEvalPython node).
     """
     # (?U) = Java UNICODE_CHARACTER_CLASS: makes \w/\d/\s/\b Unicode-aware
     # like Python's re, so e.g. '/é /û' garbage and Unicode digits after
@@ -394,22 +508,7 @@ def q_o1_compose_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_O1 = f"""
-WITH parts AS (
-  SELECT doc_id,
-         unnest(string_split({PAYLOAD_PARAS}, chr(10) || ' ' || chr(10)))
-           AS part,
-         unnest(range(1, len(string_split({PAYLOAD_PARAS},
-                 chr(10) || ' ' || chr(10))) + 1)) AS pos
-  FROM documents
-), cleaned AS (
-  SELECT doc_id, pos,
-         trim(regexp_replace(part, '[ \t]*\n[ \t]*', ' ', 'g')) AS para
-  FROM parts
-), paras AS (
-  SELECT doc_id, para,
-         row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS para_idx
-  FROM cleaned WHERE para <> ''
-)
+{_PARA_CTES}
 SELECT doc_id::BIGINT AS doc_id,
        para AS text,
        length(para)::INT AS n_char,
@@ -431,15 +530,11 @@ def q_o6_confidence_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap to percentile_approx (t-digest, map-side combinable) — the oracle
     pins the exact variant because approx sketches aren't reproducible
     across engines."""
-    # round 8: lang rides the same scan as the payload — the old
-    # q_p1 ⋈ docs self-join re-read the parquet and shuffled/broadcast
-    # 1:1-matching rows only to re-attach a column that was already on
-    # the row (quality per doc unchanged, so the aggregate is identical)
+    # lang rides the same scan as the payload: no self-join re-reads the
+    # parquet to re-attach a column that is already on the row
     docs = _docs(spark, sf_dir).select(
         "lang", F.expr(PAYLOAD_QUALITY).alias("payload")
     )
-    # round 8: the scorer is a JVM expression (_quality_col) — the old
-    # pandas UDF shipped every payload across Arrow to run 4 regex probes
     scored = docs.select(
         "lang", F.round(_quality_col(F.col("payload")), 4).alias("quality")
     )
@@ -551,18 +646,7 @@ def q_c2_chunk_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_C2 = f"""
-WITH parts AS (
-  SELECT doc_id,
-         unnest(string_split({PAYLOAD_PARAS}, chr(10) || ' ' || chr(10)))
-           AS part,
-         unnest(range(1, len(string_split({PAYLOAD_PARAS},
-                 chr(10) || ' ' || chr(10))) + 1)) AS pos
-  FROM documents
-), cleaned AS (
-  SELECT doc_id, pos,
-         trim(regexp_replace(part, '[ \t]*\n[ \t]*', ' ', 'g')) AS para
-  FROM parts
-), paras AS (
+{_CLEANED_CTES}, paras AS (
   SELECT doc_id, para,
          row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS para_idx,
          len(string_split(para, ' ')) AS tokens
@@ -705,20 +789,6 @@ FROM per_session GROUP BY user_id
 # ===========================================================================
 # batch 2 — dedup / similarity / text-analysis / relational operators
 # ===========================================================================
-from doc_parser_spark.operators.dedup import (  # noqa: E402
-    exact_dedup,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_oracle_sql,
-)
-from doc_parser_spark.operators.similarity import (  # noqa: E402
-    ann_lsh_topk,
-    cosine_scores,
-    topk,
-)
-
 # exact-dup corpus: 30% of docs share one canonical payload
 PAYLOAD_EXACTDUP = (
     "CASE WHEN doc_id % 10 < 3 THEN 'duplicate canonical payload' "
@@ -805,12 +875,60 @@ def _minhash_cols_sql(k: int = 8) -> str:
     )
 
 
-ORACLE_MINHASH = f"""
-WITH corpus AS ({NEARDUP_SQL}),
-sh AS (
+# shingle sets of a ``corpus(doc_id, payload)`` CTE
+_SH_CTE = f"""sh AS (
   SELECT doc_id, {_SHINGLE_SQL} AS shingles
   FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
-)
+)"""
+
+
+def _lsh_buckets_sql(sigs_where: str = "") -> str:
+    """CTEs ``sh``, ``sigs`` (8 MinHash columns), ``banded`` and
+    ``buckets`` (two 4-row bands) over a ``corpus(doc_id, payload)`` CTE:
+    the SQL twin of lsh_candidate_pairs' defaults (k=8, bands=2)."""
+    return f"""{_SH_CTE},
+sigs AS (
+  SELECT doc_id, {_minhash_cols_sql(8)} FROM sh
+),
+banded AS (
+  SELECT doc_id AS id,
+         md5(concat_ws('|', m0, m1, m2, m3)) AS band0,
+         md5(concat_ws('|', m4, m5, m6, m7)) AS band1
+  FROM sigs{sigs_where}
+),
+buckets AS (
+  SELECT id, 0 AS band, band0 AS bucket FROM banded
+  UNION ALL
+  SELECT id, 1 AS band, band1 AS bucket FROM banded
+)"""
+
+
+# candidate pairs: two ids sharing a (band, bucket)
+_LSH_CANDS_CTES = _lsh_buckets_sql() + """,
+cands AS (
+  SELECT DISTINCT a.id AS a_id, b.id AS b_id
+  FROM buckets a JOIN buckets b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
+)"""
+
+# verify join of ``cands``: exact shingle Jaccard >= 0.2
+_LSH_VERIFY_SQL = """FROM cands c
+JOIN sh sa ON sa.doc_id = c.a_id
+JOIN sh sb ON sb.doc_id = c.b_id
+WHERE len(list_intersect(sa.shingles, sb.shingles))
+      / (len(sa.shingles) + len(sb.shingles)
+         - len(list_intersect(sa.shingles, sb.shingles))) >= 0.2"""
+
+_LSH_PAIRS_SQL = f"""SELECT c.a_id, c.b_id,
+       round(len(list_intersect(sa.shingles, sb.shingles))
+             / (len(sa.shingles) + len(sb.shingles)
+                - len(list_intersect(sa.shingles, sb.shingles))), 4) AS jaccard
+{_LSH_VERIFY_SQL}"""
+
+
+ORACLE_MINHASH = f"""
+WITH corpus AS ({NEARDUP_SQL}),
+{_SH_CTE}
 SELECT doc_id, {_minhash_cols_sql(8)} FROM sh
 """
 
@@ -825,39 +943,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_MINHASH_LSH = f"""
 WITH corpus AS ({NEARDUP_SQL}),
-sh AS (
-  SELECT doc_id, {_SHINGLE_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
-),
-sigs AS (
-  SELECT doc_id, {_minhash_cols_sql(8)} FROM sh
-),
-banded AS (
-  SELECT doc_id AS id,
-         md5(concat_ws('|', m0, m1, m2, m3)) AS band0,
-         md5(concat_ws('|', m4, m5, m6, m7)) AS band1
-  FROM sigs
-),
-buckets AS (
-  SELECT id, 0 AS band, band0 AS bucket FROM banded
-  UNION ALL
-  SELECT id, 1 AS band, band1 AS bucket FROM banded
-),
-cands AS (
-  SELECT DISTINCT a.id AS a_id, b.id AS b_id
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-)
-SELECT c.a_id, c.b_id,
-       round(len(list_intersect(sa.shingles, sb.shingles))
-             / (len(sa.shingles) + len(sb.shingles)
-                - len(list_intersect(sa.shingles, sb.shingles))), 4) AS jaccard
-FROM cands c
-JOIN sh sa ON sa.doc_id = c.a_id
-JOIN sh sb ON sb.doc_id = c.b_id
-WHERE len(list_intersect(sa.shingles, sb.shingles))
-      / (len(sa.shingles) + len(sb.shingles)
-         - len(list_intersect(sa.shingles, sb.shingles))) >= 0.2
+{_LSH_CANDS_CTES}
+{_LSH_PAIRS_SQL}
 """
 
 
@@ -936,10 +1023,8 @@ FROM documents
 
 
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import shingle_expr_from_words
-
-    # round 8: split materialized once per row (shingling from an inline
-    # split re-split the text per shingle inside its transform lambda)
+    # split once per row: shingling from an inline split would re-split
+    # the text per shingle inside its transform lambda
     return (
         _docs(spark, sf_dir)
         .withColumn("_w", F.split(F.col("text"), " "))
@@ -993,13 +1078,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk(emb, "vec_id", "embedding", _query_vec(spark, sf_dir), k=10)
 
 
-ORACLE_SIM_TOPK = """
-SELECT vec_id,
-       round(list_cosine_similarity(embedding::DOUBLE[],
-             (SELECT embedding FROM embeddings WHERE vec_id = 0)::DOUBLE[]), 4)
-         AS score
-FROM embeddings
-ORDER BY score DESC, vec_id
+ORACLE_SIM_TOPK = ORACLE_SIM_COSINE + """ORDER BY score DESC, vec_id
 LIMIT 10
 """
 
@@ -1086,12 +1165,8 @@ def q_b1_html_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # density mode drops the nav items and the all-link paragraph; what remains
-# is the title and the article paragraph
-ORACLE_B1_DENSITY = """
-SELECT doc_id::BIGINT AS doc_id,
-       'Doc ' || doc_id || chr(10) || chr(10) || trim(text) AS extracted_text
-FROM documents
-"""
+# is the title and the article paragraph, as in b1
+ORACLE_B1_DENSITY = ORACLE_B1
 
 
 def q_events_topk_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,8 +1202,6 @@ FROM (
 def q_doc_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B17/O7: extraction → lossless JSON → parse back; output must equal
     the direct extraction (the oracle mirrors q_b1_html_extract)."""
-    from doc_parser_spark.operators.export import from_doc_json, to_doc_json
-
     extracted = _one_turn_extract(spark, sf_dir, PAYLOAD_HTML, "*")
     roundtripped = from_doc_json(to_doc_json(extracted))
     return roundtripped.select(
@@ -1186,10 +1259,6 @@ PAYLOAD_CONTEXT = (
 
 
 def q_c1_cross_turn_context(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.conversation import (
-        with_conversation_context,
-    )
-
     docs = _docs(spark, sf_dir).select(
         F.expr(_C1_CONV_ID).alias("conv_id"),
         (F.col("doc_id") / 20).cast("int").alias("turn_idx"),
@@ -1259,12 +1328,10 @@ GROUP BY l_returnflag, l_linestatus
 def q_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem ⋈ orders + month rollup.
 
-    Round 8 (guide §2.3/§3): the month string is derived on the ORDERS
-    side before the join, so date_format runs once per order (the build
-    side) instead of once per joined lineitem row (~4× more), and the
-    probe side carries only the three columns the aggregate needs.
-    Grouping keys, join rows and the per-row product are unchanged, so
-    the aggregate (and the oracle hash) is identical."""
+    Guide §2.3/§3: the month string is derived on the ORDERS side before
+    the join, so date_format runs once per order (the build side) instead
+    of once per joined lineitem row (~4× more), and the probe side carries
+    only the three columns the aggregate needs."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -1300,13 +1367,11 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant of near-duplicate detection. Brute force is the baseline; at
     scale the IVF/LSH bucket join replaces the cross join.
 
-    Round 8: the naive a⋈b cross join evaluated three interpreted
-    64-element folds per pair (77 s at sf0.1); allpairs_cosine_pairs
-    computes the same pair set via block-GEMM candidates + exact fold
-    verify (~3 s), output bit-identical (operator docstring has the
-    margin argument; parity pinned in tests/test_r08_jvm_parity.py)."""
-    from doc_parser_spark.operators.similarity import allpairs_cosine_pairs
-
+    A naive a⋈b cross join evaluates three interpreted 64-element folds
+    per pair (77 s at sf0.1); allpairs_cosine_pairs computes the same pair
+    set via block-GEMM candidates + exact fold verify (~3 s), output
+    bit-identical (operator docstring has the margin argument; parity
+    pinned in tests/test_r08_jvm_parity.py)."""
     emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
     return allpairs_cosine_pairs(emb, "vec_id", "embedding", threshold=0.3)
 
@@ -1333,22 +1398,10 @@ def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.similarity import ivf_topk
-
-    emb = _embeddings(spark, sf_dir)
-    return ivf_topk(
-        emb, "vec_id", "embedding", _query_vec(spark, sf_dir),
-        _centroids(spark, sf_dir), k=10,
-    )
-
-
-ORACLE_SIM_IVF = """
-WITH centroids AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings WHERE vec_id % 50 = 0
-),
-assigned AS (
+def _km_assign_sql(cents_cte: str) -> str:
+    """Body of a CTE assigning every embedding to its nearest centroid of
+    ``cents_cte(centroid_id, cvec)``: 4-dp cosine, ties by centroid id."""
+    return f"""
   SELECT vec_id, embedding, centroid_id FROM (
     SELECT e.vec_id, e.embedding, c.centroid_id,
            row_number() OVER (
@@ -1356,11 +1409,33 @@ assigned AS (
              ORDER BY round(list_cosine_similarity(
                e.embedding::DOUBLE[], c.cvec::DOUBLE[]), 4) DESC,
                c.centroid_id) AS rk
-    FROM embeddings e CROSS JOIN centroids c
+    FROM embeddings e CROSS JOIN {cents_cte} c
   ) WHERE rk = 1
+"""
+
+
+def _ivf_query(nprobe: int) -> Callable[[SparkSession, str], DataFrame]:
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        emb = _embeddings(spark, sf_dir)
+        return ivf_topk(
+            emb, "vec_id", "embedding", _query_vec(spark, sf_dir),
+            _centroids(spark, sf_dir), k=10, nprobe=nprobe,
+        )
+
+    return q
+
+
+def _ivf_oracle(qc: str) -> str:
+    """The 10 vectors nearest vector 0 among those assigned to a probed
+    centroid; ``qc`` selects the probed ``qcentroid`` ids."""
+    return f"""
+WITH centroids AS (
+  SELECT vec_id AS centroid_id, embedding AS cvec
+  FROM embeddings WHERE vec_id % 50 = 0
 ),
+assigned AS ({_km_assign_sql('centroids')}),
 qc AS (
-  SELECT centroid_id AS qcentroid FROM assigned WHERE vec_id = 0
+  {qc}
 )
 SELECT a.vec_id,
        round(list_cosine_similarity(a.embedding::DOUBLE[],
@@ -1370,6 +1445,13 @@ FROM assigned a JOIN qc ON a.centroid_id = qc.qcentroid
 ORDER BY score DESC, a.vec_id
 LIMIT 10
 """
+
+
+q_sim_ivf_topk = _ivf_query(1)
+
+ORACLE_SIM_IVF = _ivf_oracle(
+    "SELECT centroid_id AS qcentroid FROM assigned WHERE vec_id = 0"
+)
 
 
 # ===========================================================================
@@ -1428,8 +1510,6 @@ def q_o7_markdown_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the byte-exact markdown exporter (verified against the reference's
     own groundtruth files in tests/test_reference_markdown.py) inside the
     Arrow batch; oracle computes the expected md by construction."""
-    from doc_parser_spark.functions.export_md import extract_html_markdown
-
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(PAYLOAD_HTML).alias("payload")
     )
@@ -1528,8 +1608,6 @@ FROM documents
 def q_salted_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe two-phase aggregation (explicit salting — AQE only covers
     join skew) must equal the plain groupBy exactly."""
-    from doc_parser_spark.operators.conversation import salted_agg
-
     ev = _events(spark, sf_dir).withColumn(
         "v", F.round(F.col("value"), 4)
     )
@@ -1640,8 +1718,6 @@ REG_DATE_FIXED = "2026-01-01T00:00:00Z"
 def q_o1_vector_meta_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Route paragraph chunks + synthetic metadata columns through the REAL
     compose_vectors operator; every GenOSVectorMeta field is oracled."""
-    from doc_parser_spark.operators.chunking import compose_vectors
-
     paras = _paragraphs(spark, sf_dir)
     chunks = paras.select(
         F.col("doc_id").cast("string").alias("conv_id"),
@@ -1691,22 +1767,7 @@ def q_o1_vector_meta_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_O1_FULL = f"""
-WITH parts AS (
-  SELECT doc_id,
-         unnest(string_split({PAYLOAD_PARAS}, chr(10) || ' ' || chr(10)))
-           AS part,
-         unnest(range(1, len(string_split({PAYLOAD_PARAS},
-                 chr(10) || ' ' || chr(10))) + 1)) AS pos
-  FROM documents
-), cleaned AS (
-  SELECT doc_id, pos,
-         trim(regexp_replace(part, '[ \t]*\n[ \t]*', ' ', 'g')) AS para
-  FROM parts
-), paras AS (
-  SELECT doc_id, para,
-         row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS para_idx
-  FROM cleaned WHERE para <> ''
-)
+{_PARA_CTES}
 SELECT doc_id::BIGINT AS doc_id,
        para AS text,
        length(para)::INT AS n_char,
@@ -1745,27 +1806,38 @@ FROM paras
 # that never overlapped directly) are covered in tests/test_bbox_merge.py
 # against the kernel, where SQL cannot express the semantics.
 # ===========================================================================
-def q_o3_bbox_merge_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.spans import merge_bboxes_2d
+def _bbox_merge_query(
+    page: str, *keys: str
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Event boxes on the pages of SQL ``page``, two disjoint y-bands,
+    merged by the 2-D fixpoint kernel; box count and total width per
+    (user_id, ``keys``, band)."""
 
-    ev = _events(spark, sf_dir)
-    boxes = ev.select(
-        "user_id",
-        F.lit(1).cast("int").alias("page"),
-        F.lit("text").alias("btype"),
-        F.col("value").alias("l"),
-        ((F.col("event_id") % 2) * 100.0).alias("t"),
-        (F.col("value") + 10.0).alias("r"),
-        ((F.col("event_id") % 2) * 100.0 + 10.0).alias("b"),
-    )
-    merged = merge_bboxes_2d(boxes, ["user_id"], x_tolerance=1.0, y_tolerance=1.0)
-    return merged.groupBy(
-        "user_id", (F.col("t") / 100.0).cast("int").alias("band")
-    ).agg(
-        F.count("*").alias("n_boxes"),
-        F.round(F.sum(F.col("r") - F.col("l")), 4).alias("total_w"),
-    )
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ev = _events(spark, sf_dir)
+        boxes = ev.select(
+            "user_id",
+            F.expr(page).cast("int").alias("page"),
+            F.lit("text").alias("btype"),
+            F.col("value").alias("l"),
+            ((F.col("event_id") % 2) * 100.0).alias("t"),
+            (F.col("value") + 10.0).alias("r"),
+            ((F.col("event_id") % 2) * 100.0 + 10.0).alias("b"),
+        )
+        merged = merge_bboxes_2d(
+            boxes, ["user_id"], x_tolerance=1.0, y_tolerance=1.0
+        )
+        return merged.groupBy(
+            "user_id", *keys, (F.col("t") / 100.0).cast("int").alias("band")
+        ).agg(
+            F.count("*").alias("n_boxes"),
+            F.round(F.sum(F.col("r") - F.col("l")), 4).alias("total_w"),
+        )
 
+    return q
+
+
+q_o3_bbox_merge_2d = _bbox_merge_query("1")
 
 ORACLE_O3_BBOX_2D = """
 WITH boxes AS (
@@ -1796,8 +1868,8 @@ FROM merged GROUP BY user_id, band
 
 # ===========================================================================
 # batch 14 — dedicated per-backend oracles for B3 (pdfish), B6 (markdown),
-# B7 (csv): each backend previously rode only inside the flagship mixed
-# query; these give every implemented SURVEY §2 backend its own hard signal.
+# B7 (csv): every implemented SURVEY §2 backend gets its own hard signal,
+# not only a share of the flagship mixed query.
 # ===========================================================================
 PAYLOAD_PDFISH = (
     "'%PDF-SIM' || chr(10) || '#page 1 612.0 792.0' || chr(10) "
@@ -1871,14 +1943,10 @@ FROM documents
 
 
 # ===========================================================================
-# batch 15 — DuckDB oracle for the ANN-LSH query (was the one rows-only row):
-# the hyperplane-sign expression is deterministic SQL, portable the same way
-# simhash_oracle_sql is.
+# batch 15 — DuckDB oracle for the ANN-LSH query: the hyperplane-sign
+# expression is deterministic SQL, portable the same way simhash_oracle_sql
+# is.
 # ===========================================================================
-from doc_parser_spark.operators.similarity import (  # noqa: E402
-    lsh_bucket_oracle_sql,
-)
-
 ORACLE_SIM_ANN_LSH = f"""
 WITH b AS (
   SELECT vec_id, embedding,
@@ -1909,8 +1977,6 @@ def q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SCRUBBED text (scrub-then-dedup is the correct order: two docs
     differing only in emails/URLs are duplicates). Output: one row per doc
     with its gate verdicts and final keep decision."""
-    from doc_parser_spark.operators.dedup import exact_dedup
-
     payload = (
         "CASE WHEN doc_id % 7 = 3 THEN 'tiny' "
         "WHEN doc_id % 7 = 5 THEN text || ' visit https://x.example/' "
@@ -2109,50 +2175,16 @@ SELECT doc_id, unnest(fps) AS fp FROM fp
 # ===========================================================================
 # batch 19 — IVF multi-probe (nprobe=2): the standard ANN recall lever
 # ===========================================================================
-def q_sim_ivf_topk_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.similarity import ivf_topk
+q_sim_ivf_topk_probe2 = _ivf_query(2)
 
-    emb = _embeddings(spark, sf_dir)
-    return ivf_topk(
-        emb, "vec_id", "embedding", _query_vec(spark, sf_dir),
-        _centroids(spark, sf_dir), k=10, nprobe=2,
-    )
-
-
-ORACLE_SIM_IVF_P2 = """
-WITH centroids AS (
-  SELECT vec_id AS centroid_id, embedding AS cvec
-  FROM embeddings WHERE vec_id % 50 = 0
-),
-assigned AS (
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT e.vec_id, e.embedding, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(
-               e.embedding::DOUBLE[], c.cvec::DOUBLE[]), 4) DESC,
-               c.centroid_id) AS rk
-    FROM embeddings e CROSS JOIN centroids c
-  ) WHERE rk = 1
-),
-qc AS (
-  SELECT centroid_id AS qcentroid FROM (
+ORACLE_SIM_IVF_P2 = _ivf_oracle("""SELECT centroid_id AS qcentroid FROM (
     SELECT c.centroid_id,
            row_number() OVER (
              ORDER BY round(list_cosine_similarity(
                (SELECT embedding FROM embeddings WHERE vec_id = 0)::DOUBLE[],
                c.cvec::DOUBLE[]), 4) DESC, c.centroid_id) AS rk
     FROM centroids c
-  ) WHERE rk <= 2
-)
-SELECT a.vec_id,
-       round(list_cosine_similarity(a.embedding::DOUBLE[],
-             (SELECT embedding FROM embeddings WHERE vec_id = 0)::DOUBLE[]),
-             4) AS score
-FROM assigned a JOIN qc ON a.centroid_id = qc.qcentroid
-ORDER BY score DESC, a.vec_id
-LIMIT 10
-"""
+  ) WHERE rk <= 2""")
 
 
 # ===========================================================================
@@ -2161,8 +2193,6 @@ LIMIT 10
 # correctness baseline; this is the shape that survives 10^9 vectors)
 # ===========================================================================
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.similarity import lsh_neardup_pairs
-
     emb = _embeddings(spark, sf_dir)
     return lsh_neardup_pairs(emb, "vec_id", "embedding", threshold=0.3, planes=6)
 
@@ -2190,32 +2220,23 @@ WHERE round(list_cosine_similarity(a.v::DOUBLE[], bb.v::DOUBLE[]), 4) >= 0.3
 # ===========================================================================
 def _kernel_spread(docs: DataFrame) -> DataFrame:
     """Spread rows before a compute-bound per-row kernel (office zip
-    build+parse, media codec decode). The documents table is a few hundred
-    KB, so the byte-derived parquet split count is ONE — and everything
-    downstream of the first row map inherits that single task, running
-    the whole per-doc kernel chain on one core (measured: m8 7.3 s,
-    b10 1.4 s single-task walls, ~0 s of it Spark work). Guide §2: the
-    work here is per-ROW compute that byte-based planning cannot see, the
-    exact shape the extract path's routing shuffle already handles. The
-    repartition fires ONLY when the scan's split count is below 2× the
-    runtime's declared parallelism — a genuinely large input is already
-    well-split and skips the exchange entirely (no payload bytes
-    shuffled for nothing) — and uses an EXPLICIT count because AQE's
-    byte-based coalescing would fold these tiny-byte partitions straight
-    back into one task. Keyed on doc_id (deterministic, retry-safe)."""
-    sc = docs.sparkSession.sparkContext
-    target = 2 * sc.defaultParallelism
-    if docs.rdd.getNumPartitions() >= target:
-        # already well-split (a genuinely large input): adding a full
-        # repartition here would shuffle every payload byte for nothing
-        return docs
+    build+parse, media codec decode). Both callers read the contract
+    documents table, a few hundred KB at every scale factor, so the
+    byte-derived parquet split count is ONE — and everything downstream of
+    the first row map inherits that single task, running the whole per-doc
+    kernel chain on one core (measured: m8 7.3 s, b10 1.4 s single-task
+    walls, ~0 s of it Spark work). Guide §2: the work here is per-ROW
+    compute that byte-based planning cannot see, the exact shape the
+    extract path's routing shuffle already handles. The count is EXPLICIT,
+    2× the runtime's declared parallelism, because AQE's byte-based
+    coalescing would fold these tiny-byte partitions straight back into
+    one task. Keyed on doc_id (deterministic, retry-safe)."""
+    target = 2 * docs.sparkSession.sparkContext.defaultParallelism
     return docs.repartition(target, "doc_id")
 
 
 def _office_query(builder) -> Callable[[SparkSession, str], DataFrame]:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from doc_parser_spark.operators.office import extract_office_docs
-
         docs = _kernel_spread(
             _docs(spark, sf_dir).select(
                 F.col("doc_id").cast("long").alias("doc_id"), "text"
@@ -2236,22 +2257,16 @@ def _office_query(builder) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def _build_docx_payload(doc_id: int, text: str) -> bytes:
-    from doc_parser_spark.sources.synth_office import build_docx
-
     return build_docx(f"Doc {doc_id}", [text], [f"alpha {doc_id}", "bravo"])
 
 
 def _build_xlsx_payload(doc_id: int, text: str) -> bytes:
-    from doc_parser_spark.sources.synth_office import build_xlsx
-
     return build_xlsx(
         "Data", [["name", "score"], [f"doc{doc_id}", str(doc_id % 97)]]
     )
 
 
 def _build_pptx_payload(doc_id: int, text: str) -> bytes:
-    from doc_parser_spark.sources.synth_office import build_pptx
-
     return build_pptx(f"Deck {doc_id}", [f"alpha {doc_id}", "bravo"])
 
 
@@ -2371,8 +2386,6 @@ def q_b4_pdf_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id")
     )
 
-    from doc_parser_spark.sources.synth_pdf import build_report_pdf
-
     transcripts = map_rows(
         docs,
         lambda i: [(str(i), 0, build_report_pdf(i).decode("latin-1"))],
@@ -2412,8 +2425,6 @@ FROM documents
 # sequence vs hwpx_sample.json).
 # ===========================================================================
 def _build_hwpx_payload(doc_id: int, text: str) -> bytes:
-    from doc_parser_spark.sources.synth_office import build_hwpx
-
     return build_hwpx(doc_id, text or "")
 
 
@@ -2436,13 +2447,6 @@ FROM documents
 # batch 26 — corpus curation: benchmark decontamination, deterministic
 # stratified sampling, token-budget sequence packing (operators/curation.py)
 # ===========================================================================
-from doc_parser_spark.operators.curation import (  # noqa: E402
-    decontaminate_ngrams,
-    pack_sequences,
-    sample_threshold_hex,
-    stratified_sample,
-)
-
 # contamination corpus: every doc_id % 7 == 3 doc carries a shared sentinel
 # sentence; doc 164 (% 41 == 0 AND % 7 == 3) puts that sentence in the
 # benchmark set, so the whole % 7 == 3 stratum is deterministically
@@ -2458,6 +2462,16 @@ _SHINGLE5_SQL = (
     "for i in range(1, len(w) - 3)])"
 )
 
+# sh(doc_id, shingles) of a ``corpus(doc_id, payload)`` CTE and bl(grams),
+# every 5-gram of the benchmark docs (doc_id % 41 = 0)
+_BLOCKLIST_CTES = f"""sh AS (
+  SELECT doc_id, {_SHINGLE5_SQL} AS shingles
+  FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
+), bl AS (
+  SELECT list(DISTINCT g.ngram) AS grams
+  FROM (SELECT unnest(shingles) AS ngram FROM sh WHERE doc_id % 41 = 0) g
+)"""
+
 
 def q_curate_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
@@ -2472,13 +2486,7 @@ ORACLE_CURATE_DECONTAM = f"""
 WITH corpus AS (
   SELECT doc_id::BIGINT AS doc_id, {PAYLOAD_DECONTAM} AS payload
   FROM documents
-), sh AS (
-  SELECT doc_id, {_SHINGLE5_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
-), bl AS (
-  SELECT list(DISTINCT g.ngram) AS grams
-  FROM (SELECT unnest(shingles) AS ngram FROM sh WHERE doc_id % 41 = 0) g
-)
+), {_BLOCKLIST_CTES}
 SELECT doc_id,
        len(list_intersect(sh.shingles, bl.grams))::INT AS n_hits,
        len(list_intersect(sh.shingles, bl.grams)) > 0 AS contaminated
@@ -2527,6 +2535,45 @@ PACK_BUDGET = 256
 PACK_SHARDS = 8
 
 
+# packed(doc_id, seq_id, off): each ``surv(doc_id, shard, tokens)`` row's
+# budget-sized sequence and offset, by the running token sum per shard
+_PACKED_CTE = f"""packed AS (
+  SELECT doc_id,
+         (shard::BIGINT * 4294967296 + ((cum - tokens) // {PACK_BUDGET}))
+           AS seq_id,
+         ((cum - tokens) % {PACK_BUDGET})::INT AS off
+  FROM (SELECT doc_id, shard, tokens,
+               sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                                 ROWS UNBOUNDED PRECEDING) AS cum
+        FROM surv)
+)"""
+
+
+def _segments_sql(carry: str = "") -> str:
+    """CTEs ``spans`` and ``seg`` and the final SELECT of segment packing
+    over ``toks(doc_id, <carry>, shard, tokens)``: one row per (doc,
+    sequence) it overlaps, with its token range in the doc."""
+    return f"""spans AS (
+  SELECT doc_id{carry}, shard, tokens,
+         sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                           ROWS UNBOUNDED PRECEDING) AS cum
+  FROM toks
+),
+seg AS (
+  SELECT doc_id{carry}, shard, cum - tokens AS st, cum,
+         unnest(range(((cum - tokens) // {PACK_BUDGET})::BIGINT,
+                      ((cum - 1) // {PACK_BUDGET} + 1)::BIGINT)) AS s
+  FROM spans
+)
+SELECT doc_id{carry},
+       (shard::BIGINT * 4294967296 + s)::BIGINT AS seq_id,
+       (greatest(st, s * {PACK_BUDGET}) - st)::INT AS tok_start,
+       (least(cum, (s + 1) * {PACK_BUDGET}) - st)::INT AS tok_end,
+       (greatest(st, s * {PACK_BUDGET}) - s * {PACK_BUDGET})::INT
+         AS offset_in_seq
+FROM seg"""
+
+
 def q_curate_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
@@ -2565,27 +2612,7 @@ FROM c
 # oracled, not just unit-tested, and each applyInPandas group carries
 # multi-page box sets like a real document.
 # ===========================================================================
-def q_o3_bbox_merge_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.spans import merge_bboxes_2d
-
-    ev = _events(spark, sf_dir)
-    boxes = ev.select(
-        "user_id",
-        (F.col("event_id") % 5 + 1).cast("int").alias("page"),
-        F.lit("text").alias("btype"),
-        F.col("value").alias("l"),
-        ((F.col("event_id") % 2) * 100.0).alias("t"),
-        (F.col("value") + 10.0).alias("r"),
-        ((F.col("event_id") % 2) * 100.0 + 10.0).alias("b"),
-    )
-    merged = merge_bboxes_2d(boxes, ["user_id"], x_tolerance=1.0, y_tolerance=1.0)
-    return merged.groupBy(
-        "user_id", "page", (F.col("t") / 100.0).cast("int").alias("band")
-    ).agg(
-        F.count("*").alias("n_boxes"),
-        F.round(F.sum(F.col("r") - F.col("l")), 4).alias("total_w"),
-    )
-
+q_o3_bbox_merge_pages = _bbox_merge_query("event_id % 5 + 1", "page")
 
 ORACLE_O3_BBOX_PAGES = """
 WITH boxes AS (
@@ -2631,8 +2658,6 @@ PAYLOAD_FULLCURATE = (
 
 
 def q_curate_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import exact_dedup
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "lang",
@@ -2643,7 +2668,7 @@ def q_curate_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = decontaminate_ngrams(
         docs, docs.where("doc_id % 41 = 0"), "doc_id", "payload", n=5
     ).select("doc_id", "contaminated")
-    # fork point (round 8, the _chain_corpus rule): flags feeds the
+    # fork point (the _chain_corpus rule): flags feeds the
     # pack branch AND the final join; lineage = dedup window +
     # decontamination + sampling, re-derived per branch without this
     flags = fork(stratified_sample(
@@ -2685,13 +2710,7 @@ WITH corpus AS (
   SELECT *, length(payload) >= 50 AS gate_pass,
          doc_id = min(doc_id) OVER (PARTITION BY md5(payload)) AS keep
   FROM corpus
-), sh AS (
-  SELECT doc_id, {_SHINGLE5_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
-), bl AS (
-  SELECT list(DISTINCT g.ngram) AS grams
-  FROM (SELECT unnest(shingles) AS ngram FROM sh WHERE doc_id % 41 = 0) g
-), flags AS (
+), {_BLOCKLIST_CTES}, flags AS (
   SELECT d.doc_id, d.lang, d.payload, d.gate_pass, d.keep,
          len(list_intersect(sh.shingles, bl.grams)) > 0 AS contaminated,
          substring(md5(d.lang || '|' || d.doc_id), 1, 4)
@@ -2702,16 +2721,7 @@ WITH corpus AS (
   SELECT doc_id, (doc_id % {PACK_SHARDS})::INT AS shard,
          len(string_split(payload, ' '))::BIGINT AS tokens
   FROM flags WHERE gate_pass AND keep AND NOT contaminated AND sampled
-), packed AS (
-  SELECT doc_id,
-         (shard::BIGINT * 4294967296 + ((cum - tokens) // {PACK_BUDGET}))
-           AS seq_id,
-         ((cum - tokens) % {PACK_BUDGET})::INT AS off
-  FROM (SELECT doc_id, shard, tokens,
-               sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-        FROM surv)
-)
+), {_PACKED_CTE}
 SELECT f.doc_id, f.lang, f.gate_pass, f.keep, f.contaminated, f.sampled,
        coalesce(p.seq_id, -1)::BIGINT AS seq_id,
        coalesce(p.off, -1)::INT AS offset_in_seq
@@ -2728,19 +2738,13 @@ FROM flags f LEFT JOIN packed p ON f.doc_id = p.doc_id
 # Roundtrip exactness across all 5 PNG filters × 4 colortypes is separately
 # fuzz-tested in tests/test_media_decode.py.
 # ===========================================================================
-def _media_query(kind: str, builder_name: str, op):
+def _media_query(kind: str, builder, op):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import doc_parser_spark.sources.synth_media as SM
-
         docs = _kernel_spread(
             _docs(spark, sf_dir).select(
                 F.col("doc_id").cast("long").alias("doc_id")
             )
         )
-
-        from doc_parser_spark.operators.multimodal import MEDIA_SCHEMA
-
-        builder = getattr(SM, builder_name)
         media = map_rows(
             docs,
             lambda i: [(i, str(i), i % 7, kind, builder(i), None)],
@@ -2752,8 +2756,6 @@ def _media_query(kind: str, builder_name: str, op):
 
 
 def _q_m1(media):
-    from doc_parser_spark.operators.multimodal import decode_images
-
     return decode_images(media).select(
         F.col("media_id").alias("doc_id"),
         "width",
@@ -2764,8 +2766,6 @@ def _q_m1(media):
 
 
 def _q_m2(media):
-    from doc_parser_spark.operators.multimodal import audio_features
-
     return audio_features(media).select(
         F.col("media_id").alias("doc_id"),
         "channels",
@@ -2778,8 +2778,6 @@ def _q_m2(media):
 
 
 def _q_m3(media):
-    from doc_parser_spark.operators.multimodal import video_metadata
-
     return video_metadata(media).select(
         F.col("media_id").alias("doc_id"),
         "brand",
@@ -2789,9 +2787,9 @@ def _q_m3(media):
     )
 
 
-q_m1_image_decode = _media_query("image", "build_png", _q_m1)
-q_m2_audio_features = _media_query("audio", "build_wav", _q_m2)
-q_m3_video_meta = _media_query("video", "build_mp4", _q_m3)
+q_m1_image_decode = _media_query("image", build_png, _q_m1)
+q_m2_audio_features = _media_query("audio", build_wav, _q_m2)
+q_m3_video_meta = _media_query("video", build_mp4, _q_m3)
 
 ORACLE_M1_IMAGE = """
 SELECT doc_id::BIGINT AS doc_id,
@@ -2826,11 +2824,6 @@ FROM documents
 # ===========================================================================
 # batch 17 — duplicate-cluster connected components + canonical selection
 # ===========================================================================
-from doc_parser_spark.operators.dedup import (  # noqa: E402
-    cluster_canonical,
-    connected_components,
-)
-
 # chain corpus: groups of four variants of one base document with CUMULATIVE
 # distinct tails — consecutive variants are near-dups, far ones may miss the
 # Jaccard threshold, so clustering must be TRANSITIVE (pairs alone are not a
@@ -2851,7 +2844,7 @@ WHERE d.doc_id < 240
 
 
 def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round 8: the chain corpus feeds 3-8 plan branches per consuming query
+    # the chain corpus feeds 3-8 plan branches per consuming query
     # (LSH shingle sides, canonical join, decontamination corpus +
     # benchmark, LM tokenize, pack join) and each branch re-runs the
     # documents⋈documents payload join — fork the 240-row result (the
@@ -2871,40 +2864,8 @@ def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB mirror: identical LSH pair generation (same md5 banding), then the
 # transitive closure as a recursive CTE; cluster id = min reachable vertex.
-_CC_PAIRS_CTES = f"""corpus AS ({CHAIN_SQL}),
-sh AS (
-  SELECT doc_id, {_SHINGLE_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
-),
-sigs AS (
-  SELECT doc_id, {_minhash_cols_sql(8)} FROM sh
-),
-banded AS (
-  SELECT doc_id AS id,
-         md5(concat_ws('|', m0, m1, m2, m3)) AS band0,
-         md5(concat_ws('|', m4, m5, m6, m7)) AS band1
-  FROM sigs
-),
-buckets AS (
-  SELECT id, 0 AS band, band0 AS bucket FROM banded
-  UNION ALL
-  SELECT id, 1 AS band, band1 AS bucket FROM banded
-),
-cands AS (
-  SELECT DISTINCT a.id AS a_id, b.id AS b_id
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-),
-pairs AS (
-  SELECT c.a_id, c.b_id
-  FROM cands c
-  JOIN sh sa ON sa.doc_id = c.a_id
-  JOIN sh sb ON sb.doc_id = c.b_id
-  WHERE len(list_intersect(sa.shingles, sb.shingles))
-        / (len(sa.shingles) + len(sb.shingles)
-           - len(list_intersect(sa.shingles, sb.shingles))) >= 0.2
-),
-edges AS (
+# ``reach``: every (src, dst) joined by a path of ``pairs`` edges
+_REACH_CTES = """edges AS (
   SELECT a_id AS src, b_id AS dst FROM pairs
   UNION
   SELECT b_id AS src, a_id AS dst FROM pairs
@@ -2913,7 +2874,15 @@ reach AS (
   SELECT src, dst FROM edges
   UNION
   SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst
+)"""
+
+_CC_PAIRS_CTES = f"""corpus AS ({CHAIN_SQL}),
+{_LSH_CANDS_CTES},
+pairs AS (
+  SELECT c.a_id, c.b_id
+{indent(_LSH_VERIFY_SQL, '  ')}
 ),
+{_REACH_CTES},
 comp AS (
   SELECT src AS id, least(src, min(dst)) AS cluster_id
   FROM reach GROUP BY src
@@ -2950,9 +2919,6 @@ FROM corpus c LEFT JOIN comp k ON k.id = c.doc_id
 # ===========================================================================
 # batch 18 — CCNet-style LM quality score (corpus-trained unigram NLL)
 # ===========================================================================
-from doc_parser_spark.operators.curation import lm_quality_score  # noqa: E402
-
-
 def q_quality_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
@@ -2987,11 +2953,6 @@ GROUP BY toks.doc_id
 # ===========================================================================
 # batch 19 — k-means-trained IVF (deterministic Lloyd iterations)
 # ===========================================================================
-from doc_parser_spark.operators.similarity import (  # noqa: E402
-    ivf_assignments,
-    ivf_train_kmeans,
-)
-
 _KM_K, _KM_ITERS, _KM_DIM = 4, 2, 64
 
 
@@ -3004,20 +2965,6 @@ def q_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("centroid_id").cast("long").alias("centroid_id"),
     )
-
-
-def _km_assign_sql(cents_cte: str) -> str:
-    return f"""
-  SELECT vec_id, embedding, centroid_id FROM (
-    SELECT e.vec_id, e.embedding, c.centroid_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(
-               e.embedding::DOUBLE[], c.cvec::DOUBLE[]), 4) DESC,
-               c.centroid_id) AS rk
-    FROM embeddings e CROSS JOIN {cents_cte} c
-  ) WHERE rk = 1
-"""
 
 
 def _km_oracle(k: int, iters: int, dim: int) -> str:
@@ -3096,7 +3043,7 @@ def q_curate_assemble_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, corpus.where("doc_id % 37 = 0"), "doc_id", "payload", n=5
     ).select("doc_id", "contaminated")
     lm = lm_quality_score(corpus, "doc_id", "payload", vocab_size=256)
-    # fork point (round 8, the _chain_corpus rule): flags feeds the
+    # fork point (the _chain_corpus rule): flags feeds the
     # pack branch AND the final join; canon/dec/lm would re-run per
     # branch without this (CC itself is already materialized — the
     # driver solve returns local data — but the canonical/decontam/LM
@@ -3173,16 +3120,7 @@ surv AS (
   FROM flags f JOIN corpus p USING (doc_id)
   WHERE f.keep AND NOT f.contaminated AND f.lm_pass
 ),
-packed AS (
-  SELECT doc_id,
-         (shard::BIGINT * 4294967296 + ((cum - tokens) // {PACK_BUDGET}))
-           AS seq_id,
-         ((cum - tokens) % {PACK_BUDGET})::INT AS off
-  FROM (SELECT doc_id, shard, tokens,
-               sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-        FROM surv)
-)
+{_PACKED_CTE}
 SELECT f.doc_id::BIGINT AS doc_id, f.cluster_id::BIGINT AS cluster_id,
        f.keep, f.contaminated, f.nll, f.lm_pass,
        coalesce(p.seq_id, -1)::BIGINT AS seq_id,
@@ -3194,9 +3132,6 @@ FROM flags f LEFT JOIN packed p ON f.doc_id = p.doc_id
 # ===========================================================================
 # batch 21 — TF-IDF top-k terms per document
 # ===========================================================================
-from doc_parser_spark.operators.curation import tfidf_top_terms  # noqa: E402
-
-
 def q_text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
@@ -3238,8 +3173,6 @@ FROM ranked WHERE rank <= 5
 # batch 22 — character-trigram Naive-Bayes language ID (train + apply in
 # one plan; upgrade over the stopword-ratio heuristic of text_lang_id)
 # ===========================================================================
-from doc_parser_spark.operators.curation import lang_id_ngram  # noqa: E402
-
 _LANGS = ["de", "en", "es", "fr", "zh"]
 
 
@@ -3333,8 +3266,6 @@ ORACLE_LANG_ID_NB = _lang_nb_oracle(_LANGS)
 # vectors at sf0.1)
 # ===========================================================================
 def q_dedup_embedding_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.similarity import lsh_neardup_pairs
-
     emb = _embeddings(spark, sf_dir)
     pairs = lsh_neardup_pairs(emb, "vec_id", "embedding", threshold=0.3, planes=6)
     return connected_components(pairs).select(
@@ -3345,16 +3276,7 @@ def q_dedup_embedding_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DEDUP_EMB_CC = f"""
 WITH RECURSIVE pairs AS ({ORACLE_DEDUP_EMB_LSH}),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM pairs
-  UNION
-  SELECT b_id AS src, a_id AS dst FROM pairs
-),
-reach AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst
-)
+{_REACH_CTES}
 SELECT src::BIGINT AS vec_id, least(src, min(dst))::BIGINT AS cluster_id
 FROM reach GROUP BY src
 """
@@ -3363,9 +3285,6 @@ FROM reach GROUP BY src
 # ===========================================================================
 # batch 24 — materialized packing segments (the trainer-facing split form)
 # ===========================================================================
-from doc_parser_spark.operators.curation import pack_segments  # noqa: E402
-
-
 def q_curate_pack_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
@@ -3381,25 +3300,7 @@ WITH toks AS (
          len(string_split(text, ' '))::BIGINT AS tokens
   FROM documents
 ),
-spans AS (
-  SELECT doc_id, shard, tokens,
-         sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                           ROWS UNBOUNDED PRECEDING) AS cum
-  FROM toks
-),
-seg AS (
-  SELECT doc_id, shard, cum - tokens AS st, cum,
-         unnest(range(((cum - tokens) // {PACK_BUDGET})::BIGINT,
-                      ((cum - 1) // {PACK_BUDGET} + 1)::BIGINT)) AS s
-  FROM spans
-)
-SELECT doc_id,
-       (shard::BIGINT * 4294967296 + s)::BIGINT AS seq_id,
-       (greatest(st, s * {PACK_BUDGET}) - st)::INT AS tok_start,
-       (least(cum, (s + 1) * {PACK_BUDGET}) - st)::INT AS tok_end,
-       (greatest(st, s * {PACK_BUDGET}) - s * {PACK_BUDGET})::INT
-         AS offset_in_seq
-FROM seg
+{_segments_sql()}
 """
 
 
@@ -3410,7 +3311,7 @@ FROM seg
 # (DC = 8*(c-128), step 16), so the lossy format round-trips bit-exactly
 # and the oracle is closed-form.
 # ===========================================================================
-q_m4_jpeg_decode = _media_query("image", "build_jpeg", _q_m1)
+q_m4_jpeg_decode = _media_query("image", build_jpeg, _q_m1)
 
 ORACLE_M4_JPEG = """
 SELECT doc_id::BIGINT AS doc_id,
@@ -3433,7 +3334,7 @@ FROM documents
 # batch 26 — REAL GIF decode (LZW with dictionary growth; lossless, so an
 # arbitrary deterministic gradient has an exact closed-form mean)
 # ===========================================================================
-q_m5_gif_decode = _media_query("image", "build_gif", _q_m1)
+q_m5_gif_decode = _media_query("image", build_gif, _q_m1)
 
 ORACLE_M5_GIF = """
 SELECT d.doc_id::BIGINT AS doc_id,
@@ -3456,7 +3357,7 @@ GROUP BY d.doc_id
 # order and compression by doc_id so the contract query covers all four
 # combinations)
 # ===========================================================================
-q_m6_tiff_decode = _media_query("image", "build_tiff", _q_m1)
+q_m6_tiff_decode = _media_query("image", build_tiff, _q_m1)
 
 ORACLE_M6_TIFF = """
 SELECT d.doc_id::BIGINT AS doc_id,
@@ -3479,8 +3380,6 @@ GROUP BY d.doc_id
 # the training-pipeline spec, no longer a stub for this container)
 # ===========================================================================
 def _q_m7(media):
-    from doc_parser_spark.operators.multimodal import video_frames
-
     return video_frames(media, every_n=2).select(
         F.col("media_id").alias("doc_id"),
         F.col("frame_idx").cast("int").alias("frame_idx"),
@@ -3491,7 +3390,7 @@ def _q_m7(media):
     )
 
 
-q_m7_video_frames = _media_query("video", "build_avi", _q_m7)
+q_m7_video_frames = _media_query("video", build_avi, _q_m7)
 
 ORACLE_M7_AVI = """
 SELECT d.doc_id::BIGINT AS doc_id,
@@ -3519,7 +3418,7 @@ JOIN range(0, 6) f(f) ON f.f < 3 + d.doc_id % 4 AND f.f % 2 = 0
 # each bitstream path; lossless → the gray gradient has an exact
 # closed-form mean, same integer-avg oracle shape as m5/m6)
 # ===========================================================================
-q_m8_webp_decode = _media_query("image", "build_webp", _q_m1)
+q_m8_webp_decode = _media_query("image", build_webp, _q_m1)
 
 ORACLE_M8_WEBP = """
 SELECT d.doc_id::BIGINT AS doc_id,
@@ -3542,7 +3441,7 @@ GROUP BY d.doc_id
 # duration = nf * 1152 / 48000 = nf * 0.024 exactly 3 decimals, so the
 # 4-dp round has no cross-engine halfway hazard)
 # ===========================================================================
-q_m9_mp3_meta = _media_query("audio", "build_mp3", _q_m2)
+q_m9_mp3_meta = _media_query("audio", build_mp3, _q_m2)
 
 ORACLE_M9_MP3 = """
 SELECT doc_id::BIGINT AS doc_id,
@@ -3566,7 +3465,7 @@ FROM documents
 # odd denominator, so the 4-dp round can never hit a cross-engine
 # halfway case (float checklist, CLAUDE.md).
 # ===========================================================================
-q_m10_webp_lossy = _media_query("image", "build_webp_lossy", _q_m1)
+q_m10_webp_lossy = _media_query("image", build_webp_lossy, _q_m1)
 
 ORACLE_M10_WEBP_LOSSY = """
 SELECT doc_id::BIGINT AS doc_id,
@@ -3587,8 +3486,6 @@ _SUBSTR_K = 5
 
 
 def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import duplicated_substring_spans
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -3632,8 +3529,6 @@ FROM grp GROUP BY doc_id, gid
 
 
 def q_dedup_substring_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import duplicated_token_fraction
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -3670,8 +3565,6 @@ _MIX_TAU = 0.3
 
 
 def q_curate_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import temperature_mixture_sample
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang"
     )
@@ -3709,33 +3602,43 @@ FROM t
 _ASOF_TOL = 604800  # 7 days
 
 
-def q_asof_attach_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import asof_join
+def _asof_query(
+    event_type: str, direction: str, tolerance: int | None = None
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Each click as-of joined, per user, to the ``event_type`` event in
+    ``direction`` within ``tolerance`` seconds; the matched ts and value
+    come out as ``<event_type>_ts_sec`` and ``<event_type>_value``."""
 
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("user_id").cast("long").alias("user_id"),
-        "ts",
-    )
-    signups = ev.where(F.col("event_type") == "signup").select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"),
-    )
-    out = asof_join(
-        clicks, signups, ["user_id"], "ts", "signup_ts",
-        direction="backward", tolerance=_ASOF_TOL,
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("ts").cast("timestamp").cast("long").alias("ts_sec"),
-        F.col("signup_ts_matched").cast("timestamp").cast("long")
-        .alias("signup_ts_sec"),
-        F.round("signup_value_matched", 4).alias("signup_value"),
-    )
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ev = _events(spark, sf_dir)
+        clicks = ev.where(F.col("event_type") == "click").select(
+            F.col("event_id").cast("long").alias("event_id"),
+            F.col("user_id").cast("long").alias("user_id"),
+            "ts",
+        )
+        right = ev.where(F.col("event_type") == event_type).select(
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("ts").alias(f"{event_type}_ts"),
+            F.col("value").alias(f"{event_type}_value"),
+        )
+        out = asof_join(
+            clicks, right, ["user_id"], "ts", f"{event_type}_ts",
+            direction=direction, tolerance=tolerance,
+        )
+        return out.select(
+            "event_id",
+            "user_id",
+            F.col("ts").cast("timestamp").cast("long").alias("ts_sec"),
+            F.col(f"{event_type}_ts_matched").cast("timestamp").cast("long")
+            .alias(f"{event_type}_ts_sec"),
+            F.round(f"{event_type}_value_matched", 4)
+            .alias(f"{event_type}_value"),
+        )
 
+    return q
+
+
+q_asof_attach_signup = _asof_query("signup", "backward", _ASOF_TOL)
 
 ORACLE_ASOF_SIGNUP = f"""
 SELECT l.event_id::BIGINT AS event_id,
@@ -3754,33 +3657,7 @@ ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
 """
 
 
-def q_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import asof_join
-
-    ev = _events(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("user_id").cast("long").alias("user_id"),
-        "ts",
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = asof_join(
-        clicks, purchases, ["user_id"], "ts", "purchase_ts",
-        direction="forward",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("ts").cast("timestamp").cast("long").alias("ts_sec"),
-        F.col("purchase_ts_matched").cast("timestamp").cast("long")
-        .alias("purchase_ts_sec"),
-        F.round("purchase_value_matched", 4).alias("purchase_value"),
-    )
-
+q_asof_next_purchase = _asof_query("purchase", "forward")
 
 ORACLE_ASOF_PURCHASE = """
 SELECT l.event_id::BIGINT AS event_id,
@@ -3798,8 +3675,6 @@ _RANGE_WIN = 21600  # 6-hour error windows
 
 
 def q_range_join_error_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import range_join
-
     ev = _events(spark, sf_dir)
     views = ev.where(F.col("event_type") == "view").select(
         F.col("event_id").cast("long").alias("view_id"),
@@ -3843,8 +3718,6 @@ _Z_BITS = 16
 
 
 def q_layout_zorder_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.layout import zorder_value
-
     src = _events(spark, sf_dir).select(
         F.col("event_id").cast("long").alias("event_id"),
         F.col("user_id").cast("long").alias("x"),
@@ -3889,8 +3762,6 @@ FROM s
 # so the cascade's mergeability is what's being checked
 # ===========================================================================
 def q_events_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import rollup_timeseries
-
     ev = _events(spark, sf_dir)
     return rollup_timeseries(ev, "ts", ["event_type"], "value")
 
@@ -3920,11 +3791,6 @@ ORACLE_ROLLUP = " UNION ALL ".join(
 # suffix-keep union: minute iff it folds, hour iff minute kept or hour
 # folds, day always.
 def q_events_rollup_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import (
-        choose_rollup_levels,
-        rollup_timeseries,
-    )
-
     ev = _events(spark, sf_dir)
     kept, _stats = choose_rollup_levels(
         ev, "ts", ["event_type"], ("minute", "hour", "day"), min_fold=2.0
@@ -3966,8 +3832,6 @@ _NFC_RAW = f"text || '{_NFC_SUFFIX}'"
 
 
 def q_text_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.functions.textnorm import nfc_normalize_col
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.expr(_NFC_RAW).alias("raw"),
@@ -4003,8 +3867,6 @@ _JL_DIM = 8
 
 
 def q_embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.similarity import random_projection
-
     emb = _embeddings(spark, sf_dir).select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
@@ -4033,8 +3895,6 @@ ORACLE_JL = " UNION ALL ".join(
 
 
 def q_embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.similarity import quantize_int8
-
     emb = _embeddings(spark, sf_dir).select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
@@ -4087,9 +3947,17 @@ _BIGRAM_VOCAB = 256
 _BIGRAM_LAM = 0.7
 
 
-def q_quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import lm_bigram_score
+# t(doc_id, ws): each document's lower-cased alphanumeric words, the
+# tokenizer of operators/search.py::TOKENIZE
+_WORDS_CTE = """WITH t AS (
+  SELECT doc_id::BIGINT AS doc_id,
+         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
+                     w -> w <> '') AS ws
+  FROM documents
+)"""
 
+
+def q_quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4099,12 +3967,7 @@ def q_quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LM_BIGRAM = f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     w -> w <> '') AS ws
-  FROM documents
-),
+{_WORDS_CTE},
 tok AS (
   SELECT doc_id,
          unnest(range(0, len(ws))) AS pos,
@@ -4163,8 +4026,6 @@ _ROLL_WIN = 86400  # trailing 24 h
 
 
 def q_events_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import rolling_features
-
     ev = _events(spark, sf_dir).select(
         F.col("event_id").cast("long").alias("event_id"),
         F.col("user_id").cast("long").alias("user_id"),
@@ -4207,8 +4068,6 @@ _PHRASE_THRESHOLD = 1.0
 
 
 def q_text_phrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import mine_phrases
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4219,12 +4078,7 @@ def q_text_phrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_PHRASES = f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     w -> w <> '') AS ws
-  FROM documents
-),
+{_WORDS_CTE},
 tok AS (
   SELECT doc_id, unnest(range(0, len(ws))) AS pos, unnest(ws) AS tok
   FROM t
@@ -4262,8 +4116,6 @@ _BM25_K = 20
 
 
 def q_search_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.search import build_inverted_index
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4280,12 +4132,7 @@ def q_search_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_INVERTED = f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     w -> w <> '') AS ws
-  FROM documents
-),
+{_WORDS_CTE},
 tok AS (SELECT doc_id, unnest(ws) AS term FROM t),
 dt AS (
   SELECT doc_id, term, count(*)::BIGINT AS tf FROM tok GROUP BY doc_id, term
@@ -4299,8 +4146,6 @@ WHERE f.df <= n.nd * {_IDX_MAX_DF}
 
 
 def q_search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.search import bm25_topk
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4318,12 +4163,7 @@ def _bm25_term_sql(i: int, t: str) -> str:
 
 
 ORACLE_BM25 = f"""
-WITH t AS (
-  SELECT doc_id::BIGINT AS doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     w -> w <> '') AS ws
-  FROM documents
-),
+{_WORDS_CTE},
 stats AS (
   SELECT count(*)::DOUBLE AS n_docs,
          sum(len(ws))::DOUBLE / count(*) AS avgdl
@@ -4361,11 +4201,6 @@ FROM scored ORDER BY raw DESC, doc_id LIMIT {_BM25_K}
 # both index formats.
 # ===========================================================================
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import (
-        dedup_incremental_indexed,
-        dedup_index,
-    )
-
     old, new = _sql_ctes(spark, sf_dir, _INCR_SPLIT_SQL, "old", "new")
     # the classifier reads the index three times (hashes, buckets,
     # shingles): fork it so the lazy index is derived once
@@ -4439,11 +4274,6 @@ LEFT JOIN near nr ON nr.doc_id = n.doc_id
 # --- raw-shingle index: the same inputs and the same ORACLE as
 # dedup_incremental, so both index formats must classify identically.
 def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import (
-        dedup_incremental_indexed,
-        dedup_index,
-    )
-
     old, new = _sql_ctes(spark, sf_dir, _INCR_SPLIT_SQL, "old", "new")
     index = dedup_index(old, "doc_id", "payload")
     return dedup_incremental_indexed(
@@ -4457,8 +4287,6 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 11th dropped, shadow ids added) built identically on both engines
 # ===========================================================================
 def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import corpus_diff
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4504,8 +4332,6 @@ FROM old o FULL OUTER JOIN new n ON o.doc_id = n.doc_id
 # banded path misses nothing.
 # ===========================================================================
 def q_dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import simhash_hamming_pairs
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4533,8 +4359,6 @@ WHERE bit_count(xor(a.f, b.f)) <= 3
 # DuckDB quantile_cont share the same linear-interpolation definition
 # ===========================================================================
 def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import profile_corpus
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4573,8 +4397,6 @@ FROM base
 # row-local assignment — never a global-sort ntile)
 # ===========================================================================
 def q_curate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import train_val_test_split
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id")
     )
@@ -4595,11 +4417,6 @@ FROM (
 
 
 def q_curate_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import (
-        curriculum_shards,
-        lm_quality_score,
-    )
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -4631,13 +4448,6 @@ FROM scored s, b
 # from the per-stage oracles
 # ===========================================================================
 def q_curate_assemble_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import (
-        pack_segments,
-        temperature_mixture_sample,
-        train_val_test_split,
-    )
-    from doc_parser_spark.operators.dedup import duplicated_token_fraction
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "lang", "text"
     )
@@ -4648,7 +4458,7 @@ def q_curate_assemble_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed = temperature_mixture_sample(
         kept, "doc_id", "lang", tau=_MIX_TAU
     ).where(F.col("sampled"))
-    # fork point (round 8, the _chain_corpus rule): train feeds
+    # fork point (the _chain_corpus rule): train feeds
     # pack_segments AND the lang join-back, and its lineage is the whole
     # k-gram dup-fraction pipeline — measured ~0.7 s re-derived per branch
     train = fork(
@@ -4693,25 +4503,7 @@ toks AS (
          len(string_split(text, ' '))::BIGINT AS tokens
   FROM tr
 ),
-spans AS (
-  SELECT doc_id, lang, shard, tokens,
-         sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                           ROWS UNBOUNDED PRECEDING) AS cum
-  FROM toks
-),
-seg AS (
-  SELECT doc_id, lang, shard, cum - tokens AS st, cum,
-         unnest(range(((cum - tokens) // {PACK_BUDGET})::BIGINT,
-                      ((cum - 1) // {PACK_BUDGET} + 1)::BIGINT)) AS s
-  FROM spans
-)
-SELECT doc_id, lang,
-       (shard::BIGINT * 4294967296 + s)::BIGINT AS seq_id,
-       (greatest(st, s * {PACK_BUDGET}) - st)::INT AS tok_start,
-       (least(cum, (s + 1) * {PACK_BUDGET}) - st)::INT AS tok_end,
-       (greatest(st, s * {PACK_BUDGET}) - s * {PACK_BUDGET})::INT
-         AS offset_in_seq
-FROM seg
+{_segments_sql(', lang')}
 """
 
 
@@ -4723,8 +4515,6 @@ _FUNNEL_STEPS = ["signup", "click", "purchase"]
 
 
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import funnel
-
     ev = _events(spark, sf_dir).select(
         F.col("user_id").cast("long").alias("user_id"), "ts", "event_type"
     )
@@ -4803,8 +4593,6 @@ def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.graph import triangle_count
-
     return triangle_count(_neardup_edges(spark, sf_dir))
 
 
@@ -4822,8 +4610,6 @@ JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.graph import pagerank
-
     return pagerank(_neardup_edges(spark, sf_dir), iters=3).select(
         F.col("id").cast("long").alias("id"), "rank"
     )
@@ -4871,8 +4657,6 @@ _ES_K = 50
 
 
 def q_curate_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import weighted_sample_k
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.size(F.split(F.col("text"), " ")).cast("double").alias("tokens"),
@@ -4904,8 +4688,6 @@ _RESAMPLE_STEP = 21600  # 6-hour buckets
 
 
 def q_events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.temporal import resample_ffill
-
     ev = _events(spark, sf_dir).select(
         F.col("user_id").cast("long").alias("user_id"),
         "ts",
@@ -4976,8 +4758,6 @@ _SCRIPT_CASE = (
 
 
 def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import script_profile
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.expr(_SCRIPT_CASE).alias("text"),
@@ -5011,8 +4791,6 @@ FROM c
 
 
 def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import vocab_drift
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -5069,8 +4847,6 @@ _SW_VOCAB_K = 64
 
 
 def q_text_subword_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.curation import subword_encode_counts
-
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
@@ -5143,8 +4919,6 @@ _TOC_CANDS = 10
 
 
 def q_toc_match_back(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.enrichment import toc_match_back
-
     words = (
         _docs(spark, sf_dir)
         .select(
@@ -5312,24 +5086,7 @@ def q_dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_MINHASH_LSH_CAPPED = f"""
 WITH corpus AS ({CAPPED_CORPUS_SQL}),
-sh AS (
-  SELECT doc_id, {_SHINGLE_SQL} AS shingles
-  FROM (SELECT doc_id, string_split(payload, ' ') AS w FROM corpus)
-),
-sigs AS (
-  SELECT doc_id, {_minhash_cols_sql(8)} FROM sh
-),
-banded AS (
-  SELECT doc_id AS id,
-         md5(concat_ws('|', m0, m1, m2, m3)) AS band0,
-         md5(concat_ws('|', m4, m5, m6, m7)) AS band1
-  FROM sigs WHERE m0 IS NOT NULL
-),
-buckets AS (
-  SELECT id, 0 AS band, band0 AS bucket FROM banded
-  UNION ALL
-  SELECT id, 1 AS band, band1 AS bucket FROM banded
-),
+{_lsh_buckets_sql(' WHERE m0 IS NOT NULL')},
 sized AS (
   SELECT b.id, b.band, b.bucket, s._m, s._hub
   FROM buckets b JOIN (
@@ -5350,16 +5107,7 @@ cands AS (
     FROM sized WHERE _m > {_CAP_MAX_BUCKET} AND id <> _hub
   )
 )
-SELECT c.a_id, c.b_id,
-       round(len(list_intersect(sa.shingles, sb.shingles))
-             / (len(sa.shingles) + len(sb.shingles)
-                - len(list_intersect(sa.shingles, sb.shingles))), 4) AS jaccard
-FROM cands c
-JOIN sh sa ON sa.doc_id = c.a_id
-JOIN sh sb ON sb.doc_id = c.b_id
-WHERE len(list_intersect(sa.shingles, sb.shingles))
-      / (len(sa.shingles) + len(sb.shingles)
-         - len(list_intersect(sa.shingles, sb.shingles))) >= 0.2
+{_LSH_PAIRS_SQL}
 """
 
 
@@ -5404,11 +5152,6 @@ b2 AS (
 
 
 def q_curate_ingest_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import (
-        dedup_incremental_indexed,
-        dedup_index,
-    )
-
     corpus, batch1, batch2 = _sql_ctes(
         spark, sf_dir, _INGEST_TABLES_SQL, "corpus", "b1", "b2"
     )
@@ -5515,12 +5258,6 @@ SELECT doc_id, status, matched_old_id, 2 AS batch FROM cls2
 # guard in SQL over the text — would hash-mismatch.
 # ===========================================================================
 def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from doc_parser_spark.operators.dedup import (
-        dedup_incremental_indexed,
-        dedup_index,
-    )
-    from doc_parser_spark.streaming.stream import guarded_accepted
-
     corpus, batch0, batch1 = _sql_ctes(
         spark, sf_dir, _INGEST_TABLES_SQL, "corpus", "b1", "b2"
     )

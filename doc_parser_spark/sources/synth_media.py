@@ -553,7 +553,7 @@ def build_mp3(doc_id: int) -> bytes:
 
 
 # WebP builder lives in its own module (the VP8L encoder is sizeable);
-# re-exported here so _media_query-style getattr dispatch finds it
+# re-exported here so every media builder is reachable as synth_media.build_*
 from doc_parser_spark.sources.synth_webp import (  # noqa: E402,F401
     build_webp,
     build_webp_lossy,

@@ -129,5 +129,9 @@ def test_curation_stats_dict_c_paths_fill_first(spark):
     }
     assert stats3.pop("extracted") == 11
     assert stats3.setdefault("quality_kept", -1) == 9
-    for s in (stats, stats2, stats3):
+    _, stats4 = run_curation(
+        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
+    )
+    assert dict(stats4)["extracted"] == 11   # perfbench's form
+    for s in (stats, stats2, stats3, stats4):
         s.unpersist()

@@ -1,7 +1,7 @@
 """_kernel_spread (driver_queries): the office/media query scaffolds'
-pre-kernel parallelism fix. Two branches: a tiny-split input gets an
-explicit spread repartition (AQE byte-coalescing must not fold it back),
-a well-split input passes through untouched (no payload shuffle)."""
+pre-kernel parallelism fix. The contract documents table is one parquet
+split at every scale factor, so the input always gets an explicit spread
+repartition (AQE byte-coalescing must not fold it back)."""
 
 from __future__ import annotations
 
@@ -19,13 +19,3 @@ class TestKernelSpread:
             out._jdf.queryExecution(), "formatted"
         )
         assert "REPARTITION_BY_NUM" in plan  # explicit N: AQE cannot coalesce
-
-    def test_well_split_input_passes_through(self, spark):
-        from doc_parser_spark.plans.driver_queries import _kernel_spread
-
-        target = 2 * spark.sparkContext.defaultParallelism
-        docs = spark.range(1000).repartition(target + 4).selectExpr(
-            "id as doc_id", "'x' as text"
-        )
-        out = _kernel_spread(docs)
-        assert out is docs  # no exchange added
