@@ -40,7 +40,15 @@ def _zip_invalidate_caches(self) -> None:
         self._read_stamp = stamp
 
 
-# every Python worker that unpickles one of this package's functions runs
-# this; any other process keeps the stock behaviour
-if "pyspark.worker" in sys.modules and sys.version_info < (3, 12):
-    zipimport.zipimporter.invalidate_caches = _zip_invalidate_caches
+def install_lazy_zip_invalidation() -> None:
+    """Make every zipimporter re-read its archive only when it changed
+    (a no-op from CPython 3.12, whose invalidation is already lazy)."""
+    if sys.version_info < (3, 12):
+        zipimport.zipimporter.invalidate_caches = _zip_invalidate_caches
+
+
+# a worker forked from ``doc_parser_spark.daemon`` already has the fix; one
+# started by another daemon (a session not built by ``session.get_spark``)
+# gets it when it first unpickles one of this package's functions
+if "pyspark.worker" in sys.modules:
+    install_lazy_zip_invalidation()

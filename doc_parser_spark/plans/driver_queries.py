@@ -128,10 +128,10 @@ from doc_parser_spark.sources.synth_media import (
     build_wav,
 )
 from doc_parser_spark.sources.synth_office import (
-    build_docx,
-    build_hwpx,
-    build_pptx,
-    build_xlsx,
+    build_docx_payload,
+    build_hwpx_payload,
+    build_pptx_payload,
+    build_xlsx_payload,
 )
 from doc_parser_spark.sources.synth_pdf import build_report_pdf
 from doc_parser_spark.sources.synth_webp import build_webp, build_webp_lossy
@@ -2256,23 +2256,9 @@ def _office_query(builder) -> Callable[[SparkSession, str], DataFrame]:
     return q
 
 
-def _build_docx_payload(doc_id: int, text: str) -> bytes:
-    return build_docx(f"Doc {doc_id}", [text], [f"alpha {doc_id}", "bravo"])
-
-
-def _build_xlsx_payload(doc_id: int, text: str) -> bytes:
-    return build_xlsx(
-        "Data", [["name", "score"], [f"doc{doc_id}", str(doc_id % 97)]]
-    )
-
-
-def _build_pptx_payload(doc_id: int, text: str) -> bytes:
-    return build_pptx(f"Deck {doc_id}", [f"alpha {doc_id}", "bravo"])
-
-
-q_b9_docx_extract = _office_query(_build_docx_payload)
-q_b8_xlsx_extract = _office_query(_build_xlsx_payload)
-q_b10_pptx_extract = _office_query(_build_pptx_payload)
+q_b9_docx_extract = _office_query(build_docx_payload)
+q_b8_xlsx_extract = _office_query(build_xlsx_payload)
+q_b10_pptx_extract = _office_query(build_pptx_payload)
 
 ORACLE_B9_DOCX = """
 SELECT doc_id::BIGINT AS doc_id, 'docx' AS doc_kind,
@@ -2424,11 +2410,7 @@ FROM documents
 # regression baseline (tests/test_reference_hwpx.py: exact 587-item label
 # sequence vs hwpx_sample.json).
 # ===========================================================================
-def _build_hwpx_payload(doc_id: int, text: str) -> bytes:
-    return build_hwpx(doc_id, text or "")
-
-
-q_b14_hwpx_extract = _office_query(_build_hwpx_payload)
+q_b14_hwpx_extract = _office_query(build_hwpx_payload)
 
 ORACLE_B14_HWPX = """
 SELECT doc_id::BIGINT AS doc_id, 'hwpx' AS doc_kind,

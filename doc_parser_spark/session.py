@@ -3,6 +3,10 @@ one ownership rule for fork caches.
 
 Arrow transfer on, AQE on (runtime re-plan + skew handling), shuffle
 partitions sized for the local harness but overridable for cluster runs.
+Every Python worker is forked from ``doc_parser_spark.daemon``, which has
+already imported the worker-side modules and frozen them out of the
+garbage collector's reach, so executors' Python must be able to import
+the package (installed, or shipped with ``--py-files``).
 
 A fork point is an intermediate frame that two or more branches of one
 plan read; persisting it keeps each branch from re-deriving it. Spark's
@@ -20,6 +24,9 @@ from contextvars import ContextVar
 from pyspark.sql import DataFrame, SparkSession
 
 ARROW_BATCH_ROWS = 1024  # rows per Arrow batch sent to Python workers (R1 analog)
+
+# where the driver imported the package from: a directory or a --py-files zip
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -51,8 +58,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "doc_parser_spark.daemon")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # the worker daemon imports the package before any task can add the
+    # --py-files to its path, so the driver's copy joins the workers' path
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, PACKAGE_ROOT])
+    return spark
 
 
 _FORKS: ContextVar[ForkCache | None] = ContextVar("fork_cache", default=None)

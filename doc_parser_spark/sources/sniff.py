@@ -15,8 +15,7 @@ form needs. ``sniff_series`` maps it over a pandas Series.
 from __future__ import annotations
 
 import re
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from doc_parser_spark.datamodel import (
     CT_ASCIIDOC,
@@ -30,6 +29,9 @@ from doc_parser_spark.datamodel import (
     CT_PLAIN,
 )
 from doc_parser_spark.functions.csv_extract import sniff_csv
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 HEAD_BYTES = 1024
 

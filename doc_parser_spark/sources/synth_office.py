@@ -170,3 +170,24 @@ def build_hwpx(doc_id: int, body: str) -> bytes:
             "Contents/section0.xml": section,
         }
     )
+
+
+# (doc_id, text) → payload of the b9/b8/b10/b14 contract queries. They live
+# here, not beside the queries, because a worker unpickles them by reference:
+# importing this module costs it a handful of modules, the query module ~400.
+def build_docx_payload(doc_id: int, text: str) -> bytes:
+    return build_docx(f"Doc {doc_id}", [text], [f"alpha {doc_id}", "bravo"])
+
+
+def build_xlsx_payload(doc_id: int, text: str) -> bytes:
+    return build_xlsx(
+        "Data", [["name", "score"], [f"doc{doc_id}", str(doc_id % 97)]]
+    )
+
+
+def build_pptx_payload(doc_id: int, text: str) -> bytes:
+    return build_pptx(f"Deck {doc_id}", [f"alpha {doc_id}", "bravo"])
+
+
+def build_hwpx_payload(doc_id: int, text: str) -> bytes:
+    return build_hwpx(doc_id, text or "")

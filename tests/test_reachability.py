@@ -3,7 +3,9 @@
 Walks the ``doc_parser_spark`` imports with ``ast`` (absolute, relative
 and function-local imports, followed transitively) from the scripts that
 run the package: ``__spark_entry__.py``, ``bench.py``, ``tools/*.py`` and
-``perfbench/*.py``. A module that none of them reaches is code only its
+``perfbench/*.py``, plus the Python-worker daemon that ``session.py`` names
+in its ``spark.python.daemon.module`` setting (Spark starts it by name; no
+import reaches it). A module that none of them reaches is code only its
 own tests keep alive; it is either deleted or listed in ``KEPT`` with the
 reason it stays. No Spark session is needed.
 """
@@ -69,11 +71,24 @@ def _imported(path: Path, modname: str | None, mods: dict) -> set[str]:
     return found
 
 
+def _daemon_modules() -> set[str]:
+    """The modules ``session.py`` sets as ``spark.python.daemon.module``."""
+    tree = ast.parse((ROOT / PKG / "session.py").read_text())
+    return {
+        node.args[1].value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and len(node.args) == 2
+        and all(isinstance(a, ast.Constant) for a in node.args)
+        and node.args[0].value == "spark.python.daemon.module"
+    }
+
+
 def _reached(mods: dict) -> set[str]:
     entries = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
     entries += sorted((ROOT / "tools").glob("*.py"))
     entries += sorted((ROOT / "perfbench").glob("*.py"))
-    todo = set()
+    todo = _daemon_modules()
     for path in entries:
         todo |= _imported(path, None, mods)
     seen = set()

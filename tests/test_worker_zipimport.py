@@ -2,9 +2,10 @@
 
 pyspark's worker calls ``importlib.invalidate_caches()`` at every task
 start; on CPython < 3.12 every cached zipimporter then re-reads its whole
-archive directory. Imported inside a worker, the package installs a
+archive directory. ``install_lazy_zip_invalidation`` installs a
 ``zipimporter.invalidate_caches`` that re-reads only an archive whose
-(mtime, size) changed.
+(mtime, size) changed. The worker daemon calls it before its first fork,
+and the package import calls it inside any other worker.
 """
 
 from __future__ import annotations
@@ -26,19 +27,16 @@ def _write_zip(path, modules: dict[str, str]) -> None:
             z.writestr(f"{name}.py", src)
 
 
-def _reload_as_worker(monkeypatch) -> None:
-    """Re-run the package's import with the worker guard on; the stock
-    ``invalidate_caches`` comes back at teardown."""
+def _install(monkeypatch) -> None:
+    """Install the fix as on CPython 3.11; the stock ``invalidate_caches``
+    comes back at teardown."""
     monkeypatch.setattr(
         zipimport.zipimporter, "invalidate_caches",
         zipimport.zipimporter.invalidate_caches,
     )
-    monkeypatch.setitem(
-        sys.modules, "pyspark.worker", types.ModuleType("pyspark.worker")
-    )
     with monkeypatch.context() as m:
         m.setattr(sys, "version_info", (3, 11, 7))
-        importlib.reload(doc_parser_spark)
+        doc_parser_spark.install_lazy_zip_invalidation()
 
 
 def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
@@ -47,7 +45,7 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
     monkeypatch.syspath_prepend(str(archive))
     try:
         assert importlib.import_module("dps_zipmod_a").VALUE == 1
-        _reload_as_worker(monkeypatch)
+        _install(monkeypatch)
         assert (
             zipimport.zipimporter.invalidate_caches
             is doc_parser_spark._zip_invalidate_caches
@@ -77,6 +75,23 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
     finally:
         sys.modules.pop("dps_zipmod_a", None)
         sys.modules.pop("dps_zipmod_b", None)
+
+
+def test_package_import_in_a_worker_installs_it(monkeypatch):
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    monkeypatch.setitem(
+        sys.modules, "pyspark.worker", types.ModuleType("pyspark.worker")
+    )
+    with monkeypatch.context() as m:
+        m.setattr(sys, "version_info", (3, 11, 7))
+        importlib.reload(doc_parser_spark)
+    assert (
+        zipimport.zipimporter.invalidate_caches
+        is doc_parser_spark._zip_invalidate_caches
+    )
 
 
 def test_outside_a_worker_keeps_stock_invalidation(monkeypatch):

@@ -1,20 +1,22 @@
 """Python-worker CPU per task of a trivial mapInArrow job.
 
 Each timed job is ``--tasks`` partitions of a few rows through a
-``mapInArrow`` that imports ``doc_parser_spark`` and passes its batches
-through, so what the workers burn is the fixed cost of a Python task:
-task set-up in pyspark's worker (including its ``importlib
-.invalidate_caches()``), UDF unpickling and the Arrow stream. CPU is
-utime + stime of every Python process under this one, read from
-``/proc`` before and after each job; the workers are reused, so the
-delta is what the job cost them.
+``mapInArrow`` that passes its batches through, so what the workers burn
+is the fixed cost of a Python task: task set-up in pyspark's worker
+(including its ``importlib.invalidate_caches()``), UDF unpickling and the
+Arrow stream. Two passthroughs are timed: one that imports
+``doc_parser_spark`` (as every extraction task does) and one that imports
+nothing from it. CPU is utime + stime of every Python process under this
+one, read from ``/proc`` before and after each job; the workers are
+reused, so the delta is what the job cost them.
 
 Usage (from the repo root — Spark python workers import doc_parser_spark
 from the launching process's working directory):
 
     python tools/worker_cpu.py [--tasks 4] [--jobs 10]
 
-Prints one JSON line: median python CPU per task and median job wall.
+Prints one JSON line: per passthrough, median python CPU per task and
+median job wall.
 """
 from __future__ import annotations
 
@@ -48,10 +50,30 @@ def python_cpu_s() -> float:
     return total * TICK_S
 
 
-def passthrough(batches):
+def passthrough_package(batches):
     import doc_parser_spark  # noqa: F401  (what every extraction task imports)
 
     yield from batches
+
+
+def passthrough_bare(batches):
+    yield from batches
+
+
+def time_job(job, tasks: int, jobs: int) -> dict:
+    for _ in range(3):  # start the workers and let each run a task
+        job.write.format("noop").mode("overwrite").save()
+    cpu, wall = [], []
+    for _ in range(jobs):
+        c0, t0 = python_cpu_s(), time.perf_counter()
+        job.write.format("noop").mode("overwrite").save()
+        wall.append(time.perf_counter() - t0)
+        time.sleep(0.5)  # let the workers finish their task epilogue
+        cpu.append((python_cpu_s() - c0) / tasks)
+    return {
+        "python_cpu_per_task_s": round(statistics.median(cpu), 3),
+        "job_wall_s": round(statistics.median(wall), 3),
+    }
 
 
 def main() -> None:
@@ -64,22 +86,19 @@ def main() -> None:
 
     spark = get_spark(master=f"local[{args.tasks}]", shuffle_partitions=args.tasks)
     df = spark.range(0, 16 * args.tasks, numPartitions=args.tasks)
-    job = df.mapInArrow(passthrough, schema=df.schema)
-    for _ in range(3):  # start the workers and let each import the package
-        job.write.format("noop").mode("overwrite").save()
-    cpu, wall = [], []
-    for _ in range(args.jobs):
-        c0, t0 = python_cpu_s(), time.perf_counter()
-        job.write.format("noop").mode("overwrite").save()
-        wall.append(time.perf_counter() - t0)
-        time.sleep(0.5)  # let the workers finish their task epilogue
-        cpu.append((python_cpu_s() - c0) / args.tasks)
+    # the bare passthrough runs first, so its workers have not imported
+    # the package through an earlier task
+    timed = {
+        fn.__name__: time_job(
+            df.mapInArrow(fn, schema=df.schema), args.tasks, args.jobs
+        )
+        for fn in (passthrough_bare, passthrough_package)
+    }
     spark.stop()
     print(json.dumps({
         "python": sys.version.split()[0],
         "tasks": args.tasks,
-        "python_cpu_per_task_s": round(statistics.median(cpu), 3),
-        "job_wall_s": round(statistics.median(wall), 3),
+        **timed,
     }))
 
 
