@@ -26,8 +26,9 @@ Spark-first design notes (SURVEY.md §3.4):
 from __future__ import annotations
 
 import time
-from typing import TYPE_CHECKING, Iterable, Iterator
+from typing import Iterable, Iterator
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -60,9 +61,6 @@ from doc_parser_spark.functions.pdfish_extract import extract_pdfish
 from doc_parser_spark.functions.plain_extract import extract_plain
 from doc_parser_spark.functions.quality import rate_text_quality
 from doc_parser_spark.sources.sniff import sniff_text
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 # internal metric columns appended to EXTRACTED_SCHEMA by the UDF
 EXTRACT_OUTPUT_SCHEMA = T.StructType(

@@ -3,10 +3,13 @@ one ownership rule for fork caches.
 
 Arrow transfer on, AQE on (runtime re-plan + skew handling), shuffle
 partitions sized for the local harness but overridable for cluster runs.
-Every Python worker is forked from ``doc_parser_spark.daemon``, which has
-already imported the worker-side modules and frozen them out of the
-garbage collector's reach, so executors' Python must be able to import
-the package (installed, or shipped with ``--py-files``).
+With a ``local``/``local-cluster`` master every Python worker is forked
+from ``doc_parser_spark.daemon``, which has already imported the
+worker-side modules and frozen them out of the garbage collector's reach.
+That daemon starts before any task puts its ``--py-files`` on the path, so
+it needs the driver's own copy of the package, which only executors on the
+driver's host can read. Any other master keeps pyspark's stock daemon, and
+the package ``__init__`` installs the zip fix in its workers.
 
 A fork point is an intermediate frame that two or more branches of one
 plan read; persisting it keeps each branch from re-deriving it. Spark's
@@ -58,15 +61,21 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", "doc_parser_spark.daemon")
     )
-    spark = builder.getOrCreate()
     # the worker daemon imports the package before any task can add the
-    # --py-files to its path, so the driver's copy joins the workers' path
-    env = spark.sparkContext.environment
-    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
-    if PACKAGE_ROOT not in paths:
-        env["PYTHONPATH"] = os.pathsep.join([*paths, PACKAGE_ROOT])
+    # --py-files to its path, so it runs only where the driver's copy,
+    # appended to the workers' path, is on the executors' filesystem
+    same_host = master.startswith("local")
+    if same_host:
+        builder = builder.config(
+            "spark.python.daemon.module", "doc_parser_spark.daemon"
+        )
+    spark = builder.getOrCreate()
+    if same_host:
+        env = spark.sparkContext.environment
+        paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if PACKAGE_ROOT not in paths:
+            env["PYTHONPATH"] = os.pathsep.join([*paths, PACKAGE_ROOT])
     return spark
 
 

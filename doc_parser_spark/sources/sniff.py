@@ -15,7 +15,8 @@ form needs. ``sniff_series`` maps it over a pandas Series.
 from __future__ import annotations
 
 import re
-from typing import TYPE_CHECKING
+
+import pandas as pd
 
 from doc_parser_spark.datamodel import (
     CT_ASCIIDOC,
@@ -29,9 +30,6 @@ from doc_parser_spark.datamodel import (
     CT_PLAIN,
 )
 from doc_parser_spark.functions.csv_extract import sniff_csv
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 HEAD_BYTES = 1024
 

@@ -1,6 +1,9 @@
 """Python workers fork from ``doc_parser_spark.daemon``.
 
-``session.get_spark`` names the daemon in ``spark.python.daemon.module``.
+``session.get_spark`` names the daemon in ``spark.python.daemon.module``
+when the master is ``local`` or ``local-cluster``; any other master keeps
+pyspark's stock daemon, which cannot import the package before a task
+ships its ``--py-files``.
 The daemon installs the lazy zip-cache invalidation, imports every module
 whose functions run in workers and freezes the collector's view of that
 heap before it forks its first worker, so even a worker's first task finds
@@ -14,11 +17,13 @@ from __future__ import annotations
 import subprocess
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pytest
 from pyspark import cloudpickle
 
+from doc_parser_spark import session
 from doc_parser_spark.daemon import PRELOAD
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -90,3 +95,45 @@ def test_office_builder_unpickles_without_the_query_module(query):
     ).stdout.decode().split()
     assert f"{PKG}.sources.synth_office" in loaded
     assert [m for m in loaded if m.startswith(f"{PKG}.plans")] == []
+
+
+class _RecordingBuilder:
+    """A ``SparkSession.builder`` stand-in that records the confs it is given."""
+
+    def __init__(self):
+        self.conf = {}
+        self.environment = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        return self.config("spark.master", master)
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(environment=self.environment)
+        )
+
+
+@pytest.mark.parametrize(
+    "master, same_host",
+    [("local[2]", True), ("local", True), ("local-cluster[2,1,1024]", True),
+     ("spark://head:7077", False), ("k8s://https://api:6443", False),
+     ("yarn", False)],
+)
+def test_daemon_is_set_only_for_a_same_host_master(monkeypatch, master, same_host):
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
+    session.get_spark(master=master)
+    assert builder.conf["spark.master"] == master
+    if same_host:
+        assert builder.conf["spark.python.daemon.module"] == "doc_parser_spark.daemon"
+        assert builder.environment["PYTHONPATH"] == session.PACKAGE_ROOT
+    else:
+        assert "spark.python.daemon.module" not in builder.conf
+        assert "PYTHONPATH" not in builder.environment
