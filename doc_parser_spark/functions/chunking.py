@@ -121,13 +121,14 @@ def _mk_chunk(items: list[ChunkItem]) -> Chunk:
 TABLE_SPLIT_TOKENS = 4096
 
 
-def split_table_text(table_text: str, max_tokens: int = TABLE_SPLIT_TOKENS) -> list[str]:
+def split_table_text(table_text: str) -> list[str]:
     """_split_table_text port (intelligent_processor.py:538-553): token-based
-    split of a rendered table. The reference delegates to semchunk over its
-    tokenizer; this port packs greedily on the same separator hierarchy
-    (rows, then cells/words) under the deterministic count_tokens estimate.
+    split of a rendered table into pieces of at most TABLE_SPLIT_TOKENS
+    tokens. The reference delegates to semchunk over its tokenizer; this
+    port packs greedily on the same separator hierarchy (rows, then
+    cells/words) under the deterministic count_tokens estimate.
     """
-    if not table_text or count_tokens(table_text) <= max_tokens:
+    if not table_text or count_tokens(table_text) <= TABLE_SPLIT_TOKENS:
         return [table_text]
 
     def pack(pieces: list[str], sep: str) -> list[str]:
@@ -135,7 +136,7 @@ def split_table_text(table_text: str, max_tokens: int = TABLE_SPLIT_TOKENS) -> l
         cur: list[str] = []
         for p in pieces:
             trial = sep.join(cur + [p])
-            if cur and count_tokens(trial) > max_tokens:
+            if cur and count_tokens(trial) > TABLE_SPLIT_TOKENS:
                 out.append(sep.join(cur))
                 cur = [p]
             else:
@@ -146,7 +147,7 @@ def split_table_text(table_text: str, max_tokens: int = TABLE_SPLIT_TOKENS) -> l
 
     chunks: list[str] = []
     for line_group in pack(table_text.split("\n"), "\n"):
-        if count_tokens(line_group) <= max_tokens:
+        if count_tokens(line_group) <= TABLE_SPLIT_TOKENS:
             chunks.append(line_group)
         else:  # a single monster row: fall back to word packing
             chunks.extend(pack(line_group.split(" "), " "))

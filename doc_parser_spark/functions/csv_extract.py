@@ -1,14 +1,9 @@
-"""CSV extraction (B7 analog) + text splitter (C5 analog).
+"""CSV extraction (B7 analog).
 
-CSV: the reference parses the whole file into one table with row 0 as the
+The reference parses the whole file into one table with row 0 as the
 header (csv_backend.py:52-131), sniffing the dialect with csv.Sniffer
 (document.py:479-506). Here the payload is a turn's text; csv.Sniffer picks
 the delimiter from {',', ';', '\\t', '|'}, the grid renders like any table.
-
-Splitter: RecursiveCharacterTextSplitter semantics (the simple-processor
-path, src/preprocessor.py:186-221 via langchain): split on the separator
-hierarchy ["\\n\\n", "\\n", " ", ""], greedily packing pieces up to
-chunk_size chars with chunk_overlap carry-over.
 """
 
 from __future__ import annotations
@@ -76,76 +71,3 @@ def extract_csv(text: str) -> tuple[str, list[tuple[int, int, str, int]]]:
     width = max((len(r) for r in rows), default=0)
     grid = [r + [""] * (width - len(r)) for r in rows]
     return join_spans([(render_table(grid), LABEL_TABLE, 1)])
-
-
-# ---------------------------------------------------------------------------
-# C5 — recursive character text splitter
-# ---------------------------------------------------------------------------
-SEPARATORS = ["\n\n", "\n", " ", ""]
-
-
-def recursive_split(
-    text: str, chunk_size: int = 400, chunk_overlap: int = 50
-) -> list[str]:
-    """langchain RecursiveCharacterTextSplitter semantics: try the coarsest
-    separator that yields pieces ≤ chunk_size; merge pieces greedily with
-    overlap carry-over; recurse on oversize pieces with finer separators."""
-
-    def split_with(text: str, separators: list[str]) -> list[str]:
-        sep = separators[-1]
-        rest: list[str] = []
-        for i, s in enumerate(separators):
-            if s == "":
-                sep = ""
-                break
-            if s in text:
-                sep = s
-                rest = separators[i + 1 :]
-                break
-        splits = list(text) if sep == "" else text.split(sep)
-        good: list[str] = []
-        buf: list[str] = []
-
-        def merge(pieces: list[str]) -> list[str]:
-            docs: list[str] = []
-            cur: list[str] = []
-            total = 0
-            sep_len = len(sep)
-            for p in pieces:
-                plen = len(p)
-                if cur and total + plen + sep_len * len(cur) > chunk_size:
-                    doc = sep.join(cur).strip()
-                    if doc:
-                        docs.append(doc)
-                    # pop from the front until within overlap budget
-                    while cur and (
-                        total > chunk_overlap
-                        or (total + plen + sep_len * len(cur) > chunk_size and total > 0)
-                    ):
-                        total -= len(cur[0])
-                        cur.pop(0)
-                cur.append(p)
-                total += plen
-            doc = sep.join(cur).strip()
-            if doc:
-                docs.append(doc)
-            return docs
-
-        for piece in splits:
-            if len(piece) <= chunk_size:
-                buf.append(piece)
-            else:
-                if buf:
-                    good.extend(merge(buf))
-                    buf = []
-                if rest:
-                    good.extend(split_with(piece, rest))
-                else:
-                    good.append(piece)
-        if buf:
-            good.extend(merge(buf))
-        return good
-
-    if not text:
-        return []
-    return split_with(text, SEPARATORS)

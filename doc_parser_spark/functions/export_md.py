@@ -134,7 +134,7 @@ def export_markdown(items: list[Item]) -> str:
     return "\n\n".join(blocks)
 
 
-def extract_html_markdown(markup: str, boilerplate_mode: str = "reference") -> str:
+def extract_html_markdown(markup: str) -> str:
     from doc_parser_spark.functions.html_extract import extract_html_items
 
-    return export_markdown(extract_html_items(markup, boilerplate_mode))
+    return export_markdown(extract_html_items(markup))

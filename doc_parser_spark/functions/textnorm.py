@@ -1,19 +1,15 @@
 """Unicode text normalization for the curation layer.
 
-- ``nfc_normalize_col``: canonical composition (NFC) — the standard first
-  step of web-corpus cleaning (decomposed sequences like 'e' + U+0301 fold
-  to 'é', so downstream hashing/dedup/tokenization see one spelling).
-  Spark SQL has no normalization builtin, so this is the sanctioned slow
-  path: an Arrow-vectorized pandas UDF over ``unicodedata.normalize`` —
-  never a row-at-a-time Python UDF. DuckDB's native ``nfc_normalize`` is
-  the oracle.
-- ``fix_double_encoded``: the classic mojibake repair — text that was
-  UTF-8 bytes misread as latin-1/cp1252 ('Ã©' for 'é') re-encodes
-  losslessly back; anything that doesn't round-trip cleanly is left
-  untouched (never destructive). ftfy's core trick, stdlib-only.
+``nfc_normalize_col``: canonical composition (NFC) — the standard first
+step of web-corpus cleaning (decomposed sequences like 'e' + U+0301 fold
+to 'é', so downstream hashing/dedup/tokenization see one spelling).
+Spark SQL has no normalization builtin, so this is the sanctioned slow
+path: an Arrow-vectorized pandas UDF over ``unicodedata.normalize`` —
+never a row-at-a-time Python UDF. DuckDB's native ``nfc_normalize`` is
+the oracle.
 
-Scale: both are row-local projections (no shuffle); the pandas UDF rides
-the existing Arrow batch pipeline, so throughput is codec-bound, not
+Scale: a row-local projection (no shuffle); the pandas UDF rides the
+existing Arrow batch pipeline, so throughput is codec-bound, not
 Python-loop-bound. Apply BEFORE hashing/dedup so equal content hashes
 equal.
 """
@@ -38,27 +34,3 @@ def _nfc_udf(s: pd.Series) -> pd.Series:
 def nfc_normalize_col(col) -> Column:
     """NFC-normalized copy of a string column (null-safe)."""
     return _nfc_udf(F.col(col) if isinstance(col, str) else col)
-
-
-def _fix_one(v: str | None) -> str | None:
-    if v is None:
-        return None
-    try:
-        repaired = v.encode("latin-1").decode("utf-8")
-    except (UnicodeEncodeError, UnicodeDecodeError):
-        return v
-    # only accept a repair that shortens the text (real double-encoding
-    # inflates every non-ASCII char to 2+ latin-1 chars) — identity-length
-    # "repairs" on pure-ASCII text are no-ops anyway
-    return repaired if len(repaired) < len(v) else v
-
-
-@F.pandas_udf(StringType())
-def _fix_double_udf(s: pd.Series) -> pd.Series:
-    return s.map(_fix_one)
-
-
-def fix_double_encoded(col) -> Column:
-    """Repair UTF-8-read-as-latin-1 mojibake; non-repairable text passes
-    through untouched."""
-    return _fix_double_udf(F.col(col) if isinstance(col, str) else col)

@@ -104,9 +104,9 @@ def stratified_sample(
     id_col: str,
     stratum_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Deterministic per-stratum sampling with loss-reweighting weights.
+    Strata missing from ``rates`` are never sampled.
 
     Keeps a row iff the first 4 hex digits of ``md5(stratum || '|' || id)``
     fall below ``rate * 0x10000`` — a pure function of the row, so the
@@ -127,8 +127,8 @@ def stratified_sample(
         1,
         4,
     )
-    thr = F.lit(sample_threshold_hex(default_rate))
-    w = F.lit(round(1.0 / default_rate, 4) if default_rate > 0 else 0.0)
+    thr = F.lit(sample_threshold_hex(0.0))
+    w = F.lit(0.0)
     for stratum, rate in sorted(rates.items()):
         thr = F.when(
             F.col(stratum_col) == stratum, sample_threshold_hex(rate)
@@ -310,7 +310,10 @@ def tfidf_top_terms(
     )
 
 
+# lang_id_ngram reads the first LANG_ID_PREFIX chars of each document and
+# keeps the LANG_ID_VOCAB most frequent trigrams as its model vocabulary
 LANG_ID_PREFIX = 200
+LANG_ID_VOCAB = 4096
 
 
 def lang_id_ngram(
@@ -319,8 +322,6 @@ def lang_id_ngram(
     text_col: str,
     lang_col: str,
     langs: list[str],
-    prefix: int = LANG_ID_PREFIX,
-    vocab_size: int = 4096,
 ) -> DataFrame:
     """Character-trigram multinomial Naive Bayes language identifier,
     trained on the corpus's own labels (Cavnar-Trenkle n-gram profiles /
@@ -329,16 +330,16 @@ def lang_id_ngram(
 
     score(doc, l) = ln(docs_l / N) + Σ_g ln((c(g,l) + 1) / (T_l + V))
     (Laplace smoothing; V = distinct trigrams corpus-wide; grams outside a
-    language's counts — including everything outside the top-``vocab_size``
-    model vocabulary — pay the +0 numerator floor). Prediction = argmax
-    over ``langs`` on the 6-dp-rounded score, ties broken by language code
-    — engine-stable.
+    language's counts — including everything outside the
+    top-``LANG_ID_VOCAB`` model vocabulary — pay the +0 numerator floor).
+    Prediction = argmax over ``langs`` on the 6-dp-rounded score, ties
+    broken by language code — engine-stable.
 
     Output: (id_col, pred_lang, score, is_correct).
 
     Scale shape: the model table must be broadcast-able, but raw trigram
     counts are NOT bounded for CJK-heavy corpora (they grow with content,
-    not alphabet³) — so the model keeps only the ``vocab_size`` most
+    not alphabet³) — so the model keeps only the ``LANG_ID_VOCAB`` most
     frequent grams via TakeOrdered (distributed partial top-K, no global
     sort); everything else scores through the OOV floor, exactly like
     ``lm_quality_score``. Exploded document grams are scan-co-located, so
@@ -352,7 +353,7 @@ def lang_id_ngram(
     # (~prefix times per row; the SimHash/winnow non-CSE shape). One
     # explode pass dropped from ~1.9 s to ~0.6 s at sf0.1. Same strings,
     # same trigrams — output unchanged.
-    _pfx = F.lower(F.substring(F.col(text_col), 1, prefix))
+    _pfx = F.lower(F.substring(F.col(text_col), 1, LANG_ID_PREFIX))
     _tri = F.expr(
         "CASE WHEN length(_pfx) >= 3 THEN "
         "transform(sequence(1, length(_pfx) - 2), i -> substr(_pfx, i, 3)) "
@@ -370,7 +371,7 @@ def lang_id_ngram(
     counts_all = grams.groupBy("g").agg(*per_lang)
     counts_wide = counts_all.orderBy(
         F.expr(" + ".join(f"c_{i}" for i in range(len(langs)))).desc(), "g"
-    ).limit(vocab_size)
+    ).limit(LANG_ID_VOCAB)
     # round 8: derive V and the per-language totals from counts_all instead
     # of re-exploding the corpus — v = countDistinct(g) is exactly the
     # distinct-gram row count of the (g)-keyed aggregate, and t_i = Σ c_i
@@ -816,13 +817,12 @@ def profile_corpus(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def train_val_test_split(
     df: DataFrame,
     id_col: str,
-    fractions: tuple[float, float] = (0.8, 0.1),
     salt: str = "split",
 ) -> DataFrame:
     """Deterministic 3-way split: ``split`` ∈ train/val/test from the
-    md5 16-bit fraction of (salt | id) against cumulative ``fractions``
-    (train, val) — test gets the rest. Pure row function: stable across
-    reruns/engines/partitionings, and changing ``salt`` resamples the
+    md5 16-bit fraction of (salt | id) against the cumulative fractions
+    train 0.8, val 0.1 — test gets the rest. Pure row function: stable
+    across reruns/engines/partitionings, and changing ``salt`` resamples the
     assignment without touching data. Row-local, zero shuffle.
     """
     u = F.conv(
@@ -834,7 +834,7 @@ def train_val_test_split(
         16,
         10,
     ).cast("long") / F.lit(65536.0)
-    t, v = fractions
+    t, v = 0.8, 0.1
     return df.withColumn(
         "split",
         F.when(u < t, "train").when(u < t + v, "val").otherwise("test"),
@@ -975,16 +975,16 @@ def vocab_drift(
     new_df: DataFrame,
     text_col: str,
     k: int = 20,
-    alpha: float = 0.5,
-    min_count: int = 5,
 ) -> DataFrame:
     """Distribution-shift detector between two corpus snapshots: the
     smoothed log-odds ratio of each term's rate (Monroe et al.'s
     "Fightin' Words" family) — the monitoring primitive that catches a
     changed scrape/filter before it poisons training. Top ``k`` movers by
     |log-odds|, deterministic (exact counts, unrounded ranking, term
-    tiebreak). Terms below ``min_count`` total occurrences are ignored.
+    tiebreak). Terms below 5 total occurrences are ignored; counts are
+    smoothed by 0.5.
     """
+    alpha, min_count = 0.5, 5
 
     def tok(d):
         return d.select(

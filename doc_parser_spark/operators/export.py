@@ -1,7 +1,7 @@
 """Export formats (O7) + lossless JSON roundtrip (B17 analog).
 
-The reference exports DoclingDocument as markdown / indented text / lossless
-JSON (docling_json_backend.py round-trips it). Our flat extraction rows play
+The reference exports DoclingDocument as markdown / lossless JSON
+(docling_json_backend.py round-trips it). Our flat extraction rows play
 the same roles:
 
 - ``extracted_text`` IS the markdown-equivalent main-text export;
@@ -42,23 +42,8 @@ def to_doc_json(extracted: DataFrame) -> DataFrame:
     )
 
 
-def from_doc_json(json_df: DataFrame, json_col: str = "doc_json") -> DataFrame:
-    """Parse doc JSON back into typed extraction columns (B17 analog)."""
+def from_doc_json(json_df: DataFrame) -> DataFrame:
+    """Parse ``doc_json`` back into typed extraction columns (B17 analog)."""
     return json_df.select(
-        F.from_json(F.col(json_col), DOC_JSON_SCHEMA).alias("d")
+        F.from_json(F.col("doc_json"), DOC_JSON_SCHEMA).alias("d")
     ).select(*[F.col(f"d.{f}").alias(f) for f in _FIELDS])
-
-
-def indented_text(extracted: DataFrame) -> DataFrame:
-    """Indented-text export: section headers flush-left, body indented —
-    the docling export_to_indented_text analog over spans (row-local)."""
-    return extracted.select(
-        "conv_id",
-        "turn_idx",
-        F.expr(
-            "concat_ws(char(10), transform(spans, s -> concat("
-            "CASE WHEN s.label IN ('title', 'section_header') THEN '' "
-            "ELSE '  ' END, "
-            "substring(extracted_text, s.start + 1, s.end - s.start))))"
-        ).alias("indented"),
-    )

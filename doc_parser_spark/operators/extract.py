@@ -258,7 +258,7 @@ def extract_batch(batch: pa.RecordBatch, boilerplate_mode: str) -> pa.RecordBatc
     )
 
 
-def make_extract_udf(boilerplate_mode: str = "reference"):
+def make_extract_udf():
     """pandas-in/pandas-out adapter over ``extract_batch`` (iterator form),
     the reference for callers that hold pandas frames."""
 
@@ -270,7 +270,7 @@ def make_extract_udf(boilerplate_mode: str = "reference"):
                 batch = pa.RecordBatch.from_pandas(
                     pdf[["conv_id", "turn_idx", "text"]], preserve_index=False
                 )
-                yield extract_batch(batch, boilerplate_mode).to_pandas()
+                yield extract_batch(batch, "reference").to_pandas()
 
     return extract_batches
 

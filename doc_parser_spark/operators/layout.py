@@ -8,13 +8,11 @@ locality on the others; interleaving the bits of several columns (Morton
 order) keeps every indexed column's values locally clustered, so a
 predicate on ANY of them skips most files. This module computes the
 z-value in-plan (pure integer arithmetic — exactly reproducible on any
-engine) and lays files out by range-partitioning on it.
+engine); a writer lays files out by range-partitioning on it.
 
 Scale notes: the per-column min/max is one tiny all-reduce (a 1-row
 aggregate broadcast back); the z-value itself is row-local JVM arithmetic
-(aggregate HOF over a bit sequence — no UDF); the only real movement is
-the final repartitionByRange, which is exactly the write-shuffle any
-layout rewrite pays by definition.
+(aggregate HOF over a bit sequence — no UDF).
 """
 
 from __future__ import annotations
@@ -70,18 +68,4 @@ def zorder_value(
         *[f"__min_{c}" for c in cols],
         *[f"__max_{c}" for c in cols],
         *[f"__s_{c}" for c in cols],
-    )
-
-
-def zorder_layout(
-    df: DataFrame, cols: list[str], n_files: int, bits: int = 16
-) -> DataFrame:
-    """The rewrite itself: range-partition on the z-value into ``n_files``
-    output partitions and sort within each, so every written file covers a
-    compact z-range — i.e. a small bounding box in EVERY indexed column,
-    which is what footer-stats pruning needs. Feed the result straight to
-    a parquet writer."""
-    zdf = zorder_value(df, cols, bits)
-    return zdf.repartitionByRange(n_files, "zvalue").sortWithinPartitions(
-        "zvalue"
     )

@@ -279,9 +279,9 @@ def video_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
     return _map_media(media, "video", row, VIDEO_FRAME_SCHEMA)
 
 
-def synth_media(spark, n: int = 50, seed: int = 42) -> DataFrame:
+def synth_media(spark, n: int = 50) -> DataFrame:
     """Deterministic synthetic media table for tests."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     rows = []
     kinds = ["image", "audio", "video"]
     for i in range(n):

@@ -76,12 +76,10 @@ def extract_office(payload: bytes) -> tuple[str, str, list, str]:
         return kind, None, None, STATUS_FAILURE
 
 
-def extract_office_docs(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, binary payload) rows → extracted office documents."""
+def extract_office_docs(df: DataFrame) -> DataFrame:
+    """(doc_id, binary payload) rows → extracted office documents."""
 
     def row(doc_id, payload):
         return [(doc_id, *extract_office(payload or b""))]
 
-    return map_rows(df.select(id_col, payload_col), row, OFFICE_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), row, OFFICE_SCHEMA)

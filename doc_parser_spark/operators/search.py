@@ -77,17 +77,17 @@ def bm25_topk(
     text_col: str,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 top-k: rank documents for a bag-of-terms query.
 
-    score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
+    score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
+    with the Lucene defaults k1 = 1.2, b = 0.75,
     idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)  (the Lucene variant —
     always positive). Ranking uses the UNROUNDED score with a doc-id
     tiebreak, so the cutoff is engine-identical; the reported score
     rounds to 4 dp.
     """
+    k1, b = 1.2, 0.75
     # (id, term, tf, dl) feeds both the document-frequency aggregate and
     # the query-term scoring scan — materialize once (rollup lesson)
     dt = fork(_doc_terms(df, id_col, text_col))

@@ -1,63 +1,14 @@
-"""Span operators — O3 interval merge on real extracted spans.
+"""Span operators — O3 bbox merge.
 
 Port of merge_overlapping_bboxes (genos_utils.py:114-160): the reference does
-a fixpoint union of overlapping same-page boxes; the relational analog is the
-gaps-and-islands pattern over (conv_id, turn_idx, page)-partitioned char
-intervals, which merges transitively in ONE pass (a sorted running-max is
-the fixpoint).
+a fixpoint union of overlapping same-page boxes. The 1-D char-interval case is
+a gaps-and-islands pass in SQL (the ``o3_interval_merge`` contract query);
+the 2-D case here runs the exact kernel per group.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-
-def merged_spans(extracted: DataFrame, pad: int = 0) -> DataFrame:
-    """Explode spans → merge overlapping/adjacent (within ``pad`` chars)
-    intervals per (conv_id, turn_idx, page) → one row per merged island.
-
-    Output: conv_id, turn_idx, page, span_start, span_end, n_spans, labels.
-    """
-    ex = extracted.select(
-        "conv_id", "turn_idx", F.explode("spans").alias("s")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("s.page").alias("page"),
-        F.col("s.start").alias("start"),
-        F.col("s.end").alias("end"),
-        F.col("s.label").alias("label"),
-    )
-    w = (
-        Window.partitionBy("conv_id", "turn_idx", "page")
-        .orderBy("start", "end")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = ex.withColumn(
-        "new_island",
-        F.when(
-            F.col("start")
-            > F.coalesce(F.max("end").over(w), F.lit(-(2**31))) + pad,
-            1,
-        ).otherwise(0),
-    )
-    w2 = (
-        Window.partitionBy("conv_id", "turn_idx", "page")
-        .orderBy("start", "end")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    islands = flagged.withColumn("island", F.sum("new_island").over(w2))
-    return (
-        islands.groupBy("conv_id", "turn_idx", "page", "island")
-        .agg(
-            F.min("start").alias("span_start"),
-            F.max("end").alias("span_end"),
-            F.count("*").alias("n_spans"),
-            F.sort_array(F.collect_set("label")).alias("labels"),
-        )
-        .drop("island")
-    )
+from pyspark.sql import DataFrame
 
 
 def merge_bboxes_2d(
@@ -67,8 +18,8 @@ def merge_bboxes_2d(
     y_tolerance: float = 1.0,
 ) -> DataFrame:
     """True 2-D fixpoint bbox merge (merge_overlapping_bboxes,
-    genos_utils.py:114-160) — the general case the 1-D ``merged_spans``
-    cannot express, because merged boxes grow and can bridge boxes that
+    genos_utils.py:114-160) — the general case a 1-D gaps-and-islands
+    pass cannot express, because merged boxes grow and can bridge boxes that
     never overlapped directly.
 
     df columns: group_cols + (page int, btype string, l, t, r, b double).
@@ -120,17 +71,3 @@ def merge_bboxes_2d(
         return pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
     return df.groupBy(*group_cols).applyInPandas(fn, out_schema)
-
-
-def span_coverage(extracted: DataFrame) -> DataFrame:
-    """Per-turn span stats: how much of extracted_text the spans cover —
-    row-local (no shuffle): spans are disjoint by construction."""
-    return extracted.select(
-        "conv_id",
-        "turn_idx",
-        F.size("spans").alias("n_spans"),
-        F.expr(
-            "aggregate(spans, 0, (acc, s) -> acc + s.end - s.start)"
-        ).alias("covered_chars"),
-        F.length("extracted_text").alias("total_chars"),
-    )

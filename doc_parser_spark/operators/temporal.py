@@ -37,7 +37,6 @@ def asof_join(
     right_ts: str,
     direction: str = "backward",
     tolerance: int | None = None,
-    suffix: str = "_matched",
 ) -> DataFrame:
     """Left as-of join: for each left row, the single right row with equal
     ``on`` keys and the latest ``right_ts`` <= ``left_ts`` (direction
@@ -46,7 +45,8 @@ def asof_join(
 
     ``tolerance`` (seconds): matches farther than this are nulled, like
     ``merge_asof(tolerance=...)``. Right payload columns come back
-    suffixed; unmatched left rows keep nulls (left-outer semantics).
+    suffixed ``_matched``; unmatched left rows keep nulls (left-outer
+    semantics).
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"bad direction {direction!r}")
@@ -94,7 +94,7 @@ def asof_join(
         )
     return out.select(
         *left.columns,
-        *[F.col("__m")[c].alias(c + suffix) for c in payload_cols],
+        *[F.col("__m")[c].alias(c + "_matched") for c in payload_cols],
     )
 
 

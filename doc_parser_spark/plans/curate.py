@@ -1,8 +1,9 @@
 """Training-data curation pipeline: the composition story.
 
 extract → quality gate → exact dedup → near-dup (MinHash-LSH) removal →
-token-budget chunking → vector metadata. Every stage is one of the repo's
-operators; this plan wires them the way a 100 TB pretraining-data job would:
+vs-corpus classification → token-budget chunking → vector metadata. Every
+stage is one of the repo's operators; this plan wires them the way a 100 TB
+pretraining-data job would:
 
 - the quality gate runs BEFORE any dedup join (cheap filter first — shrinks
   both join sides);
@@ -16,6 +17,14 @@ operators; this plan wires them the way a 100 TB pretraining-data job would:
 - per-stage row counts ride the SINGLE terminal action as CollectMetrics
   (``df.observe``) nodes — no eager ``.count()`` jobs re-traversing the
   lineage (at 100 TB each such job re-runs memory-pressured stages).
+
+At 100 TB the steady state is a standing corpus + arriving batches, where
+per-batch cost must be O(batch), never O(corpus): ``build_curation_index``
+writes the corpus's materialized dedup index once, and each
+``curate_ingest`` batch classifies against it (operators/dedup.py's
+dedup_index / dedup_incremental_indexed, round 6: 158 s -> 4.5 s per 5k
+batch vs a 1M corpus). A one-shot corpus build is ``curate_ingest``
+against the index of an empty corpus.
 """
 
 from __future__ import annotations
@@ -27,9 +36,36 @@ from pyspark.sql import functions as F
 
 from doc_parser_spark.datamodel import STATUS_PARTIAL, STATUS_SUCCESS
 from doc_parser_spark.operators.chunking import chunk_turns, compose_vectors
-from doc_parser_spark.operators.dedup import exact_dedup, lsh_candidate_pairs
+from doc_parser_spark.operators.dedup import (
+    dedup_incremental_indexed,
+    dedup_index,
+    exact_dedup,
+    lsh_candidate_pairs,
+)
 from doc_parser_spark.operators.extract import extract_turns
 from doc_parser_spark.session import ForkCache, fork
+
+# the quality gate's parse_score floor, and the extraction mode it gates
+MIN_QUALITY = 0.5
+BOILERPLATE_MODE = "reference"
+# minhash permutations, LSH bands and shingle size of the within-batch LSH
+# pass and of the dedup index (the index's identity). 8 bands × 1 row:
+# candidate probability 1-(1-j)^8 ≈ 1.0 for j ≥ 0.5 — high recall for a
+# dedup pass (false candidates are killed by the exact Jaccard
+# verification). The operator default (bands=2, rows=4) would cap
+# vs-corpus candidate recall at ~42% for j = 0.7 — a near-dup admitted as
+# novel is permanent, so the index pays 8 bucket rows/doc (bucket rows are
+# constant-width; the shingle array, the index's real bulk, is unaffected).
+# This is the policy the standing oracles pin; docs/SCALE.md round 8
+# measures the r=2 candidate-volume/recall trade-off.
+INDEX_K, INDEX_BANDS, INDEX_N = 8, 8, 3
+# production guard against near-identical template families (they survive
+# exact dedup and land m docs in one bucket per band → m²/2 pairs);
+# oversized buckets emit a Jaccard-verified star instead, which keeps the
+# loser set (everything but the min uid) identical for a true family. No
+# bucket in the contract corpora comes near the cap, so oracle parity is
+# unaffected.
+LSH_MAX_BUCKET = 1000
 
 
 class CurationStats(UserDict):
@@ -111,58 +147,13 @@ def _observe(df: DataFrame, obs_map: dict[str, Observation],
     return df.observe(obs, F.count(F.lit(1)).alias("count"))
 
 
-def run_curation(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    min_quality: float = 0.5,
-    near_dup_jaccard: float = 0.7,
-    max_tokens: int = 2000,
-    boilerplate_mode: str = "reference",
-    lsh_max_bucket: int | None = 1000,
-) -> tuple[DataFrame, CurationStats]:
-    """Returns (vectors DataFrame, per-stage row counts).
-
-    The stats dict is lazy: counts materialize from observe() metrics when
-    the caller's first action on ``vectors`` runs (or on first stats access,
-    via one fallback count). Call ``stats.unpersist()`` after the terminal
-    write to release the cached dedup intermediate."""
-    observations: dict[str, Observation] = {}
-    with ForkCache() as forks:
-        # 1. extract + quality gate (parse succeeded, non-empty, not glyph
-        # garbage) — shared with the indexed ingest path below
-        kept = _extract_gate(
-            transcripts, observations, min_quality, boilerplate_mode
-        )
-
-        # 2-3. exact, then near-dup removal within the input
-        survivors = _dedup_within(
-            kept, observations, near_dup_jaccard, lsh_max_bucket
-        )
-
-        # 4. chunk + vector metadata
-        chunks = chunk_turns(survivors, max_tokens=max_tokens)
-        vectors = compose_vectors(chunks)
-        vectors = _observe(vectors, observations, "vectors")
-
-    return vectors, CurationStats(vectors, observations, forks)
-
-
-# ---------------------------------------------------------------------------
-# Incremental (indexed) ingest — the production path for a STANDING corpus.
-# run_curation re-clusters the whole input per run (right for a one-shot
-# corpus build); at 100 TB the steady state is a standing corpus + arriving
-# batches, where per-batch cost must be O(batch), never O(corpus). These two
-# entry points wire operators/dedup.py's materialized-index form
-# (dedup_index / dedup_incremental_indexed, round 6: 158 s -> 4.5 s per 5k
-# batch vs a 1M corpus) into the curation plan.
-# ---------------------------------------------------------------------------
 def _extract_gate(
     transcripts: DataFrame,
     observations: dict[str, Observation],
     min_quality: float,
     boilerplate_mode: str,
 ) -> DataFrame:
-    """Shared head of run_curation / build_curation_index / curate_ingest:
+    """Shared head of build_curation_index / curate_ingest:
     extract -> uid -> quality gate (cheap filter first)."""
     extracted = extract_turns(transcripts, boilerplate_mode=boilerplate_mode)
     extracted = extracted.withColumn(
@@ -181,12 +172,10 @@ def _dedup_within(
     kept: DataFrame,
     observations: dict[str, Observation],
     near_dup_jaccard: float,
-    lsh_max_bucket: int | None,
-    n: int = 3,
 ) -> DataFrame:
-    """Within-input dedup shared by run_curation / curate_ingest: exact
-    dedup, then drop the larger uid of every verified LSH pair (greedy,
-    deterministic). Runs inside the caller's ForkCache."""
+    """Within-batch dedup: exact dedup, then drop the larger uid of every
+    verified LSH pair (greedy, deterministic). Runs inside the caller's
+    ForkCache."""
     deduped = exact_dedup(kept, "uid", "extracted_text")
     deduped = deduped.where("keep").drop("keep", "doc_hash")
     deduped = _observe(deduped, observations, "exact_unique")
@@ -196,20 +185,9 @@ def _dedup_within(
     # until then the CacheManager keeps the entry (LRU may evict its
     # blocks, never the entry)
     deduped = fork(deduped)
-    # 8 bands × 1 row: candidate probability 1-(1-j)^8 ≈ 1.0 for j ≥ 0.5 —
-    # high recall for a dedup pass (false candidates are killed by the
-    # exact Jaccard verification inside lsh_candidate_pairs). bands=8 (r=1)
-    # is the policy the standing oracles pin; docs/SCALE.md round 8
-    # measures the r=2 candidate-volume/recall trade-off.
-    # lsh_max_bucket: production guard against near-identical template
-    # families (survive exact dedup, land m docs in one bucket per band →
-    # m²/2 pairs); oversized buckets emit a Jaccard-verified star instead,
-    # which keeps the loser set (everything but the min uid) identical for
-    # a true family. No bucket in the contract corpora comes near the cap,
-    # so oracle parity is unaffected.
     pairs = lsh_candidate_pairs(
         deduped, "uid", "extracted_text", threshold=near_dup_jaccard,
-        k=8, bands=8, n=n, max_bucket=lsh_max_bucket,
+        k=INDEX_K, bands=INDEX_BANDS, n=INDEX_N, max_bucket=LSH_MAX_BUCKET,
     )
     # no broadcast hint: the loser set can be corpus-sized on dup-heavy
     # data — AQE picks broadcast when it actually fits
@@ -221,12 +199,7 @@ def _dedup_within(
 def build_curation_index(
     spark: SparkSession,
     transcripts: DataFrame,
-    min_quality: float = 0.5,
-    boilerplate_mode: str = "reference",
     hashed: bool = True,
-    k: int = 8,
-    bands: int = 8,
-    n: int = 3,
 ) -> DataFrame:
     """One-pass materialized dedup index over a corpus of transcripts:
     extract + quality gate, then ``dedup_index`` rows
@@ -234,24 +207,12 @@ def build_curation_index(
     corpus; after that, ``curate_ingest`` batches never re-read corpus
     text. ``hashed=True`` (default — the at-scale setting) stores xxhash64
     shingle arrays: 8 bytes/shingle instead of the raw trigram strings.
-    The (k, bands, n, hashed) parameters are part of the index's identity:
-    pass the SAME values to every ``curate_ingest`` against it.
-
-    ``bands=8`` (1 minhash row per band) matches run_curation's in-batch
-    near-dup policy: candidate recall 1-(1-j)^8 ≈ 1.0 for j ≥ 0.7. The
-    operator default (bands=2, rows=4) would silently cap vs-corpus
-    candidate recall at ~42% for j = 0.7 — a near-dup admitted as novel
-    is permanent, so the index pays 8 bucket rows/doc for parity with
-    the one-shot path (bucket rows are constant-width; the shingle
-    array, the index's real bulk, is unaffected)."""
-    from doc_parser_spark.operators.dedup import dedup_index
-
-    observations: dict[str, Observation] = {}
-    kept = _extract_gate(
-        transcripts, observations, min_quality, boilerplate_mode
-    )
+    ``hashed`` is part of the index's identity: pass the SAME value to
+    every ``curate_ingest`` against it."""
+    kept = _extract_gate(transcripts, {}, MIN_QUALITY, BOILERPLATE_MODE)
     return dedup_index(
-        kept, "uid", "extracted_text", k=k, bands=bands, n=n, hashed=hashed
+        kept, "uid", "extracted_text", k=INDEX_K, bands=INDEX_BANDS,
+        n=INDEX_N, hashed=hashed,
     )
 
 
@@ -259,15 +220,9 @@ def curate_ingest(
     spark: SparkSession,
     transcripts: DataFrame,
     corpus_index: DataFrame,
-    min_quality: float = 0.5,
     near_dup_jaccard: float = 0.7,
     max_tokens: int = 2000,
-    boilerplate_mode: str = "reference",
-    lsh_max_bucket: int | None = 1000,
     hashed: bool = True,
-    k: int = 8,
-    bands: int = 8,
-    n: int = 3,
 ) -> tuple[DataFrame, DataFrame, CurationStats]:
     """Incremental curation ingest of ONE batch against a standing corpus
     index (``build_curation_index`` output, normally read back from
@@ -281,34 +236,28 @@ def curate_ingest(
       (append-only maintenance; exactly what
       streaming/stream.py::indexed_dedup_processor does per micro-batch,
       with batch_id bookkeeping for replay);
-    - ``stats``: per-stage lazy counts (see run_curation).
+    - ``stats``: per-stage row counts (``CurationStats``): extracted,
+      quality_kept, exact_unique, near_dup_unique, novel, vectors. They
+      materialize from observe() metrics when the caller's first action
+      on ``vectors`` runs (or on first stats access, via one fallback
+      count). Call ``stats.unpersist()`` after the terminal write to
+      release the cached dedup intermediates.
 
     Cost shape: corpus text is NEVER read (only the index columns the
     plan touches); every join is batch-sized against index-shaped
-    constant-width rows. Within-batch dedup runs first (batch-local,
-    same policy as run_curation: exact, then 8-band LSH with the
-    hot-bucket star cap), then one ``dedup_incremental_indexed``
-    classification pass against the index.
+    constant-width rows. Within-batch dedup runs first (batch-local:
+    exact, then 8-band LSH with the hot-bucket star cap), then one
+    ``dedup_incremental_indexed`` classification pass against the index.
     """
-    from doc_parser_spark.operators.dedup import (
-        dedup_incremental_indexed,
-        dedup_index,
-    )
-
     observations: dict[str, Observation] = {}
     with ForkCache() as forks:
         kept = _extract_gate(
-            transcripts, observations, min_quality, boilerplate_mode
+            transcripts, observations, MIN_QUALITY, BOILERPLATE_MODE
         )
 
-        # within-batch exact + near dedup (identical policy to run_curation).
-        # n=n: the shingle size is part of the index identity — the in-batch
-        # pass must shingle the same way as the vs-corpus classification
-        # below (k stays pinned to run_curation's in-batch policy; see
-        # build_curation_index's recall note). Round-7 ADVICE.
-        survivors = _dedup_within(
-            kept, observations, near_dup_jaccard, lsh_max_bucket, n=n
-        )
+        # within-batch exact + near dedup, shingled the same way as the
+        # vs-corpus classification below (the index identity)
+        survivors = _dedup_within(kept, observations, near_dup_jaccard)
         # fork point: consumed by the classification lineage AND the novels
         # semi-join — without the fork the in-batch LSH pipeline
         # re-evaluates per branch (the differing projections defeat
@@ -321,7 +270,8 @@ def curate_ingest(
         cls = dedup_incremental_indexed(
             survivors.select("uid", "extracted_text"), corpus_index,
             "uid", "extracted_text", threshold=near_dup_jaccard,
-            k=k, bands=bands, n=n, hashed=hashed, cast_matched=None,
+            k=INDEX_K, bands=INDEX_BANDS, n=INDEX_N, hashed=hashed,
+            cast_matched=None,
         )
         novels = survivors.join(
             cls.where("status = 'novel'").select("uid"), "uid", "semi"
@@ -331,8 +281,8 @@ def curate_ingest(
         novels = fork(novels)
 
         novel_index = dedup_index(
-            novels, "uid", "extracted_text", k=k, bands=bands, n=n,
-            hashed=hashed,
+            novels, "uid", "extracted_text", k=INDEX_K, bands=INDEX_BANDS,
+            n=INDEX_N, hashed=hashed,
         )
 
         chunks = chunk_turns(novels, max_tokens=max_tokens)

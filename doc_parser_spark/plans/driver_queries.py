@@ -43,6 +43,8 @@ from doc_parser_spark.operators.conversation import (
     with_conversation_context,
 )
 from doc_parser_spark.operators.curation import (
+    LANG_ID_PREFIX,
+    LANG_ID_VOCAB,
     corpus_diff,
     curriculum_shards,
     decontaminate_ngrams,
@@ -3165,9 +3167,7 @@ def q_lang_id_trigram_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lang_id_ngram(docs, "doc_id", "text", "lang", _LANGS)
 
 
-def _lang_nb_oracle(
-    langs: list[str], prefix: int = 200, vocab_size: int = 4096
-) -> str:
+def _lang_nb_oracle(langs: list[str]) -> str:
     c_cols = ",\n         ".join(
         f"sum(CASE WHEN _lang = '{l}' THEN 1 ELSE 0 END)::BIGINT AS c_{i}"
         for i, l in enumerate(langs)
@@ -3194,7 +3194,7 @@ WITH grams AS (
   SELECT doc_id::BIGINT AS doc_id, _lang,
          unnest([substr(s, i, 3) for i in range(1, len(s) - 1)]) AS g
   FROM (SELECT doc_id, lang AS _lang,
-               lower(substr(text, 1, {prefix})) AS s FROM documents)
+               lower(substr(text, 1, {LANG_ID_PREFIX})) AS s FROM documents)
 ),
 counts_all AS (
   SELECT g,
@@ -3204,7 +3204,7 @@ counts_all AS (
 counts AS (
   SELECT * FROM counts_all
   ORDER BY ({" + ".join(f"c_{i}" for i in range(len(langs)))}) DESC, g
-  LIMIT {vocab_size}
+  LIMIT {LANG_ID_VOCAB}
 ),
 totals AS (
   SELECT count(DISTINCT g)::DOUBLE AS v,
@@ -5023,7 +5023,7 @@ ORDER BY doc_id, toc_i
 
 # ===========================================================================
 # batch 49 — PRODUCTION LSH path: hot-bucket cap (round-6 verdict #4).
-# The star-cap mode (max_bucket) is what run_curation recommends for 100 TB
+# The star-cap mode (max_bucket) is what curate_ingest runs for 100 TB
 # but every contract query ran max_bucket=None; this query plants a
 # deterministic 40-member near-identical template family (md5-derived words
 # — NEVER modular selection, see CLAUDE.md degenerate-corpus warning) so an

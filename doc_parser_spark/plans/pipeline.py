@@ -73,7 +73,6 @@ def run_extraction_job(
     boilerplate_mode: str = "reference",
     job_run_id: str | None = None,
     resume: bool = True,
-    route_partitions: int | None = None,
     routing: str = "shuffle",
 ) -> dict:
     """Run the full pipeline; returns a summary dict (rows, wall_s, tps)."""
@@ -109,7 +108,7 @@ def run_extraction_job(
         extract_turns(
             work,
             boilerplate_mode=boilerplate_mode,
-            route_partitions=0 if routing == "none" else route_partitions,
+            route_partitions=0 if routing == "none" else None,
             keep_metrics_cols=True,
         )
         .withColumnRenamed("_n_bytes", "n_bytes_in")
@@ -237,25 +236,3 @@ def main(argv: list[str] | None = None) -> None:
 
 if __name__ == "__main__":
     main()
-
-
-def write_bucketed_table(
-    df, table: str, key: str, n_buckets: int, sort: bool = True
-) -> None:
-    """Catalog-backed bucketed write (the real form of this pipeline's
-    ``bucket_id`` partition-column analog): ``bucketBy(key)`` +
-    ``sortBy(key)`` + ``saveAsTable``. Two tables written this way with
-    the SAME key and bucket count join with ZERO exchanges AND zero
-    sorts — the co-located SortMergeJoin reads pre-bucketed, pre-sorted
-    files on both sides (verified: tests/test_bucketed_join.py). At
-    100 TB this converts every recurring join/agg on the bucket key
-    (conversation reassembly, per-conv dedup, turn lookups) from a full
-    shuffle into a metadata decision — the biggest single lever a
-    storage layout owns. The parquet-path pipeline keeps the
-    ``bucket_id`` column analog because plain-path reads can't consume
-    bucket metadata; on a catalog deployment (Iceberg/Hive), this is
-    the write to use."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)

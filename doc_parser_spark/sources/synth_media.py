@@ -489,10 +489,10 @@ def _riff_list(list_type: bytes, body: bytes) -> bytes:
     return _riff_chunk(b"LIST", list_type + body)
 
 
-def encode_avi_mjpeg(frames: list, width: int, height: int,
-                     fps: int = 10) -> bytes:
-    """Minimal spec-shaped AVI: LIST hdrl (avih + one strl/strh/strf) +
-    LIST movi with one '00dc' chunk per JPEG frame."""
+def encode_avi_mjpeg(frames: list, width: int, height: int) -> bytes:
+    """Minimal spec-shaped AVI at 10 fps: LIST hdrl (avih + one
+    strl/strh/strf) + LIST movi with one '00dc' chunk per JPEG frame."""
+    fps = 10
     avih = struct.pack(
         "<10I",
         1_000_000 // fps,  # dwMicroSecPerFrame

@@ -7,8 +7,9 @@ parses it, a stateless per-row transform, so
 Spark-native here (offsets + sink commit log) — the batch pipeline's manifest
 (plans/pipeline.py) covers the batch path.
 
-For event-time aggregation, ``turn_rate_stream`` shows the watermark +
-tumbling-window pattern (late turns beyond the watermark are dropped).
+Streaming dedup is the indexed path: ``dedup_incremental_stream_indexed``
+classifies each micro-batch against a corpus index and the index rows of
+earlier novels, exactly-once under kill/replay.
 """
 
 from __future__ import annotations
@@ -29,15 +30,11 @@ def read_transcript_stream(spark: SparkSession, input_path: str) -> DataFrame:
     )
 
 
-def extract_stream(
-    transcripts: DataFrame, boilerplate_mode: str = "reference"
-) -> DataFrame:
+def extract_stream(transcripts: DataFrame) -> DataFrame:
     """Streaming extraction: same operator as batch (no repartition — the
     micro-batch is already split by source files; a streaming shuffle would
     only add latency)."""
-    return extract_turns(
-        transcripts, boilerplate_mode=boilerplate_mode, route_partitions=0
-    )
+    return extract_turns(transcripts, route_partitions=0)
 
 
 def run_stream_to_parquet(
@@ -45,52 +42,17 @@ def run_stream_to_parquet(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ):
     """readStream → extract → parquet sink; availableNow drains the backlog
     and stops (the batch-parity mode used in tests and backfills)."""
     out = extract_stream(read_transcript_stream(spark, input_path))
-    writer = (
+    return (
         out.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def turn_rate_stream(
-    transcripts: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Windowed event-time aggregation with late-data handling: turns per
-    (window, role). Append-mode-compatible (watermarked)."""
-    # group on window(...) itself — projecting .start inside the groupBy
-    # severs the event-time/watermark link and append mode rejects the plan
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "role")
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            F.col("window.start").alias("window_start"), "role", "n_turns"
-        )
-    )
-
-
-def dedup_stream(
-    extracted: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exact dedup: drop turns whose extracted text hash was
-    already seen within the watermark window. State stays bounded — a
-    duplicate arriving later than the watermark is NOT caught (the batch
-    exact_dedup pass is the complete backstop; this is the low-latency
-    filter in front of it)."""
-    hashed = extracted.withColumn(
-        "doc_hash", F.md5(F.coalesce(F.col("extracted_text"), F.lit("")))
-    )
-    return hashed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["doc_hash"]
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -199,24 +161,20 @@ def dedup_incremental_stream_indexed(
     accepted_index_path: str,
     output_path: str,
     checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-    **dedup_kwargs,
 ):
-    """Continuous-ingestion dedup: every micro-batch is classified
-    exact_dup / near_dup / novel against the corpus-so-far, and novel docs
-    JOIN the old side for later batches. Corpus text is never read — only
-    its one-time index (``dedup_index(corpus).write.parquet(...)``). Sinks
-    are exactly-once under kill/replay (``indexed_dedup_processor``)."""
+    """Continuous-ingestion dedup of a (doc_id, text) stream: every
+    micro-batch is classified exact_dup / near_dup / novel against the
+    corpus-so-far, and novel docs JOIN the old side for later batches.
+    Corpus text is never read — only its one-time index
+    (``dedup_index(corpus).write.parquet(...)``). Sinks are exactly-once
+    under kill/replay (``indexed_dedup_processor``); availableNow drains
+    the backlog and stops."""
     process = indexed_dedup_processor(
-        corpus_index_path, accepted_index_path, output_path, id_col,
-        text_col, **dedup_kwargs,
+        corpus_index_path, accepted_index_path, output_path
     )
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,5 +1,7 @@
-"""End-to-end curation pipeline: quality gate → exact dedup → near-dup →
-chunks, with injected duplicates and garbage."""
+"""End-to-end one-shot curation: quality gate → exact dedup → near-dup →
+vs-corpus classification → chunks, with injected duplicates and garbage.
+A one-shot run is ``curate_ingest`` against the index of an empty corpus,
+so every within-batch survivor is novel."""
 
 from __future__ import annotations
 
@@ -39,13 +41,27 @@ def _corpus() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def test_curation_stages(spark):
-    from doc_parser_spark.plans.curate import run_curation
+def _curate(spark, tmp_path):
+    """``curate_ingest`` of the corpus against the (written) index of an
+    empty corpus."""
+    from doc_parser_spark.plans.curate import (
+        build_curation_index,
+        curate_ingest,
+    )
 
     df = spark.createDataFrame(_corpus())
-    vectors, stats = run_curation(
-        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
+    index_path = tmp_path / "empty_index"
+    if not index_path.exists():
+        build_curation_index(spark, df.limit(0)).write.parquet(str(index_path))
+    vectors, _, stats = curate_ingest(
+        spark, df, spark.read.parquet(str(index_path)),
+        near_dup_jaccard=0.5, max_tokens=200,
     )
+    return vectors, stats
+
+
+def test_curation_stages(spark, tmp_path):
+    vectors, stats = _curate(spark, tmp_path)
     assert stats["extracted"] == 11
     # empty skipped + glyph garbage (score 0) filtered
     assert stats["quality_kept"] == 9
@@ -53,6 +69,8 @@ def test_curation_stages(spark):
     assert stats["exact_unique"] == 7
     # near-dup of the article removed
     assert stats["near_dup_unique"] == 6
+    # an empty corpus index: every survivor is novel
+    assert stats["novel"] == stats["near_dup_unique"]
     assert stats["vectors"] >= stats["near_dup_unique"]
 
     pdf = vectors.toPandas()
@@ -72,17 +90,12 @@ def test_curation_stats_ride_the_single_action(spark, tmp_path):
     write, reading every stage count launches ZERO additional Spark jobs
     (the round-4 version ran five eager .count() jobs, each re-traversing
     the cached lineage)."""
-    from doc_parser_spark.plans.curate import run_curation
-
-    df = spark.createDataFrame(_corpus())
-    vectors, stats = run_curation(
-        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
-    )
-    # five observe points in the plan, one per stage (the tree print
+    vectors, stats = _curate(spark, tmp_path)
+    # six observe points in the plan, one per stage (the tree print
     # duplicates forked subtrees, so count distinct metric names)
     plan = vectors._jdf.queryExecution().analyzed().toString()
     for stage in ("extracted", "quality_kept", "exact_unique",
-                  "near_dup_unique", "vectors"):
+                  "near_dup_unique", "novel", "vectors"):
         assert f"CollectMetrics curation_{stage}" in plan
 
     sc = spark.sparkContext
@@ -97,41 +110,31 @@ def test_curation_stats_ride_the_single_action(spark, tmp_path):
     assert collected["quality_kept"] == 9
     assert collected["exact_unique"] == 7
     assert collected["near_dup_unique"] == 6
+    assert collected["novel"] == 6
     assert collected["vectors"] >= 6
     # no job ran inside the stats-read group: the metrics came off the write
     assert sc.statusTracker().getJobIdsForGroup("stats-read") == []
     stats.unpersist()
 
 
-def test_curation_stats_dict_c_paths_fill_first(spark):
+def test_curation_stats_dict_c_paths_fill_first(spark, tmp_path):
     """dict's C-level read paths (get/==/copy/pop/setdefault) bypass
     __getitem__ — each must trigger the lazy fill, or stats.get('extracted')
     before the first action silently returns None."""
-    from doc_parser_spark.plans.curate import run_curation
-
-    df = spark.createDataFrame(_corpus())
-    _, stats = run_curation(
-        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
-    )
+    _, stats = _curate(spark, tmp_path)
     assert stats.get("extracted") == 11       # was None pre-fix
     assert stats.get("no_such_stage", -1) == -1
 
-    _, stats2 = run_curation(
-        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
-    )
+    _, stats2 = _curate(spark, tmp_path)
     assert stats2.copy()["quality_kept"] == 9
-    _, stats3 = run_curation(
-        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
-    )
+    _, stats3 = _curate(spark, tmp_path)
     assert stats3 == {
         "extracted": 11, "quality_kept": 9, "exact_unique": 7,
-        "near_dup_unique": 6, "vectors": stats3["vectors"],
+        "near_dup_unique": 6, "novel": 6, "vectors": stats3["vectors"],
     }
     assert stats3.pop("extracted") == 11
     assert stats3.setdefault("quality_kept", -1) == 9
-    _, stats4 = run_curation(
-        spark, df, min_quality=0.5, near_dup_jaccard=0.5, max_tokens=200
-    )
+    _, stats4 = _curate(spark, tmp_path)
     assert dict(stats4)["extracted"] == 11   # perfbench's form
     for s in (stats, stats2, stats3, stats4):
         s.unpersist()

@@ -1,20 +1,11 @@
-"""Z-order layout (operators/layout.py): bit-exactness vs a python
-reference, and the actual data-skipping claim — a z-ordered layout's
-per-file min/max boxes must prune BOTH indexed columns, where a
-single-column sort prunes only its own."""
+"""Z-order value (operators/layout.py): bit-exactness vs a python
+reference."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from doc_parser_spark.operators.layout import zorder_layout, zorder_value
-
-
-def _grid(spark, n=32):
-    # full n×n grid: uniform 2-D mass, the textbook z-order case
-    rows = [(y * n + x, x, y) for x in range(n) for y in range(n)]
-    return spark.createDataFrame(rows, ["id", "x", "y"])
+from doc_parser_spark.operators.layout import zorder_value
 
 
 class TestZValue:
@@ -57,44 +48,3 @@ class TestZValue:
         df = spark.createDataFrame([(1, 2, 3, 4)], ["a", "b", "c", "d"])
         with pytest.raises(ValueError):
             zorder_value(df, ["a", "b", "c", "d"], bits=16)
-
-
-class TestSkipping:
-    def _file_boxes(self, laid_out):
-        return (
-            laid_out.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(
-                F.min("x").alias("x0"), F.max("x").alias("x1"),
-                F.min("y").alias("y0"), F.max("y").alias("y1"),
-            )
-            .collect()
-        )
-
-    def test_zorder_prunes_both_axes(self, spark):
-        df = _grid(spark, 32)
-        n_files = 16
-        z_boxes = self._file_boxes(zorder_layout(df, ["x", "y"], n_files))
-        x_boxes = self._file_boxes(
-            df.repartitionByRange(n_files, "x").sortWithinPartitions("x")
-        )
-
-        def touched(boxes, col, v):
-            lo, hi = (1, 2) if col == "x" else (3, 4)
-            return sum(1 for b in boxes if b[lo] <= v <= b[hi])
-
-        # predicate x = 5: both layouts prune well on x
-        assert touched(z_boxes, "x", 5) <= n_files // 2
-        assert touched(x_boxes, "x", 5) <= 2
-        # predicate y = 5: the x-sorted layout reads EVERY file; z-order
-        # must skip at least half
-        assert touched(x_boxes, "y", 5) == len(x_boxes)
-        assert touched(z_boxes, "y", 5) <= n_files // 2
-
-        # per-axis extent (area is a wash on a uniform grid — equal row
-        # counts give equal areas; the SHAPE is what prunes): z-order's
-        # square tiles bound y tightly, the x-sort's stripes span all of y
-        def avg_y_extent(boxes):
-            return sum(b[4] - b[3] + 1 for b in boxes) / len(boxes)
-
-        assert avg_y_extent(z_boxes) < avg_y_extent(x_boxes) / 2

@@ -1,4 +1,4 @@
-"""Markdown (B6), CSV (B7), and recursive splitter (C5) kernels."""
+"""Markdown (B6) and CSV (B7) kernels."""
 
 from __future__ import annotations
 
@@ -8,13 +8,8 @@ from doc_parser_spark.datamodel import (
     LABEL_SECTION_HEADER,
     LABEL_TABLE,
     LABEL_TEXT,
-    LABEL_TITLE,
 )
-from doc_parser_spark.functions.csv_extract import (
-    extract_csv,
-    recursive_split,
-    sniff_csv,
-)
+from doc_parser_spark.functions.csv_extract import extract_csv, sniff_csv
 from doc_parser_spark.functions.md_extract import extract_md, extract_md_items
 from doc_parser_spark.sources.sniff import sniff_text
 
@@ -113,38 +108,6 @@ class TestCsv:
     def test_semicolon(self):
         text, _ = extract_csv("x;y\n1;2")
         assert "| x | y |" in text
-
-
-class TestSplitter:
-    def test_short_text_one_chunk(self):
-        assert recursive_split("short", 100, 10) == ["short"]
-
-    def test_respects_chunk_size(self):
-        text = "\n\n".join(
-            " ".join([f"w{i}{j}" for j in range(30)]) for i in range(10)
-        )
-        chunks = recursive_split(text, 200, 20)
-        assert len(chunks) > 1
-        assert all(len(c) <= 200 for c in chunks)
-
-    def test_content_preserved_in_order(self):
-        text = "\n\n".join(f"para number {i} content here" for i in range(20))
-        chunks = recursive_split(text, 120, 0)
-        joined = " ".join(chunks)
-        for i in range(20):
-            assert f"para number {i}" in joined
-        # order preserved
-        pos = [joined.find(f"para number {i} ") for i in range(10)]
-        assert pos == sorted(pos)
-
-    def test_oversize_word_fallback(self):
-        word = "x" * 500
-        chunks = recursive_split(word, 100, 0)
-        assert all(len(c) <= 100 for c in chunks)
-        assert "".join(chunks) == word
-
-    def test_empty(self):
-        assert recursive_split("", 100, 10) == []
 
 
 class TestAsciidoc:

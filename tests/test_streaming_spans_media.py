@@ -1,9 +1,8 @@
-"""Streaming extraction parity, span merge, and multimodal plumbing tests."""
+"""Streaming extraction parity, multimodal plumbing and export tests."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -43,37 +42,6 @@ class TestStreaming:
         )
         q2.awaitTermination(60)
         assert spark.read.parquet(str(tmp_path / "out")).count() == len(exp)
-
-    def test_windowed_rates(self, spark, transcripts_pdf):
-        from doc_parser_spark.streaming.stream import turn_rate_stream
-
-        # batch-execute the streaming aggregation definition for value parity
-        df = spark.createDataFrame(transcripts_pdf)
-        rates = turn_rate_stream(df).toPandas()
-        assert rates["n_turns"].sum() == len(transcripts_pdf)
-
-
-class TestSpans:
-    def test_merged_spans_no_overlap(self, spark, transcripts_pdf):
-        from doc_parser_spark.operators.extract import extract_turns
-        from doc_parser_spark.operators.spans import merged_spans, span_coverage
-
-        extracted = extract_turns(spark.createDataFrame(transcripts_pdf.head(100)))
-        merged = merged_spans(extracted, pad=2).toPandas()
-        assert len(merged) > 0
-        for (_, _, _), grp in merged.groupby(["conv_id", "turn_idx", "page"]):
-            grp = grp.sort_values("span_start")
-            prev_end = None
-            for _, row in grp.iterrows():
-                assert row["span_end"] >= row["span_start"]
-                if prev_end is not None:
-                    assert row["span_start"] > prev_end + 2
-                prev_end = row["span_end"]
-
-        cov = span_coverage(extracted).toPandas()
-        ok = cov[cov["total_chars"].notna()]
-        assert (ok["covered_chars"] <= ok["total_chars"]).all()
-
 
 class TestMultimodal:
     def test_image_decode_plumbing(self, spark):
@@ -180,152 +148,6 @@ class TestExport:
         sa = a["spans"].map(lambda s: None if s is None else [tuple(x) for x in s])
         sb = b["spans"].map(lambda s: None if s is None else [tuple(x) for x in s])
         assert sa.tolist() == sb.tolist()
-
-    def test_indented_text(self, spark, transcripts_pdf):
-        from doc_parser_spark.operators.export import indented_text
-        from doc_parser_spark.operators.extract import extract_turns
-
-        extracted = extract_turns(spark.createDataFrame(transcripts_pdf.head(50)))
-        ind = indented_text(extracted).toPandas()
-        html_rows = ind[ind["indented"].str.contains("\n  ", regex=False, na=False)]
-        assert len(html_rows) > 0
-
-
-class TestWatermark:
-    def test_window_emits_after_watermark_passes(self, spark, tmp_path):
-        """Append-mode windowed aggregation: a window's row is emitted only
-        once the watermark (max event time - 2h) passes its end; late turns
-        beyond the watermark are dropped."""
-        import pandas as pd
-        from doc_parser_spark.datamodel import TRANSCRIPT_SCHEMA
-        from doc_parser_spark.streaming.stream import turn_rate_stream
-
-        inp = tmp_path / "in"
-        inp.mkdir()
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def write(name, ts_list):
-            pdf = pd.DataFrame(
-                {
-                    "conv_id": [f"c{i}" for i in range(len(ts_list))],
-                    "turn_idx": range(len(ts_list)),
-                    "role": "user",
-                    "text": "x",
-                    "tool": None,
-                    "ts": [pd.Timestamp(t) for t in ts_list],
-                }
-            )
-            pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-            pdf["tool"] = pdf["tool"].astype("string")
-            pdf.to_parquet(
-                str(inp / name), index=False,
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-
-        def drain():
-            stream = turn_rate_stream(
-                spark.readStream.schema(TRANSCRIPT_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(inp))
-            )
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            try:
-                return spark.read.parquet(out).toPandas()
-            except Exception:
-                return pd.DataFrame(columns=["window_start", "role", "n_turns"])
-
-        # batch 1: three turns in the 10:00 window; watermark stays at 08:00
-        write("b1.parquet", ["2026-01-01 10:00:00", "2026-01-01 10:30:00",
-                             "2026-01-01 10:45:00"])
-        first = drain()
-        assert len(first) == 0  # 10:00 window not closed yet
-
-        # batch 2: an event at 13:30 pushes the watermark to 11:30 —
-        # the 10:00 window closes and emits exactly its 3 turns
-        write("b2.parquet", ["2026-01-01 13:30:00"])
-        second = drain()
-        assert len(second) == 1
-        assert second.iloc[0]["n_turns"] == 3
-
-        # batch 3: a LATE turn for the already-closed 10:00 window plus a
-        # watermark push — the late turn must be dropped, never re-emitted
-        write("b3.parquet", ["2026-01-01 10:10:00", "2026-01-01 16:00:00"])
-        third = drain()
-        emitted_10 = third[
-            third["window_start"].astype(str).str.contains("10:00:00")
-        ]
-        assert len(emitted_10) == 1
-        assert emitted_10.iloc[0]["n_turns"] == 3  # late turn dropped
-
-
-class TestStreamingDedup:
-    def test_duplicates_dropped_within_watermark(self, spark, tmp_path):
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from doc_parser_spark.streaming.stream import (
-            dedup_stream,
-            extract_stream,
-            read_transcript_stream,
-        )
-
-        inp = tmp_path / "in"
-        inp.mkdir()
-        rows = []
-        for i, (conv, text) in enumerate(
-            [
-                ("a", "duplicate payload text"),
-                ("b", "duplicate payload text"),
-                ("c", "unique payload one"),
-                ("d", "duplicate payload text"),
-                ("e", "unique payload two"),
-            ]
-        ):
-            rows.append(
-                {
-                    "conv_id": conv, "turn_idx": 0, "role": "user",
-                    "text": text, "tool": None,
-                    "ts": pd.Timestamp("2026-01-01 10:00:00")
-                    + pd.Timedelta(minutes=i),
-                }
-            )
-        pdf = pd.DataFrame(rows)
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["tool"] = pdf["tool"].astype("string")
-        pdf.to_parquet(
-            str(inp / "b1.parquet"), index=False,
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-
-        # extraction drops ts; re-join it for the watermark column
-        stream = read_transcript_stream(spark, str(inp))
-        extracted = extract_stream(stream).join(
-            stream.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"]
-        )
-        q = (
-            dedup_stream(extracted)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        out = spark.read.parquet(str(tmp_path / "out")).toPandas()
-        assert len(out) == 3  # one copy of the dup + two uniques
-        assert (
-            out["extracted_text"].str.contains("duplicate payload").sum() == 1
-        )
-
 
 class TestStreamingCuration:
     def test_sampling_and_enrichment_compose_onto_streams(

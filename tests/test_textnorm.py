@@ -1,20 +1,10 @@
-"""Unicode normalization (functions/textnorm.py): NFC composition and the
-double-encoding mojibake repair — known in/out pairs plus a no-false-repair
-property on clean text."""
+"""Unicode normalization (functions/textnorm.py): NFC composition."""
 
 from __future__ import annotations
 
 import unicodedata
 
-from hypothesis import given as h_given
-from hypothesis import settings as h_settings
-from hypothesis import strategies as h_st
-
-from doc_parser_spark.functions.textnorm import (
-    _fix_one,
-    fix_double_encoded,
-    nfc_normalize_col,
-)
+from doc_parser_spark.functions.textnorm import nfc_normalize_col
 
 
 class TestNfc:
@@ -41,44 +31,3 @@ class TestNfc:
         assert out[4] is None
         assert out[5] == "plain ascii"
         assert out[1] == unicodedata.normalize("NFC", rows[0][1])
-
-
-class TestMojibake:
-    def test_repairs_double_encoding(self, spark):
-        good = "héllo wörld — ça va"
-        bad = good.encode("utf-8").decode("latin-1")  # the classic accident
-        df = spark.createDataFrame([(1, bad), (2, good), (3, None)],
-                                   ["id", "t"])
-        out = {
-            r["id"]: r["f"]
-            for r in df.select(
-                "id", fix_double_encoded("t").alias("f")
-            ).collect()
-        }
-        assert out[1] == good      # repaired
-        assert out[2] == good      # already clean → untouched
-        assert out[3] is None
-
-    def test_never_destroys_clean_text(self):
-        # pure-ASCII and ordinary accented text must pass through verbatim
-        for s in ("plain", "café", "naïve", "", "Ã—"):
-            got = _fix_one(s)
-            if s.encode("latin-1", "ignore") and got != s:
-                # a change is only allowed when it strictly shortens (real
-                # repairs always do) and round-trips back
-                assert len(got) < len(s)
-                assert got.encode("utf-8").decode("latin-1") == s
-
-    @h_settings(max_examples=200, deadline=None)
-    @h_given(h_st.text(min_size=0, max_size=40))
-    def test_roundtrip_property(self, s):
-        # for ANY text: repairing its deliberately-mojibaked form returns
-        # the original whenever the original contains a non-latin-1 char
-        # or multi-byte sequence (i.e. the repair is the exact inverse)
-        bad = s.encode("utf-8").decode("latin-1")
-        fixed = _fix_one(bad)
-        if len(bad) > len(s):  # mojibake actually inflated it
-            assert fixed == s
-        # and repairing clean ascii is identity
-        if s.isascii():
-            assert _fix_one(s) == s
