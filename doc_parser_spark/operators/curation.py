@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from doc_parser_spark.operators.dedup import shingle_expr_from_words
 from doc_parser_spark.operators.search import TOKENIZE
-from doc_parser_spark.session import fork
 
 DEFAULT_DECONTAM_N = 5
 DEFAULT_PACK_BUDGET = 2048
@@ -607,14 +606,13 @@ def lm_bigram_score(
     window for adjacency (keyed by id — constant-width rows), the bigram
     count aggregate, and the final per-doc mean. All counts are exact
     integers; probabilities divide as doubles identically on any engine.
+    Nothing is persisted: the bigram counts and the scoring join share
+    the per-doc window's exchange (``ReusedExchange``, test_curation.py).
     """
-    # round 8: (id, pos, tok) feeds the vocab count, the unigram count and
-    # the adjacency window — three full corpus tokenizes without
-    # materialization (the fork-point rule of `big` below; constant-width rows)
-    toks = fork(df.select(
+    toks = df.select(
         F.col(id_col),
         F.posexplode(F.expr(TOKENIZE.format(col=text_col))).alias("pos", "tok"),
-    ))
+    )
     counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
     vocab = (
         counts.orderBy(F.col("c").desc(), "tok")
@@ -633,14 +631,8 @@ def lm_bigram_score(
     from pyspark.sql import Window
 
     w = Window.partitionBy(id_col).orderBy("pos")
-    # the adjacency table feeds BOTH the bigram-count aggregate and the
-    # scoring join; without materialization the lazy DAG re-derives it —
-    # paying the per-doc window (a full-corpus shuffle) twice (the
-    # rollup_timeseries lesson, verified in the physical plan)
-    big = fork(
-        mapped.withColumn("prev", F.lag("m").over(w)).where(
-            F.col("prev").isNotNull()
-        )
+    big = mapped.withColumn("prev", F.lag("m").over(w)).where(
+        F.col("prev").isNotNull()
     )
     cb = big.groupBy("prev", "m").agg(F.count("*").alias("c2"))
     cp = cb.groupBy("prev").agg(F.sum("c2").alias("cprev"))

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from doc_parser_spark.session import fork
-
 TOKENIZE = "filter(split(lower({col}), '[^a-z0-9]+'), w -> w != '')"
 
 
@@ -88,9 +86,7 @@ def bm25_topk(
     rounds to 4 dp.
     """
     k1, b = 1.2, 0.75
-    # (id, term, tf, dl) feeds both the document-frequency aggregate and
-    # the query-term scoring scan — materialize once (rollup lesson)
-    dt = fork(_doc_terms(df, id_col, text_col))
+    dt = _doc_terms(df, id_col, text_col)
     # avgdl from an EXACT integer sum (engine-portable), not a float avg
     stats = df.select(
         F.count("*").cast("double").alias("n_docs"),

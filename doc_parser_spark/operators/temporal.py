@@ -26,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from doc_parser_spark.session import fork
-
 
 def asof_join(
     left: DataFrame,
@@ -212,6 +210,8 @@ def rollup_timeseries(
     24), so the refresh cost of the full hierarchy is ~the base aggregate
     alone — the reason continuous aggregates exist. count/sum/min/max are
     the classic mergeable partials; avg derives as sum/count at output.
+    Nothing is persisted: each level re-reads the finer level's exchange
+    (``ReusedExchange``), so raw rows are scanned once (test_temporal.py).
 
     Sparse-data guard: when nearly every (key, finest-bucket) is unique
     the cascade's cost tracks OUTPUT bucket count, not input (the round-4
@@ -234,22 +234,16 @@ def rollup_timeseries(
         F.min(value_col).alias("min_value"),
         F.max(value_col).alias("max_value"),
     )
-    # each level is MATERIALIZED (fork) before the next reads it — in
-    # production every level is its own table, which is the whole point of
-    # a continuous aggregate; without this, the lazy union re-derives each
-    # branch from the raw scan and a 3-level hierarchy scans raw 3×
-    # (observed in the physical plan; pinned in tests/test_temporal.py)
-    cur = fork(cur)
     parts = [cur.withColumn("level", F.lit(levels[0]))]
     for lvl in levels[1:]:
-        cur = fork(cur.groupBy(
+        cur = cur.groupBy(
             F.date_trunc(lvl, F.col("bucket")).alias("bucket"), *key_cols
         ).agg(
             F.sum("n_events").alias("n_events"),
             F.sum("sum_value").alias("sum_value"),
             F.min("min_value").alias("min_value"),
             F.max("max_value").alias("max_value"),
-        ))
+        )
         parts.append(cur.withColumn("level", F.lit(lvl)))
     out = parts[0]
     for p in parts[1:]:

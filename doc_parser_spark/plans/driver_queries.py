@@ -2652,12 +2652,9 @@ def q_curate_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = decontaminate_ngrams(
         docs, docs.where("doc_id % 41 = 0"), "doc_id", "payload", n=5
     ).select("doc_id", "contaminated")
-    # fork point (the _chain_corpus rule): flags feeds the
-    # pack branch AND the final join; lineage = dedup window +
-    # decontamination + sampling, re-derived per branch without this
-    flags = fork(stratified_sample(
+    flags = stratified_sample(
         deduped.join(dec, "doc_id"), "doc_id", "lang", SAMPLE_RATES
-    ))
+    )
     surv = flags.where("gate_pass AND keep AND NOT contaminated AND sampled")
     packed = pack_sequences(
         surv.select("doc_id", "payload"),

@@ -131,26 +131,30 @@ def indexed_dedup_processor(
         res = dedup_incremental_indexed(
             mb, idx, id_col, text_col, **dedup_kwargs
         ).persist()
-        (
-            res.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(output_path)
-        )
-        novel = mb.join(
-            res.where(F.col("status") == "novel").select(id_col), id_col
-        )
-        (
-            dedup_index(novel, id_col, text_col, **index_kwargs)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(accepted_index_path)
-        )
-        res.unpersist()
-        mb.unpersist()
+        # a failed write must not leave either frame in a long-lived
+        # driver's CacheManager
+        try:
+            (
+                res.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .partitionBy("batch_id")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(output_path)
+            )
+            novel = mb.join(
+                res.where(F.col("status") == "novel").select(id_col), id_col
+            )
+            (
+                dedup_index(novel, id_col, text_col, **index_kwargs)
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .partitionBy("batch_id")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(accepted_index_path)
+            )
+        finally:
+            res.unpersist()
+            mb.unpersist()
 
     return process
 

@@ -575,6 +575,30 @@ class TestBigramLM:
         # rare1 maps to <unk>; its bigram still scores via interpolation
         assert out[1]["n_bigrams"] == 3
 
+    def test_adjacency_window_exchange_written_once(self, spark):
+        import re
+
+        from doc_parser_spark.operators.curation import lm_bigram_score
+
+        docs = spark.createDataFrame(
+            [(i, "alpha beta gamma alpha beta " * (i + 1)) for i in range(6)],
+            ["doc_id", "text"],
+        )
+        out = lm_bigram_score(docs, "doc_id", "text")
+        out.collect()
+        plan = (
+            out._jdf.queryExecution().executedPlan().finalPhysicalPlan()
+            .toString()
+        )
+        # the per-doc window's exchange feeds the bigram counts and the
+        # scoring join: the executed plan writes it once and reads it
+        # again through ReusedExchange
+        by_doc = r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\)"
+        written = re.findall(r"\+- " + by_doc, plan)
+        reused = re.findall(r"ReusedExchange \[[^\]]*\], " + by_doc, plan)
+        assert len(written) == 1
+        assert reused
+
 
 class TestPhraseMining:
     def test_planted_collocation_ranks_high(self, spark):

@@ -74,6 +74,12 @@ BUILDERS = {
 }
 
 
+# operators whose branches share Spark's exchange reuse instead of a fork:
+# they must leave nothing cached, so a persist re-added without an owner
+# fails here
+LAZY = {"lm_bigram_score", "bm25_topk", "rollup_timeseries"}
+
+
 @pytest.mark.parametrize("name", BUILDERS)
 def test_release_empties_cache_manager(spark, name):
     spark.catalog.clearCache()
@@ -83,8 +89,11 @@ def test_release_empties_cache_manager(spark, name):
             outs = [BUILDERS[name](spark, seed) for seed in range(3)]
         for out in outs:
             out.write.format("noop").mode("overwrite").save()
-        assert forks, f"{name} registered no fork"
-        assert not _cache_empty(spark)
+        if name in LAZY:
+            assert forks == [] and _cache_empty(spark)
+        else:
+            assert forks, f"{name} registered no fork"
+            assert not _cache_empty(spark)
     finally:
         forks.release()
     assert _cache_empty(spark)

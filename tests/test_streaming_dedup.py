@@ -246,6 +246,27 @@ def test_replay_heals_partial_commit(spark, tmp_path):
     assert len(out) == 5  # no duplicated rows from the two attempts
 
 
+def test_failed_batch_releases_its_persists(spark, tmp_path):
+    """A micro-batch whose output write fails must raise and leave nothing
+    in the driver's CacheManager: a long-lived streaming driver would
+    otherwise hold both persisted frames of every failed batch."""
+    from doc_parser_spark.streaming.stream import indexed_dedup_processor
+
+    root = _fresh_root(spark, tmp_path)
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a regular file, so no directory can be made under it")
+    process = indexed_dedup_processor(
+        corpus_index_path=str(root / "corpus_index"),
+        accepted_index_path=str(root / "accepted_index"),
+        output_path=str(blocker / "out"),
+    )
+    spark.catalog.clearCache()
+    b1 = spark.createDataFrame(BATCH_1, "doc_id long, text string")
+    with pytest.raises(Exception):
+        process(b1, 0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ---------------------------------------------------------------------------
 # the materialized index and its classifier
 # ---------------------------------------------------------------------------
